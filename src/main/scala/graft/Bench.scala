@@ -36,13 +36,13 @@ import graft.tools.{BenchRecord, Fork}
   *    (tps_hi/tps_lo)/(hi/lo), each pair's replay input sized to its
   *    high level (convsFor) so the fixed per-run cost stays under ~10%;
   *  - the skew regime (north_star: salting for hot conversations):
-  *    hot-conversation input through unsalted/salted fmgws and the tws
-  *    ListState engine (tools.SkewBlock);
+  *    hot-conversation input through the unsalted and salted session
+  *    join (tools.SkewBlock);
   *  - the skew-HEAVY regime (salting-pays: conv-keyed time-sliced
   *    ingest + heavy per-turn map; graft.SkewHeavyBench child);
-  *  - sustained (SPARK_GRAFT_SUSTAINED, default on): one long trial per
-  *    engine at ~3.4x the flagship input, corpus staged to DISK by a
-  *    StageBlock child, block cache sized to the state working set.
+  *  - sustained (SPARK_GRAFT_SUSTAINED, default on): one long trial at
+  *    ~3.4x the flagship input, corpus staged to DISK by a StageBlock
+  *    child, block cache sized to the state working set.
   *
   * Every streaming block carries emission accounting (batch-oracle pair
   * count, streamed share, watermark at shutdown) so a replay that
@@ -77,8 +77,8 @@ object Bench {
     // scaling pairs from the per-combo blocks
     val pairJsons = p.pairs.map { case (lo, hi) =>
       val n = p.convsFor(hi)
-      val tLo = rec.field(s"scaling_c${lo}_n$n", "{", "turns_per_sec")
-      val tHi = rec.field(s"scaling_c${hi}_n$n", "{", "turns_per_sec")
+      val tLo = rec.field(s"scaling_c${lo}_n$n", "turns_per_sec")
+      val tHi = rec.field(s"scaling_c${hi}_n$n", "turns_per_sec")
       val eff =
         if (tLo == "null" || tHi == "null" || tLo.toDouble == 0) "null"
         else f((tHi.toDouble / tLo.toDouble) / (hi.toDouble / lo))
@@ -108,34 +108,29 @@ object Bench {
     val skewCompact =
       if (!rec.has("skew")) "null"
       else {
-        val names = Seq("fmgws", "fmgws_salted", "tws",
-          s"fmgws_fpt${p.latFpt}", s"tws_fpt${p.latFpt}")
-        names.map(n => s""""$n":${rec.field("skew", s""""$n":""", "best_tps")}""")
+        val names = Seq("fmgws", "fmgws_salted", s"fmgws_fpt${p.latFpt}")
+        names.map(n => s""""$n":${rec.field("skew", n, "best_tps")}""")
           .mkString(s"""{"hot":${p.hotConvs},"hot_mult":${p.hotMult},""", ",", "}")
       }
     val skewHeavyCompact =
       if (!rec.has("skew_heavy")) "null"
       else {
-        val names = Seq("light_unsalted", "light_salted", "heavy_unsalted",
-          "heavy_salted", "heavy_unsalted_tws", "heavy_salted_tws")
-        val cfgs = names.map(n => s""""$n":${rec.field("skew_heavy", s""""$n":""", "best_tps")}""")
+        val names = Seq("light_unsalted", "light_salted", "heavy_unsalted", "heavy_salted")
+        val cfgs = names.map(n => s""""$n":${rec.field("skew_heavy", n, "best_tps")}""")
         (Seq(
-          s""""sanity_ok":${rec.field("skew_heavy", "{", "sanity_ok") != "0"}""",
-          s""""pair_share":${rec.field("skew_heavy", "{", "emitted_pair_share")}""") ++ cfgs)
+          s""""sanity_ok":${rec.field("skew_heavy", "sanity_ok") != "0"}""",
+          s""""pair_share":${rec.field("skew_heavy", "emitted_pair_share")}""") ++ cfgs)
           .mkString("{", ",", "}")
       }
     val sustainedCompact =
       if (!rec.has("sustained")) "null"
-      else s"""{"fmgws_tps":${rec.field("sustained", "\"fmgws\":", "turns_per_sec")},""" +
-        s""""tws_tps":${rec.field("sustained", "\"tws\":", "turns_per_sec")},""" +
-        s""""max_state_rows":${rec.field("sustained", "\"fmgws\":", "max_state_rows")},""" +
-        s""""pairs":${rec.field("sustained", "\"fmgws\":", "pairs")},""" +
-        s""""batch_pairs":${rec.field("sustained", "{", "batch_pairs")}}"""
+      else Seq("turns_per_sec", "max_state_rows", "pairs", "batch_pairs")
+        .map(k => s""""$k":${rec.field("sustained", k)}""").mkString("{", ",", "}")
 
     val compact =
-      s"""{"metric":"total","value":${rec.field("sweep", "{", "total_query_sec")},"unit":"sec","sf":"${p.sfDir}",""" +
-        s""""n_queries":${rec.field("sweep", "{", "n_queries")},""" +
-        s""""failed_queries":${rec.field("sweep", "{", "failed_queries")},""" +
+      s"""{"metric":"total","value":${rec.field("sweep", "total_query_sec")},"unit":"sec","sf":"${p.sfDir}",""" +
+        s""""n_queries":${rec.field("sweep", "n_queries")},""" +
+        s""""failed_queries":${rec.field("sweep", "failed_queries")},""" +
         s""""detail":"${p.detailPath}",""" +
         s""""flagship":${rec.json("flagship")},""" +
         s""""scaling":${pairJsons.mkString("[", ",", "]")},""" +
@@ -216,34 +211,31 @@ object Bench {
       v
     }
     def deleteDir(d: String): Unit = graft.util.Tmp.delete(d)
-    val dirRe = """"dir":"([^"]+)"""".r
-    val bpRe = """"batch_pairs":(-?\d+)""".r
+    def dirOf(staged: String): Option[String] = BenchRecord.at(staged, "dir").map(_.asText)
+    def batchPairsOf(staged: String): Option[Long] =
+      BenchRecord.at(staged, "batch_pairs").map(_.asLong)
 
-    // ---- sustained: staging child (disk corpus) + one Flagship child
-    // per engine, FIRST — the BASELINE metric's amortizing regime -------
+    // ---- sustained: staging child (disk corpus) + one Flagship child,
+    // FIRST — the BASELINE metric's amortizing regime --------------------
     if (sustainedConvs > 0) {
       val staged = Fork.json("graft.tools.StageBlock",
         Seq(sustainedConvs.toString, nFiles.toString, cpus.toString, "0", "20", "1"),
         heapGB = 10, env = Map("GRAFT_TMP_BASE" -> "/tmp"))._1
       val assembled = for {
         s <- staged
-        dir <- dirRe.findFirstMatchIn(s).map(_.group(1))
-        bp <- bpRe.findFirstMatchIn(s).map(_.group(1).toLong)
-      } yield {
-        val rows = Seq("fmgws", "tws").map { eng =>
-          val line = Fork.json("graft.Flagship",
+        dir <- dirOf(s)
+        bp <- batchPairsOf(s)
+        line <- try Fork.json("graft.Flagship",
             Seq(sustainedConvs.toString, cpus.toString, fpt.toString,
-              nFiles.toString, (2 * cpus).toString, eng, dir),
+              nFiles.toString, (2 * cpus).toString, dir),
             heapGB = 16,
             env = Map("SPARK_GRAFT_EXTRA_CONF" ->
               "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB=2048"))._1
-          line.foreach(l => System.err.println(s"[bench] sustained $eng $l"))
-          s""""$eng":${line.getOrElse("null")}"""
-        }
-        deleteDir(dir)
-        rows.mkString(
-          s"""{"convs":$sustainedConvs,"batch_pairs":$bp,"block_cache_mb":2048,""",
-          ",", "}")
+          finally deleteDir(dir)
+      } yield {
+        System.err.println(s"[bench] sustained $line")
+        // one flat record: the run's own fields plus the block's inputs
+        line.patch(1, s""""convs":$sustainedConvs,"batch_pairs":$bp,"block_cache_mb":2048,""", 0)
       }
       rc("sustained", assembled)
     }
@@ -251,13 +243,12 @@ object Bench {
     // ---- stage the warmup + flagship inputs (children) -----------------
     val warmStaged = Fork.json("graft.tools.StageBlock",
       Seq("2000", fpt.toString, cpus.toString, "0", "20", "0"), heapGB = 6)._1
-    val warmDir = warmStaged.flatMap(s => dirRe.findFirstMatchIn(s).map(_.group(1)))
+    val warmDir = warmStaged.flatMap(dirOf)
     val inStaged = rc("stage_flagship", Fork.json("graft.tools.StageBlock",
       Seq(nConvs.toString, nFiles.toString, cpus.toString, "0", "20",
         if (scalingOnly) "0" else "1"), heapGB = 10)._1)
-    val inDir = inStaged.flatMap(s => dirRe.findFirstMatchIn(s).map(_.group(1)))
-    val inBatchPairs = inStaged.flatMap(s => bpRe.findFirstMatchIn(s).map(_.group(1).toLong))
-      .getOrElse(-1L)
+    val inDir = inStaged.flatMap(dirOf)
+    val inBatchPairs = inStaged.flatMap(batchPairsOf).getOrElse(-1L)
 
     // ---- headline flagship at full node width --------------------------
     if (!scalingOnly) {
@@ -288,7 +279,7 @@ object Bench {
       Fork.json("graft.tools.StageBlock",
         Seq(c.toString, nFiles.toString, cpus.toString, "0", "20", "0"),
         heapGB = 10)._1
-        .flatMap(s => dirRe.findFirstMatchIn(s).map(_.group(1)))
+        .flatMap(dirOf)
         .map(c -> _)
     }.toMap
     val scaleDirs: Map[Long, String] = extraDirs ++ inDir.map(nConvs -> _).toMap

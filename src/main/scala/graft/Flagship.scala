@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.gen.TranscriptGen
 import graft.model.Turn
-import graft.streaming.{Metrics, SessionJoin, SessionJoinTws, Sink}
+import graft.streaming.{Metrics, SessionJoin, Sink}
 
 /** The flagship end-to-end streaming pipeline (BASELINE.json north_star):
   * transcripts stream → watermark → stateful session join of user turns to
@@ -123,17 +123,14 @@ object Flagship {
       nFiles: Int = 16, hotConvs: Int = 0): Result =
     runStaged(spark, stage(spark, nConvs, nFiles, hotConvs), filesPerTrigger)
 
-  /** Run the pipeline over an already-staged input dir. `engine` selects
-    * the stateful operator: "fmgws" (flatMapGroupsWithState) or "tws"
-    * (transformWithState with incremental ListState — see SessionJoinTws).
-    * `salt` > 0 inserts the north_star's hot-key salted repartition before
-    * the stateful stage: the hot conversation's per-turn map work spreads
-    * over `salt` tasks instead of landing in one (the state stage itself
-    * re-shuffles on conv_id regardless — that skew is what engine=tws
-    * addresses via incremental ListState appends).
+  /** Run the pipeline over an already-staged input dir. `salt` > 0
+    * inserts the north_star's hot-key salted repartition before the
+    * stateful stage: the hot conversation's per-turn map work spreads over
+    * `salt` tasks instead of landing in one (the state stage itself
+    * re-shuffles on conv_id regardless).
     */
   def runStaged(spark: SparkSession, inDir: String, filesPerTrigger: Int = 4,
-      engine: String = "fmgws", salt: Int = 0, heavyMap: Boolean = false): Result = {
+      salt: Int = 0, heavyMap: Boolean = false): Result = {
     import spark.implicits._
     val work = graft.util.Tmp.dir("flagship-run")
     val metrics = Metrics.install(spark)
@@ -171,10 +168,7 @@ object Flagship {
       }
     val turns = mapped.as[Turn]
 
-    val paired = engine match {
-      case "tws" => SessionJoinTws.pairStreaming(turns, SessionJoin.DefaultGapSeconds, "10 minutes")
-      case _ => SessionJoin.pairStreaming(turns, SessionJoin.DefaultGapSeconds, "10 minutes")
-    }
+    val paired = SessionJoin.pairStreaming(turns, SessionJoin.DefaultGapSeconds, "10 minutes")
 
     val t0 = System.nanoTime()
     val q = Sink.exactlyOnce(paired, s"$work/out", s"$work/ck", Trigger.AvailableNow()).start()
@@ -220,7 +214,6 @@ object Flagship {
     val filesPerTrigger = if (args.length > 2) args(2).toInt else 4
     val nFiles = if (args.length > 3) args(3).toInt else 16
     val parts = if (args.length > 4) args(4) else cores
-    val engine = if (args.length > 5) args(5) else "fmgws"
     val builder = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft-flagship")
@@ -248,10 +241,10 @@ object Flagship {
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // optional 7th arg: run over an already-staged input dir (lets
-    // Bench stage once and fork per-engine child JVMs over it)
-    val inDir = if (args.length > 6) args(6) else stage(spark, nConvs, nFiles)
-    val r = runStaged(spark, inDir, filesPerTrigger, engine)
+    // optional 6th arg: run over an already-staged input dir (lets
+    // Bench stage once and fork the run into a child JVM over it)
+    val inDir = if (args.length > 5) args(5) else stage(spark, nConvs, nFiles)
+    val r = runStaged(spark, inDir, filesPerTrigger)
     // ground-truth emission check (opt-in): compare the streamed pair
     // count against the batch (window-function) form on the same input
     if (sys.env.contains("SPARK_GRAFT_PAIR_CHECK")) {

@@ -30,12 +30,12 @@ import org.apache.spark.sql.SparkSession
   * turns/pairs per config plus the batch-oracle expected pair count and
   * fails loudly if any config's join output diverges.
   *
-  * It then interleaves {light, heavy} × {unsalted, salted} × {fmgws,
-  * tws-on-heavy} best-of-N at `cores` (trial-outer config-inner, fresh
-  * session per run — Bench methodology #1) and prints one JSON line
-  * with every trial AND the full argv so the published table is
-  * reproducible from this entry point (defaults == the recorded
-  * experiment: 50 k convs, ONE hot conversation at 50,000×, salt=8).
+  * It then interleaves {light, heavy} × {unsalted, salted} best-of-N at
+  * `cores` (trial-outer config-inner, fresh session per run — Bench
+  * methodology #1) and prints one JSON line with every trial AND the
+  * full argv so the published table is reproducible from this entry
+  * point (defaults == the recorded experiment: 50 k convs, ONE hot
+  * conversation at 50,000×, salt=8).
   */
 object SkewHeavyBench {
 
@@ -83,33 +83,26 @@ object SkewHeavyBench {
     // the same input — a bounded streaming replay emits the subset of
     // those pairs whose session the final watermark closed, so the
     // streaming count must sit just under this and be IDENTICAL across
-    // configs (salt/engine/map must never change join output).
+    // configs (salt/map must never change join output).
     val staged = sGen.read.parquet(inDir)
     val expTurns = staged.count()
     val batchPairs = graft.streaming.SessionJoin.pairBatch(staged).count()
     sGen.stop()
 
-    // (name, salt, heavyMap, engine). The tws rows isolate the OTHER skew
-    // remedy: the state stage hash-partitions on conv_id no matter what
-    // (one key, one task), so once salting has balanced the map stage,
-    // the hot key's whole-buffer re-serialization under fmgws is the
-    // remaining bottleneck that ListState appends (tws) attack.
-    val configs: Seq[(String, Int, Boolean, String)] = Seq(
-      ("light_unsalted", 0, false, "fmgws"),
-      ("light_salted", salt, false, "fmgws"),
-      ("heavy_unsalted", 0, true, "fmgws"),
-      ("heavy_salted", salt, true, "fmgws"),
-      ("heavy_unsalted_tws", 0, true, "tws"),
-      ("heavy_salted_tws", salt, true, "tws"))
+    // (name, salt, heavyMap)
+    val configs: Seq[(String, Int, Boolean)] = Seq(
+      ("light_unsalted", 0, false),
+      ("light_salted", salt, false),
+      ("heavy_unsalted", 0, true),
+      ("heavy_salted", salt, true))
 
     locally { val s = session(cores, 2 * cores)
       Flagship.runStaged(s, warmDir, fpt, heavyMap = true); s.stop() }
 
     val all: Seq[(String, Flagship.Result)] = (1 to nTrials).flatMap { t =>
-      configs.map { case (name, saltN, heavy, engine) =>
+      configs.map { case (name, saltN, heavy) =>
         val s = session(cores, 2 * cores)
-        val r = Flagship.runStaged(s, inDir, fpt, engine = engine,
-          salt = saltN, heavyMap = heavy)
+        val r = Flagship.runStaged(s, inDir, fpt, salt = saltN, heavyMap = heavy)
         s.stop()
         System.err.println(f"[skew-heavy] $name trial=$t turns_per_sec=${r.turnsPerSec}%.0f p99=${r.p99LatencyMs}ms elapsed=${r.elapsedSec}%.1fs turns=${r.turns} pairs=${r.pairs}")
         name -> r
@@ -132,7 +125,7 @@ object SkewHeavyBench {
     if (pairShare < 0.9)
       System.err.println(f"[skew-heavy] SANITY FAIL: emitted ${all.head._2.pairs} of $batchPairs batch pairs (${pairShare * 100}%.1f%%) — replay is late-dropping")
 
-    val parts = configs.map { case (name, _, _, _) =>
+    val parts = configs.map { case (name, _, _) =>
       val trials = all.collect { case (`name`, r) => r }
       val best = trials.maxBy(_.turnsPerSec)
       s""""$name":{"best_tps":${f(best.turnsPerSec)},"p99_ms":${best.p99LatencyMs},""" +

@@ -23,22 +23,16 @@ final case class Turn(
   * key IS the conv_id, so carrying it again inside every buffered row is
   * pure serialization waste — at the bench generator's shape (~11-char
   * conv ids, ~60-char texts) it is ~15% of state bytes, paid on every
-  * RocksDB put/get, changelog upload, and (for flatMapGroupsWithState)
-  * every whole-buffer re-serialization of a touched key. Both stateful
-  * session-join engines buffer this shape and re-attach conv_id at flush.
+  * RocksDB put/get, changelog upload, and whole-buffer re-serialization
+  * of a touched key. The session join (`SessionJoin.pairStreaming`)
+  * buffers this shape and re-attaches conv_id at flush.
   *
-  * Checkpoint compatibility: this slim (round 3) CHANGED the persisted
-  * state schema of both engines — the flatMapGroupsWithState ConvState
-  * value and the transformWithState ListState element — and round 4's
-  * tws meta tuple gained a bufMinTs slot. Restoring a checkpoint written
-  * before either change fails state-schema validation. Harmless here
-  * (checkpoints are per-run ephemeral); a deployment with durable
-  * checkpoints uses the versioned state envelope instead
-  * (streaming/StateEnvelope.scala, round 5): the state value is a
-  * binary blob with a 1-byte version tag and read-path migration shims,
-  * so the NEXT layout change is a decoder case, not a state rebuild —
-  * SessionJoinSpec resumes a v1 (pre-slim layout) checkpoint under the
-  * v2 engine exactly-once.
+  * Checkpoint compatibility: the buffer is persisted through the
+  * versioned state envelope (streaming/StateEnvelope.scala), a binary
+  * value with a 1-byte version tag and read-path migration shims, so a
+  * change to this layout is a decoder case, not a state rebuild —
+  * SessionJoinSpec resumes a v1 (pre-slim layout, conv_id in every row)
+  * checkpoint under the v2 layout exactly-once.
   */
 final case class BufTurn(
     turn_idx: Int,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.model.Turn
 import graft.ops.Windows
 import graft.sources.Tables
-import graft.streaming.{SessionJoin, SessionJoinTws, Sink}
+import graft.streaming.{SessionJoin, Sink}
 
 /** Oracle-checked queries for the windowing family (SURVEY.md §2.8):
   * tumbling / sliding / session windows, the window_end stamp, the session
@@ -94,15 +94,6 @@ object WindowQueries {
     // committed batches. The oracle is identical to q_session_join's —
     // streaming output must equal the batch/DuckDB result row-for-row.
     "q_stream_session_join" -> ((s, dir) => streamSessionJoin(s, dir)),
-
-    // the SAME join through the transformWithState engine (ListState +
-    // timers, SessionJoinTws) — third independent implementation against
-    // the same DuckDB oracle.
-    "q_stream_session_join_tws" -> ((s, dir) => {
-      import s.implicits._
-      replayStreamed(s, dir, "zzz-sentinel",
-        stream => SessionJoinTws.pairStreaming(stream.as[Turn], GapSeconds, "40 days").toDF())
-    }),
 
     // tumbling aggregation through the streaming engine (watermarked
     // groupBy(window) in Append mode, finalized windows only) — must
@@ -309,7 +300,6 @@ object WindowQueries {
          |FROM sessioned GROUP BY conv_id, sid""".stripMargin),
     "q_session_join" -> sessionJoinSql,
     "q_stream_session_join" -> sessionJoinSql,
-    "q_stream_session_join_tws" -> sessionJoinSql,
     "q_stream_tumbling_agg" -> (T +
       """SELECT conv_id,
         |  CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start,

@@ -16,10 +16,12 @@ import graft.model.{BufTurn, PairedTurn, Turn}
   * state: the "cache" is the group state, the TTL is the session gap
   * enforced by event-time timeout against the watermark.
   *
-  * Three implementations, proven equal by SessionJoinSpec:
+  * Three forms, proven equal by SessionJoinSpec:
   *  - `pairTurns`      pure Scala on one conversation's turns (the spec)
   *  - `pairBatch`      window-function form (oracle-checkable in DuckDB)
-  *  - `pairStreaming`  flatMapGroupsWithState (the production operator)
+  *  - `pairStreaming`  flatMapGroupsWithState over per-conversation state
+  *                     stored through the versioned `StateEnvelope` codec
+  *                     (the one streaming operator)
   */
 object SessionJoin {
 
@@ -87,12 +89,14 @@ object SessionJoin {
   }
 
   /** Keyed state: turns buffered until the watermark passes the end of the
-    * conversation's last open session. Kept deliberately small and
-    * schema-explicit (SURVEY.md §7.3): at 10^12-turn scale state size per
-    * key is bounded by one session's turns, and the event-time timeout
-    * guarantees eviction. Rows buffer as `BufTurn` — conv_id is the state
-    * key, so it never rides inside the value (~15% of state bytes at the
-    * bench shape, re-serialized on every touched-key batch in this engine).
+    * conversation's last open session. Kept deliberately small
+    * (SURVEY.md §7.3): at 10^12-turn scale state size per key is bounded
+    * by one session's turns, and the event-time timeout guarantees
+    * eviction. Rows buffer as `BufTurn` — conv_id is the state key, so it
+    * never rides inside the value (~15% of state bytes at the bench
+    * shape, re-serialized on every touched-key batch). Persisted as a
+    * version-tagged binary value (`StateEnvelope`), never as a Catalyst
+    * struct, so a layout change is a decoder case, not a state rebuild.
     */
   case class ConvState(buffered: List[BufTurn], flushedSessions: Long)
 
@@ -117,25 +121,30 @@ object SessionJoin {
     * by SkewHeavyBench's pair-count sanity check, round 4). The eager
     * flush is guarded by a min-buffered-ts check so conversations with
     * nothing closable pay nothing.
+    *
+    * `writeVersion` is the `StateEnvelope` layout written back to state;
+    * every known layout is read. Only the migration spec writes an older
+    * one, to build a legacy checkpoint.
     */
   def pairStreaming(
       turns: Dataset[Turn],
       gapSeconds: Long = DefaultGapSeconds,
-      lateness: String = "10 minutes"): Dataset[PairedTurn] = {
+      lateness: String = "10 minutes",
+      writeVersion: Int = StateEnvelope.CurrentVersion): Dataset[PairedTurn] = {
     val spark = turns.sparkSession
     import spark.implicits._
     turns
       .withWatermark("ts", lateness)
       .groupByKey(_.conv_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        processConv(gapSeconds))
+        processConv(gapSeconds, writeVersion))
   }
 
-  private def processConv(gapSeconds: Long)(
+  private def processConv(gapSeconds: Long, writeVersion: Int)(
       convId: String,
       incoming: Iterator[Turn],
-      state: GroupState[ConvState]): Iterator[PairedTurn] = {
-    val old = state.getOption.getOrElse(ConvState(Nil, 0L))
+      state: GroupState[Array[Byte]]): Iterator[PairedTurn] = {
+    val old = state.getOption.map(StateEnvelope.decode).getOrElse(ConvState(Nil, 0L))
     val wm = state.getCurrentWatermarkMs()
     if (state.hasTimedOut) {
       if (old.buffered.isEmpty) {
@@ -144,13 +153,14 @@ object SessionJoin {
         // session numbering, like the reference's expired cache entries.
         state.remove()
         Iterator.empty
-      } else flushAndRearm(convId, old, Nil, gapSeconds, wm, state)
+      } else flushAndRearm(convId, old, Nil, gapSeconds, wm, state, writeVersion)
     } else {
       // Drop late turns explicitly (flatMapGroupsWithState does not):
       // reference drop rule buffer_system_window.go:333-336.
       val fresh = incoming.filter(t => wm == 0 || t.ts.getTime >= wm).toList
       if (old.buffered.isEmpty && fresh.isEmpty) Iterator.empty
-      else flushAndRearm(convId, old, fresh.map(BufTurn.of), gapSeconds, wm, state)
+      else flushAndRearm(convId, old, fresh.map(BufTurn.of), gapSeconds, wm,
+        state, writeVersion)
     }
   }
 
@@ -173,14 +183,16 @@ object SessionJoin {
       freshTurns: List[BufTurn],
       gapSeconds: Long,
       wm: Long,
-      state: GroupState[ConvState]): Iterator[PairedTurn] = {
+      state: GroupState[Array[Byte]],
+      writeVersion: Int): Iterator[PairedTurn] = {
     val buf = old.buffered ++ freshTurns
     val (closed, open, firstOpenEnd) = splitClosed(buf, gapSeconds, wm)
     val pairs =
       if (closed.isEmpty) Nil
       else pairTurns(closed.flatten.map(BufTurn.toTurn(convId, _)), gapSeconds)
         .map(p => p.copy(session_id = p.session_id + old.flushedSessions))
-    state.update(ConvState(open, old.flushedSessions + closed.size))
+    state.update(StateEnvelope.encode(convId,
+      ConvState(open, old.flushedSessions + closed.size), writeVersion))
     if (open.isEmpty)
       // everything closed: keep a tombstone one more gap (numbering
       // continuity for stragglers), then the timeout branch evicts it

@@ -1,164 +1,106 @@
 package graft.streaming
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.model.{BufTurn, PairedTurn, Turn}
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
+import java.sql.Timestamp
+import graft.model.BufTurn
 
-/** Versioned state envelope for the fmgws session join: the persisted
-  * state value is a BINARY blob carrying a 1-byte version tag, decoded
-  * through per-version shims on read and always written at the current
-  * version. This is the durable-checkpoint evolution mechanism the
-  * BufTurn doc note names (Model.scala): Spark validates the CATALYST
-  * state schema on restore, so any case-class change (the round-3
-  * conv_id slim, round-4's tws meta slot) forces a full state rebuild —
-  * but a binary column's schema never changes, and the tag moves the
+/** Versioned state envelope: the codec for the session join's persisted
+  * per-conversation state (`SessionJoin.pairStreaming`). The state value
+  * is a BINARY blob carrying a 1-byte version tag, decoded through
+  * per-version shims on read and written at the version the operator is
+  * given (the current one unless a test builds a legacy checkpoint).
+  * Spark validates a CATALYST state schema on restore, so any case-class
+  * change (e.g. the conv_id slim) would force a full state rebuild; a
+  * binary column's schema never changes, and the tag moves the
   * compatibility decision into this codec, where an old layout is a
-  * read-path migration instead of a rebuild.
-  *
-  * The flagship default (`SessionJoin.pairStreaming`) keeps
-  * Catalyst-encoded state — bench checkpoints are per-run ephemeral and
-  * the typed encoder is the faster hot path. `pairStreaming` here is
-  * the drop-in for deployments with durable checkpoints;
-  * SessionJoinSpec's resume-across-schema-change case stops a query
-  * writing VERSION 1 (the legacy pre-slim layout, conv_id inside every
-  * buffered row) and resumes it writing version 2, exactly-once output
-  * intact.
+  * read-path migration instead of a rebuild. SessionJoinSpec stops a
+  * query writing VERSION 1 and resumes it writing later versions,
+  * exactly-once output intact.
   *
   * Versions:
   *   1 — legacy layout (reference for migration): per buffered turn
   *       {conv_id, turn_idx, role, text, tool, tsMs}; the conv_id is
   *       redundant (it is the state key) and is DROPPED on read.
-  *   2 — current slim layout: {turn_idx, role, text, tool, tsMs}.
+  *   2 — slim layout: {turn_idx, role, text, tool, tsMs}. Millisecond
+  *       ts, so it truncated sub-millisecond input timestamps (emitted
+  *       pairs then disagreed with the batch form on microsecond data).
+  *   3 — current layout: v2 with ts as epoch MICROseconds (Spark's
+  *       timestamp resolution). v1/v2 state reads with its ms precision.
   */
 object StateEnvelope {
 
-  val CurrentVersion = 2
+  val CurrentVersion = 3
 
-  private def writeStr(o: DataOutputStream, s: String): Unit =
-    if (s == null) o.writeInt(-1)
-    else {
-      val b = s.getBytes("UTF-8"); o.writeInt(b.length); o.write(b)
-    }
+  /** Epoch microseconds of `ts` — Spark's own timestamp resolution, so a
+    * buffered turn's ts round-trips exactly.
+    */
+  private def toMicros(ts: Timestamp): Long =
+    Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000
 
-  private def readStr(i: DataInputStream): String = {
-    val n = i.readInt()
-    if (n < 0) null
-    else {
-      val b = new Array[Byte](n); i.readFully(b); new String(b, "UTF-8")
-    }
+  private def fromMicros(us: Long): Timestamp = {
+    val ts = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
+    ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+    ts
   }
 
-  /** Encode at an explicit version (tests write v1 to exercise the
-    * migration shim; production writes CurrentVersion).
+  private def utf8(s: String): Array[Byte] = if (s == null) null else s.getBytes(UTF_8)
+
+  /** Encode at an explicit version (tests write older versions to
+    * exercise the migration shims; production writes CurrentVersion).
+    * Big-endian; a string is its UTF-8 byte length (-1 for null), then
+    * the bytes.
     */
   def encode(convId: String, st: SessionJoin.ConvState, version: Int = CurrentVersion): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val o = new DataOutputStream(bos)
-    o.writeByte(version)
-    o.writeLong(st.flushedSessions)
-    o.writeInt(st.buffered.size)
+    if (version < 1 || version > CurrentVersion)
+      throw new IllegalArgumentException(s"unknown state version $version")
+    val key = if (version == 1) utf8(convId) else null // legacy layout carried the key
+    val strs = st.buffered.iterator
+      .flatMap(t => Iterator(utf8(t.role), utf8(t.text), utf8(t.tool))).toArray
+    def sized(b: Array[Byte]) = 4 + (if (b == null) 0 else b.length)
+    val perTurn = 4 + 8 + (if (version == 1) sized(key) else 0)
+    val bb = ByteBuffer.allocate(1 + 8 + 4 + st.buffered.size * perTurn + strs.map(sized).sum)
+    def putStr(b: Array[Byte]): Unit =
+      if (b == null) bb.putInt(-1) else { bb.putInt(b.length); bb.put(b) }
+    bb.put(version.toByte).putLong(st.flushedSessions).putInt(st.buffered.size)
+    var i = 0
     st.buffered.foreach { t =>
-      version match {
-        case 1 => writeStr(o, convId) // legacy layout carried the key
-        case 2 => ()
-        case v => throw new IllegalArgumentException(s"unknown state version $v")
-      }
-      o.writeInt(t.turn_idx)
-      writeStr(o, t.role)
-      writeStr(o, t.text)
-      writeStr(o, t.tool)
-      o.writeLong(t.ts.getTime)
+      if (version == 1) putStr(key)
+      bb.putInt(t.turn_idx)
+      putStr(strs(i)); putStr(strs(i + 1)); putStr(strs(i + 2))
+      i += 3
+      bb.putLong(if (version < 3) t.ts.getTime else toMicros(t.ts))
     }
-    o.flush()
-    bos.toByteArray
+    bb.array()
   }
 
-  /** Decode any known version — the migration shim lives here. */
+  /** Decode any known version — the migration shims live here. */
   def decode(bytes: Array[Byte]): SessionJoin.ConvState = {
-    val i = new DataInputStream(new ByteArrayInputStream(bytes))
-    val ver = i.readByte()
+    val bb = ByteBuffer.wrap(bytes)
+    val ver = bb.get()
     if (ver < 1 || ver > CurrentVersion)
       throw new IllegalStateException(s"unknown state version $ver in checkpoint")
-    val flushed = i.readLong()
-    val n = i.readInt()
+    def getStr(): String = {
+      val n = bb.getInt()
+      if (n < 0) null
+      else {
+        val s = new String(bytes, bb.position(), n, UTF_8)
+        bb.position(bb.position() + n)
+        s
+      }
+    }
+    val flushed = bb.getLong()
+    val n = bb.getInt()
     val buf = List.newBuilder[BufTurn]
     (0 until n).foreach { _ =>
-      ver match {
-        case 1 => readStr(i): Unit // legacy conv_id: redundant, dropped
-        case 2 => ()
-        case v => throw new IllegalStateException(s"unknown state version $v in checkpoint")
-      }
-      val idx = i.readInt()
-      val role = readStr(i)
-      val text = readStr(i)
-      val tool = readStr(i)
-      val ts = new java.sql.Timestamp(i.readLong())
+      if (ver == 1) getStr(): Unit // legacy conv_id: redundant, dropped
+      val idx = bb.getInt()
+      val role = getStr()
+      val text = getStr()
+      val tool = getStr()
+      val ts = if (ver < 3) new Timestamp(bb.getLong()) else fromMicros(bb.getLong())
       buf += BufTurn(idx, role, text, tool, ts)
     }
     SessionJoin.ConvState(buf.result(), flushed)
-  }
-
-  /** fmgws session join with enveloped state. Same semantics as
-    * `SessionJoin.pairStreaming` — late-drop rule, eager data-path
-    * flush, first-open-close timer, tombstone eviction — via the shared
-    * `splitClosed`/`pairTurns`/`closePointMs`; only the state VALUE
-    * representation differs (binary envelope vs Catalyst encoder).
-    */
-  def pairStreaming(
-      turns: Dataset[Turn],
-      gapSeconds: Long = SessionJoin.DefaultGapSeconds,
-      lateness: String = "10 minutes",
-      writeVersion: Int = CurrentVersion): Dataset[PairedTurn] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    turns
-      .withWatermark("ts", lateness)
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        processConv(gapSeconds, writeVersion))
-  }
-
-  private def processConv(gapSeconds: Long, writeVersion: Int)(
-      convId: String,
-      incoming: Iterator[Turn],
-      state: GroupState[Array[Byte]]): Iterator[PairedTurn] = {
-    val old = state.getOption.map(decode).getOrElse(SessionJoin.ConvState(Nil, 0L))
-    val wm = state.getCurrentWatermarkMs()
-    if (state.hasTimedOut) {
-      if (old.buffered.isEmpty) { state.remove(); Iterator.empty }
-      else flushAndRearm(convId, old, Nil, gapSeconds, wm, state, writeVersion)
-    } else {
-      val fresh = incoming.filter(t => wm == 0 || t.ts.getTime >= wm).toList
-      if (old.buffered.isEmpty && fresh.isEmpty) Iterator.empty
-      else flushAndRearm(convId, old, fresh.map(BufTurn.of), gapSeconds, wm,
-        state, writeVersion)
-    }
-  }
-
-  // envelope twin of SessionJoin.flushAndRearm (same decisions, state
-  // stored through encode())
-  private def flushAndRearm(
-      convId: String,
-      old: SessionJoin.ConvState,
-      freshTurns: List[BufTurn],
-      gapSeconds: Long,
-      wm: Long,
-      state: GroupState[Array[Byte]],
-      writeVersion: Int): Iterator[PairedTurn] = {
-    val buf = old.buffered ++ freshTurns
-    val (closed, open, firstOpenEnd) = SessionJoin.splitClosed(buf, gapSeconds, wm)
-    val pairs =
-      if (closed.isEmpty) Nil
-      else SessionJoin.pairTurns(closed.flatten.map(BufTurn.toTurn(convId, _)), gapSeconds)
-        .map(p => p.copy(session_id = p.session_id + old.flushedSessions))
-    state.update(encode(convId,
-      SessionJoin.ConvState(open, old.flushedSessions + closed.size), writeVersion))
-    if (open.isEmpty)
-      state.setTimeoutTimestamp(wm + gapSeconds * 1000)
-    else
-      state.setTimeoutTimestamp(
-        math.max(SessionJoin.closePointMs(firstOpenEnd, gapSeconds), wm + 1))
-    pairs.iterator
   }
 }

@@ -1,6 +1,8 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.util.Try
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 /** Crash-isolated bench record. Each measurement block's JSON line is
   * appended to a `.parts.jsonl` sidecar THE MOMENT the block completes,
@@ -43,16 +45,25 @@ final class BenchRecord(val partsPath: String) {
 
   def lostJson: String = lost.map("\"" + _ + "\"").mkString("[", ",", "]")
 
-  /** Extract a numeric field from a block's JSON, scoped to the text
-    * after `anchor` (pass "{" for whole-record scope). Returns "null"
-    * when the block or field is absent — assembled records degrade to
-    * nulls, never to exceptions.
+  /** A numeric (or boolean) field of a block's JSON at `path`, as JSON
+    * text, e.g. `field("skew", "fmgws", "best_tps")`. Returns "null" when
+    * the block or field is absent or not a number — assembled records
+    * degrade to nulls, never to exceptions.
     */
-  def field(name: String, anchor: String, fieldName: String): String = {
-    val js = json(name)
-    val i = js.indexOf(anchor)
-    if (i < 0) "null"
-    else ("\"" + fieldName + "\":(-?[0-9.]+)").r
-      .findFirstMatchIn(js.substring(i)).map(_.group(1)).getOrElse("null")
-  }
+  def field(name: String, path: String*): String =
+    BenchRecord.at(json(name), path: _*)
+      .filter(n => n.isNumber || n.isBoolean).map(_.toString).getOrElse("null")
+}
+
+object BenchRecord {
+
+  private val mapper = new ObjectMapper()
+
+  /** The node at `path` in the JSON text `js`; None when `js` does not
+    * parse or the path is absent or null.
+    */
+  def at(js: String, path: String*): Option[JsonNode] =
+    Try(mapper.readTree(js)).toOption.flatMap(n => Option(n))
+      .map(root => path.foldLeft(root)(_.path(_)))
+      .filterNot(n => n.isMissingNode || n.isNull)
 }

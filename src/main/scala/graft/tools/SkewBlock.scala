@@ -2,11 +2,10 @@ package graft.tools
 
 import graft.Flagship
 
-/** The standing skew regime — hot conversations through unsalted fmgws,
-  * salted fmgws, and the tws ListState engine, plus the two
-  * small-micro-batch probes — as one child JVM owning its staging, its
-  * ~15 streaming rigs, and its cleanup. Prints one JSON line with every
-  * config's best AND every interleaved trial.
+/** The standing skew regime — hot conversations through the unsalted and
+  * salted session join, plus the small-micro-batch probe — as one child
+  * JVM owning its staging, its streaming rigs, and its cleanup. Prints
+  * one JSON line with every config's best AND every interleaved trial.
   *
   * Methodology preserved from the in-parent round-4 block: one JVM-wide
   * warmup, then INTERLEAVED trials (trial-outer, config-inner, fresh
@@ -38,26 +37,22 @@ object SkewBlock {
     val warmDir = Flagship.stage(sGen, 2000L, nFiles = fpt)
     sGen.stop()
 
-    // (name, filesPerTrigger, engine, salt). The fpt=latFpt rows probe
-    // the many-small-batches regime: fmgws re-serializes a hot key's
-    // whole buffered state every micro-batch it's touched in
-    // (O(batches x buffer) write amplification); tws's ListState appends
-    // only the new turns — that's where it pays off.
-    val configs: Seq[(String, Int, String, Int)] = Seq(
-      ("fmgws", fpt, "fmgws", 0),
-      ("fmgws_salted", fpt, "fmgws", salt),
-      ("tws", fpt, "tws", 0),
-      (s"fmgws_fpt$latFpt", latFpt, "fmgws", 0),
-      (s"tws_fpt$latFpt", latFpt, "tws", 0))
+    // (name, filesPerTrigger, salt). The fpt=latFpt row probes the
+    // many-small-batches regime: the join re-serializes a hot key's
+    // buffered state every micro-batch it's touched in.
+    val configs: Seq[(String, Int, Int)] = Seq(
+      ("fmgws", fpt, 0),
+      ("fmgws_salted", fpt, salt),
+      (s"fmgws_fpt$latFpt", latFpt, 0))
 
     locally {
       val s = BenchSession.build(cores, 2 * cores, appName = "graft-skew")
       Flagship.runStaged(s, warmDir, filesPerTrigger = fpt); s.stop()
     }
     val all: Seq[(String, Flagship.Result)] = (1 to nTrials).flatMap { t =>
-      configs.map { case (name, fTrig, eng, saltN) =>
+      configs.map { case (name, fTrig, saltN) =>
         val s = BenchSession.build(cores, 2 * cores, appName = "graft-skew")
-        val r = Flagship.runStaged(s, inDir, fTrig, engine = eng, salt = saltN)
+        val r = Flagship.runStaged(s, inDir, fTrig, salt = saltN)
         s.stop()
         System.err.println(f"[bench] skew $name trial=$t turns_per_sec=${r.turnsPerSec}%.0f p99=${r.p99LatencyMs}ms elapsed=${r.elapsedSec}%.1fs")
         name -> r
@@ -66,7 +61,7 @@ object SkewBlock {
     graft.util.Tmp.delete(warmDir)
     graft.util.Tmp.delete(inDir)
 
-    val bests = configs.map { case (name, _, _, _) =>
+    val bests = configs.map { case (name, _, _) =>
       val trials = all.collect { case (`name`, r) => r }
       val best = trials.maxBy(_.turnsPerSec)
       System.err.println(f"[bench] skew best $name turns_per_sec=${best.turnsPerSec}%.0f p99=${best.p99LatencyMs}ms")

@@ -46,17 +46,23 @@ class BenchHarnessSpec extends AnyFunSuite {
     rec.record("a", Some("""{"x":1}"""))
     rec.record("b", None) // the killed block
     rec.record("c", Some("""{"y":{"z":2.5}}"""))
+    // exponent-form number, and a nested field sharing the top-level name
+    rec.record("d", Some("""{"inner":{"tps":1.0},"tps":1.5E6,"ok":true,"s":"x"}"""))
     val lines = Files.readAllLines(Paths.get(parts))
-    assert(lines.size() == 3)
+    assert(lines.size() == 4)
     lines.forEach(l => assert(parse(l).get("block") != null)) // each line parseable
     assert(parse(lines.get(1)).get("json").isNull)
     assert(rec.json("a") == """{"x":1}""")
     assert(rec.json("b") == "null")
     assert(rec.json("never-recorded") == "null")
     assert(rec.lost == Seq("b"))
-    assert(rec.field("c", "\"y\":", "z") == "2.5")
-    assert(rec.field("c", "\"missing\":", "z") == "null")
-    assert(rec.field("b", "{", "anything") == "null")
+    assert(rec.field("c", "y", "z") == "2.5")
+    assert(rec.field("c", "missing", "z") == "null")
+    assert(rec.field("b", "anything") == "null")
+    assert(rec.field("d", "tps").toDouble == 1.5e6)
+    assert(rec.field("d", "inner", "tps").toDouble == 1.0)
+    assert(rec.field("d", "ok") == "true")
+    assert(rec.field("d", "s") == "null") // not a number: never spliced raw
     Files.deleteIfExists(Paths.get(parts)): Unit
   }
 
@@ -73,15 +79,13 @@ class BenchHarnessSpec extends AnyFunSuite {
     // the run continued: skew + all scaling combos + sweep landed
     rec.record("sustained",
       Some("""{"convs":5000000,"batch_pairs":100,"block_cache_mb":2048,""" +
-        """"fmgws":{"turns_per_sec":2400000.0,"pairs":99,"max_state_rows":5000000},""" +
-        """"tws":{"turns_per_sec":1000000.0}}"""))
+        """"turns":105000000,"pairs":99,"turns_per_sec":2.4E6,"max_state_rows":5000000}"""))
     rec.record("stage_flagship", Some("""{"dir":"/dev/shm/x","batch_pairs":15758267}"""))
     rec.record("flagship", Fork.json("graft.ChaosChild", Seq("halt"), heapGB = 1)._1)
     rec.record("skew",
       Some("""{"cores":8,"convs":100000,"hot":4,"hot_mult":20000,"salt":8,""" +
         """"fmgws":{"best_tps":500000.0},"fmgws_salted":{"best_tps":490000.0},""" +
-        """"tws":{"best_tps":300000.0},"fmgws_fpt2":{"best_tps":200000.0},""" +
-        """"tws_fpt2":{"best_tps":210000.0}}"""))
+        """"fmgws_fpt2":{"best_tps":200000.0}}"""))
     for ((c, n) <- Seq((2, 3000000L), (8, 3000000L), (1, 1500000L), (4, 1500000L))) {
       val tps = 100000.0 * c // perfect linear scaling in the fixture
       rec.record(s"scaling_c${c}_n$n",
@@ -90,8 +94,7 @@ class BenchHarnessSpec extends AnyFunSuite {
     rec.record("skew_heavy",
       Some("""{"sanity_ok":1,"emitted_pair_share":1.0,""" +
         """"light_unsalted":{"best_tps":1.0},"light_salted":{"best_tps":1.0},""" +
-        """"heavy_unsalted":{"best_tps":1.0},"heavy_salted":{"best_tps":1.8},""" +
-        """"heavy_unsalted_tws":{"best_tps":1.0},"heavy_salted_tws":{"best_tps":1.0}}"""))
+        """"heavy_unsalted":{"best_tps":1.0},"heavy_salted":{"best_tps":1.8}}"""))
     rec.record("sweep",
       Some("""{"n_queries":101,"failed_queries":0,"total_query_sec":250.5,""" +
         """"queries":{"q1_agg":1.5}}"""))
@@ -107,7 +110,8 @@ class BenchHarnessSpec extends AnyFunSuite {
     // completed blocks are all present with their values intact
     assert(c.get("value").asDouble() == 250.5)
     assert(c.get("n_queries").asInt() == 101)
-    assert(c.get("sustained").get("fmgws_tps").asDouble() == 2400000.0)
+    assert(c.get("sustained").get("turns_per_sec").asDouble() == 2400000.0)
+    assert(c.get("sustained").get("batch_pairs").asLong() == 100L)
     assert(c.get("skew").get("fmgws").asDouble() == 500000.0)
     assert(c.get("skew_heavy").get("sanity_ok").asBoolean())
     assert(c.get("skew_heavy").get("heavy_salted").asDouble() == 1.8)

@@ -8,10 +8,11 @@ import graft.gen.TranscriptGen
 import graft.model.{PairedTurn, Turn}
 import graft.streaming.SessionJoin
 
-/** The flagship operator: three implementations (pure Scala spec,
-  * window-function batch, flatMapGroupsWithState streaming) must agree on
-  * the same input — and the streaming one must survive a checkpoint stop/
-  * resume without duplicating or losing pairs (exactly-once, BASELINE.json
+/** The flagship operator: three forms (pure Scala spec, window-function
+  * batch, flatMapGroupsWithState streaming over enveloped state) must
+  * agree on the same input — and the streaming one must survive a
+  * checkpoint stop/resume, including one across a state-layout change,
+  * without duplicating or losing pairs (exactly-once, BASELINE.json
   * north_rule).
   */
 class SessionJoinSpec extends SparkTestBase {
@@ -105,6 +106,19 @@ class SessionJoinSpec extends SparkTestBase {
     }
   }
 
+  test("state envelope keeps microsecond timestamps; v2 state reads at ms precision") {
+    import graft.streaming.StateEnvelope
+    import graft.model.BufTurn
+    def at(ms: Long, nanos: Int) = { val t = new Timestamp(ms); t.setNanos(nanos); t }
+    val fine = at(1704229670758L, 758444000) // .758444
+    val preEpoch = at(-1L, 999001000) // 1969-12-31 23:59:59.999001
+    val st = SessionJoin.ConvState(List(
+      BufTurn(0, "user", "q", null, fine), BufTurn(1, "assistant", "a", null, preEpoch)), 0L)
+    assert(StateEnvelope.decode(StateEnvelope.encode("c", st)) == st)
+    assert(StateEnvelope.decode(StateEnvelope.encode("c", st, 2)).buffered.map(_.ts) ==
+      Seq(at(1704229670758L, 758000000), at(-1L, 999000000)))
+  }
+
   test("enveloped streaming resumes across a state-schema change (v1 checkpoint -> v2 engine)") {
     val input = (0L until 6L).flatMap(TranscriptGen.turnsFor(13L, _))
     val expected = sortPairs(SessionJoin.pairBatch(input.toDF(), gap)
@@ -116,8 +130,7 @@ class SessionJoinSpec extends SparkTestBase {
     val mem = MemoryStream[Turn]
     def run(writeVersion: Int, data: Seq[Turn]): Unit = {
       if (data.nonEmpty) mem.addData(data)
-      val paired = graft.streaming.StateEnvelope.pairStreaming(
-        mem.toDS(), gap, "10 minutes", writeVersion)
+      val paired = SessionJoin.pairStreaming(mem.toDS(), gap, "10 minutes", writeVersion)
       val q = graft.streaming.Sink.exactlyOnce(paired, outDir, ckDir,
         Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -129,13 +142,47 @@ class SessionJoinSpec extends SparkTestBase {
     // migration shim and writes v2 — the schema change a Catalyst-encoded
     // state value would reject at restore
     run(writeVersion = 2, h2)
-    run(writeVersion = 2, Seq(Turn("zzz-flush", 0, "user", "flush", null,
+    // then on to the current layout, reading the v2 state it left
+    val current = graft.streaming.StateEnvelope.CurrentVersion
+    run(writeVersion = current, Seq(Turn("zzz-flush", 0, "user", "flush", null,
       new Timestamp(input.map(_.ts.getTime).max + 10 * 3600 * 1000))))
-    run(writeVersion = 2, Nil) // let the armed timeout fire
+    run(writeVersion = current, Nil) // let the armed timeout fire
 
     val got = graft.streaming.Sink.readCommitted(spark, outDir)
       .drop("_batch_id", "_partition_id").as[PairedTurn].collect().toSeq
     assert(sortPairs(got) == expected)
+  }
+
+  test("conversation resuming after flush continues session numbering") {
+    val gap = 600L
+    def t(i: Int, role: String, sec: Long) =
+      Turn("c1", i, role, s"t$i", null, new Timestamp(sec * 1000))
+    val burst1 = Seq(t(0, "user", 1000), t(1, "assistant", 1010))
+    val burst2 = Seq(t(2, "user", 50000), t(3, "assistant", 50010))
+    val flush1 = Turn("zz1", 0, "user", "f", null, new Timestamp(20000L * 1000))
+    val flush2 = Turn("zz2", 0, "user", "f", null, new Timestamp(99999L * 1000))
+
+    val outDir = Files.createTempDirectory("sjn-out").toString
+    val ckDir = Files.createTempDirectory("sjn-ck").toString
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Turn]
+    val paired = SessionJoin.pairStreaming(mem.toDS(), gap, "1 minute")
+    def runOnce(): Unit = {
+      val q = graft.streaming.Sink.exactlyOnce(paired, outDir, ckDir,
+        Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    mem.addData(burst1); runOnce()
+    mem.addData(Seq(flush1)); runOnce(); runOnce() // burst1 session flushes
+    mem.addData(burst2); runOnce()
+    mem.addData(Seq(flush2)); runOnce(); runOnce() // burst2 flushes
+
+    val got = graft.streaming.Sink.readCommitted(spark, outDir)
+      .filter(!$"conv_id".startsWith("zz"))
+      .select("session_id", "user_turn_idx", "reply_turn_idx")
+      .as[(Long, Int, Int)].collect().toSeq.sorted
+    // second burst is session 1 — numbering survived the first flush
+    assert(got == Seq((0L, 0, 1), (1L, 2, 3)))
   }
 
   test("generator is deterministic across parallelism") {
