@@ -1,335 +1,287 @@
 package graft
 
-import graft.tools.{BenchRecord, Fork}
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.tools.{BenchRecord, Fork, StageBlock, TrialBlock}
+import graft.tools.BenchRecord.{mapper, nul, obj}
+import graft.tools.TrialBlock.Config
 
-/** Driver-run benchmark. Prints ONE COMPACT machine-parseable JSON line
-  * to stdout (size-bounded: the driver's captured output tail is finite,
-  * and rounds 1–2 lost their perf record to an oversized line) and writes
-  * the full detail — per-query timings, every trial of every block, the
-  * skew comparisons — to `bench_detail.json`.
+/** The bench entry point. Prints ONE COMPACT machine-parseable JSON line
+  * to stdout (size-bounded: whoever runs it may keep only the output's tail)
+  * and writes the full detail — per-query timings, every trial of every
+  * block, per-block wall times — to `bench_detail.json`.
   *
-  * ROUND-5 SHAPE: the parent is a THIN ORCHESTRATOR that never creates a
-  * SparkSession. Every measurement block — sustained, staging, flagship,
-  * skew, each scaling level, skew-heavy, the batch query sweep — runs in
-  * a forked child JVM (tools.Fork) whose native RocksDB/allocator residue
-  * dies with it, and every block's JSON is recorded INCREMENTALLY
-  * (tools.BenchRecord): appended to `<detail>.parts.jsonl` and folded
-  * into a rewritten `bench_detail.json` the moment the block completes.
-  * Round 4's driver run was OOM-killed at minute 51 with every completed
-  * block's result still unemitted in the parent; under this harness the
-  * same kill costs ONE block — the final line reports it in
-  * `lost_blocks` and carries everything else. BenchHarnessSpec
-  * chaos-tests exactly that path (killed child → parseable record).
+  * The parent is a thin orchestrator that never creates a SparkSession.
+  * It forks three kinds of children (tools.Fork, each under a deadline
+  * derived from its block's size): StageBlock stages every input,
+  * TrialBlock runs every streaming block, SweepBlock times the batch
+  * queries. Every planned block starts out lost in the record
+  * (tools.BenchRecord) and is replaced as it lands, and the record is
+  * rewritten after every block; the compact line prints once, at the end
+  * or from the shutdown hook when the run is killed. A killed child costs
+  * one block, a killed parent the blocks still unfinished — both name
+  * what is missing in `lost_blocks` (BenchHarnessSpec).
   *
-  * Measurements, all on deterministic staged transcript streams:
-  *  - per-query batch timings at SPARK_GRAFT_CPUS cores over
-  *    SPARK_GRAFT_SF_DIR (tools.SweepBlock; exhausted via toRdd so
-  *    projections are costed);
-  *  - the flagship streaming session-join pipeline at full node width,
-  *    BEST of a fixed SPARK_GRAFT_TRIALS trials, plus a latency-shaped
-  *    trigger config (tools.FlagshipBlock);
-  *  - the north_rule scaling measurement at BOTH level pairs — the
-  *    BASELINE.md-spirited 2→8 proxy and the bandwidth-unsaturated 1→4
-  *    proxy of record (BASELINE.md §"proxy of record": 4N executors
-  *    bring 4× memory bandwidth, a 4×-core slice of one socket doesn't)
-  *    — one FlagshipBlock child per (cores, input) combo, efficiency =
-  *    (tps_hi/tps_lo)/(hi/lo), each pair's replay input sized to its
-  *    high level (convsFor) so the fixed per-run cost stays under ~10%;
-  *  - the skew regime (north_star: salting for hot conversations):
-  *    hot-conversation input through the unsalted and salted session
-  *    join (tools.SkewBlock);
-  *  - the skew-HEAVY regime (salting-pays: conv-keyed time-sliced
-  *    ingest + heavy per-turn map; graft.SkewHeavyBench child);
-  *  - sustained (SPARK_GRAFT_SUSTAINED, default on): one long trial at
-  *    ~3.4x the flagship input, corpus staged to DISK by a StageBlock
-  *    child, block cache sized to the state working set.
+  * Blocks, headline first:
+  *  - sweep: every SparkEntry query over SPARK_GRAFT_SF_DIR;
+  *  - flagship: the streaming session-join pipeline at node width, a
+  *    throughput config and a small-trigger latency config;
+  *  - scaling: the north_rule N→4N proxy — one block per (cores, input)
+  *    level, each pair's input sized to its high level, identical
+  *    partitioning at both levels, efficiency = (tps_hi/tps_lo)/(hi/lo);
+  *  - skew: hot conversations through the unsalted and salted join, plus
+  *    the small-trigger probe;
+  *  - skew_heavy: conv-keyed, time-sliced ingest with the heavy per-turn
+  *    map, where salting pays;
+  *  - sustained: one long trial over a disk-staged corpus sized from the
+  *    child heap, block cache sized to match.
   *
-  * Every streaming block carries emission accounting (batch-oracle pair
-  * count, streamed share, watermark at shutdown) so a replay that
-  * silently drops join output (the round-3 staging artifact) fails
-  * loudly instead of reading as throughput.
+  * Every streaming block carries its sanity gate (`sanity_ok`): every run
+  * saw every staged turn, every config emitted the same pairs, and at
+  * least 0.9 of the batch-oracle pair count — so a replay that silently
+  * drops join output fails in the record instead of reading as
+  * throughput.
   *
-  * Methodology (BENCH.md §1): every trial logged to stderr; reported
-  * per-level numbers are BEST of a FIXED trial count (noise on a shared
-  * host is strictly subtractive; no optional stopping); data layout and
-  * shuffle/state partitioning IDENTICAL across scaling levels.
+  * Sizes come from the host: SPARK_GRAFT_CPUS (default: the available
+  * processors) cores, a child heap of a quarter of MemTotal clamped to
+  * 2–8 GB, inputs per core. SPARK_GRAFT_SF_DIR and SPARK_GRAFT_DETAIL say
+  * where the queries read and the detail goes.
   */
 object Bench {
 
-  final case class Params(
-      sfDir: String, cpus: Int, nConvs: Long, scaleBase: Long, nFiles: Int,
-      fpt: Int, latFpt: Int, nTrials: Int,
-      skewConvs: Long, hotConvs: Int, hotMult: Int, skewSalt: Int,
-      pairs: Seq[(Int, Int)], detailPath: String) {
-    def convsFor(hi: Int): Long = math.max(1000L, scaleBase * hi / 8)
+  val Trials = 3
+  /** Files per staged input, files per trigger (throughput configs), and
+    * the small-trigger latency probe.
+    */
+  val StagedFiles = 32
+  val Fpt = 16
+  val LatFpt = 2
+  val ConvsPerCore = 25000L
+  /** Each scaling pair replays ScaleConvsPerCore × hi convs (~21 turns
+    * each), so the high level's trial lasts 40–60 s on a 4-core host and
+    * the fixed per-run cost (query planning, RocksDB opens, commit
+    * protocol: 4–5 s there, BENCH.md §0.6) is about a tenth of it. A
+    * larger replay would not fit a full run into 2670 s on that host.
+    */
+  val ScaleConvsPerCore = 160000L
+  val DefaultCacheMB = 512
+  /** Hot conversations at ~20000× the median turn count: ~44 % of all
+    * turns land in 4 keys, so one hot key is ~3× one partition's load.
+    */
+  val Skew = StageBlock.Spec(convs = 100000L, files = StagedFiles, hotConvs = 4, hotMult = 20000)
+  val SkewSalt = 8
+  /** One hot conversation at 50000×, conv-keyed into 4 event-time slabs
+    * of 8 files, one slab per trigger.
+    */
+  val SkewHeavy = StageBlock.Spec(convs = 50000L, files = 32, hotConvs = 1, hotMult = 50000,
+    keyedByConv = true, slices = 4)
+
+  final case class Params(sfDir: String, cpus: Int, heapMB: Int, detailPath: String) {
+    val convs: Long = ConvsPerCore * cpus
+    /** (lo, hi) core levels; each pair replays scaleConvs(hi) convs. */
+    val pairs: Seq[(Int, Int)] = (if (cpus >= 8) Seq((2, 8)) else Nil) :+ ((1, 4))
+    def scaleConvs(hi: Int): Long = ScaleConvsPerCore * hi
+    val scaleCombos: Seq[(Int, Long)] = pairs.flatMap { case (lo, hi) =>
+      Seq((lo, scaleConvs(hi)), (hi, scaleConvs(hi)))
+    }.distinct.sortBy(identity)
+    /** Fixed across levels: a cluster resize changes executors, not
+      * partitioning.
+      */
+    val scaleParts: Int = 2 * pairs.map(_._2).max
+    /** ~4× the flagship input on a 4-core, 15 GB host; the block cache
+      * keeps round 5's ratio (2048 MB at a 16 GB heap).
+      */
+    val sustainedConvs: Long = 100L * heapMB
+    val sustainedCacheMB: Int = heapMB / 8
+    def scalingBlock(cores: Int, convs: Long): String = s"scaling_c${cores}_n$convs"
+    val blocks: Seq[String] = Seq("sweep", "flagship") ++
+      scaleCombos.map((scalingBlock _).tupled) ++ Seq("skew", "skew_heavy", "sustained")
   }
 
-  private def f(d: Double): String =
-    BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-
-  /** Assemble the (detail-file, compact-stdout-line) pair from whatever
-    * blocks the record holds. Total function of the record: lost blocks
-    * become nulls + a `lost_blocks` entry, never exceptions — this is
-    * what lets a partially-killed run still emit a parseable record
-    * (chaos-tested in BenchHarnessSpec).
+  /** A quarter of MemTotal, clamped to 2–8 GB (RocksDB state is native
+    * memory on top of the heap).
     */
-  def assemble(rec: BenchRecord, p: Params): (String, String) = {
-    // scaling pairs from the per-combo blocks
-    val pairJsons = p.pairs.map { case (lo, hi) =>
-      val n = p.convsFor(hi)
-      val tLo = rec.field(s"scaling_c${lo}_n$n", "turns_per_sec")
-      val tHi = rec.field(s"scaling_c${hi}_n$n", "turns_per_sec")
-      val eff =
-        if (tLo == "null" || tHi == "null" || tLo.toDouble == 0) "null"
-        else f((tHi.toDouble / tLo.toDouble) / (hi.toDouble / lo))
-      s"""{"lo":$lo,"hi":$hi,"convs":$n,"tps_lo":$tLo,"tps_hi":$tHi,"efficiency":$eff}"""
+  def childHeapMB(): Int = {
+    val memKB = scala.util.Try(scala.io.Source.fromFile("/proc/meminfo").getLines()
+      .collectFirst { case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong }
+      .get).getOrElse(8L << 20)
+    math.max(2048, math.min(8192, memKB / 4 / 1024)).toInt
+  }
+
+  /** Deadlines: bounds only a wedged child reaches. Staging is budgeted
+    * at 500 convs/s; every trial run at 60 s of fixed cost plus its turns
+    * at 3000 per core-second (1000 with the heavy map) — several times
+    * below the rates measured on a 4-core host.
+    */
+  def stageDeadlineSec(s: StageBlock.Spec): Long = 180 + s.convs / 500
+  def trialDeadlineSec(s: TrialBlock.Spec): Long =
+    300 + s.configs.map { c =>
+      val perSec = (if (c.heavyMap) 1000L else 3000L) * s.cores
+      60 + s.trials * (60 + s.turns / perSec)
+    }.sum
+  /** Two passes (warm-up + timed) over every query, each budgeted 5 s
+    * plus 1 s per 4 MB of input: ~5× the sweep's wall on a 4-core host.
+    */
+  def sweepDeadlineSec(sfDir: String): Long = {
+    val mb = scala.util.Using(Files.walk(Paths.get(sfDir)))(_.iterator().asScala
+      .filter(Files.isRegularFile(_)).map(Files.size).sum >> 20).getOrElse(0L)
+    300 + 2L * SparkEntry.queries.size * (5 + mb / 4)
+  }
+
+  private def round3(d: Double): Double =
+    BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** `fields` of a block as one object, each a (key, path) pair; JSON null
+    * when the block did not land.
+    */
+  private def pick(rec: BenchRecord, block: String, fields: (String, Seq[String])*): JsonNode =
+    if (!rec.has(block)) nul
+    else fields.foldLeft(obj()) { case (o, (k, path)) => o.set[ObjectNode](k, rec.field(block, path: _*)) }
+
+  /** Path to a field of a config's best run in a TrialBlock report. */
+  private def best(config: String, field: String = "turns_per_sec"): Seq[String] =
+    Seq("configs", config, "best", field)
+
+  /** Assemble the (detail record, compact line) pair from whatever blocks
+    * the record holds. Total function of the record: lost blocks become
+    * nulls plus a `lost_blocks` entry, never exceptions.
+    */
+  def assemble(rec: BenchRecord, p: Params): (ObjectNode, ObjectNode) = {
+    val scaling = mapper.createArrayNode()
+    p.pairs.foreach { case (lo, hi) =>
+      val (bLo, bHi) = (p.scalingBlock(lo, p.scaleConvs(hi)), p.scalingBlock(hi, p.scaleConvs(hi)))
+      val (tLo, tHi) = (rec.field(bLo, best("throughput"): _*), rec.field(bHi, best("throughput"): _*))
+      val ok = Seq(bLo, bHi).map(rec.field(_, "sanity_ok"))
+      val pair = scaling.addObject().put("lo", lo).put("hi", hi).put("convs", p.scaleConvs(hi))
+      pair.set[ObjectNode]("tps_lo", tLo).set[ObjectNode]("tps_hi", tHi)
+      if (tLo.isNumber && tHi.isNumber && tLo.asDouble > 0)
+        pair.put("efficiency", round3((tHi.asDouble / tLo.asDouble) / (hi.toDouble / lo)))
+      else pair.set[ObjectNode]("efficiency", nul)
+      if (ok.forall(_.isBoolean)) pair.put("sanity_ok", ok.forall(_.asBoolean))
+      else pair.set[ObjectNode]("sanity_ok", nul)
     }
-    val combosJson = p.pairs.flatMap { case (lo, hi) =>
-      val n = p.convsFor(hi); Seq((lo, n), (hi, n))
-    }.distinct.sortBy(x => (x._1, x._2)).map { case (c, n) =>
-      s""""c${c}_n$n":${rec.json(s"scaling_c${c}_n$n")}"""
-    }.mkString("{", ",", "}")
+    val lost = mapper.valueToTree[JsonNode](rec.lost)
+    def block(name: String): JsonNode = rec.get(name).getOrElse(nul)
 
-    val detail =
-      s"""{"sf":"${p.sfDir}","cpus":${p.cpus},"n_convs":${p.nConvs},""" +
-        s""""scale_base_convs":${p.scaleBase},"n_files":${p.nFiles},"fpt":${p.fpt},""" +
-        s""""trials_per_level":${p.nTrials},""" +
-        s""""flagship":${rec.json("flagship")},""" +
-        s""""stage_flagship":${rec.json("stage_flagship")},""" +
-        s""""skew":${rec.json("skew")},""" +
-        s""""scaling":{"combos":$combosJson,"pairs":${pairJsons.mkString("[", ",", "]")}},""" +
-        s""""skew_heavy":${rec.json("skew_heavy")},""" +
-        s""""sustained":${rec.json("sustained")},""" +
-        s""""sweep":${rec.json("sweep")},""" +
-        s""""lost_blocks":${rec.lostJson}}"""
+    val detail = obj().put("sf", p.sfDir).put("cpus", p.cpus).put("child_heap_mb", p.heapMB)
+      .put("convs", p.convs).put("trials", Trials).put("files", StagedFiles).put("fpt", Fpt)
+      .put("lat_fpt", LatFpt).put("sustained_convs", p.sustainedConvs)
+      .put("sustained_block_cache_mb", p.sustainedCacheMB)
+    Seq("sweep", "flagship", "skew", "skew_heavy", "sustained")
+      .foreach(n => detail.set[ObjectNode](n, block(n)))
+    val combos = obj()
+    p.scaleCombos.foreach { case (c, n) => combos.set[ObjectNode](s"c${c}_n$n", block(p.scalingBlock(c, n))) }
+    detail.set[ObjectNode]("scaling", obj().set[ObjectNode]("combos", combos).set("pairs", scaling))
+    detail.set[ObjectNode]("wall_sec", rec.wallSec.foldLeft(obj()) { case (o, (n, s)) => o.put(n, round3(s)) })
+    detail.set[ObjectNode]("lost_blocks", lost)
 
-    // compact extracts of each block (full records live in the detail
-    // sidecar; the stdout line stays size-bounded)
-    val skewCompact =
-      if (!rec.has("skew")) "null"
-      else {
-        val names = Seq("fmgws", "fmgws_salted", s"fmgws_fpt${p.latFpt}")
-        names.map(n => s""""$n":${rec.field("skew", n, "best_tps")}""")
-          .mkString(s"""{"hot":${p.hotConvs},"hot_mult":${p.hotMult},""", ",", "}")
-      }
-    val skewHeavyCompact =
-      if (!rec.has("skew_heavy")) "null"
-      else {
-        val names = Seq("light_unsalted", "light_salted", "heavy_unsalted", "heavy_salted")
-        val cfgs = names.map(n => s""""$n":${rec.field("skew_heavy", n, "best_tps")}""")
-        (Seq(
-          s""""sanity_ok":${rec.field("skew_heavy", "sanity_ok") != "0"}""",
-          s""""pair_share":${rec.field("skew_heavy", "emitted_pair_share")}""") ++ cfgs)
-          .mkString("{", ",", "}")
-      }
-    val sustainedCompact =
-      if (!rec.has("sustained")) "null"
-      else Seq("turns_per_sec", "max_state_rows", "pairs", "batch_pairs")
-        .map(k => s""""$k":${rec.field("sustained", k)}""").mkString("{", ",", "}")
-
-    val compact =
-      s"""{"metric":"total","value":${rec.field("sweep", "total_query_sec")},"unit":"sec","sf":"${p.sfDir}",""" +
-        s""""n_queries":${rec.field("sweep", "n_queries")},""" +
-        s""""failed_queries":${rec.field("sweep", "failed_queries")},""" +
-        s""""detail":"${p.detailPath}",""" +
-        s""""flagship":${rec.json("flagship")},""" +
-        s""""scaling":${pairJsons.mkString("[", ",", "]")},""" +
-        s""""skew":$skewCompact,""" +
-        s""""skew_heavy":$skewHeavyCompact,""" +
-        s""""sustained":$sustainedCompact,""" +
-        s""""lost_blocks":${rec.lostJson}}"""
+    val compact = obj().put("metric", "total")
+      .set[ObjectNode]("value", rec.field("sweep", "total_query_sec"))
+      .put("unit", "sec").put("sf", p.sfDir)
+      .set[ObjectNode]("n_queries", rec.field("sweep", "n_queries"))
+      .set[ObjectNode]("failed_queries", rec.field("sweep", "failed_queries"))
+      .put("detail", p.detailPath)
+      .set[ObjectNode]("flagship", pick(rec, "flagship",
+        "turns_per_sec" -> best("throughput"), "p99_latency_ms" -> best("throughput", "p99_latency_ms"),
+        "pairs" -> best("throughput", "pairs"), "batch_pairs" -> Seq("spec", "batch_pairs"),
+        "pair_share" -> Seq("pair_share"), "sanity_ok" -> Seq("sanity_ok"),
+        s"fpt${LatFpt}_tps" -> best("latency"),
+        s"fpt${LatFpt}_p99_ms" -> best("latency", "p99_latency_ms")))
+      .set[ObjectNode]("scaling", scaling)
+      .set[ObjectNode]("skew", pick(rec, "skew",
+        Seq("sanity_ok" -> Seq("sanity_ok")) ++
+          Seq("fmgws", "fmgws_salted", s"fmgws_fpt$LatFpt").map(n => n -> best(n)): _*))
+      .set[ObjectNode]("skew_heavy", pick(rec, "skew_heavy",
+        Seq("sanity_ok" -> Seq("sanity_ok"), "pair_share" -> Seq("pair_share")) ++
+          Seq("light_unsalted", "light_salted", "heavy_unsalted", "heavy_salted")
+            .map(n => n -> best(n)): _*))
+      .set[ObjectNode]("sustained", pick(rec, "sustained",
+        "turns_per_sec" -> best("throughput"), "max_state_rows" -> best("throughput", "max_state_rows"),
+        "pairs" -> best("throughput", "pairs"), "batch_pairs" -> Seq("spec", "batch_pairs"),
+        "sanity_ok" -> Seq("sanity_ok")))
+      .set[ObjectNode]("lost_blocks", lost)
     (detail, compact)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val nConvs = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONVS", "1500000").toLong
-    val nFiles = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILES", "32").toInt
-    // Each scaling pair replays an input sized to its HIGH level
-    // (convsFor): a bounded replay carries ~4 s of per-run fixed cost
-    // (stream query planning, per-partition RocksDB opens, commit
-    // protocol) regardless of core count — a real cluster amortizes that
-    // over hours of streaming, so the proxy must keep the high level's
-    // trial long enough (>= ~1 min) that the fixed term stays under
-    // ~10%, without the low level's trials blowing past ~4 min each.
-    val scaleBase = sys.env.get("SPARK_GRAFT_SCALE_CONVS").map(_.toLong).getOrElse(2 * nConvs)
-    val fpt = sys.env.getOrElse("SPARK_GRAFT_FPT", "16").toInt
-    val latFpt = sys.env.getOrElse("SPARK_GRAFT_LAT_FPT", "2").toInt
-    val nTrials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "3").toInt
-    val pairs: Seq[(Int, Int)] = sys.env.getOrElse("SPARK_GRAFT_SCALE_PAIRS", "2:8,1:4")
-      .split(",").toSeq.filter(_.nonEmpty)
-      .map { p => val Array(a, b) = p.split(":"); (a.toInt, b.toInt) }
-    // skew regime: 4 hot conversations at ~20000x the median turn count —
-    // ~44% of all turns land in 4 keys, so a hot key is ~3x one
-    // partition's whole baseline load
-    val skewConvs = sys.env.getOrElse("SPARK_GRAFT_SKEW_CONVS", "100000").toLong
-    val hotConvs = sys.env.getOrElse("SPARK_GRAFT_SKEW_HOT", "4").toInt
-    val hotMult = sys.env.getOrElse("SPARK_GRAFT_SKEW_MULT", "20000").toInt
-    val skewSalt = sys.env.getOrElse("SPARK_GRAFT_SKEW_SALT", "8").toInt
-    val scalingOnly = sys.env.contains("SPARK_GRAFT_SCALING_ONLY")
-    val skipSkew = scalingOnly || sys.env.get("SPARK_GRAFT_SKEW").contains("0")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_DETAIL", "bench_detail.json")
-    val skipSkewHeavy = scalingOnly || sys.env.get("SPARK_GRAFT_SKEW_HEAVY").contains("0")
-    val shConvs = sys.env.getOrElse("SPARK_GRAFT_SKEW_HEAVY_CONVS", "50000").toLong
-    val shHot = sys.env.getOrElse("SPARK_GRAFT_SKEW_HEAVY_HOT", "1").toInt
-    val shMult = sys.env.getOrElse("SPARK_GRAFT_SKEW_HEAVY_MULT", "50000").toInt
-    val shSlices = sys.env.getOrElse("SPARK_GRAFT_SKEW_HEAVY_SLICES", "4").toInt
-    val shFps = sys.env.getOrElse("SPARK_GRAFT_SKEW_HEAVY_FPS", "8").toInt
-    // sustained block (BASELINE metric is SUSTAINED turns/sec): ON by
-    // default; SPARK_GRAFT_SUSTAINED=0 disables, =<convs> resizes
-    val sustainedConvs =
-      if (scalingOnly) 0L
-      else sys.env.getOrElse("SPARK_GRAFT_SUSTAINED", "1") match {
-        case "0" | "false" => 0L
-        case "1" | "true" => nConvs * 10 / 3 // ~3.4x the flagship input
-        case n => n.toLong
-      }
-    val p = Params(sfDir, cpus, nConvs, scaleBase, nFiles, fpt, latFpt,
-      nTrials, skewConvs, hotConvs, hotMult, skewSalt, pairs, detailPath)
+    val p = Params(sfDir, cpus, childHeapMB(), detailPath)
 
     // An OOM-killed prior run skips its own cleanup; its staged corpora
-    // keep occupying tmpfs RAM (round 4's killed driver run left ~11 GB
-    // in /dev/shm — a standing tax on everything that ran next). Sweep
-    // stale graft dirs from both temp bases before measuring.
+    // keep occupying tmpfs RAM. Sweep stale graft dirs from both temp
+    // bases before measuring.
     val prefixes = Seq("flagship", "spark-local", "qstream", "graft-")
     val swept = graft.util.Tmp.sweepStale(prefixes) +
       graft.util.Tmp.sweepStale(prefixes, baseDir = Some("/tmp"))
     if (swept > 0) System.err.println(s"[bench] swept $swept stale temp dirs")
 
-    val rec = new BenchRecord(detailPath + ".parts.jsonl")
-    try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(rec.partsPath))
-    catch { case _: Throwable => () }
-    // record + immediately fold into the on-disk detail record, so the
-    // detail file is complete-so-far at every point in the run
-    def rc(name: String, json: Option[String]): Option[String] = {
-      val v = rec.record(name, json)
-      val (detail, _) = assemble(rec, p)
-      try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
-        detail.getBytes("UTF-8"))
-      catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
-      v
-    }
-    def deleteDir(d: String): Unit = graft.util.Tmp.delete(d)
-    def dirOf(staged: String): Option[String] = BenchRecord.at(staged, "dir").map(_.asText)
-    def batchPairsOf(staged: String): Option[Long] =
-      BenchRecord.at(staged, "batch_pairs").map(_.asLong)
+    val rec = new BenchRecord(p.detailPath, p.blocks)(assemble(_, p))
+    rec.printOnExit()
 
-    // ---- sustained: staging child (disk corpus) + one Flagship child,
-    // FIRST — the BASELINE metric's amortizing regime --------------------
-    if (sustainedConvs > 0) {
-      val staged = Fork.json("graft.tools.StageBlock",
-        Seq(sustainedConvs.toString, nFiles.toString, cpus.toString, "0", "20", "1"),
-        heapGB = 10, env = Map("GRAFT_TMP_BASE" -> "/tmp"))._1
-      val assembled = for {
-        s <- staged
-        dir <- dirOf(s)
-        bp <- batchPairsOf(s)
-        line <- try Fork.json("graft.Flagship",
-            Seq(sustainedConvs.toString, cpus.toString, fpt.toString,
-              nFiles.toString, (2 * cpus).toString, dir),
-            heapGB = 16,
-            env = Map("SPARK_GRAFT_EXTRA_CONF" ->
-              "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB=2048"))._1
-          finally deleteDir(dir)
-      } yield {
-        System.err.println(s"[bench] sustained $line")
-        // one flat record: the run's own fields plus the block's inputs
-        line.patch(1, s""""convs":$sustainedConvs,"batch_pairs":$bp,"block_cache_mb":2048,""", 0)
+    rec.record("sweep", Fork.json("graft.tools.SweepBlock", Seq(p.sfDir, p.cpus.toString),
+      p.heapMB, sweepDeadlineSec(p.sfDir))._1)
+
+    /** Stage `s` (at node width) for the body, then delete it (the
+      * staged dir is `<fresh temp dir>/in`: the temp dir goes too).
+      */
+    def staged[A](s: StageBlock.Spec, env: Map[String, String] = Map.empty)(
+        body: Option[StageBlock.Staged] => A): A = {
+      val spec = s.copy(cores = p.cpus)
+      val st = Fork.json("graft.tools.StageBlock", Seq(mapper.writeValueAsString(spec)),
+        p.heapMB, stageDeadlineSec(spec), env)._1
+        .map(mapper.treeToValue(_, classOf[StageBlock.Staged]))
+      try body(st) finally st.foreach(x => graft.util.Tmp.delete(Paths.get(x.dir).getParent.toString))
+    }
+
+    staged(StageBlock.Spec(2000L, Fpt)) { warm =>
+      def trial(name: String, in: Option[StageBlock.Staged], cores: Int, parts: Int,
+          trials: Int, cacheMB: Int, configs: Config*): Unit =
+        rec.record(name, for {
+          s <- in
+          w <- warm
+          spec = TrialBlock.Spec(s.dir, w.dir, cores, parts, trials, cacheMB, s.turns,
+            s.batchPairs, configs)
+          r <- Fork.json("graft.tools.TrialBlock", Seq(mapper.writeValueAsString(spec)),
+            p.heapMB, trialDeadlineSec(spec))._1
+        } yield r)
+      val throughput = Config("throughput", Fpt)
+
+      staged(StageBlock.Spec(p.convs, StagedFiles)) { in =>
+        trial("flagship", in, p.cpus, 2 * p.cpus, Trials, DefaultCacheMB,
+          throughput, Config("latency", LatFpt))
       }
-      rc("sustained", assembled)
-    }
-
-    // ---- stage the warmup + flagship inputs (children) -----------------
-    val warmStaged = Fork.json("graft.tools.StageBlock",
-      Seq("2000", fpt.toString, cpus.toString, "0", "20", "0"), heapGB = 6)._1
-    val warmDir = warmStaged.flatMap(dirOf)
-    val inStaged = rc("stage_flagship", Fork.json("graft.tools.StageBlock",
-      Seq(nConvs.toString, nFiles.toString, cpus.toString, "0", "20",
-        if (scalingOnly) "0" else "1"), heapGB = 10)._1)
-    val inDir = inStaged.flatMap(dirOf)
-    val inBatchPairs = inStaged.flatMap(batchPairsOf).getOrElse(-1L)
-
-    // ---- headline flagship at full node width --------------------------
-    if (!scalingOnly) {
-      val line = (inDir, warmDir) match {
-        case (Some(d), Some(w)) =>
-          Fork.json("graft.tools.FlagshipBlock",
-            Seq(cpus.toString, (2 * cpus).toString, d, w, fpt.toString,
-              nTrials.toString, latFpt.toString, inBatchPairs.toString),
-            heapGB = 16)._1
-        case _ => None
+      // the scaling corpora go to disk, not tmpfs RAM
+      p.scaleCombos.groupBy(_._2).toSeq.sortBy(_._1).foreach { case (n, combos) =>
+        staged(StageBlock.Spec(n, StagedFiles), Map("GRAFT_TMP_BASE" -> "/tmp")) { in =>
+          combos.foreach { case (c, _) =>
+            trial(p.scalingBlock(c, n), in, c, p.scaleParts, Trials, DefaultCacheMB, throughput)
+          }
+        }
       }
-      rc("flagship", line)
-    }
-
-    // ---- skew regime (child owns staging + all rigs) -------------------
-    if (!skipSkew) {
-      rc("skew", Fork.json("graft.tools.SkewBlock",
-        Seq("8", skewConvs.toString, hotConvs.toString, hotMult.toString,
-          skewSalt.toString, nTrials.toString, fpt.toString, latFpt.toString,
-          nFiles.toString), heapGB = 12)._1)
-    }
-
-    // ---- scaling: per-pair staged input, one child per (cores, input) --
-    // Data layout and shuffle partitioning IDENTICAL across levels (fixed
-    // parts; a cluster resize changes executors, not partitioning).
-    val extraSizes = pairs.map(x => p.convsFor(x._2)).distinct.filter(_ != nConvs)
-    val extraDirs: Map[Long, String] = extraSizes.flatMap { c =>
-      Fork.json("graft.tools.StageBlock",
-        Seq(c.toString, nFiles.toString, cpus.toString, "0", "20", "0"),
-        heapGB = 10)._1
-        .flatMap(dirOf)
-        .map(c -> _)
-    }.toMap
-    val scaleDirs: Map[Long, String] = extraDirs ++ inDir.map(nConvs -> _).toMap
-    val parts = 2 * pairs.flatMap(x => Seq(x._1, x._2)).maxOption.getOrElse(8)
-    val combos: Seq[(Int, Long)] = pairs.flatMap { case (lo, hi) =>
-      val c = p.convsFor(hi); Seq((lo, c), (hi, c))
-    }.distinct.sortBy(x => (x._1, x._2))
-    combos.foreach { case (cores, convs) =>
-      val line = (scaleDirs.get(convs), warmDir) match {
-        case (Some(d), Some(w)) =>
-          Fork.json("graft.tools.FlagshipBlock",
-            Seq(cores.toString, parts.toString, d, w, fpt.toString,
-              nTrials.toString, "-1", "-1"), heapGB = 16)._1
-        case _ => None
+      staged(Skew) { in =>
+        trial("skew", in, p.cpus, 2 * p.cpus, Trials, DefaultCacheMB,
+          Config("fmgws", Fpt), Config("fmgws_salted", Fpt, SkewSalt),
+          Config(s"fmgws_fpt$LatFpt", LatFpt))
       }
-      line.foreach { l =>
-        System.err.println(s"[bench] scaling c$cores n$convs $l")
+      staged(SkewHeavy) { in =>
+        val fpt = SkewHeavy.files / SkewHeavy.slices // one event-time slab per trigger
+        trial("skew_heavy", in, p.cpus, 2 * p.cpus, Trials, DefaultCacheMB,
+          Config("light_unsalted", fpt), Config("light_salted", fpt, SkewSalt),
+          Config("heavy_unsalted", fpt, heavyMap = true),
+          Config("heavy_salted", fpt, SkewSalt, heavyMap = true))
       }
-      rc(s"scaling_c${cores}_n$convs", line)
-    }
-    extraDirs.values.foreach(deleteDir)
-    inDir.foreach(deleteDir)
-    warmDir.foreach(deleteDir)
-
-    // ---- skew-heavy regime (conv-keyed ingest + heavy per-turn map) ----
-    if (!skipSkewHeavy) {
-      val (line, exit) = Fork.json("graft.SkewHeavyBench",
-        Seq("8", shConvs.toString, shHot.toString, shMult.toString,
-          skewSalt.toString, nTrials.toString, shSlices.toString, shFps.toString),
-        heapGB = 12, okExits = Set(0, 1))
-      if (exit == 1)
-        System.err.println("[bench] skew-heavy child reported a SANITY failure (see its stderr)")
-      // record a failed sanity gate in the record itself, not just logs
-      rc("skew_heavy", line.map(l => l.patch(1, s""""sanity_ok":${if (exit == 0) 1 else 0},""", 0)))
+      // the sustained corpus goes to disk, not tmpfs RAM
+      staged(StageBlock.Spec(p.sustainedConvs, StagedFiles), Map("GRAFT_TMP_BASE" -> "/tmp")) { in =>
+        trial("sustained", in, p.cpus, 2 * p.cpus, 1, p.sustainedCacheMB, throughput)
+      }
     }
 
-    // ---- batch query sweep (LAST — order-insensitive; fresh JVM gives
-    // it the same clean-codegen start every round) -----------------------
-    if (!scalingOnly)
-      rc("sweep", Fork.json("graft.tools.SweepBlock",
-        Seq(sfDir, cpus.toString), heapGB = 12)._1)
-
-    // ---- final assembly ------------------------------------------------
-    val (detail, compact) = assemble(rec, p)
-    try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
-      detail.getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
-    System.err.println(s"[bench-detail] $detail")
-    if (rec.lost.nonEmpty)
-      System.err.println(s"[bench] LOST BLOCKS: ${rec.lost.mkString(", ")}")
-    println(compact)
+    if (rec.lost.nonEmpty) System.err.println(s"[bench] LOST BLOCKS: ${rec.lost.mkString(", ")}")
+    rec.printLine()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.gen.TranscriptGen
@@ -13,10 +13,11 @@ import graft.streaming.{Metrics, SessionJoin, Sink}
   * assistant/tool replies (flatMapGroupsWithState on conv_id) → idempotent
   * exactly-once sink with per-partition lineage → per-stage metrics.
   *
-  * `runMain graft.Flagship [nConvs] [cores]` generates a deterministic
-  * transcript stream, runs the pipeline, and prints throughput (turns/sec),
-  * p99 batch latency, and state-store size — the metrics BASELINE.md asks
-  * for. Used standalone and by graft.Bench.
+  * `stage` writes a deterministic transcript stream to parquet once;
+  * `runStaged` replays it through the pipeline and returns throughput
+  * (turns/sec), p99 batch latency and state-store size — the metrics
+  * BASELINE.md asks for. graft.Bench measures it through its
+  * `tools.TrialBlock` children.
   */
 object Flagship {
 
@@ -46,8 +47,8 @@ object Flagship {
     * ingest (e.g. a Kafka topic keyed by conv_id, the reference's kafka
     * input shape) hands the engine. Under hot-key skew that concentrates
     * a hot conversation's per-turn map work in ONE scan task, which is
-    * exactly the regime the salted repartition exists for
-    * (SkewHeavyBench).
+    * exactly the regime the salted repartition exists for (Bench's
+    * skew_heavy block).
     *
     * `slices` (keyed staging only) keeps the replay TIME-COHERENT: rows
     * are cut into `slices` equal-frequency event-time slabs, each slab
@@ -60,7 +61,7 @@ object Flagship {
     * lateness vs hot conversations spanning years of event time) makes
     * the engines' explicit late-drop rule discard most later triggers'
     * turns — a replay-harness artifact, not a pipeline property (the
-    * round-3 SkewHeavyBench records measured exactly that; see
+    * round-3 skew-heavy records measured exactly that; see
     * BENCH.md §"Salting measured where it pays").
     */
   def stage(spark: SparkSession, nConvs: Long, nFiles: Int = 16,
@@ -114,14 +115,6 @@ object Flagship {
     }
     inDir
   }
-
-  /** Run the streaming flagship over a bounded deterministic stream,
-    * file-by-file (maxFilesPerTrigger) so the run has real micro-batches,
-    * watermark movement, and state eviction — not one giant batch.
-    */
-  def run(spark: SparkSession, nConvs: Long, filesPerTrigger: Int = 4,
-      nFiles: Int = 16, hotConvs: Int = 0): Result =
-    runStaged(spark, stage(spark, nConvs, nFiles, hotConvs), filesPerTrigger)
 
   /** Run the pipeline over an already-staged input dir. `salt` > 0
     * inserts the north_star's hot-key salted repartition before the
@@ -177,20 +170,7 @@ object Flagship {
 
     val nTurns = metrics.totalInputRows
     val nPairs = Sink.readCommitted(spark, s"$work/out").count()
-    if (sys.env.contains("SPARK_GRAFT_BATCH_DEBUG"))
-      Sink.readCommitted(spark, s"$work/out").groupBy("_batch_id").count()
-        .orderBy(col("_batch_id")).collect()
-        .foreach(r => System.err.println(s"[flagship-emit] batch=${r.get(0)} pairs=${r.get(1)}"))
     val snaps = metrics.snapshots
-    // per-batch visibility for scaling analysis (stderr only, opt-in)
-    if (sys.env.contains("SPARK_GRAFT_BATCH_DEBUG"))
-      snaps.foreach { s =>
-        System.err.println(s"[flagship-batch] batch=${s.batchId} rows=${s.inputReceived} " +
-          s"trigger_ms=${s.batchLatencyMs} addBatch_ms=${s.durations.getOrElse("addBatch", -1L)} " +
-          s"plan_ms=${s.durations.getOrElse("queryPlanning", -1L)} " +
-          s"wal_ms=${s.durations.getOrElse("walCommit", 0L) + s.durations.getOrElse("commitOffsets", 0L)} " +
-          s"stateRows=${s.stateRows}")
-      }
     spark.streams.removeListener(metrics)
     // This run's state-store providers are dead the moment the query
     // stops (the checkpoint is single-use), but they stay in the
@@ -206,58 +186,5 @@ object Flagship {
       if (snaps.isEmpty) 0 else snaps.map(_.stateRows).max,
       if (snaps.isEmpty) 0 else snaps.map(_.stateBytes).max,
       metrics.maxWatermarkMs, metrics.durationTotals)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val nConvs = if (args.length > 0) args(0).toLong else 2000L
-    val cores = if (args.length > 1) args(1) else "8"
-    val filesPerTrigger = if (args.length > 2) args(2).toInt else 4
-    val nFiles = if (args.length > 3) args(3).toInt else 16
-    val parts = if (args.length > 4) args(4) else cores
-    val builder = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-flagship")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.util.Tmp.dir("spark-local"))
-      // RocksDB state store: keeps the (multi-GB at this scale) session
-      // state off-heap, so GC cost doesn't grow with state size — the
-      // production choice for large stateful streaming jobs.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // commit per-batch deltas instead of full snapshots
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      // see Bench.session: block cache sized for the state working set,
-      // larger write buffers, maintenance deferred past bounded runs
-      .config("spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB", "512")
-      .config("spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB", "256")
-      .config("spark.sql.streaming.stateStore.rocksdb.maxWriteBufferNumber", "3")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-    // ad-hoc experiment overrides: "k=v;k=v" applied last (same hook as
-    // Bench.session — e.g. resize the block cache for sustained runs
-    // whose state working set outgrows the 512 MB default)
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional 6th arg: run over an already-staged input dir (lets
-    // Bench stage once and fork the run into a child JVM over it)
-    val inDir = if (args.length > 5) args(5) else stage(spark, nConvs, nFiles)
-    val r = runStaged(spark, inDir, filesPerTrigger)
-    // ground-truth emission check (opt-in): compare the streamed pair
-    // count against the batch (window-function) form on the same input
-    if (sys.env.contains("SPARK_GRAFT_PAIR_CHECK")) {
-      val bp = graft.streaming.SessionJoin.pairBatch(spark.read.parquet(inDir)).count()
-      System.err.println(f"[flagship] pair check: emitted=${r.pairs} batch=$bp share=${r.pairs.toDouble / bp}%.4f")
-    }
-    // where the per-batch serial driver term goes (scaling analysis)
-    System.err.println("[flagship] duration totals ms: " +
-      r.durationTotals.toSeq.sortBy(-_._2).map { case (k, v) => s"$k=$v" }.mkString(" "))
-    println(f"""{"turns":${r.turns},"pairs":${r.pairs},"elapsed_sec":${r.elapsedSec}%.2f,""" +
-      f""""turns_per_sec":${r.turnsPerSec}%.0f,"p99_latency_ms":${r.p99LatencyMs},""" +
-      f""""max_state_rows":${r.maxStateRows},"max_state_bytes":${r.maxStateBytes},""" +
-      f""""watermark_at_shutdown_ms":${r.watermarkMs}}""")
-    spark.stop()
   }
 }

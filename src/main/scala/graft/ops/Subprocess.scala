@@ -42,6 +42,8 @@ object Subprocess {
 
   /** Run `cmd` over `textCol`, replacing it with the subprocess reply.
     * Adds/overwrites the [[Errors.ErrCol]] error column (null = healthy).
+    * A reply that misses `replyTimeoutSec` fails its row only: the child
+    * is killed and a fresh one serves the rest of the partition.
     */
   def pipe(
       df: DataFrame,
@@ -62,7 +64,7 @@ object Subprocess {
     base.mapPartitions { rows =>
       if (!rows.hasNext) Iterator.empty
       else {
-        val proc = new Child(cmd, codecRecv, maxBuffer, replyTimeoutSec)
+        var proc = new Child(cmd, codecRecv, maxBuffer, replyTimeoutSec)
         Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => proc.close()))
         rows.map { row =>
           val payload = row.getString(textIdx)
@@ -75,6 +77,14 @@ object Subprocess {
                 vals(errIdx) = null
               case Left(err) =>
                 vals(errIdx) = err
+            }
+            // A child that missed its reply deadline is out of frame sync:
+            // its late reply would answer the NEXT row. Kill it and go on
+            // with a fresh one (the reference marks the part failed and
+            // keeps the pipeline running, subprocess.go:475-483).
+            if (proc.wedged) {
+              proc.kill()
+              proc = new Child(cmd, codecRecv, maxBuffer, replyTimeoutSec)
             }
             Row.fromSeq(vals.toIndexedSeq)
           }
@@ -152,15 +162,14 @@ object Subprocess {
       }
       stdin.flush()
       val reply = replies.poll(timeoutSec.toLong, TimeUnit.SECONDS)
-      if (reply == null)
-        throw new IllegalStateException(
-          s"subprocess ${cmd.head}: no reply within ${timeoutSec}s (child must flush per line)")
-      val (isErr, bytes) = reply
-      if (!isErr) Right(bytes)
+      if (reply == null) {
+        wedged = true
+        Left(s"subprocess ${cmd.head}: no reply within ${timeoutSec}s (child must flush per line)")
+      } else if (!reply._1) Right(reply._2)
       else {
         // Flush any immediately-following stderr frames into one error
         // (the reference's 1s flushErrLoop, subprocess.go:445-456).
-        val buf = new ArrayBuffer[Byte]() ++= bytes
+        val buf = new ArrayBuffer[Byte]() ++= reply._2
         var more = replies.poll(50, TimeUnit.MILLISECONDS)
         while (more != null && more._1) {
           buf ++= more._2
@@ -169,6 +178,15 @@ object Subprocess {
         if (more != null) replies.put(more) // stdout frame raced in; keep it
         Left(new String(buf.toArray, UTF_8))
       }
+    }
+
+    /** Set when a reply missed its deadline; the child must be replaced. */
+    var wedged = false
+
+    /** Kill the child and whatever it started (a `system()` call, a shell). */
+    def kill(): Unit = {
+      graft.util.Proc.killTree(process.toHandle)
+      try stdin.close() catch { case _: Throwable => () }
     }
 
     def close(): Unit = {

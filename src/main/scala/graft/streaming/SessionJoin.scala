@@ -118,7 +118,7 @@ object SessionJoin {
     * data-path flush its watermark-closed sessions would sit in state
     * until the conversation finally goes quiet (unbounded state for hot
     * keys at 10^12-turn scale, and pairs withheld arbitrarily long; found
-    * by SkewHeavyBench's pair-count sanity check, round 4). The eager
+    * by the skew-heavy bench's pair-count sanity gate, round 4). The eager
     * flush is guarded by a min-buffered-ts check so conversations with
     * nothing closable pay nothing.
     *
@@ -172,7 +172,7 @@ object SessionJoin {
     * only becomes flushable after the LAST session closes, which for a
     * conversation active until end-of-input is never — its earlier,
     * long-closed sessions would stay in state and their pairs would
-    * never emit (found by SkewHeavyBench's pair-count sanity check).
+    * never emit (found by the skew-heavy bench's pair-count sanity gate).
     * A timer may thus fire while the first session is still open; the
     * flush is then empty and the timer re-arms at the (now known exactly)
     * close point.

@@ -1,69 +1,113 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.util.Try
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper, PropertyNamingStrategies}
+import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
-/** Crash-isolated bench record. Each measurement block's JSON line is
-  * appended to a `.parts.jsonl` sidecar THE MOMENT the block completes,
-  * so a killed tail costs one block, not the record — round 4's driver
-  * run emitted its one JSON line only at the end, and the OOM kill at
-  * minute 51 erased every block that HAD completed. The final stdout
-  * line assembles from the recorded blocks; blocks whose child died are
-  * listed in `lost_blocks` instead of silently vanishing.
+/** Crash-proof bench record. Every planned block starts out LOST and is
+  * replaced the moment its child lands, so at any instant the record
+  * names exactly the blocks that have not finished. Each landing
+  * atomically rewrites the detail record (`<detail>`, every landed
+  * block's JSON) and the compact line (`<detail>.line.json`) through
+  * `assemble`.
+  *
+  * The compact line goes to stdout exactly once per run: from `printLine`
+  * at the end, or from the shutdown hook `printOnExit` installs when the
+  * run is killed (SIGTERM, an outer `timeout`). A killed child costs one
+  * block, a killed parent costs the blocks still running.
   */
-final class BenchRecord(val partsPath: String) {
+final class BenchRecord(val detailPath: String, planned: Seq[String])(
+    assemble: BenchRecord => (JsonNode, JsonNode)) {
+
+  val linePath: String = detailPath + ".line.json"
 
   private val blocks =
-    scala.collection.mutable.LinkedHashMap[String, Option[String]]()
+    scala.collection.mutable.LinkedHashMap[String, Option[JsonNode]](planned.map(_ -> None): _*)
+  private val walls = scala.collection.mutable.LinkedHashMap[String, Double]()
+  private var lastLanded = System.nanoTime()
+  private var printed = false
 
-  /** Record a block result (None = the block's child died / printed no
-    * JSON) and append it to the sidecar immediately. Returns the stored
-    * value so call sites can chain.
+  /** Record a block (None = its child died, hung or printed no JSON) and
+    * rewrite both artifacts. Returns the stored value so call sites can
+    * chain.
     */
-  def record(name: String, json: Option[String]): Option[String] = {
-    val v = json.map(_.trim).filter(_.nonEmpty)
-    blocks(name) = v
-    val line = s"""{"block":"$name","json":${v.getOrElse("null")}}""" + "\n"
-    try Files.write(Paths.get(partsPath), line.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] parts append failed: $e")
-    }
-    v
+  def record(name: String, json: Option[JsonNode]): Option[JsonNode] = synchronized {
+    blocks(name) = json
+    val now = System.nanoTime()
+    walls(name) = (now - lastLanded) / 1e9
+    lastLanded = now
+    val (detail, compact) = assemble(this)
+    BenchRecord.writeAtomic(detailPath, detail.toString)
+    BenchRecord.writeAtomic(linePath, compact.toString)
+    json
   }
 
-  /** The block's JSON, or the literal "null" if lost/absent — safe to
-    * splice into an assembled record.
+  def get(name: String): Option[JsonNode] = synchronized(blocks.getOrElse(name, None))
+
+  def has(name: String): Boolean = get(name).isDefined
+
+  /** Planned or recorded blocks that have not landed, in plan order. */
+  def lost: Seq[String] = synchronized(blocks.collect { case (n, None) => n }.toSeq)
+
+  /** Seconds between each block's landing and the previous one's (or the
+    * record's creation): the block's wall time, its staging included.
     */
-  def json(name: String): String = blocks.getOrElse(name, None).getOrElse("null")
+  def wallSec: Seq[(String, Double)] = synchronized(walls.toSeq)
 
-  def has(name: String): Boolean = blocks.getOrElse(name, None).isDefined
-
-  /** Names recorded as lost, in record order. */
-  def lost: Seq[String] = blocks.collect { case (n, None) => n }.toSeq
-
-  def lostJson: String = lost.map("\"" + _ + "\"").mkString("[", ",", "]")
-
-  /** A numeric (or boolean) field of a block's JSON at `path`, as JSON
-    * text, e.g. `field("skew", "fmgws", "best_tps")`. Returns "null" when
-    * the block or field is absent or not a number — assembled records
+  /** The number or boolean at `path` in a block, or JSON null when the
+    * block or field is absent or of another type — assembled records
     * degrade to nulls, never to exceptions.
     */
-  def field(name: String, path: String*): String =
-    BenchRecord.at(json(name), path: _*)
-      .filter(n => n.isNumber || n.isBoolean).map(_.toString).getOrElse("null")
+  def field(name: String, path: String*): JsonNode =
+    get(name).map(n => path.foldLeft(n)(_.path(_))).filter(n => n.isNumber || n.isBoolean)
+      .getOrElse(BenchRecord.nul)
+
+  /** Print the current compact line to stdout unless it already was. */
+  def printLine(): Unit = synchronized {
+    if (!printed) {
+      printed = true
+      println(assemble(this)._2.toString)
+      System.out.flush()
+    }
+  }
+
+  /** On JVM shutdown (SIGTERM, or the end of main): stop the forked
+    * children, then print the line if `printLine` has not.
+    */
+  def printOnExit(): Unit =
+    sys.addShutdownHook { Fork.stopAll(); printLine() }: Unit
 }
 
 object BenchRecord {
 
-  private val mapper = new ObjectMapper()
-
-  /** The node at `path` in the JSON text `js`; None when `js` does not
-    * parse or the path is absent or null.
+  /** The one JSON mapper of the bench: Scala case classes serialize with
+    * snake_case keys (`turnsPerSec` → `turns_per_sec`).
     */
-  def at(js: String, path: String*): Option[JsonNode] =
-    Try(mapper.readTree(js)).toOption.flatMap(n => Option(n))
-      .map(root => path.foldLeft(root)(_.path(_)))
-      .filterNot(n => n.isMissingNode || n.isNull)
+  val mapper: ObjectMapper = new ObjectMapper()
+    .registerModule(DefaultScalaModule)
+    .setPropertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+
+  val nul: JsonNode = JsonNodeFactory.instance.nullNode()
+
+  def obj(): ObjectNode = mapper.createObjectNode()
+
+  /** Parse one JSON object; None when `js` is not one. */
+  def parse(js: String): Option[ObjectNode] =
+    Try(mapper.readTree(js)).toOption.collect { case o: ObjectNode => o }
+
+  /** A child's one output line: `value` serialized, on stdout. */
+  def emit(value: AnyRef): Unit = println(mapper.writeValueAsString(value))
+
+  /** Write through a temp file and a rename, so a reader (or a kill)
+    * never sees half a file.
+    */
+  def writeAtomic(path: String, text: String): Unit =
+    try {
+      val target = Paths.get(path).toAbsolutePath
+      val tmp = Paths.get(target.toString + ".tmp")
+      Files.write(tmp, text.getBytes("UTF-8"))
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } catch { case e: Exception => System.err.println(s"[bench] write $path failed: $e") }
 }

@@ -34,9 +34,6 @@ object BenchSession {
       .config("spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB", "256")
       .config("spark.sql.streaming.stateStore.rocksdb.maxWriteBufferNumber", "3")
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-    // ad-hoc experiment overrides: "k=v;k=v" applied last
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

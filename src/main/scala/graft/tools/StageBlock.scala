@@ -1,34 +1,38 @@
 package graft.tools
 
-/** Stage a deterministic transcript corpus (and optionally its
-  * batch-oracle pair count) in a JVM of its own, then exit. Printing one
-  * JSON line `{"dir":…,"batch_pairs":N}` (-1 when pairs are skipped).
+/** Stage a deterministic transcript corpus in a JVM of its own, then
+  * exit, printing `{"dir":…,"turns":N,"batch_pairs":M}`: the staged dir,
+  * its turn count, and the pair count the batch (window-function,
+  * DuckDB-oracled) session join produces on it — the ground truth every
+  * streaming block's sanity gate compares against.
   *
   * Generating + globally sorting a multi-GB corpus and window-scanning
   * 10^8 rows inside the bench parent is what OOM-killed campaign runs
-  * A4/B4 (and the round-4 driver run died in exactly this shape — the
-  * 63 M-turn scaling staging still ran in-parent). The parent forks this
-  * per input it needs, replays the dir from measurement children, and
-  * deletes it with plain file IO. Replaces round 4's SustainedStage
-  * (same contract, now parameterized for every staged input, not just
-  * the sustained corpus).
+  * A4/B4. The parent forks this per input it needs, replays the dir from
+  * TrialBlock children, and deletes it with plain file IO.
+  *
+  * args: one JSON [[StageBlock.Spec]]
   */
 object StageBlock {
+
+  /** `keyedByConv`/`slices` give the conv-keyed, time-sliced layout of
+    * the skew-heavy block (`Flagship.stage`); `cores` is the staging
+    * session's width.
+    */
+  final case class Spec(convs: Long, files: Int, hotConvs: Int = 0,
+      hotMult: Int = 20, keyedByConv: Boolean = false, slices: Int = 1, cores: Int = 1)
+
+  final case class Staged(dir: String, turns: Long, batchPairs: Long)
+
   def main(args: Array[String]): Unit = {
-    val nConvs = if (args.length > 0) args(0).toLong else 5000000L
-    val nFiles = if (args.length > 1) args(1).toInt else 32
-    val cores = if (args.length > 2) args(2).toInt else 32
-    val hotConvs = if (args.length > 3) args(3).toInt else 0
-    val hotMult = if (args.length > 4) args(4).toInt else 20
-    val withPairs = args.length > 5 && args(5) == "1"
-    val spark = BenchSession.build(cores, appName = "graft-stage")
-    val dir = graft.Flagship.stage(spark, nConvs, nFiles = nFiles,
-      hotConvs = hotConvs, hotMult = hotMult)
-    val bp =
-      if (withPairs)
-        graft.streaming.SessionJoin.pairBatch(spark.read.parquet(dir)).count()
-      else -1L
-    println(s"""{"dir":"$dir","batch_pairs":$bp}""")
+    val s = BenchRecord.mapper.readValue(args(0), classOf[Spec])
+    val spark = BenchSession.build(s.cores, appName = "graft-stage")
+    val dir = graft.Flagship.stage(spark, s.convs, nFiles = s.files,
+      hotConvs = s.hotConvs, hotMult = s.hotMult, keyedByConv = s.keyedByConv,
+      slices = s.slices)
+    val staged = spark.read.parquet(dir)
+    BenchRecord.emit(Staged(dir, staged.count(),
+      graft.streaming.SessionJoin.pairBatch(staged).count()))
     spark.stop()
   }
 }

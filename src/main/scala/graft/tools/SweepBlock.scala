@@ -1,14 +1,15 @@
 package graft.tools
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.DataFrame
 
 /** The per-query batch sweep — every SparkEntry query timed over the
   * driver's sf dir — in a JVM of its own, printing one JSON line with
-  * the per-query map. Forked for two reasons: (a) crash isolation (the
-  * sweep is the LAST block, exactly where round 4's accumulated-residue
-  * OOM landed), and (b) measurement isolation — a fresh JVM gives the
-  * sweep the same clean-codegen, clean-allocator start every round, so
-  * per-query timings compare across rounds.
+  * the per-query map (seconds; -1 marks a failed query). Forked for two
+  * reasons: (a) crash isolation — a query that exhausts the heap costs
+  * this block, not the record — and (b) measurement isolation — a fresh
+  * JVM gives the sweep the same clean-codegen, clean-allocator start
+  * every round, so per-query timings compare across rounds.
   *
   * args: sfDir cores
   */
@@ -22,8 +23,8 @@ object SweepBlock {
   private def exhaust(df: DataFrame): Unit =
     df.queryExecution.toRdd.foreach(_ => ())
 
-  private def f(d: Double): String =
-    BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+  final case class Sweep(sf: String, cores: Int, nQueries: Int,
+      failedQueries: Int, totalQuerySec: Double, queries: ListMap[String, Double])
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -54,12 +55,7 @@ object SweepBlock {
         }
       }
     spark.stop()
-    val total = results.filter(_._2 >= 0).map(_._2).sum
-    val nFailed = results.count(_._2 < 0)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f(v) }
-      .mkString("{", ",", "}")
-    println(
-      s"""{"sf":"$sfDir","cores":$cores,"n_queries":${results.size},""" +
-        s""""failed_queries":$nFailed,"total_query_sec":${f(total)},"queries":$qs}""")
+    BenchRecord.emit(Sweep(sfDir, cores, results.size, results.count(_._2 < 0),
+      results.filter(_._2 >= 0).map(_._2).sum, ListMap(results: _*)))
   }
 }

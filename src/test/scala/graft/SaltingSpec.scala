@@ -39,7 +39,7 @@ class SaltingSpec extends SparkTestBase {
     assert(direct == viaSalt)
   }
 
-  // The optimizer trap SkewHeavyBench measured (+12% instead of +92%,
+  // The optimizer trap the skew-heavy bench block measured (+12% instead of +92%,
   // BENCH.md §1 "Salting measured where it pays"): heavy per-turn work
   // expressed as a Filter after the salted repartition gets pushed back
   // BELOW the exchange by PushPredicateThroughNonJoin — re-concentrating

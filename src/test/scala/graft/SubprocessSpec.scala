@@ -38,6 +38,18 @@ class SubprocessSpec extends SparkTestBase {
     assert(out.toSeq == Seq("FOO\nBAR", "TAIL\n", "ONE"))
   }
 
+  test("a reply timeout fails that row; a fresh child serves the rest of the partition") {
+    val prog = """{ if ($0 == "hang") system("sleep 30"); else { print toupper($0); fflush() } }"""
+    val t0 = System.nanoTime()
+    val out = Subprocess.pipe(df("a", "hang", "b", "c").coalesce(1),
+      Seq("awk", "-W", "interactive", prog), replyTimeoutSec = 1)
+      .orderBy("id").select("text", Errors.ErrCol).as[(String, String)].collect()
+    assert((System.nanoTime() - t0) / 1e9 < 25, "the hung child was waited out, not killed")
+    assert(out(0) == (("A", null)))
+    assert(out(1)._1 == "hang" && out(1)._2.contains("no reply within 1s"))
+    assert(out.drop(2).toSeq == Seq(("B", null), ("C", null)))
+  }
+
   test("netstring codec round-trips through cat (netstringSplitFunc)") {
     val out = Subprocess.pipe(df("hello world", "x,y:z", ""),
       Seq("cat"), codecSend = "netstring", codecRecv = "netstring")
