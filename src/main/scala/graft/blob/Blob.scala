@@ -2,8 +2,7 @@ package graft.blob
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.expressions.Window
 
 /** The engine's scalar expression surface: the reference's mapping language
   * (Bloblang) re-expressed as Catalyst `Column` combinators.
@@ -15,21 +14,26 @@ import org.apache.spark.sql.types.DataType
   * `org.apache.spark.sql.functions`; a Scala UDF appears only where Spark
   * has no built-in (flagged `// UDF`). Mapping table: SURVEY.md §2.6.
   *
-  * Naming: Bloblang `foo_bar` → `Blob.fooBar`. All combinators are pure
-  * Column → Column, so whole-stage codegen fuses chains of them into one
-  * generated function — the Spark analogue of Bloblang's single-pass
-  * statement executor, but compiled instead of interpreted.
+  * This is the one place a Bloblang method's `Column` form is written:
+  * `BloblangCompiler` types a program and dispatches every compiled method
+  * to a member here, and hand-written queries call the same members. Every
+  * public member has a caller outside this file.
+  *
+  * Naming: Bloblang `foo_bar` → `Blob.fooBar`; a trailing `_` where the
+  * plain name is a Spark builtin (`abs_`, `trim_`, `length_`); a `Str`/`Arr`
+  * part where one Bloblang method has a string and an array form
+  * (`containsStr`/`containsArr`, `sliceStr`/`slice`, `strLength`/`length_`).
+  * All combinators are pure Column → Column, so whole-stage codegen fuses
+  * chains of them into one generated function — the Spark analogue of
+  * Bloblang's single-pass statement executor, but compiled instead of
+  * interpreted.
   */
 object Blob {
 
   // ---------------------------------------------------------------- batch/
-  // Benthos batch position functions (functions.go:186,201). Batches have
-  // no Spark analogue; position is defined per conversation ordered by
-  // turn_idx (SURVEY.md §7.4 risk 1).
-  def turnWindow(key: Column, ord: Column): WindowSpec =
-    Window.partitionBy(key).orderBy(ord)
-  def batchIndex(w: WindowSpec): Column = row_number().over(w) - lit(1)
-  def batchSize(key: Column): Column = count(lit(1)).over(Window.partitionBy(key))
+  // Benthos batch access (query/methods.go:153,195). Batches have no Spark
+  // analogue; a batch is a conversation ordered by turn_idx (SURVEY.md
+  // §7.4 risk 1).
 
   /** from(i) (query/methods.go:153): evaluate a field in the context of
     * batch part i — the i-th value of the column within the group's batch
@@ -53,21 +57,12 @@ object Blob {
       s => s.getField("v"))
 
   // ------------------------------------------------------------ core fns /
-  /** content() (functions.go:216) — the payload column. */
-  def content(payload: Column): Column = payload
-  /** error()/errored() (functions.go:330,347). */
-  def error(err: Column): Column = err
-  def errored(err: Column): Column = err.isNotNull
-  /** json(path) (functions.go:464): dotted path into a JSON payload. */
-  def json(payload: Column, path: String): Column =
-    get_json_object(payload, "$." + path)
   /** meta(k) (functions.go:516) over a MAP<STRING,STRING> column. */
   def meta(m: Column, k: String): Column = m.getItem(k)
   /** range(start, stop, step) (functions.go:390). */
   def range(start: Column, stop: Column, step: Column): Column =
     // Bloblang range is exclusive of stop; Spark sequence is inclusive.
     sequence(start, stop - when(step > 0, lit(1)).otherwise(lit(-1)), step)
-  def nowTs(): Column = current_timestamp()
   /** env(name) (functions.go:268): resolved at plan time — configuration,
     * not data. The map form backs the declarative test harness's
     * `environment` blocks; the no-arg form reads the JVM's environment.
@@ -75,19 +70,6 @@ object Blob {
   def envFn(name: String, environment: Map[String, String]): Column =
     lit(environment.get(name).orNull).cast("string")
   def envFn(name: String): Column = envFn(name, sys.env)
-  /** hostname() (functions.go:442) — driver-side constant like env(). */
-  def hostnameFn(): Column = lit(java.net.InetAddress.getLocalHost.getHostName)
-  /** file(path) (functions.go:362): contents resolved once at plan time
-    * and broadcast as a literal — the reference reads the file at
-    * construction too; for big files use a broadcast join instead.
-    */
-  def fileFn(path: String): Column =
-    lit(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8))
-  def timestampUnix(ts: Column): Column = unix_timestamp(ts)
-  def randomInt(seed: Long, maxExclusive: Long): Column =
-    floor(rand(seed) * lit(maxExclusive)).cast("long")
-  def uuidV4(): Column = expr("uuid()")
   /** nanoid() (functions.go:786): 21 chars from the url-safe alphabet.
     * Random like the reference — excluded from oracles by nature. // UDF
     */
@@ -123,7 +105,6 @@ object Blob {
     }
     f.asNondeterministic()()
   }
-  def throwErr(msg: Column): Column = raise_error(msg)
   /** not_null() (methods.go:386): error (null → flag/raise) when null. */
   def notNull(c: Column, name: String): Column =
     when(c.isNull, raise_error(lit(s"value $name is null"))).otherwise(c)
@@ -131,43 +112,32 @@ object Blob {
   // --------------------------------------------------------- general meth /
   /** `.catch(fallback)` (methods.go:119): null/error → fallback. */
   def catchOr(c: Column, fallback: Column): Column = coalesce(c, fallback)
-  /** `.or(fallback)` (methods.go:452). */
-  def or(c: Column, fallback: Column): Column = coalesce(c, fallback)
   /** `.number()` (methods.go:412) — try-cast, null on failure. */
   def number(c: Column): Column = c.try_cast("double")
-  /** `.type()` (methods.go:476). */
-  def typeOf(c: Column): Column = typeof(c)
+  /** `.number(fallback)`: a failed parse yields the fallback. */
+  def number(c: Column, fallback: Column): Column =
+    coalesce(number(c), fallback.cast("double"))
+  /** `.string()` of a long or bool (a double formats differently). */
+  def string(c: Column): Column = c.cast("string")
 
   // -------------------------------------------------------------- numbers /
   // methods_numbers.go:10-224 → same-named builtins.
   def abs_(c: Column): Column = abs(c)
   def ceil_(c: Column): Column = ceil(c)
   def floor_(c: Column): Column = floor(c)
-  def log_(c: Column): Column = log(c)
-  def log10_(c: Column): Column = log10(c)
-  def max_(a: Column, b: Column): Column = greatest(a, b)
-  def min_(a: Column, b: Column): Column = least(a, b)
+  /** round() is Go math.Round, half away from zero (methods_numbers.go:224);
+    * Spark round() has the same rule.
+    */
   def round_(c: Column): Column = round(c)
 
   // -------------------------------------------------------------- strings /
-  def bytes(c: Column): Column = c.cast("binary") // methods_strings.go:42
   /** capitalize (methods_strings.go:63): first rune upper, rest unchanged
     * (not initcap, which lowercases the tail and splits words).
     */
   def capitalize(c: Column): Column =
     concat(upper(substring(c, 1, 1)), c.substr(lit(2), length(c)))
   def encodeBase64(c: Column): Column = base64(c.cast("binary"))
-  def decodeBase64(c: Column): Column = unbase64(c)
   def encodeHex(c: Column): Column = lower(hex(c.cast("binary")))
-  def decodeHex(c: Column): Column = unhex(c)
-  def encryptAes(c: Column, key: Column, iv: Column): Column =
-    aes_encrypt(c.cast("binary"), key, lit("CBC"), lit("PKCS"), iv)
-  def decryptAes(c: Column, key: Column, iv: Column): Column =
-    aes_decrypt(c, key, lit("CBC"), lit("PKCS"))
-  def escapeUrlQuery(c: Column): Column = url_encode(c)
-  def unescapeUrlQuery(c: Column): Column = url_decode(c)
-  def filepathJoin(parts: Column*): Column = concat_ws("/", parts: _*)
-  def filepathSplit(c: Column): Column = split(c, "/")
   def format(fmt: String, args: Column*): Column = format_string(fmt, args: _*)
   def hasPrefix(c: Column, p: Column): Column = c.startsWith(p)
   def hasSuffix(c: Column, p: Column): Column = c.endsWith(p)
@@ -208,10 +178,7 @@ object Blob {
   def joinArr(c: Column, sep: String): Column = array_join(c, sep)
   def uppercase(c: Column): Column = upper(c)
   def lowercase(c: Column): Column = lower(c)
-  def parseJson(c: Column, schemaDdl: String): Column = from_json(c, DataType.fromDDL(schemaDdl))
-  def formatJson(c: Column): Column = to_json(c)
-  def parseCsvLine(c: Column, schemaDdl: String): Column = from_csv(c, org.apache.spark.sql.types.StructType.fromDDL(schemaDdl), Map.empty[String, String])
-  def parseTimestamp(c: Column, fmt: String): Column = to_timestamp(c, fmt)
+  def strLength(c: Column): Column = length(c)
   def formatTimestamp(c: Column, fmt: String): Column = date_format(c, fmt)
   def formatTimestampUnix(c: Column): Column = unix_timestamp(c)
 
@@ -425,11 +392,15 @@ object Blob {
     }
     c => f(c)
   }
+  /** replace_all (methods_strings.go): literal, left-to-right, like Go
+    * strings.ReplaceAll, including an empty `from` (a match before every
+    * char and at the end).
+    */
   def replaceAll(c: Column, from: String, to: String): Column =
-    replace(c, lit(from), lit(to))
-  def replaceAllMany(c: Column, pairs: Seq[(String, String)]): Column =
+    regexp_replace(c, java.util.regex.Pattern.quote(from),
+      java.util.regex.Matcher.quoteReplacement(to))
+  private def replaceAllMany(c: Column, pairs: Seq[(String, String)]): Column =
     pairs.foldLeft(c) { case (acc, (f, t)) => replace(acc, lit(f), lit(t)) }
-  def reFindAll(c: Column, pattern: String): Column = regexp_extract_all(c, lit(pattern), lit(0))
   /** re_find_all_submatch (methods_strings.go:1751): per match, the array
     * [full, group1, group2, …]. // UDF
     */
@@ -481,52 +452,61 @@ object Blob {
     }
     f(c)
   }
+  /** re_match: Go regexp MatchString finds a match anywhere; rlike is
+    * Java find() too.
+    */
   def reMatch(c: Column, pattern: String): Column = c.rlike(pattern)
+  /** re_replace_all: both engines are Java regex here, so patterns and
+    * `$N` backrefs agree with the interpreter.
+    */
   def reReplaceAll(c: Column, pattern: String, to: String): Column =
     regexp_replace(c, pattern, to)
   def reverse_(c: Column): Column = reverse(c)
+  /** split (Go strings.Split): a literal separator, trailing empty fields
+    * kept (limit -1).
+    */
   def splitStr(c: Column, sep: String): Column =
-    split(c, java.util.regex.Pattern.quote(sep))
-  def string(c: Column): Column = c.cast("string")
-  /** strip_html (methods_strings.go:2091): tag removal. */
-  def stripHtml(c: Column): Column = regexp_replace(c, "<[^>]*>", "")
-  def trim_(c: Column): Column = trim(c)
+    split(c, java.util.regex.Pattern.quote(sep), -1)
+  /** slice(from, until) of a string, non-negative bounds (an `until` past
+    * the end clamps, like the interpreter).
+    */
+  def sliceStr(c: Column, from: Int, until: Int): Column =
+    substring(c, from + 1, until - from)
+  /** Go's unicode.IsSpace set, the chars strings.TrimSpace strips — which
+    * is what the reference's trim() without arguments does. Spark trim(c)
+    * strips only U+0020 and Java String.trim every char ≤ U+0020.
+    */
+  val goSpace: String =
+    (Seq(0x09, 0x0a, 0x0b, 0x0c, 0x0d, 0x20, 0x85, 0xa0, 0x1680) ++ (0x2000 to 0x200a) ++
+      Seq(0x2028, 0x2029, 0x202f, 0x205f, 0x3000)).map(_.toChar).mkString
+  /** trim (Go strings.Trim): strip leading/trailing chars in `cutset`;
+    * without one, Go whitespace (strings.TrimSpace).
+    */
+  def trim_(c: Column, cutset: String = goSpace): Column = trim(c, cutset)
   /** escape_html (methods_strings.go:441). */
   def escapeHtml(c: Column): Column =
     replaceAllMany(c, Seq("&" -> "&amp;", "<" -> "&lt;", ">" -> "&gt;",
       "\"" -> "&#34;", "'" -> "&#39;"))
-  def unescapeHtml(c: Column): Column =
-    replaceAllMany(c, Seq("&lt;" -> "<", "&gt;" -> ">", "&#34;" -> "\"",
-      "&#39;" -> "'", "&amp;" -> "&"))
 
   // ----------------------------------------------------------- structured /
   // methods_structured.go → array/map higher-order builtins (all codegen'd
   // or interpreted HOFs — no UDFs needed, SURVEY.md §2.6 end note).
-  def all(c: Column, p: Column => Column): Column = forall(c, p)
-  def any(c: Column, p: Column => Column): Column = exists(c, p)
-  def append(c: Column, items: Column*): Column = concat(c +: items.map(array(_)): _*)
   def containsArr(c: Column, v: Column): Column = array_contains(c, v)
   def containsStr(c: Column, v: Column): Column = c.contains(v)
-  def enumerated(c: Column): Column = // [(index, value)…]
-    zip_with(sequence(lit(0), size(c) - 1), c, (i, v) => struct(i.as("index"), v.as("value")))
   def filterArr(c: Column, p: Column => Column): Column = filter(c, p)
   def flatten_(c: Column): Column = flatten(c)
-  def fold(c: Column, zero: Column, f: (Column, Column) => Column): Column =
-    aggregate(c, zero, f)
-  def index(c: Column, i: Column): Column = element_at(c, i + 1) // 0-based like Bloblang
+  /** index(i): 0-based, a negative i counts from the end, out of range is
+    * null (element_at would raise there under ANSI). The bounds check runs
+    * on the long index, so the int cast never overflows.
+    */
+  def index(c: Column, i: Column): Column = {
+    val j = when(i < 0, size(c) + i).otherwise(i)
+    when(j >= 0 && j < size(c), get(c, j.cast("int")))
+  }
   def keys(m: Column): Column = map_keys(m)
-  def values(m: Column): Column = map_values(m)
-  def keyValues(m: Column): Column = map_entries(m)
   def length_(c: Column): Column = size(c)
-  def strLength(c: Column): Column = length(c)
   def mapEach(c: Column, f: Column => Column): Column = transform(c, f)
-  def mapEachKey(m: Column, f: Column => Column): Column = transform_keys(m, (k, _) => f(k))
-  def mergeMaps(a: Column, b: Column): Column = map_concat(a, b)
-  def assign(struct0: Column, field: String, v: Column): Column = struct0.withField(field, v)
-  def without(struct0: Column, fields: String*): Column = struct0.dropFields(fields: _*)
-  def notEmpty(c: Column): Column = when(size(c) > 0, c)
   def sortArr(c: Column): Column = array_sort(c)
-  def sortByDesc(c: Column): Column = reverse(array_sort(c))
   /** sort_by with a custom key (methods_structured.go:1139 — the
     * reference's comparator-mapping form): array_sort with a comparator
     * lambda over the extracted keys; stays a codegen'd HOF, no UDF.
@@ -932,6 +912,4 @@ object Blob {
     }
     udfWalk(c)
   }
-
-  private def forceStr(c: Column): Column = c.cast("string")
 }

@@ -839,13 +839,9 @@ object Bloblang {
         strKind(target, if (s.isEmpty) s else s"${s.charAt(0).toUpper}${s.substring(1)}")
       case "trim" =>
         val s = strOf(target, name)
-        val t =
-          if (args.isEmpty) s.trim
-          else {
-            val cut = goString(arg(0)).toSet
-            s.dropWhile(cut).reverse.dropWhile(cut).reverse
-          }
-        strKind(target, t)
+        // no cutset: Go strings.TrimSpace, i.e. the unicode.IsSpace set
+        val cut = (if (args.isEmpty) Blob.goSpace else goString(arg(0))).toSet
+        strKind(target, s.dropWhile(cut).reverse.dropWhile(cut).reverse)
       case "trim_prefix" =>
         val s = strOf(target, name); val p = goString(arg(0))
         strKind(target, if (s.startsWith(p)) s.substring(p.length) else s)
@@ -997,9 +993,9 @@ object Bloblang {
           Map("index" -> i.toLong, "value" -> v): Any
         }
       case "index" =>
-        val a = arrOf(target, name); val i = longOf(arg(0)).toInt
+        val a = arrOf(target, name); val i = longOf(arg(0))
         val j = if (i < 0) a.length + i else i
-        if (j >= 0 && j < a.length) a(j) else null
+        if (j >= 0 && j < a.length) a(j.toInt) else null
       case "append" => arrOf(target, name) ++ args.map(arg => eval(arg, env))
       case "concat" => arrOf(target, name) ++ args.flatMap(a => arrOf(eval(a, env), name))
       case "first" => arrOf(target, name).headOption.orNull
@@ -1296,12 +1292,6 @@ object Bloblang {
   private def cached(program: String): Executor =
     compiled.computeIfAbsent(program, p => compile(p))
 
-  /** Per-row mapping column: content string → struct(content, deleted,
-    * error). Compile is validated driver-side; executors compile once per
-    * JVM from the captured program text (AST never serializes). // UDF —
-    * the text engine is the compatibility surface; hot paths use the
-    * Catalyst mappings in Blob.
-    */
   /** Full message-frame stage for the config runner: operates on columns
     * (text, meta map, error) like the reference's bloblang processor on a
     * Part — meta reads/writes, error() visibility, deleted-row removal,
@@ -1334,6 +1324,12 @@ object Bloblang {
     }
   }
 
+  /** Per-row mapping column: content string → struct(content, deleted,
+    * error). Compile is validated driver-side; executors compile once per
+    * JVM from the captured program text (AST never serializes). // UDF —
+    * the text engine is the compatibility surface; hot paths use the
+    * Catalyst mappings in Blob.
+    */
   def procColumn(program: String, envOverride: Map[String, String] = null): Column => Column = {
     compile(program) // fail fast on the driver
     val envMap = Option(envOverride)

@@ -11,49 +11,57 @@ import org.apache.spark.sql.types._
   * pinned by BloblangCompilerSpec and by `q_bloblang`/`q_bloblang_compiled`
   * sharing one DuckDB oracle.
   *
+  * Catalog rule: a method's `Column` form lives in `Blob`, the one scalar
+  * catalog. This object only types the program and dispatches — every
+  * compiled method, `env()` and `map_each`/`filter` call a `Blob` member;
+  * here they add only what the Bloblang type needs (a long cast on
+  * `round`/`length`, a string cast on a meta value).
+  *
   * Translatable subset (bail → None, caller falls back to the interpreter):
   *  - statements: `root.<path> = <expr>` — including NESTED paths
   *    (`root.a.b = …` builds a struct column `a` from all its leaf
-  *    assignments, declaration-ordered, last-write-wins) — and `let`
+  *    assignments, declaration-ordered, last-write-wins) — whole-document
+  *    `root = <expr>` (one column named "root"; an input `meta` column is
+  *    kept, as the interpreter keeps metadata across payload replacement),
+  *    `meta key = <expr>` (an update of the MAP<STRING,STRING> `meta`
+  *    column, last-write-wins, goString-exact value types only) and `let`
   *    bindings (inlined);
-  *  - exprs: literals, input-column paths (typed from the DataFrame
-  *    schema; a path of ANY Spark type compiles as an opaque pass-through
-  *    copy — `root.article = this.article` works for structs/arrays,
-  *    though no operator or method may touch the opaque value),
+  *  - exprs: literals (object literals become typed struct columns),
+  *    input-column paths (typed from the DataFrame schema; a path of ANY
+  *    Spark type compiles as an opaque pass-through copy —
+  *    `root.article = this.article` works for structs/arrays, though no
+  *    operator or method may touch the opaque value),
   *    arithmetic/comparison/boolean operators, if/else chains (if WITHOUT
   *    else compiles too: the interpreter omits the field, the columnar
   *    shape is null — equivalent under JSON-path reads, which is the
   *    compare contract), match with literal or predicate cases (default
   *    optional, same omission-to-null mapping), `env()` resolved at
   *    compile time;
-  *  - methods with exact Column twins: uppercase, lowercase, trim(),
-  *    length, contains, has_prefix/has_suffix, split, join, replace_all,
-  *    re_replace_all, re_match, slice (non-negative literal bounds),
-  *    string() (long/bool only — double formatting differs), abs, floor,
-  *    ceil, round (Spark round(): half away from zero, the reference's
-  *    Go math.Round rule — methods_numbers.go:224; the interpreter
-  *    matches), number() on
-  *    numeric targets (identity) and on strings (cast to double; with a
-  *    fallback arg the cast-null coalesces to it, mirroring the
-  *    interpreter's parse-failure fallback).
-  *
-  * Round-5 widening: `map_each`/`filter` over TYPED array columns compile
-  * to Catalyst `transform`/`filter` HOFs (lambda param or bare-query
-  * context capture; struct elements field-access via the element schema —
-  * the cities.blobl corpus shape), `sort()` on primitive arrays →
-  * `array_sort`, `meta key = expr` writes compile to an update of the
-  * MAP<STRING,STRING> meta column (last-write-wins, goString-exact value
-  * types only), and `timestamp_unix()` → `unix_timestamp()`.
+  *  - methods: uppercase, lowercase, capitalize, trim() (Go whitespace) and
+  *    trim(cutset), length, contains, has_prefix, has_suffix, split, join,
+  *    replace_all, re_replace_all, re_match, escape_html, reverse, slice
+  *    (strings, non-negative literal bounds), string() (long/bool only —
+  *    double formatting differs), abs, floor, ceil, round (half away from
+  *    zero, the reference's Go math.Round — methods_numbers.go:224),
+  *    number() on numeric targets (identity) and on strings (cast to
+  *    double; a fallback arg coalesces the cast-null, mirroring the
+  *    interpreter's parse-failure fallback); over typed arrays map_each and
+  *    filter (Catalyst `transform`/`filter`, lambda param or bare-query
+  *    context capture, struct elements field-accessed via the element
+  *    schema), sort, flatten, unique and index.
   *
   * Deliberate non-goals (always interpreted): error-flow (`catch`/`or`/
   * pipe — Catalyst nulls are not Bloblang errors), doc-structural ops
-  * (root =, OBJECT map_each, apply), whole-metadata assignment
-  * (`meta = …`). Documented deltas inside the
+  * (root = merged with field writes, OBJECT map_each, apply),
+  * whole-metadata assignment (`meta = …`). Documented deltas inside the
   * subset: `&&`/`||` compile but Catalyst three-valued logic treats a
   * NULL operand as NULL where the interpreter raises; `number()` on an
   * unparseable string with NO fallback yields null where the interpreter
   * raises, and always produces double where the interpreter keeps
-  * integral strings as longs — callers needing those exact error/type
+  * integral strings as longs; `reverse` and `capitalize` work on code
+  * points where the interpreter works on UTF-16 units, so they differ on
+  * chars outside the BMP (and `capitalize` on a first char whose upper
+  * case is two chars, like ß) — callers needing those exact error/type
   * semantics keep the interpreter.
   */
 object BloblangCompiler {
@@ -102,15 +110,22 @@ object BloblangCompiler {
   def tryCompile(
       program: String,
       schema: StructType,
-      env: Map[String, String] = Map.empty,
-      metaCol: String = "meta",
       thisCol: Option[String] = None): Option[Vector[(String, Column)]] =
-    tryCompileFull(program, schema, env, metaCol, thisCol).map(_._1)
+    tryCompileFull(program, schema, thisCol).map(_._1)
+
+  /** The MAP<STRING,STRING> metadata column `meta key =` writes update. */
+  private val MetaCol = "meta"
+  /** The metadata column: `meta` typed MAP<STRING,STRING>. */
+  private def isMetaField(f: StructField): Boolean = f.name == MetaCol &&
+    (f.dataType match {
+      case MapType(StringType, StringType, _) => true
+      case _ => false
+    })
 
   /** As tryCompile, also reporting whether the program REPLACED the whole
     * document (`root = <expr>` — compiled to a single column named
-    * "root"): stage() must then drop the input columns, mirroring the
-    * interpreter's doc replacement.
+    * "root"): stage() must then drop the input columns but `meta`,
+    * mirroring the interpreter's doc replacement.
     *
     * `thisCol` designates an input column as the document for top-level
     * `this` — the columnar stand-in for programs over non-object
@@ -120,8 +135,6 @@ object BloblangCompiler {
   def tryCompileFull(
       program: String,
       schema: StructType,
-      env: Map[String, String] = Map.empty,
-      metaCol: String = "meta",
       thisCol: Option[String] = None): Option[(Vector[(String, Column)], Boolean)] = {
     try {
       val rootCtx: Option[Typed] = thisCol.map { n =>
@@ -135,18 +148,18 @@ object BloblangCompiler {
       var wholeRoot: Option[Column] = None // last `root = <expr>` wins
       stmts.foreach {
         case LetStmt(name, e, _) =>
-          vars = vars + (name -> cExpr(e, schema, vars, env, rootCtx))
+          vars = vars + (name -> cExpr(e, schema, vars, rootCtx))
         case Assign(path, e, _) if path.isEmpty =>
-          wholeRoot = Some(cExpr(e, schema, vars, env, rootCtx).col)
+          wholeRoot = Some(cExpr(e, schema, vars, rootCtx).col)
         case Assign(path, e, _) if path.nonEmpty =>
-          assigns += path -> cExpr(e, schema, vars, env, rootCtx).col
+          assigns += path -> cExpr(e, schema, vars, rootCtx).col
         // `meta key = <expr>`: an update of the MAP<STRING,STRING> meta
         // column (the Spark mapping of the reference's flat Part metadata,
         // MetaTurn.meta). Values stringify via goString — exact for
         // strings/longs/bools; doubles format differently → bail.
         // Whole-metadata assignment (`meta = …`) stays interpreted.
         case MetaStmt(Some(key), e, _) =>
-          val v = cExpr(e, schema, vars, env, rootCtx)
+          val v = cExpr(e, schema, vars, rootCtx)
           val s = v.t match {
             case TStrT => v.col
             case TLongT | TBoolT => v.col.cast(StringType)
@@ -170,12 +183,8 @@ object BloblangCompiler {
       val metaEntry: Option[(String, Column)] =
         if (metaWrites.isEmpty) None
         else {
-          if (order.contains(metaCol)) bail() // root.meta collides
-          val f = schema.fields.find(_.name == metaCol).getOrElse(bail())
-          f.dataType match {
-            case MapType(StringType, StringType, _) => ()
-            case _ => bail()
-          }
+          if (order.contains(MetaCol)) bail() // root.meta collides
+          if (!schema.fields.exists(isMetaField)) bail()
           // last write per key wins, first-write order kept; existing
           // entries under a written key are dropped BEFORE concat (the
           // default mapKeyDedupPolicy=EXCEPTION would throw at runtime)
@@ -183,10 +192,10 @@ object BloblangCompiler {
           val lastByKey = metaWrites.groupBy(_._1).map { case (k, vs) => k -> vs.last._2 }
           val emptyMap = map_from_arrays(
             lit(Array.empty[String]), lit(Array.empty[String]))
-          val cleaned = map_filter(coalesce(col(metaCol), emptyMap),
+          val cleaned = map_filter(coalesce(col(MetaCol), emptyMap),
             (k, _) => !k.isInCollection(keys))
           val entries = keys.flatMap(k => Seq(lit(k), lastByKey(k)))
-          Some(metaCol -> map_concat(cleaned, map(entries: _*)))
+          Some(MetaCol -> map_concat(cleaned, map(entries: _*)))
         }
       val result = rootCols ++ metaEntry
       if (result.isEmpty) None else Some((result, wholeRoot.isDefined))
@@ -204,16 +213,15 @@ object BloblangCompiler {
     * partially-built root).
     */
   def stage(program: String, schema: StructType,
-      env: Map[String, String] = Map.empty,
-      metaCol: String = "meta",
       thisCol: Option[String] = None): Option[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame] =
-    tryCompileFull(program, schema, env, metaCol, thisCol).map { case (cols, wholeRoot) => df =>
+    tryCompileFull(program, schema, thisCol).map { case (cols, wholeRoot) => df =>
       val assigned = cols.map(_._1).toSet
-      // whole-document replacement keeps nothing but the new root (and a
-      // written meta column); field assignment keeps unassigned inputs
-      val kept =
-        if (wholeRoot) Array.empty[Column]
-        else df.schema.fieldNames.filterNot(assigned).map(col(_))
+      // whole-document replacement keeps nothing but the new root and the
+      // meta column (metadata outlives a payload replacement, written or
+      // not; a `meta` field of any other type is payload); field
+      // assignment keeps unassigned inputs
+      val kept = df.schema.fields.filterNot(f => assigned(f.name))
+        .filter(f => !wholeRoot || isMetaField(f)).map(f => col(f.name))
       df.select(kept ++ cols.map { case (n, c) => c.as(n) }: _*)
     }
 
@@ -279,9 +287,8 @@ object BloblangCompiler {
       e: Expr,
       schema: StructType,
       vars: Map[String, Typed],
-      env: Map[String, String],
       ctx: Option[Typed] = None): Typed = {
-    def c(x: Expr): Typed = cExpr(x, schema, vars, env, ctx)
+    def c(x: Expr): Typed = cExpr(x, schema, vars, ctx)
     e match {
       case Lit(s: String) => Typed(lit(s), TStrT)
       case Lit(l: Long) => Typed(lit(l), TLongT)
@@ -329,9 +336,7 @@ object BloblangCompiler {
           // as something else entirely (track_benthos_downloads.yaml shape)
           Typed(col(segs.map(s => s"`$s`").mkString(".")), fieldType(dt))
         }
-      case FuncCall("env", Vector(Lit(name: String))) =>
-        Typed(env.get(name).orElse(sys.env.get(name))
-          .map(lit).getOrElse(lit(null).cast(StringType)), TStrT)
+      case FuncCall("env", Vector(Lit(name: String))) => Typed(Blob.envFn(name), TStrT)
       case UnOp("!", x) =>
         val t = c(x); if (t.t != TBoolT) bail(); Typed(!t.col, TBoolT)
       case UnOp("-", x) =>
@@ -396,19 +401,19 @@ object BloblangCompiler {
               val xT = Typed(x, elem)
               lamE match {
                 case Lambda(p2, b) =>
-                  cExpr(b, schema, vars + (p2 -> xT), env, Some(xT))
-                case q => cExpr(q, schema, vars, env, Some(xT))
+                  cExpr(b, schema, vars + (p2 -> xT), Some(xT))
+                case q => cExpr(q, schema, vars, Some(xT))
               }
             }
             if (mname == "map_each") {
               var rt: BT = TAnyT
-              val out = transform(t.col, x => {
+              val out = Blob.mapEach(t.col, x => {
                 val b = compileBody(x); rt = b.t; b.col
               })
               if (rt == TAnyT) bail() // mapped elements must stay typed
               Typed(out, TArrT(rt))
             } else {
-              val out = filter(t.col, x => {
+              val out = Blob.filterArr(t.col, x => {
                 val b = compileBody(x)
                 if (b.t != TBoolT) bail()
                 b.col
@@ -470,110 +475,78 @@ object BloblangCompiler {
     f(l.col, r.col)
   }
 
-  private def cMethod(t: Typed, name: String, args: Vector[Typed], raw: Vector[Expr]): Typed =
+  /** One method call: type rules here, the Column form from `Blob`. A
+    * literal argument the form needs as a Scala value (a separator, a
+    * pattern, slice bounds) must be a literal, else the call bails.
+    */
+  private def cMethod(t: Typed, name: String, args: Vector[Typed], raw: Vector[Expr]): Typed = {
+    def str(c: Column) = Typed(c, TStrT)
+    def bool(c: Column) = Typed(c, TBoolT)
+    // a string-typed argument: a double would be implicitly cast by Catalyst
+    // ("1.5E7") but goString-formatted by the interpreter ("15000000")
+    def strArg: Column =
+      if (args.length == 1 && args(0).t == TStrT) args(0).col else bail()
+    def litStr(i: Int): String = raw.lift(i) match {
+      case Some(Lit(v: String)) => v
+      case _ => bail()
+    }
     (name, t.t) match {
-      case ("uppercase", TStrT) => Typed(upper(t.col), TStrT)
-      case ("lowercase", TStrT) => Typed(lower(t.col), TStrT)
-      case ("trim", TStrT) if args.isEmpty => Typed(trim(t.col), TStrT)
-      // trim(cutset): Go strings.Trim removes leading/trailing chars IN
-      // THE SET — Spark's TRIM(BOTH trimStr FROM …) has the same
-      // character-set semantics
-      case ("trim", TStrT) =>
-        raw(0) match {
-          case Lit(cut: String) => Typed(trim(t.col, cut), TStrT)
-          case _ => bail()
-        }
-      case ("length", TStrT) => Typed(length(t.col).cast(LongType), TLongT)
-      case ("length", TArrT(_)) => Typed(size(t.col).cast(LongType), TLongT)
-      case ("contains", TStrT) =>
-        if (args.length != 1 || args(0).t != TStrT) bail()
-        Typed(t.col.contains(args(0).col), TBoolT)
-      case ("contains", TArrT(TStrT)) =>
-        if (args.length != 1 || args(0).t != TStrT) bail()
-        Typed(array_contains(t.col, args(0).col), TBoolT)
-      case ("has_prefix", TStrT) =>
-        // arg must be string-typed: a double arg would be implicitly cast by
-        // Catalyst ("1.5E7") but goString-formatted by the interpreter
-        // ("15000000") — same divergence `contains` guards against
-        if (args.length != 1 || args(0).t != TStrT) bail()
-        Typed(t.col.startsWith(args(0).col), TBoolT)
-      case ("has_suffix", TStrT) =>
-        if (args.length != 1 || args(0).t != TStrT) bail()
-        Typed(t.col.endsWith(args(0).col), TBoolT)
-      case ("split", TStrT) =>
-        raw(0) match {
-          // Go strings.Split keeps trailing empties → limit -1
-          case Lit(sep: String) =>
-            Typed(split(t.col, java.util.regex.Pattern.quote(sep), -1), TArrT(TStrT))
-          case _ => bail()
-        }
+      case ("uppercase", TStrT) => str(Blob.uppercase(t.col))
+      case ("lowercase", TStrT) => str(Blob.lowercase(t.col))
+      case ("capitalize", TStrT) if args.isEmpty => str(Blob.capitalize(t.col))
+      case ("escape_html", TStrT) if args.isEmpty => str(Blob.escapeHtml(t.col))
+      case ("reverse", TStrT | TArrT(_)) if args.isEmpty => Typed(Blob.reverse_(t.col), t.t)
+      // trim() strips Go whitespace; trim(cutset) is Go strings.Trim —
+      // Spark's TRIM(BOTH cutset FROM …) has the same character-set rule
+      case ("trim", TStrT) if args.isEmpty => str(Blob.trim_(t.col))
+      case ("trim", TStrT) => str(Blob.trim_(t.col, litStr(0)))
+      case ("length", TStrT) => Typed(Blob.strLength(t.col).cast(LongType), TLongT)
+      case ("length", TArrT(_)) => Typed(Blob.length_(t.col).cast(LongType), TLongT)
+      case ("contains", TStrT) => bool(Blob.containsStr(t.col, strArg))
+      case ("contains", TArrT(TStrT)) => bool(Blob.containsArr(t.col, strArg))
+      case ("has_prefix", TStrT) => bool(Blob.hasPrefix(t.col, strArg))
+      case ("has_suffix", TStrT) => bool(Blob.hasSuffix(t.col, strArg))
+      case ("split", TStrT) => Typed(Blob.splitStr(t.col, litStr(0)), TArrT(TStrT))
       // lexicographic / numeric ascending — Go sort.Slice on comparable
       // scalars; array_sort is the exact twin for non-null typed elements
       case ("sort", TArrT(e)) if args.isEmpty && isPrim(e) && e != TBoolT =>
-        Typed(array_sort(t.col), t.t)
+        Typed(Blob.sortArr(t.col), t.t)
+      // first occurrence kept, in order — the interpreter's LinkedHashSet
+      // (not doubles: the interpreter may hold 1 and 1.0 as distinct values)
+      case ("unique", TArrT(TStrT | TLongT | TBoolT)) if args.isEmpty => Typed(Blob.unique(t.col), t.t)
+      case ("index", TArrT(e)) if args.length == 1 && args(0).t == TLongT =>
+        Typed(Blob.index(t.col, args(0).col), e)
       // one level, exactly the interpreter's rule on array-of-array input
-      case ("flatten", TArrT(TArrT(e))) if args.isEmpty =>
-        Typed(flatten(t.col), TArrT(e))
+      case ("flatten", TArrT(TArrT(e))) if args.isEmpty => Typed(Blob.flatten_(t.col), TArrT(e))
       case ("join", TArrT(TStrT)) =>
-        raw.headOption match {
-          case Some(Lit(sep: String)) => Typed(array_join(t.col, sep), TStrT)
-          case None => Typed(array_join(t.col, ""), TStrT)
-          case _ => bail()
-        }
-      case ("replace_all", TStrT) =>
-        (raw(0), raw(1)) match {
-          case (Lit(a: String), Lit(b: String)) =>
-            Typed(regexp_replace(t.col, java.util.regex.Pattern.quote(a),
-              java.util.regex.Matcher.quoteReplacement(b)), TStrT)
-          case _ => bail()
-        }
-      case ("re_replace_all", TStrT) =>
-        (raw(0), raw(1)) match {
-          // both paths are Java regex (the interpreter uses
-          // Pattern/Matcher.replaceAll), so patterns and $N backrefs agree
-          case (Lit(p: String), Lit(r: String)) =>
-            Typed(regexp_replace(t.col, p, r), TStrT)
-          case _ => bail()
-        }
-      case ("re_match", TStrT) =>
-        raw(0) match {
-          case Lit(p: String) => Typed(t.col.rlike(p), TBoolT)
-          case _ => bail()
-        }
+        str(Blob.joinArr(t.col, if (raw.isEmpty) "" else litStr(0)))
+      case ("replace_all", TStrT) => str(Blob.replaceAll(t.col, litStr(0), litStr(1)))
+      case ("re_replace_all", TStrT) => str(Blob.reReplaceAll(t.col, litStr(0), litStr(1)))
+      case ("re_match", TStrT) => bool(Blob.reMatch(t.col, litStr(0)))
       case ("slice", TStrT) =>
         (raw.lift(0), raw.lift(1)) match {
           case (Some(Lit(a: Long)), Some(Lit(b: Long))) if a >= 0 && b >= a =>
-            Typed(substring(t.col, a.toInt + 1, (b - a).toInt), TStrT)
+            str(Blob.sliceStr(t.col, a.toInt, b.toInt))
           case _ => bail()
         }
-      case ("string", TLongT) => Typed(t.col.cast(StringType), TStrT)
-      case ("string", TBoolT) => Typed(t.col.cast(StringType), TStrT)
+      case ("string", TLongT | TBoolT) => str(Blob.string(t.col))
       case ("string", TStrT) => t
-      case ("abs", TLongT) => Typed(abs(t.col), TLongT)
-      case ("abs", TDoubleT) => Typed(abs(t.col), TDoubleT)
-      case ("floor", TDoubleT) => Typed(floor(t.col), TLongT)
-      case ("floor", TLongT) => t
-      case ("ceil", TDoubleT) => Typed(ceil(t.col), TLongT)
-      case ("ceil", TLongT) => t
-      // reference round() is Go math.Round — HALF AWAY FROM ZERO
-      // (methods_numbers.go:224: "rounding half away from zero", so
-      // round(-2.5) = -3). Spark round() has exactly those semantics;
-      // the interpreter spells the same rule out (Bloblang "round").
-      case ("round", TDoubleT) => Typed(round(t.col).cast(LongType), TLongT)
-      case ("round", TLongT) => t
-      // number(): identity on numerics; strings cast to double (the
+      case ("abs", TLongT | TDoubleT) => Typed(Blob.abs_(t.col), t.t)
+      case ("floor", TDoubleT) => Typed(Blob.floor_(t.col), TLongT)
+      case ("ceil", TDoubleT) => Typed(Blob.ceil_(t.col), TLongT)
+      case ("round", TDoubleT) => Typed(Blob.round_(t.col).cast(LongType), TLongT)
+      case ("floor" | "ceil" | "round", TLongT) => t
+      // number(): identity on numerics; strings try-cast to double (the
       // interpreter keeps integral strings as longs and RAISES on parse
-      // failure — documented deltas; a fallback arg coalesces the
-      // cast-null exactly like the interpreter's parse-failure fallback)
+      // failure — documented deltas)
       case ("number", TLongT | TDoubleT) => t
       case ("number", TStrT) =>
-        val base = t.col.try_cast(DoubleType) // ANSI cast would throw
         args.headOption match {
-          case None => Typed(base, TDoubleT)
-          case Some(f) if f.t == TLongT || f.t == TDoubleT =>
-            Typed(coalesce(base, f.col.cast(DoubleType)), TDoubleT)
+          case None => Typed(Blob.number(t.col), TDoubleT)
+          case Some(f) if f.t == TLongT || f.t == TDoubleT => Typed(Blob.number(t.col, f.col), TDoubleT)
           case _ => bail()
         }
       case _ => bail()
     }
+  }
 }

@@ -51,9 +51,10 @@ class BlobSpec extends SparkTestBase {
 
   test("index is 0-based like Bloblang; pipe coalesces nulls") {
     val got = Seq((Seq("a", "b", "c"), null: String, "fallback")).toDF("arr", "l", "r")
-      .select(Blob.index(col("arr"), lit(1)).as("i"), Blob.pipe(col("l"), col("r")).as("p"))
-      .as[(String, String)].head()
-    assert(got == (("b", "fallback")))
+      .select(Blob.index(col("arr"), lit(1)).as("i"), Blob.pipe(col("l"), col("r")).as("p"),
+        Blob.index(col("arr"), lit(-1)).as("neg"), Blob.index(col("arr"), lit(5)).as("far"))
+      .as[(String, String, String, String)].head()
+    assert(got == (("b", "fallback", "c", null)))
   }
 
   test("range is exclusive of stop like Bloblang") {

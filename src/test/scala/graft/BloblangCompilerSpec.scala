@@ -22,14 +22,14 @@ class BloblangCompilerSpec extends SparkTestBase {
   private def df = rows.toDF("s", "n", "d", "b")
 
   /** Run program on both paths; compare every assigned field per row. */
-  private def assertEquivalent(program: String): Unit = {
-    val base = df
+  private def assertEquivalent(program: String,
+      base: org.apache.spark.sql.DataFrame = df): Unit = {
     val stage = BloblangCompiler.stage(program, base.schema)
       .getOrElse(fail(s"program did not compile to columns:\n$program"))
     val compiledRows = stage(base).collect()
     val names = stage(base).schema.fieldNames.drop(base.schema.length)
     val ex = Bloblang.compile(program)
-    base.select(to_json(struct(col("s"), col("n"), col("d"), col("b"))).as("j"))
+    base.select(to_json(struct(base.columns.map(col): _*)).as("j"))
       .as[String].collect().zip(compiledRows).foreach { case (json, crow) =>
         val r = ex.mapText(json)
         assert(r.error.isEmpty, s"interpreter errored: ${r.error}")
@@ -43,6 +43,9 @@ class BloblangCompilerSpec extends SparkTestBase {
             case (n1, c: String) if n1.isTextual => n1.asText() == c
             case (n1, c: Boolean) => n1.asBoolean() == c
             case (n1, null) => n1 == null || n1.isNull
+            case (n1, c: scala.collection.Seq[_]) if n1.isArray =>
+              n1.size == c.size &&
+                c.indices.forall(i => n1.get(i).asText() == String.valueOf(c(i)))
             case _ => false
           }
           assert(ok, s"field $f: interpreter=$iv compiled=$cv (input $json)")
@@ -338,6 +341,82 @@ class BloblangCompilerSpec extends SparkTestBase {
     // analyzed plan: ConvertToLocalRelation folds the UDF over this local
     // relation at optimize time, so the executed plan is just a scan
     assert(interp.queryExecution.analyzed.toString.contains("UDF"))
+  }
+
+  /** Strings and typed arrays for the methods the base rows cannot reach:
+    * Go whitespace beyond U+0020, HTML specials, repeats, empties.
+    */
+  private def odd = Seq(
+    ("\t x \n", Seq("b", "a", "b"), Seq(3L, 1L, 3L, 2L), 0L),
+    (" y\u3000", Seq("x"), Seq(5L), -1L),
+    ("""<a href="q">Tom & 'Jerry'</a>""", Seq.empty[String], Seq.empty[Long], 5L),
+    ("élan vital", Seq("c", "c", "a"), Seq(-2L, 7L, 7L), -3L),
+    ("ab", Seq("p"), Seq(4L), 5000000000L),
+    ("c d", Seq("q"), Seq(6L), 4294967296L),
+    ("Zed", Seq("r"), Seq(8L), -5000000000L))
+    .toDF("s", "arr", "nums", "i")
+
+  test("trim() strips Go whitespace (unicode.IsSpace) on both paths") {
+    assertEquivalent(
+      """root.t = this.s.trim()
+        |root.cut = this.s.trim(" ex")""".stripMargin, odd)
+    val got = odd.select(graft.blob.Blob.trim_(col("s"))).as[String].collect().take(2)
+    assert(got.toSeq === Seq("x", "y"))
+  }
+
+  test("replace_all with an empty from inserts between every char on both paths") {
+    assertEquivalent(
+      """root.ins = this.s.replace_all("", "-")
+        |root.lit = this.s.replace_all(",", "$")""".stripMargin)
+    assertEquivalent("""root.ins = this.s.replace_all("", "-")""", odd)
+  }
+
+  test("escape_html, capitalize and reverse compile and match the interpreter") {
+    val program =
+      """root.esc = this.s.escape_html()
+        |root.cap = this.s.capitalize()
+        |root.rev = this.s.reverse()
+        |root.rarr = this.arr.reverse().join(",")""".stripMargin
+    assertEquivalent(program, odd)
+    assertEquivalent(program.split("\n").take(3).mkString("\n"))
+  }
+
+  test("unique and index over typed arrays match the interpreter (negative and out-of-range index)") {
+    assertEquivalent(
+      """root.u = this.arr.unique().join(",")
+        |root.un = this.nums.unique()
+        |root.first = this.nums.index(0)
+        |root.last = this.nums.index(-1)
+        |root.far = this.nums.index(5)
+        |root.at = this.nums.index(this.i)
+        |root.sat = this.arr.index(this.i)""".stripMargin, odd)
+  }
+
+  test("has_suffix, array contains, sort and env() compile through Blob and match the interpreter") {
+    assertEquivalent(
+      """root.suf = this.s.has_suffix("e")
+        |root.has_b = this.arr.contains("b")
+        |root.sorted = this.nums.sort()
+        |root.home = env("HOME")
+        |root.none = env("GRAFT_SURELY_UNSET_VARIABLE")""".stripMargin, odd)
+  }
+
+  test("whole-root replacement keeps an unwritten meta column") {
+    val metaDf = df.withColumn("meta",
+      org.apache.spark.sql.functions.map(lit("topic"), lit("in"), lit("k"), col("s")))
+    val stage = BloblangCompiler.stage("root = this.s.uppercase()", metaDf.schema)
+      .getOrElse(fail("whole-root program did not compile"))
+    val out = stage(metaDf)
+    assert(out.schema.fieldNames.toSet === Set("root", "meta"))
+    val got = out.select(col("root"), col("meta")).collect()
+      .map(r => (r.getString(0), r.getMap[String, String](1).toMap)).toSeq
+    assert(got === rows.map(r => (r._1.toUpperCase, Map("topic" -> "in", "k" -> r._1))))
+    // a `meta` payload field that is not MAP<STRING,STRING> is replaced
+    // with the rest of the document
+    val structDf = df.withColumn("meta", struct(lit("in").as("topic")))
+    val replaced = BloblangCompiler.stage("root = this.s.uppercase()", structDf.schema)
+      .getOrElse(fail("whole-root program did not compile"))(structDf)
+    assert(replaced.schema.fieldNames.toSeq === Seq("root"))
   }
 
   private def map[K, V](): org.apache.spark.sql.Column =
