@@ -1,11 +1,13 @@
 package graft.ops
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable.LinkedHashMap
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types.{MapType, StringType}
 
@@ -28,11 +30,14 @@ import org.apache.spark.sql.types.{MapType, StringType}
   *
   * Runs `/usr/bin/awk` (POSIX) with a FRESH interpreter per message — the
   * faithful semantics (BEGIN/END/NR are per-message programs in the
-  * reference, which re-executes its embedded interpreter per part).
-  * `pooled = true` keeps those semantics but executes through one
-  * long-lived per-partition worker (see [[PooledRunner]]) — same fresh
-  * awk per message, ~6x cheaper dispatch. For per-line streaming filters
-  * use [[Subprocess.pipe]] (one long-lived child per partition).
+  * reference, which re-executes its embedded interpreter per part). The
+  * runs are dispatched through one long-lived `sh` worker per partition
+  * (see [[Worker]]), a [[Subprocess.Child]]: each message is one command
+  * line and one `__D<exit>` reply line. A reply that misses the 60 s
+  * deadline, output on sh's own stderr or any other unexpected reply fails
+  * that row only: the worker and its awk are killed and a fresh worker
+  * serves the rest of the partition. For per-line streaming filters use
+  * [[Subprocess.pipe]] (one long-lived child per partition).
   *
   * The reference's goawk-registered custom functions (json_get, the
   * json_set / json_append families, json_delete/json_length/json_type,
@@ -48,9 +53,11 @@ import org.apache.spark.sql.types.{MapType, StringType}
   */
 object Awk {
 
+  /** Seconds one message's awk run may take (`Subprocess.pipe`'s default). */
+  private val ReplyTimeoutSec = 60
+
   def proc(df: DataFrame, program: String, codec: String = "text",
-      textCol: String = "text", metaCol: Option[String] = None,
-      pooled: Boolean = false): DataFrame = {
+      textCol: String = "text", metaCol: Option[String] = None): DataFrame = {
     require(Set("text", "json", "none").contains(codec), s"unrecognised codec: $codec")
     val base = Errors.withErrorCol(df)
     val schema = base.schema
@@ -68,112 +75,85 @@ object Awk {
     val useJsonFns = AwkFuncs.usesJson(program)
     val enc = Encoders.row(schema)
     base.mapPartitions { rows =>
-      val mapper = new ObjectMapper()
-      // pooled mode: one long-lived worker per partition (program staged
-      // once, per-message seeds via a side file) instead of a fresh JVM
-      // process spawn + temp program file per message
-      val pool = if (pooled) Some(new PooledRunner(program, useFns)) else None
-      val ctx = org.apache.spark.TaskContext.get()
-      if (ctx != null) pool.foreach(w =>
-        ctx.addTaskCompletionListener[Unit](_ => w.close()))
-      val mapped = rows.map { row =>
-        val payload = row.getString(textIdx)
-        if (payload == null) row
-        else {
-          val vals = row.toSeq.toArray
-          val vars = LinkedHashMap[String, String]()
-          var parseErr: String = null
-          // ONE parse of the payload, shared by the json-codec variable
-          // flattening and the goawk json_* read seeds. A parse failure is
-          // an immediate error only under codec=json; for the custom
-          // functions it is NOT an error until a json function actually
-          // runs (__JSON_OK=0 → __fail at call time, matching the
-          // reference's lazy part.JSON()).
-          var jsonRoot: JsonNode = null
-          if (codec == "json" || (useFns && useJsonFns)) {
-            try {
-              val n = mapper.readTree(payload)
-              if (n != null && !n.isMissingNode) jsonRoot = n
-              if (codec == "json") {
-                if (jsonRoot == null)
-                  parseErr = "failed to parse part into json: empty document"
-                else flatten("", jsonRoot, vars)
-              }
-            } catch {
-              case e: Exception =>
-                jsonRoot = null
-                if (codec == "json")
-                  parseErr = s"failed to parse part into json: ${e.getMessage}"
-            }
-          }
-          val metaMap: Map[String, String] = metaIdx
-            .filterNot(row.isNullAt)
-            .map(i => row.getMap[String, String](i).toMap).getOrElse(Map.empty)
-          if (codec != "none") metaMap.foreach { case (k, v) => vars(sanitize(k)) = v }
-
-          val seed = if (!useFns) None else Some(
-            AwkFuncs.seedBlock(Option(jsonRoot), metaMap, System.currentTimeMillis() / 1000L))
-
-          if (parseErr != null) vals(errIdx) = parseErr
+      if (!rows.hasNext) Iterator.empty
+      else {
+        val mapper = new ObjectMapper()
+        val worker = new Worker(program, useFns)
+        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => worker.close()))
+        rows.map { row =>
+          val payload = row.getString(textIdx)
+          if (payload == null) row
           else {
-            val stdin = if (codec == "text") payload else " "
-            val (exit, out, errRaw) = pool match {
-              case Some(w) => w.run(seed, vars, stdin)
-              case None =>
-                val fullProgram = seed match {
-                  case Some(s) => AwkFuncs.prelude + "\n" + s + "\n" + program
-                  case None => program
+            val vals = row.toSeq.toArray
+            val vars = LinkedHashMap[String, String]()
+            var parseErr: String = null
+            // ONE parse of the payload, shared by the json-codec variable
+            // flattening and the goawk json_* read seeds. A parse failure is
+            // an immediate error only under codec=json; for the custom
+            // functions it is NOT an error until a json function actually
+            // runs (__JSON_OK=0 → __fail at call time, matching the
+            // reference's lazy part.JSON()).
+            var jsonRoot: JsonNode = null
+            if (codec == "json" || (useFns && useJsonFns)) {
+              try {
+                val n = mapper.readTree(payload)
+                if (n != null && !n.isMissingNode) jsonRoot = n
+                if (codec == "json") {
+                  if (jsonRoot == null)
+                    parseErr = "failed to parse part into json: empty document"
+                  else flatten("", jsonRoot, vars)
                 }
-                runOne(fullProgram, vars, stdin)
+              } catch {
+                case e: Exception =>
+                  jsonRoot = null
+                  if (codec == "json")
+                    parseErr = s"failed to parse part into json: ${e.getMessage}"
+              }
             }
-            // control ops ride stderr (see goawk_prelude.awk); anything
-            // else on stderr is a real interpreter/program error
-            val (plainErr, ops) =
-              if (useFns) AwkFuncs.split(errRaw) else (errRaw, Nil)
-            if (plainErr.trim.nonEmpty) vals(errIdx) = plainErr.trim
-            else if (exit != 0)
-              vals(errIdx) = s"awk interpreter returned non-zero exit code: $exit"
-            else ops.find(_.op == "err") match {
-              case Some(e) =>
-                // a failed custom function aborts the program; the row
-                // passes through unchanged with the error flag set and
-                // all buffered mutations discarded (awk.go Process
-                // returns nil+err → the copy's mutations are dropped)
-                vals(errIdx) = e.fields.headOption.getOrElse("awk function error")
-              case None =>
-                ops.foreach { o =>
-                  if (o.op == "log")
-                    System.err.println(s"awk print_log [${o.fields(0)}] ${o.fields(1)}")
+            val metaMap: Map[String, String] = metaIdx
+              .filterNot(row.isNullAt)
+              .map(i => row.getMap[String, String](i).toMap).getOrElse(Map.empty)
+            if (codec != "none") metaMap.foreach { case (k, v) => vars(sanitize(k)) = v }
+
+            val seed = if (!useFns) None else Some(
+              AwkFuncs.seedBlock(Option(jsonRoot), metaMap, System.currentTimeMillis() / 1000L))
+
+            if (parseErr != null) vals(errIdx) = parseErr
+            else worker.run(seed, vars, if (codec == "text") payload else " ") match {
+              case Left(workerErr) => vals(errIdx) = workerErr
+              case Right((exit, out, errRaw)) =>
+                // control ops ride stderr (see goawk_prelude.awk); anything
+                // else on stderr is a real interpreter/program error
+                val (plainErr, ops) =
+                  if (useFns) AwkFuncs.split(errRaw) else (errRaw, Nil)
+                if (plainErr.trim.nonEmpty) vals(errIdx) = plainErr.trim
+                else if (exit != 0)
+                  vals(errIdx) = s"awk interpreter returned non-zero exit code: $exit"
+                else ops.find(_.op == "err") match {
+                  case Some(e) =>
+                    // a failed custom function aborts the program; the row
+                    // passes through unchanged with the error flag set and
+                    // all buffered mutations discarded (awk.go Process
+                    // returns nil+err → the copy's mutations are dropped)
+                    vals(errIdx) = e.fields.headOption.getOrElse("awk function error")
+                  case None =>
+                    ops.foreach { o =>
+                      if (o.op == "log")
+                        System.err.println(s"awk print_log [${o.fields(0)}] ${o.fields(1)}")
+                    }
+                    if (out.nonEmpty) vals(textIdx) = stripTrailingNl(out)
+                    else if (jsonRoot != null && AwkFuncs.applyJsonOps(jsonRoot, ops, mapper))
+                      vals(textIdx) = AwkFuncs.compactSorted(jsonRoot)
+                    val ms = ops.filter(_.op == "ms")
+                    if (ms.nonEmpty) metaIdx.foreach { i =>
+                      vals(i) = metaMap ++ ms.map(o => o.fields(0) -> o.fields(1))
+                    }
+                    vals(errIdx) = null
                 }
-                if (out.nonEmpty) vals(textIdx) = stripTrailingNl(out)
-                else if (jsonRoot != null && AwkFuncs.applyJsonOps(jsonRoot, ops, mapper))
-                  vals(textIdx) = AwkFuncs.compactSorted(jsonRoot)
-                val ms = ops.filter(_.op == "ms")
-                if (ms.nonEmpty) metaIdx.foreach { i =>
-                  vals(i) = metaMap ++ ms.map(o => o.fields(0) -> o.fields(1))
-                }
-                vals(errIdx) = null
             }
+            Row.fromSeq(vals.toIndexedSeq)
           }
-          Row.fromSeq(vals.toIndexedSeq)
-        }
-      }
-      // Without a TaskContext (e.g. the iterator driven outside a Spark
-      // task) the completion listener above never registers, and the sh
-      // worker + its tmp dir would leak for the JVM lifetime — close the
-      // pool when the iterator is exhausted instead (close() is
-      // idempotent, so double-closing with the listener is harmless).
-      pool match {
-        case Some(w) if ctx == null =>
-          new Iterator[Row] {
-            def hasNext: Boolean = {
-              val h = mapped.hasNext
-              if (!h) w.close()
-              h
-            }
-            def next(): Row = mapped.next()
-          }
-        case _ => mapped
+        } ++ { worker.close(); Iterator.empty }
       }
     }(enc)
   }
@@ -199,114 +179,80 @@ object Awk {
   private def stripTrailingNl(s: String): String =
     if (s.endsWith("\n")) s.dropRight(1) else s
 
-  /** One message = one awk run. Variables pass via -v (backslashes doubled
-    * because -v assignment interprets escape sequences; -v also gives
-    * numeric-looking values POSIX strnum comparison semantics, which a
-    * BEGIN-block string assignment would lose). The program itself passes
-    * via `-f tmpfile`, NOT argv — the prelude + seed block scale with the
-    * payload and a single argv element is capped at 128 KiB on Linux
-    * (MAX_ARG_STRLEN), which a ~40 KiB JSON message would blow through.
-    * Returns (exit, stdout, stderr).
-    */
-  /** Pooled execution: one long-lived `sh` worker per partition. The
-    * (constant) prelude + user program are staged to a file ONCE; each
+  /** One long-lived `sh` worker per partition, run as a [[Subprocess.Child]].
+    * The (constant) prelude + user program are staged to a file ONCE; each
     * message writes its stdin payload and BEGIN seed block to fixed side
     * files and sends the worker one command line —
-    * `awk -v … -f seed.awk -f prog.awk < in > out 2> err; echo __D$?` —
-    * so the per-message cost is one sh-side fork+exec of awk (~1 ms)
-    * instead of a JVM process spawn + temp program file + two drain
-    * threads (~6 ms). Semantics are IDENTICAL to the fresh mode: a brand
-    * new awk interpreter still runs per message (faithful per-part
-    * BEGIN/END/NR, clean globals); `-v` keeps POSIX strnum semantics.
-    * BEGIN order differs only in that the seed block precedes the
-    * prelude's constant-table BEGIN — both are pure assignments with no
-    * cross-reads (AwkSpec runs its whole table in both modes).
+    * `awk -v … -f seed.awk -f prog.awk 2> err < in > out; echo __D$?` —
+    * so the per-message cost is one sh-side fork+exec of awk (~1 ms) and
+    * a brand new interpreter still runs per message (per-part
+    * BEGIN/END/NR, clean globals). The seed block precedes the prelude's
+    * constant-table BEGIN; both are pure assignments with no cross-reads.
+    *
+    * Variables pass via -v: it gives numeric-looking values POSIX strnum
+    * semantics, which a BEGIN-block string assignment would lose, and it
+    * interprets escape sequences, so backslashes are doubled and a newline
+    * is sent as `\n` — the command must stay one line. The program passes
+    * via `-f`, NOT argv: the prelude + seed block scale with the payload
+    * and one argv element is capped at 128 KiB on Linux (MAX_ARG_STRLEN).
+    * `2> err` comes first so that sh's own errors on the redirections land
+    * in the row's stderr too, not on the worker's.
     */
-  private final class PooledRunner(program: String, useFns: Boolean) {
-    private val dir = java.nio.file.Paths.get(graft.util.Tmp.dir("awkpool"))
+  private final class Worker(program: String, useFns: Boolean) {
+    private val dir = Paths.get(graft.util.Tmp.dir("awkpool"))
     private val progFile = dir.resolve("prog.awk")
     private val seedFile = dir.resolve("seed.awk")
     private val inFile = dir.resolve("in")
     private val outFile = dir.resolve("out")
     private val errFile = dir.resolve("err")
-    java.nio.file.Files.write(progFile,
+    Files.write(progFile,
       ((if (useFns) AwkFuncs.prelude + "\n" else "") + program).getBytes(UTF_8))
-    private val p = new ProcessBuilder("sh").start()
-    private val toSh = new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(p.getOutputStream, UTF_8))
-    private val fromSh = new java.io.BufferedReader(
-      new java.io.InputStreamReader(p.getInputStream, UTF_8))
+    private def spawn() = new Subprocess.Child(Seq("sh"), "lines", 1 << 20, ReplyTimeoutSec)
+    private var sh = spawn()
     private def q(s: String): String = "'" + s.replace("'", "'\\''") + "'"
 
+    /** Right((exit, stdout, stderr)) of one awk run, or Left(why the
+      * worker failed), after which a fresh worker has replaced it.
+      */
     def run(seed: Option[String], vars: LinkedHashMap[String, String],
-        stdin: String): (Int, String, String) = {
-      java.nio.file.Files.write(inFile, stdin.getBytes(UTF_8))
-      seed.foreach(s => java.nio.file.Files.write(seedFile, s.getBytes(UTF_8)))
+        stdin: String): Either[String, (Int, String, String)] = {
+      Files.write(inFile, stdin.getBytes(UTF_8))
+      seed.foreach(s => Files.write(seedFile, s.getBytes(UTF_8)))
       val cmd = new StringBuilder("awk")
       vars.foreach { case (k, v) =>
-        cmd.append(" -v ").append(q(s"$k=${v.replace("\\", "\\\\")}"))
+        cmd.append(" -v ").append(q(s"$k=${v.replace("\\", "\\\\").replace("\n", "\\n")}"))
       }
       seed.foreach(_ => cmd.append(" -f ").append(q(seedFile.toString)))
       cmd.append(" -f ").append(q(progFile.toString))
+        .append(" 2> ").append(q(errFile.toString))
         .append(" < ").append(q(inFile.toString))
         .append(" > ").append(q(outFile.toString))
-        .append(" 2> ").append(q(errFile.toString))
         .append("; echo __D$?")
-      toSh.write(cmd.toString); toSh.newLine(); toSh.flush()
-      var line = fromSh.readLine()
-      while (line != null && !line.startsWith("__D")) line = fromSh.readLine()
-      if (line == null)
-        throw new IllegalStateException("awk pool worker exited unexpectedly")
-      val exit = line.substring(3).trim.toInt
-      (exit,
-        new String(java.nio.file.Files.readAllBytes(outFile), UTF_8),
-        new String(java.nio.file.Files.readAllBytes(errFile), UTF_8))
+      val reply =
+        try sh.roundTrip("lines", cmd.toString)
+        catch { case e: java.io.IOException => Left(String.valueOf(e.getMessage)) }
+      reply match {
+        case Right(r) if r.matches("__D[0-9]+") =>
+          Right((r.substring(3).toInt,
+            new String(Files.readAllBytes(outFile), UTF_8),
+            new String(Files.readAllBytes(errFile), UTF_8)))
+        case other =>
+          // a late or stray frame would answer the NEXT message: replace
+          // the worker (and kill the awk it may still be running)
+          val why = other match {
+            case _ if sh.wedged => s"awk: no result within ${ReplyTimeoutSec}s"
+            case Left(e) => s"awk worker failed: ${e.trim}"
+            case Right(r) => s"awk worker sent an unexpected reply: $r"
+          }
+          sh.kill()
+          sh = spawn()
+          Left(why)
+      }
     }
 
-    @volatile private var closed = false
-
-    def close(): Unit = if (!closed) {
-      closed = true
-      try toSh.close() catch { case _: Exception => () }
-      p.destroy()
+    def close(): Unit = {
+      sh.close()
       graft.util.Tmp.delete(dir.toString)
     }
-  }
-
-  private def runOne(program: String, vars: LinkedHashMap[String, String],
-      stdin: String): (Int, String, String) = {
-    val progFile = java.io.File.createTempFile("graft_awk", ".awk")
-    try {
-      java.nio.file.Files.write(progFile.toPath, program.getBytes(UTF_8))
-      val cmd = Seq.newBuilder[String]
-      cmd += "awk"
-      vars.foreach { case (k, v) => cmd += "-v"; cmd += s"$k=${v.replace("\\", "\\\\")}" }
-      cmd += "-f"; cmd += progFile.getAbsolutePath
-      val p = new ProcessBuilder(cmd.result(): _*).start()
-      val errBuf = new java.io.ByteArrayOutputStream()
-      val outBuf = new java.io.ByteArrayOutputStream()
-      val drain = new Thread(() => {
-        try p.getErrorStream.transferTo(errBuf) catch { case _: Throwable => () }
-      })
-      drain.setDaemon(true); drain.start()
-      // stdout must drain CONCURRENTLY with the stdin write: a message
-      // larger than the combined pipe buffers (~128 KB) with an echoing
-      // program would otherwise deadlock — parent blocked writing stdin,
-      // awk blocked writing unread stdout
-      val outDrain = new Thread(() => {
-        try p.getInputStream.transferTo(outBuf) catch { case _: Throwable => () }
-      })
-      outDrain.setDaemon(true); outDrain.start()
-      // A program that never touches its input (mawk exits immediately on
-      // `{ }`) can close stdin before we write — that's fine, not an error.
-      try {
-        p.getOutputStream.write(stdin.getBytes(UTF_8))
-        p.getOutputStream.close()
-      } catch { case _: java.io.IOException => () }
-      val exit = p.waitFor()
-      outDrain.join(1000)
-      drain.join(1000)
-      (exit, new String(outBuf.toByteArray, UTF_8), new String(errBuf.toByteArray, UTF_8))
-    } finally progFile.delete()
   }
 }

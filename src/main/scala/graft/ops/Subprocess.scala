@@ -99,7 +99,7 @@ object Subprocess {
     * stdout/stderr frames onto a tagged queue (the reference's
     * stdoutChan/stderrChan select, subprocess.go:441-457).
     */
-  private final class Child(cmd: Seq[String], codecRecv: String, maxBuf: Int,
+  private[ops] final class Child(cmd: Seq[String], codecRecv: String, maxBuf: Int,
       timeoutSec: Int) {
     private val pb = new ProcessBuilder(cmd: _*)
     private val process = pb.start()

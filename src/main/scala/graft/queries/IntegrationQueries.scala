@@ -160,9 +160,9 @@ object IntegrationQueries {
 
     // awk processor, json codec (internal/old/processor/awk.go:792-801):
     // the document flattens into AWK variables; the program's stdout
-    // replaces it. One interpreter per message by construction — fork cost
-    // is spread across node width by repartitioning the single-file scan
-    // (the subprocess processor is the long-lived streaming shape).
+    // replaces it. One fresh interpreter per message, forked by one
+    // long-lived sh worker per partition; repartitioning the single-file
+    // scan spreads those forks across node width.
     "q_awk" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
         .repartition(s.sparkContext.defaultParallelism)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.model.{BufTurn, PairedTurn, Turn}
+import graft.ops.Windows
 
 /** The flagship stateful operator (BASELINE.json north_star): join each
   * assistant/tool turn to the most recent user turn within the same
@@ -61,13 +62,8 @@ object SessionJoin {
     * window specs; DuckDB can replicate it verbatim (oracle in SparkEntry).
     */
   def pairBatch(df: DataFrame, gapSeconds: Long = DefaultGapSeconds): DataFrame = {
-    val w = Window.partitionBy(col("conv_id")).orderBy(col("ts"), col("turn_idx"))
-    val prev = lag(col("ts"), 1).over(w)
-    val isNew = when(prev.isNull ||
-      unix_timestamp(col("ts")) - unix_timestamp(prev) > gapSeconds, 1).otherwise(0)
-    val sessioned = df
-      .withColumn("session_id",
-        sum(isNew).over(w.rowsBetween(Window.unboundedPreceding, 0)) - lit(1))
+    val sessioned =
+      Windows.sessionize(df, col("conv_id"), col("ts"), gapSeconds, Seq(col("turn_idx")))
     val ws = Window.partitionBy(col("conv_id"), col("session_id"))
       .orderBy(col("ts"), col("turn_idx"))
       .rowsBetween(Window.unboundedPreceding, -1)

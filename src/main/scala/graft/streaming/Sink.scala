@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -97,8 +98,7 @@ object Sink {
       if (!Files.exists(commitDir)) Seq.empty
       else {
         val s = Files.list(commitDir)
-        try s.iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-          .asScala
+        try s.iterator().asScala
           // only all-digit names are manifests (skip in-flight .tmp files)
           .filter(p => p.getFileName.toString.forall(_.isDigit))
           .map { p =>
@@ -190,12 +190,5 @@ object Sink {
       catch { case scala.util.control.NonFatal(e) => lastErr = e; false }
     }
     if (!ok && lastErr != null) throw lastErr
-  }
-
-  private implicit class JIterOps[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
   }
 }

@@ -16,40 +16,28 @@ class AwkSpec extends SparkTestBase {
     (t, e)
   }
 
-  /** Returns (text, error, metadata-after). Every case runs in BOTH
-    * execution modes — fresh process per message AND the pooled
-    * per-partition worker — and asserts they agree, so the whole ported
-    * awk_test.go table pins pooled-mode fidelity.
-    */
+  /** Returns (text, error, metadata-after). */
   private def run(text: String, program: String, codec: String,
       meta: Map[String, String] = Map.empty): (String, String, Map[String, String]) = {
-    def once(pooled: Boolean): (String, String, Map[String, String]) = {
-      val df0 = Seq(text).toDF("text")
-      val df = if (meta.isEmpty) df0 else df0.withColumn("meta",
-        map(meta.flatMap { case (k, v) => Seq(lit(k), lit(v)) }.toSeq: _*))
-      val out = Awk.proc(df, program, codec,
-        metaCol = if (meta.isEmpty) None else Some("meta"), pooled = pooled)
-      val r =
-        if (meta.isEmpty) out.select(col("text"), col(Errors.ErrCol)).head()
-        else out.select(col("text"), col(Errors.ErrCol), col("meta")).head()
-      val after = if (meta.isEmpty) Map.empty[String, String]
-        else r.getMap[String, String](2).toMap
-      (r.getString(0), r.getString(1), after)
-    }
-    val fresh = once(pooled = false)
-    val pooledR = once(pooled = true)
-    // awk error text embeds the program's temp-file path, which legitimately
-    // differs between modes — normalize it before asserting parity
-    def norm(t: (String, String, Map[String, String])) = t.copy(_2 =
-      if (t._2 == null) null else t._2.replaceAll("/[^ :]*\\.awk", "<prog>"))
-    assert(norm(fresh) === norm(pooledR),
-      s"fresh vs pooled mode disagree for program: $program")
-    fresh
+    val df0 = Seq(text).toDF("text")
+    val df = if (meta.isEmpty) df0 else df0.withColumn("meta",
+      map(meta.flatMap { case (k, v) => Seq(lit(k), lit(v)) }.toSeq: _*))
+    val out = Awk.proc(df, program, codec,
+      metaCol = if (meta.isEmpty) None else Some("meta"))
+    val r =
+      if (meta.isEmpty) out.select(col("text"), col(Errors.ErrCol)).head()
+      else out.select(col("text"), col(Errors.ErrCol), col("meta")).head()
+    val after = if (meta.isEmpty) Map.empty[String, String]
+      else r.getMap[String, String](2).toMap
+    (r.getString(0), r.getString(1), after)
   }
 
   test("""text codec: program output replaces the message (awk_test.go "print 2nd word plus meta")""") {
     assert(one("hello world", """{ print $2 " " meta_foo }""", "text",
       Map("meta.foo" -> "12")) == (("world 12", null)))
+    // a metadata value holding a newline (and a backslash) reaches awk intact
+    assert(one("hello world", """{ print $2 " " meta_foo }""", "text",
+      Map("meta.foo" -> "1\n2\\3")) == (("world 1\n2\\3", null)))
   }
 
   test("""json codec: flattened variables (awk_test.go "json codec" cases)""") {
@@ -59,6 +47,9 @@ class AwkSpec extends SparkTestBase {
     // arrays overwrite at the parent path (flattenForAWK awk.go:625-630)
     assert(one("""{"obj":[{"foo":11},{"foo":12}]}""", "{ print obj_foo }", "json")
       == (("12", null)))
+    // a string value holding a newline reaches awk intact
+    assert(one("""{"obj":{"foo":"p\nq"}}""", """{ print obj_foo "|" }""", "json")
+      == (("p\nq|", null)))
   }
 
   test("empty output leaves the message unchanged; a bare newline replaces with empty (awk.go:838-846)") {
@@ -82,11 +73,9 @@ class AwkSpec extends SparkTestBase {
 
   test("BEGIN/END run per message (fresh interpreter per part), both modes") {
     val df = Seq("a", "b").toDF("text")
-    for (pooled <- Seq(false, true)) {
-      val out = Awk.proc(df, """END { print NR " lines" }""", "text", pooled = pooled)
-        .select("text").as[String].collect().sorted
-      assert(out.toSeq == Seq("1 lines", "1 lines"), s"pooled=$pooled")
-    }
+    val out = Awk.proc(df, """END { print NR " lines" }""", "text")
+      .select("text").as[String].collect().sorted
+    assert(out.toSeq == Seq("1 lines", "1 lines"))
   }
 
   // ---- goawk custom-function table (awk_test.go TestAWK) ----------------
