@@ -216,7 +216,7 @@ object Bench {
     // keep occupying tmpfs RAM, and a killed sweep child leaves its awk
     // worker dirs. Sweep stale graft dirs from both temp bases before
     // measuring.
-    val prefixes = Seq("flagship", "spark-local", "qstream", "graft-", "awkpool")
+    val prefixes = Seq("flagship", "spark-local", "qstream", "readuntil", "graft-", "awkpool")
     val swept = graft.util.Tmp.sweepStale(prefixes) +
       graft.util.Tmp.sweepStale(prefixes, baseDir = Some("/tmp"))
     if (swept > 0) System.err.println(s"[bench] swept $swept stale temp dirs")

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.gen.TranscriptGen
@@ -116,6 +116,27 @@ object Flagship {
     inDir
   }
 
+  /** The pipeline's heavy per-turn map work (north_star: tokenization,
+    * quality scoring, redaction BEFORE the join). Real gates, not
+    * busywork: the quality/language scores gate which rows get redacted
+    * vs tagged, so Catalyst cannot fold the work away. Deliberately a
+    * pure PROJECTION, not a Filter: `PushPredicateThroughNonJoin` pushes
+    * filters through RepartitionByExpression, which would move the
+    * expensive predicate BACK below the salted exchange into the
+    * (hot-key-concentrated) scan task — the exact skew the salt exists
+    * to defeat. A projection stays put; column pruning only pushes the
+    * raw-column Project below the exchange. When the input is conv-keyed
+    * (stage(keyedByConv=true)) this stage is where hot-conversation skew
+    * lands — and what the salted repartition spreads.
+    */
+  def textOpsGate(df: DataFrame): DataFrame = {
+    val q = graft.ops.TextOps.qualityScore(col("text"))
+    val lang = graft.ops.TextOps.langId(col("text"))
+    df.withColumn("text",
+      when(q >= 0.0 && lang =!= lit("--"), graft.ops.TextOps.redactPii(col("text")))
+        .otherwise(concat(lit("<low-quality> "), col("text"))))
+  }
+
   /** Run the pipeline over an already-staged input dir. `salt` > 0
     * inserts the north_star's hot-key salted repartition before the
     * stateful stage: the hot conversation's per-turn map work spreads over
@@ -137,28 +158,7 @@ object Flagship {
         val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
         SessionJoin.saltedRepartition(raw, parts, salt)
       }
-    // The 100 TB pipeline's per-turn map work (north_star: tokenization,
-    // quality scoring, redaction BEFORE the join). Real gates, not
-    // busywork: the quality/language scores gate which rows get redacted
-    // vs tagged, so Catalyst cannot fold the work away. Deliberately a
-    // pure PROJECTION, not a Filter: `PushPredicateThroughNonJoin` pushes
-    // filters through RepartitionByExpression, which would move the
-    // expensive predicate BACK below the salted exchange into the
-    // (hot-key-concentrated) scan task — the exact skew the salt exists
-    // to defeat. A projection stays put; column pruning only pushes the
-    // raw-column Project below the exchange. When the input is conv-keyed
-    // (stage(keyedByConv=true)) this stage is where hot-conversation skew
-    // lands — and what the salted repartition spreads.
-    val mapped =
-      if (!heavyMap) salted
-      else {
-        val q = graft.ops.TextOps.qualityScore(col("text"))
-        val lang = graft.ops.TextOps.langId(col("text"))
-        salted.withColumn("text",
-          when(q >= 0.0 && lang =!= lit("--"),
-            graft.ops.TextOps.redactPii(col("text")))
-            .otherwise(concat(lit("<low-quality> "), col("text"))))
-      }
+    val mapped = if (heavyMap) textOpsGate(salted) else salted
     val turns = mapped.as[Turn]
 
     val paired = SessionJoin.pairStreaming(turns, SessionJoin.DefaultGapSeconds, "10 minutes")

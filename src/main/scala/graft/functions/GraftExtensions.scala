@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Lower}
 
 /** SparkSessionExtensions registrar for the engine's native expressions —
   * the public plugin surface, mirroring the reference's Bloblang plugin
@@ -26,7 +26,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   private val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("graft_token_count", "one-pass whitespace-family token count",
-      args => TokenCount(args.head)),
+      args => TokenCount(Lower(args.head))),
     ("graft_simhash64", "one-pass 64-bit SimHash signature",
       args => SimHash64(args.head)),
     ("graft_cosine", "cosine similarity of two ARRAY<FLOAT> columns",

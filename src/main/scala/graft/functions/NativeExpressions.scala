@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the scan-speed hot paths of the
@@ -16,28 +17,149 @@ import org.apache.spark.unsafe.types.UTF8String
   * row inside WholeStageCodegen via a static call).
   *
   * Each expression's semantics exactly mirror its Column-combinator twin
-  * in `ops.TextOps` / `ops.Similarity` / `ops.Dedupe`, and the DuckDB
-  * oracles validate both implementations against the same SQL.
+  * in `ops.TextOps` / `ops.Similarity` / `ops.Dedupe` (for `TextGate`,
+  * the higher-order-function gate forms kept in NativeFunctionsSpec), and
+  * the DuckDB oracles validate both implementations against the same SQL.
   */
 object Native {
 
-  /** One-pass whitespace-family token count: tokens are maximal runs of
-    * letters/digits/apostrophe — the `words()` regex of TextOps
-    * (`[^\p{L}\p{N}']+` separators) without array materialization.
+  /** `\p{L}` and `\p{L}\p{N}` as `Character.getType` bit sets: the
+    * general categories java.util.regex tests for those properties.
     */
-  def tokenCount(s: UTF8String): Int = {
-    val str = s.toString
-    var i = 0
-    var n = 0
-    var inTok = false
-    while (i < str.length) {
-      val cp = str.codePointAt(i)
-      val isTok = Character.isLetterOrDigit(cp) || cp == '\''
-      if (isTok && !inTok) n += 1
-      inTok = isTok
-      i += Character.charCount(cp)
+  private val LetterTypes: Int =
+    (1 << Character.UPPERCASE_LETTER) | (1 << Character.LOWERCASE_LETTER) |
+      (1 << Character.TITLECASE_LETTER) | (1 << Character.MODIFIER_LETTER) |
+      (1 << Character.OTHER_LETTER)
+  private val TokenTypes: Int = LetterTypes |
+    (1 << Character.DECIMAL_DIGIT_NUMBER) | (1 << Character.LETTER_NUMBER) |
+    (1 << Character.OTHER_NUMBER)
+
+  @inline private def isLetter(cp: Int): Boolean =
+    cp >= 0 && ((LetterTypes >>> Character.getType(cp)) & 1) != 0
+
+  @inline private def isTokenChar(cp: Int): Boolean =
+    cp == '\'' || cp >= 0 && ((TokenTypes >>> Character.getType(cp)) & 1) != 0
+
+  /** The code point starting at `at` (low 32 bits) and its byte length
+    * (high 32 bits). A byte that does not start a well-formed UTF-8
+    * sequence (Unicode Table 3-7, what Java's decoder accepts) reads as
+    * code point -1 of length 1: the U+FFFD the decoder would produce is
+    * neither a letter nor a token char, and no valid sequence is ever
+    * swallowed by it.
+    */
+  private def codePointAt(base: AnyRef, at: Long, left: Int): Long = {
+    val b0 = Platform.getByte(base, at) & 0xff
+    if (b0 < 0x80) return (1L << 32) | b0
+    @inline def b(k: Int): Int = Platform.getByte(base, at + k) & 0xff
+    @inline def cont(k: Int, lo: Int, hi: Int): Boolean = {
+      val x = b(k); x >= lo && x <= hi
+    }
+    val malformed = (1L << 32) | 0xffffffffL
+    if (b0 < 0xc2 || b0 > 0xf4) malformed
+    else if (b0 < 0xe0) {
+      if (left >= 2 && cont(1, 0x80, 0xbf)) (2L << 32) | ((b0 & 0x1f) << 6 | b(1) & 0x3f)
+      else malformed
+    } else if (b0 < 0xf0) {
+      val lo = if (b0 == 0xe0) 0xa0 else 0x80
+      val hi = if (b0 == 0xed) 0x9f else 0xbf
+      if (left >= 3 && cont(1, lo, hi) && cont(2, 0x80, 0xbf))
+        (3L << 32) | ((b0 & 0x0f) << 12 | (b(1) & 0x3f) << 6 | b(2) & 0x3f)
+      else malformed
+    } else {
+      val lo = if (b0 == 0xf0) 0x90 else 0x80
+      val hi = if (b0 == 0xf4) 0x8f else 0xbf
+      if (left >= 4 && cont(1, lo, hi) && cont(2, 0x80, 0xbf) && cont(3, 0x80, 0xbf))
+        (4L << 32) | ((b0 & 0x07) << 18 | (b(1) & 0x3f) << 12 | (b(2) & 0x3f) << 6 | b(3) & 0x3f)
+      else malformed
+    }
+  }
+
+  /** Skips the run of token chars (`token` = true) or of separators
+    * (false) at `from`: the first byte after it, `n` at the end.
+    */
+  private def skip(base: AnyRef, off: Long, from: Int, n: Int, token: Boolean): Int = {
+    var i = from
+    while (i < n) {
+      val c = codePointAt(base, off + i, n - i)
+      if (isTokenChar(c.toInt) != token) return i
+      i += (c >>> 32).toInt
     }
     n
+  }
+
+  /** One-pass token count of lowered text on the `TextOps.words`
+    * contract: tokens are maximal runs of `\p{L}\p{N}'` code points.
+    */
+  def tokenCount(lowered: UTF8String): Int = {
+    val base = lowered.getBaseObject
+    val off = lowered.getBaseOffset
+    val n = lowered.numBytes
+    var count = 0
+    var i = skip(base, off, 0, n, token = false)
+    while (i < n) {
+      count += 1
+      i = skip(base, off, skip(base, off, i, n, token = true), n, token = false)
+    }
+    count
+  }
+
+  /** The counts behind `TextOps.qualityScore` and `langId`, from one pass
+    * over each of `raw` and `lowered` (= lower(raw)) and no per-row
+    * collection: `lowered` is tokenized as in `tokenCount`, and every
+    * token short enough to be a lexicon word is looked up by its packed
+    * bytes, setting that word's bit — so each word counts once however
+    * often it occurs (`array_intersect` semantics). Returns TextGate's
+    * struct: the `TextGate.Counts` in order, then each language's hits.
+    */
+  def textGate(raw: UTF8String, lowered: UTF8String, lex: GateLexicon): UnsafeRow = {
+    var alpha = 0
+    var punct = 0
+    val rBase = raw.getBaseObject
+    val rOff = raw.getBaseOffset
+    val rn = raw.numBytes
+    var i = 0
+    while (i < rn) {
+      val c = codePointAt(rBase, rOff + i, rn - i)
+      val cp = c.toInt
+      if (isLetter(cp)) alpha += 1
+      else if (cp < 0x80 && GateLexicon.Punct.indexOf(cp) >= 0) punct += 1
+      i += (c >>> 32).toInt
+    }
+
+    val base = lowered.getBaseObject
+    val off = lowered.getBaseOffset
+    val n = lowered.numBytes
+    var words = 0
+    var seen = 0L
+    i = skip(base, off, 0, n, token = false)
+    while (i < n) {
+      val end = skip(base, off, i, n, token = true)
+      words += 1
+      if (end - i <= GateLexicon.MaxBytes) {
+        var key = 0L
+        var j = i
+        while (j < end) { key = key << 8 | (Platform.getByte(base, off + j) & 0xff); j += 1 }
+        val at = java.util.Arrays.binarySearch(lex.keys, key)
+        if (at >= 0) seen |= lex.bits(at)
+      }
+      i = skip(base, off, end, n, token = false)
+    }
+
+    val fields = TextGate.Counts.length + lex.langMasks.length
+    val size = UnsafeRow.calculateBitSetWidthInBytes(fields) + 8 * fields
+    val row = new UnsafeRow(fields)
+    row.pointTo(new Array[Byte](size), size)
+    row.setInt(0, raw.numChars)
+    row.setInt(1, alpha)
+    row.setInt(2, punct)
+    row.setInt(3, words)
+    row.setInt(4, java.lang.Long.bitCount(seen))
+    var l = 0
+    while (l < lex.langMasks.length) {
+      row.setInt(TextGate.Counts.length + l, java.lang.Long.bitCount(seen & lex.langMasks(l)))
+      l += 1
+    }
+    row
   }
 
   /** ASCII-alnum token char, lowercased — EXACTLY the column twins'
@@ -313,7 +435,9 @@ object Native {
   }
 }
 
-/** graft_token_count(text): codegen'd one-pass token count. */
+/** graft_token_count(text) = TokenCount(lower(text)): codegen'd one-pass
+  * token count of lowered text (`Native.tokenCount`).
+  */
 case class TokenCount(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = IntegerType
   override def inputTypes = Seq(StringType)
@@ -323,6 +447,66 @@ case class TokenCount(child: Expression) extends UnaryExpression with ExpectsInp
     defineCodeGen(ctx, ev, c => s"graft.functions.Native.tokenCount($c)")
   override protected def withNewChildInternal(newChild: Expression): TokenCount =
     copy(child = newChild)
+}
+
+/** A stop-word lexicon compiled for `Native.textGate`: each distinct word
+  * owns one bit of a 64-bit set and is found by its UTF-8 bytes packed
+  * into a long (no token char is a NUL byte, so packing is one-to-one for
+  * words of up to 8 bytes).
+  */
+final class GateLexicon(lexicon: Seq[(String, Seq[String])]) extends Serializable {
+  private val words = lexicon.flatMap(_._2).distinct
+  require(words.size <= 64, s"a gate lexicon holds at most 64 distinct words, got ${words.size}")
+  private val packed = words.zipWithIndex.map { case (w, bit) =>
+    val bytes = w.getBytes("UTF-8")
+    require(bytes.length <= GateLexicon.MaxBytes, s"lexicon word '$w' is over ${GateLexicon.MaxBytes} UTF-8 bytes")
+    bytes.foldLeft(0L)((k, b) => k << 8 | (b & 0xff)) -> (1L << bit)
+  }.sortBy(_._1)
+  val keys: Array[Long] = packed.map(_._1).toArray
+  val bits: Array[Long] = packed.map(_._2).toArray
+  val langMasks: Array[Long] = lexicon.map { case (_, stops) =>
+    stops.distinct.foldLeft(0L)((m, w) => m | (1L << words.indexOf(w)))
+  }.toArray
+}
+
+object GateLexicon {
+  val MaxBytes = 8
+  /** The punctuation `TextOps.qualityScore` counts. */
+  val Punct = ".,;:!?"
+}
+
+/** TextGate(text, lower(text), lexicon): the quality and language gates'
+  * counts for one turn from one codegen'd pass (`Native.textGate`), as a
+  * struct of `TextGate.Counts` and `hits_<lang>` per lexicon language.
+  * Lowering is Catalyst's own `Lower`, so the tokens are exactly those of
+  * `TextOps.words`.
+  */
+case class TextGate(left: Expression, right: Expression, lexicon: Seq[(String, Seq[String])])
+    extends BinaryExpression with ExpectsInputTypes {
+  @transient private lazy val compiled = new GateLexicon(lexicon)
+  override lazy val dataType: DataType = StructType(
+    (TextGate.Counts ++ lexicon.map("hits_" + _._1)).map(StructField(_, IntegerType, nullable = false)))
+  override def inputTypes = Seq(StringType, StringType)
+  override def prettyName: String = "text_gate"
+  // the lexicon is a constant of the expression; plans print the inputs
+  override def stringArgs: Iterator[Any] = Iterator(left, right)
+  override protected def nullSafeEval(raw: Any, lowered: Any): Any =
+    Native.textGate(raw.asInstanceOf[UTF8String], lowered.asInstanceOf[UTF8String], compiled)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val lex = ctx.addReferenceObj("lexicon", compiled)
+    defineCodeGen(ctx, ev, (raw, lowered) => s"graft.functions.Native.textGate($raw, $lowered, $lex)")
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): TextGate =
+    copy(left = l, right = r)
+}
+
+object TextGate {
+  /** The struct's leading fields: `chars` = length(text), `alpha` =
+    * `\p{L}` code points of text, `punct` = `[.,;:!?]` chars of text,
+    * `words` = size(words(text)), `stop_hits` = distinct lexicon words
+    * among them.
+    */
+  val Counts: IndexedSeq[String] = IndexedSeq("chars", "alpha", "punct", "words", "stop_hits")
 }
 
 /** graft_simhash64(text): codegen'd one-pass SimHash signature. */

@@ -1,12 +1,19 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.classic.GraftColumns.{column, expression}
 import org.apache.spark.sql.functions._
+import graft.functions.TextGate
 
 /** Text-analysis operators for training-data pipelines: language ID,
-  * quality scoring, token counting, document fingerprinting. All pure
-  * column math (codegen'd, map-side, no shuffle) — at 100 TB these run at
-  * scan speed.
+  * quality scoring, token counting, document fingerprinting, redaction.
+  * All are map-side column expressions with no shuffle. `langId` and
+  * `qualityScore` read their counts from one native `TextGate` pass and
+  * `redactPii`/`contentKey` are built-in regex/hash functions, so these
+  * run inside whole-stage codegen. `words` and the forms built on it
+  * (`tokenCountWs`, `tokenCountBpe`, `fingerprint`, `repetition`) use
+  * higher-order functions (`filter`, `aggregate`, `transform`), which
+  * Spark evaluates interpreted, per element.
   */
 object TextOps {
 
@@ -32,28 +39,41 @@ object TextOps {
       lit(0L),
       (acc, w) => acc + ceil(length(w).cast("double") / 4.0).cast("long"))
 
-  /** Language ID by stopword-hit voting over a tiny per-language lexicon —
-    * the classic n-gram/stopword heuristic. Returns the language code with
-    * the most hits, 'und' if none. Deterministic tie-break by list order.
+  /** Per-language stopword lexicon: the one list `langId`, `qualityScore`
+    * and their DuckDB oracles (TextQueries) read.
     */
-  private val lexicon: Seq[(String, Seq[String])] = Seq(
+  val lexicon: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "and", "of", "to", "is", "in", "that", "it", "for", "with"),
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "ein", "mit", "für", "auf"),
     "fr" -> Seq("le", "la", "les", "et", "est", "une", "pour", "dans", "que", "des"),
     "es" -> Seq("el", "la", "los", "y", "es", "una", "para", "con", "que", "por"),
     "it" -> Seq("il", "la", "di", "e", "che", "per", "con", "una", "sono", "del"))
 
+  /** The counts both gates need, from one tokenizing pass over `text`:
+    * the words of `words(text)` and their distinct lexicon hits (overall
+    * and per language), plus the length, letters and punctuation of
+    * `text` (fields: `TextGate.Counts`, then `hits_<lang>`). Calls on the
+    * same `text` are equal expressions, and subexpression elimination
+    * evaluates such an expression once per row when it is read by two
+    * different fields outside any conditional branch — `qualityScore`
+    * reads `chars` and `words` there — so a projection using both gates
+    * tokenizes each row once (PlanShapeSpec pins this).
+    */
+  private def gate(text: Column): Column =
+    column(TextGate(expression(text), expression(lower(text)), lexicon))
+
+  /** Language ID by stopword-hit voting over `lexicon` — the classic
+    * n-gram/stopword heuristic. Returns the language code with the most
+    * distinct stopwords present, 'und' if none. Deterministic tie-break
+    * by list order.
+    */
   def langId(text: Column): Column = {
-    val ws = words(text)
-    val scored = lexicon.map { case (lang, stops) =>
-      val hits = size(array_intersect(ws, array(stops.map(lit): _*)))
-      struct(hits.as("hits"), lit(lang).as("lang"))
-    }
-    // max by hits; ties → earlier language in lexicon order wins
-    val best = scored.reduceLeft { (a, b) =>
-      when(b.getField("hits") > a.getField("hits"), b).otherwise(a)
-    }
-    when(best.getField("hits") > 0, best.getField("lang")).otherwise("und")
+    val g = gate(text)
+    val hits = lexicon.map { case (lang, _) => lang -> g.getField(s"hits_$lang") }
+    val best = greatest(hits.map(_._2): _*)
+    // ties → earlier language in lexicon order wins; no hit (or no text) → und
+    hits.foldLeft(when(best === 0, "und")) { case (c, (lang, h)) => c.when(h === best, lang) }
+      .otherwise("und")
   }
 
   /** Quality score in [0,1]: blend of length sanity, alpha ratio,
@@ -61,12 +81,12 @@ object TextOps {
     * standard cheap quality gates of web-scale corpus cleaning.
     */
   def qualityScore(text: Column): Column = {
-    val len = length(text).cast("double")
-    val nWords = size(words(text)).cast("double")
-    val alpha = length(regexp_replace(text, "[^\\p{L}]", "")).cast("double")
-    val punct = length(regexp_replace(text, "[^.,;:!?]", "")).cast("double")
-    val stopHits = size(array_intersect(words(text),
-      array(lexicon.flatMap(_._2).distinct.map(lit): _*))).cast("double")
+    val g = gate(text)
+    val len = g.getField("chars").cast("double")
+    val nWords = g.getField("words").cast("double")
+    val alpha = g.getField("alpha").cast("double")
+    val punct = g.getField("punct").cast("double")
+    val stopHits = g.getField("stop_hits").cast("double")
     val lenScore = least(len / 200.0, lit(1.0))
     val alphaScore = when(len > 0, alpha / len).otherwise(0.0)
     val punctScore = lit(1.0) - least(when(len > 0, punct / len * 10).otherwise(1.0), lit(1.0))

@@ -82,13 +82,6 @@ object TextQueries {
   private def hitsSql(stops: Seq[String]) =
     s"len(list_intersect($wordsSql, [${stops.map(w => s"'$w'").mkString(",")}]))"
 
-  private val lex: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "and", "of", "to", "is", "in", "that", "it", "for", "with"),
-    "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "ein", "mit", "für", "auf"),
-    "fr" -> Seq("le", "la", "les", "et", "est", "une", "pour", "dans", "que", "des"),
-    "es" -> Seq("el", "la", "los", "y", "es", "una", "para", "con", "que", "por"),
-    "it" -> Seq("il", "la", "di", "e", "che", "per", "con", "una", "sono", "del"))
-
   /** The identical RE2 patterns as TextOps.PiiPatterns, applied in the
     * same order with DuckDB's 'g' flag (Spark replaces all by default).
     */
@@ -135,21 +128,21 @@ object TextQueries {
          |    w -> CAST(ceil(len(w) / 4.0) AS BIGINT))), 0) AS BIGINT) AS tok_bpe
          |FROM documents""".stripMargin,
     "q_lang_id" -> {
-      val hitCols = lex.map { case (l, st) => s"${hitsSql(st)} AS h_$l" }.mkString(",\n  ")
-      // first-max-wins in lexicon order = the Spark reduceLeft semantics
-      val caseChain = lex.map { case (l, _) => s"WHEN h_$l = m THEN '$l'" }.mkString(" ")
+      val hitCols = TextOps.lexicon.map { case (l, st) => s"${hitsSql(st)} AS h_$l" }.mkString(",\n  ")
+      // first-max-wins in lexicon order, as in TextOps.langId
+      val caseChain = TextOps.lexicon.map { case (l, _) => s"WHEN h_$l = m THEN '$l'" }.mkString(" ")
       s"""SELECT doc_id, lang,
          |  CASE WHEN m = 0 THEN 'und' $caseChain END AS lang_pred
          |FROM (
          |  SELECT doc_id, lang,
-         |    greatest(${lex.map("h_" + _._1).mkString(", ")}) AS m,
-         |    ${lex.map("h_" + _._1).mkString(", ")}
+         |    greatest(${TextOps.lexicon.map("h_" + _._1).mkString(", ")}) AS m,
+         |    ${TextOps.lexicon.map("h_" + _._1).mkString(", ")}
          |  FROM (SELECT doc_id, lang,
          |    $hitCols
          |  FROM documents))""".stripMargin
     },
     "q_quality" -> {
-      val allStops = lex.flatMap(_._2).distinct.map(w => s"'$w'").mkString(",")
+      val allStops = TextOps.lexicon.flatMap(_._2).distinct.map(w => s"'$w'").mkString(",")
       s"""SELECT doc_id, round((
          |    least(len0 / 200.0, 1.0)
          |  + CASE WHEN len0 > 0 THEN alpha / len0 ELSE 0.0 END

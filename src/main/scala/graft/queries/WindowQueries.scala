@@ -166,15 +166,29 @@ object WindowQueries {
       stream, col("role") === "tool" && col("turn_idx") >= 10, ord,
       (b, _) => b.write.mode("append").parquet(s"$work/out"), s"$work/ck")
     q.awaitTermination()
-    s.read.parquet(s"$work/out")
-      .select("conv_id", "turn_idx", "role", "read_until_final")
+    detach(s.read.parquet(s"$work/out")
+      .select("conv_id", "turn_idx", "role", "read_until_final"), work)
+  }
+
+  /** `result`, read from the run dir `work`, held in Spark's block manager
+    * (an eager local checkpoint) so that `work` can be deleted: a rig's
+    * staged input, checkpoint and sink are single-use, and left behind
+    * they would occupy tmpfs until the host reboots. The stopped run's
+    * state-store providers are unloaded first, as `Flagship.runStaged`
+    * does, so none is left pointing into the deleted checkpoint.
+    */
+  private def detach(result: DataFrame, work: String): DataFrame = {
+    val held = result.localCheckpoint()
+    org.apache.spark.sql.execution.streaming.state.GraftStateStoreAccess.unloadAll()
+    graft.util.Tmp.delete(work)
+    held
   }
 
   /** Stage the derived transcripts as a file stream, run `pipeline` to an
     * exactly-once sink across three AvailableNow phases (ingest; sentinel
     * turn far enough ahead that the watermark passes everything; one more
     * cycle so event-time state flushes), and return the committed rows
-    * minus the sentinel's.
+    * minus the sentinel's, detached from the deleted run dir.
     */
   private[queries] def replayStreamed(
       s: SparkSession,
@@ -206,9 +220,9 @@ object WindowQueries {
       .coalesce(1).write.mode("append").parquet(inDir)
     runOnce()
     runOnce()
-    Sink.readCommitted(s, s"$work/out")
+    detach(Sink.readCommitted(s, s"$work/out")
       .filter(sentinelFilter.getOrElse(col("conv_id") =!= sentinelConv))
-      .drop("_batch_id", "_partition_id")
+      .drop("_batch_id", "_partition_id"), work)
   }
 
   private def streamTumblingAgg(s: SparkSession, dir: String): DataFrame =

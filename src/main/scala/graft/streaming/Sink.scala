@@ -53,8 +53,7 @@ object Sink {
       .write
       .parquet(s"$outDir/data/$attemptDir") // no leading '_': Spark hides such dirs
     // the marker must appear ATOMICALLY with its content: CREATE_NEW + write
-    // leaves a window where a reader lists an empty manifest and resolves it
-    // to the legacy b<id> directory that doesn't exist under this layout.
+    // leaves a window where a reader lists an empty manifest.
     // Write a hidden temp file, then hard-link it to the marker name — link
     // is atomic and fails if the marker exists (the concurrent-attempt race).
     val tmp = Files.createTempFile(commitDir, s".tmp$batchId-", "")
@@ -89,8 +88,7 @@ object Sink {
       .foreachBatch((b: Dataset[T], id: Long) => writeBatchIdempotent(outDir)(b.toDF(), id))
 
   /** Read back only committed batches: each `_commits/<id>` manifest names
-    * the attempt directory that was published for that batch (empty
-    * manifest = the pre-manifest layout `b<id>`, kept readable).
+    * the attempt directory that was published for that batch.
     */
   def readCommitted(spark: org.apache.spark.sql.SparkSession, outDir: String): DataFrame = {
     val commitDir = Paths.get(outDir, "_commits")
@@ -104,7 +102,8 @@ object Sink {
           .map { p =>
             val id = p.getFileName.toString.toLong
             val named = new String(Files.readAllBytes(p), "UTF-8").trim
-            id -> (if (named.isEmpty) s"b$id" else named)
+            require(named.nonEmpty, s"commit manifest $p names no attempt directory")
+            id -> named
           }.toSeq
         finally s.close()
       }

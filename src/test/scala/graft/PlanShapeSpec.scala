@@ -161,4 +161,31 @@ class PlanShapeSpec extends SparkTestBase {
     // derivation window shuffle + (possibly) agg reuse; must not exceed 2
     assert(nExchange <= 2, s"q_group_by_value has $nExchange exchanges")
   }
+
+  test("text gates run as one native TextGate pass in codegen, no HOF lambdas") {
+    // q_quality, q_lang_id and the pipeline's heavy map once tokenized
+    // each turn three times through interpreted `filter` lambdas plus six
+    // `array_intersect`s; the native gate must stay inside a codegen
+    // stage, and the heavy map's two gates (quality and language) must
+    // share one evaluation through subexpression elimination
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import graft.functions.TextGate
+    val frames = Seq(
+      "q_quality" -> SparkEntry.queries("q_quality")(spark, dir),
+      "q_lang_id" -> SparkEntry.queries("q_lang_id")(spark, dir),
+      "heavy map" -> Flagship.textOpsGate(graft.sources.Tables.documents(spark, dir)))
+    frames.foreach { case (name, df) =>
+      val p = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      assert(!p.contains("filter(") && !p.contains("array_intersect("),
+        s"$name plans an interpreted HOF gate:\n$p")
+      val executed = df.queryExecution.executedPlan
+      val inCodegen = executed.collect { case w: WholeStageCodegenExec => w }
+        .exists(_.child.exists(_.expressions.exists(_.exists(_.isInstanceOf[TextGate]))))
+      assert(inCodegen, s"$name has no TextGate inside a WholeStageCodegen stage:\n$p")
+      val code = org.apache.spark.sql.execution.debug.codegenStringSeq(executed)
+        .map(_._2).mkString("\n")
+      val calls = code.split(java.util.regex.Pattern.quote("Native.textGate("), -1).length - 1
+      assert(calls == 1, s"$name generates $calls TextGate calls per row, expected 1")
+    }
+  }
 }
