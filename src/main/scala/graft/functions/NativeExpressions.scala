@@ -435,7 +435,7 @@ object Native {
   }
 }
 
-/** graft_token_count(text) = TokenCount(lower(text)): codegen'd one-pass
+/** TokenCount(lower(text)) (`NativeFunctions.tokenCount`): codegen'd one-pass
   * token count of lowered text (`Native.tokenCount`).
   */
 case class TokenCount(child: Expression) extends UnaryExpression with ExpectsInputTypes {
@@ -509,7 +509,7 @@ object TextGate {
   val Counts: IndexedSeq[String] = IndexedSeq("chars", "alpha", "punct", "words", "stop_hits")
 }
 
-/** graft_simhash64(text): codegen'd one-pass SimHash signature. */
+/** SimHash64(text): codegen'd one-pass SimHash signature. */
 case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
   override def inputTypes = Seq(StringType)
@@ -521,7 +521,7 @@ case class SimHash64(child: Expression) extends UnaryExpression with ExpectsInpu
     copy(child = newChild)
 }
 
-/** graft_minhash_sig(text, k, numHashes): codegen'd one-pass MinHash
+/** MinHashSig(text, k, numHashes): codegen'd one-pass MinHash
   * signature (ARRAY<BIGINT>), null when the text has no tokens.
   */
 case class MinHashSig(child: Expression, k: Int, numHashes: Int)
@@ -551,7 +551,7 @@ case class MinHashSig(child: Expression, k: Int, numHashes: Int)
     copy(child = newChild)
 }
 
-/** graft_ngram_jaccard(a, b, n): codegen'd one-pass character n-gram
+/** NgramJaccard(a, b, n): codegen'd one-pass character n-gram
   * Jaccard similarity of two strings.
   */
 case class NgramJaccard(left: Expression, right: Expression, n: Int)
@@ -566,7 +566,7 @@ case class NgramJaccard(left: Expression, right: Expression, n: Int)
     copy(left = l, right = r)
 }
 
-/** graft_lsh_bucket(emb, bits, seed): codegen'd random-hyperplane LSH
+/** LshBucket(emb, bits, seed): codegen'd random-hyperplane LSH
   * bucket id over ARRAY<FLOAT> — one fused pass per row.
   */
 case class LshBucket(child: Expression, bits: Int, seed: Int)
@@ -581,7 +581,7 @@ case class LshBucket(child: Expression, bits: Int, seed: Int)
     copy(child = newChild)
 }
 
-/** graft_cosine(a, b): codegen'd cosine over ARRAY<FLOAT>. */
+/** CosineSim(a, b): codegen'd cosine over ARRAY<FLOAT>. */
 case class CosineSim(left: Expression, right: Expression) extends BinaryExpression with ExpectsInputTypes {
   override def dataType: DataType = DoubleType
   override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
@@ -593,7 +593,7 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
     copy(left = l, right = r)
 }
 
-/** graft_cosine_i8(a, b): codegen'd cosine over ARRAY<TINYINT> — the
+/** CosineSimI8(a, b): codegen'd cosine over ARRAY<TINYINT> — the
   * quantized-index probe scorer (`Similarity.int8Scores`). Callers must
   * pass byte arrays on both sides (int8Scores quantizes the query
   * driver-side and builds byte literals); there is no implicit
@@ -615,10 +615,10 @@ case class CosineSimI8(left: Expression, right: Expression) extends BinaryExpres
     copy(left = l, right = r)
 }
 
-/** graft_fnv1a32(key: BINARY): codegen'd FNV-1a 32-bit as signed int —
+/** Fnv1a32(key: BINARY): codegen'd FNV-1a 32-bit as signed int —
   * the reference kafka output's default partitioner hash
-  * (kafka.go:216-217 via sarama). String keys coerce via Spark's implicit
-  * string→binary cast (UTF-8 bytes, same bytes sarama hashes).
+  * (kafka.go:216-217 via sarama). `KafkaPartition` casts string keys to
+  * binary (UTF-8 bytes, the same bytes sarama hashes).
   */
 case class Fnv1a32(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = IntegerType
@@ -631,7 +631,7 @@ case class Fnv1a32(child: Expression) extends UnaryExpression with ExpectsInputT
     copy(child = newChild)
 }
 
-/** graft_murmur2(key: BINARY): codegen'd Kafka murmur2 as signed int —
+/** Murmur2Kafka(key: BINARY): codegen'd Kafka murmur2 as signed int —
   * the reference's Java-client-compatible partitioner hash
   * (kafka.go:456-547).
   */

@@ -29,10 +29,8 @@ final case class Turn(
   *
   * Checkpoint compatibility: the buffer is persisted through the
   * versioned state envelope (streaming/StateEnvelope.scala), a binary
-  * value with a 1-byte version tag and read-path migration shims, so a
-  * change to this layout is a decoder case, not a state rebuild —
-  * SessionJoinSpec resumes a v1 (pre-slim layout, conv_id in every row)
-  * checkpoint under the v2 layout exactly-once.
+  * value with a 1-byte version tag, so a change to this layout is a
+  * codec change, not a Catalyst state-schema change.
   */
 final case class BufTurn(
     turn_idx: Int,

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.NativeFunctions
 
 /** Deduplication family. The reference's `dedupe` processor is an exact
   * first-writer-wins drop against a seen-key cache (reference:
@@ -97,11 +98,10 @@ object Dedupe {
       numHashes: Int = 20,
       bands: Int = 5): DataFrame = {
     val rowsPerBand = numHashes / bands
-    graft.functions.GraftExtensions.ensure(df.sparkSession)
     // native one-pass signature: the HOF form costs ~numHashes×|shingles|
     // interpreted lambda calls per document (BENCH.md §2)
     df.select(idCol.as("doc_id"),
-        call_function("graft_minhash_sig", text, lit(k), lit(numHashes)).as("__sig"))
+        NativeFunctions.minhashSig(text, k, numHashes).as("__sig"))
       .filter(col("__sig").isNotNull)
       .select(col("doc_id"),
         explode(

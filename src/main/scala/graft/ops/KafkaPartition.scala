@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions
 
 /** The kafka output's partitioner family (reference:
   * internal/old/output/writer/kafka.go:214-231 `strToPartitioner`):
@@ -15,9 +16,9 @@ import org.apache.spark.sql.functions._
   * not a side effect — downstream sinks route on it (e.g.
   * `df.repartition(n, col("part_id"))` to co-locate, or
   * `partitionBy("part_id")` on write). The two hash strategies are native
-  * codegen'd expressions over the key bytes (functions/NativeExpressions:
-  * Fnv1a32, Murmur2Kafka), so assignment runs at scan speed inside
-  * WholeStageCodegen with no shuffle of its own.
+  * codegen'd expressions over the key bytes (`NativeFunctions.fnv1a32` /
+  * `murmur2`), so assignment runs at scan speed inside WholeStageCodegen
+  * with no shuffle of its own.
   *
   * Partition math (both pinned by reference golden vectors in
   * KafkaPartitionSpec; kafka_test.go:8-23):
@@ -28,27 +29,18 @@ import org.apache.spark.sql.functions._
   */
 object KafkaPartition {
 
-  private def ensured(df: DataFrame): Unit =
-    graft.functions.GraftExtensions.ensure(df.sparkSession)
-
   /** Signed FNV-1a 32 of the key bytes (string keys hash their UTF-8). */
-  def fnv1a32(df: DataFrame, key: Column): Column = {
-    ensured(df)
-    call_function("graft_fnv1a32", key.cast("binary"))
-  }
+  def fnv1a32(key: Column): Column = NativeFunctions.fnv1a32(key.cast("binary"))
 
   /** Kafka-compatible signed murmur2 of the key bytes. */
-  def murmur2(df: DataFrame, key: Column): Column = {
-    ensured(df)
-    call_function("graft_murmur2", key.cast("binary"))
-  }
+  def murmur2(key: Column): Column = NativeFunctions.murmur2(key.cast("binary"))
 
   /** sarama NewHashPartitioner: p = int32(fnv1a(key)) % n; if p < 0, -p.
     * (|h % n| < n, so the negation never overflows — including
     * h == Int.MinValue.)
     */
-  def fnv1aPartition(df: DataFrame, key: Column, n: Int): Column = {
-    val r = fnv1a32(df, key) % lit(n)
+  def fnv1aPartition(key: Column, n: Int): Column = {
+    val r = fnv1a32(key) % lit(n)
     when(r < 0, -r).otherwise(r)
   }
 
@@ -56,8 +48,8 @@ object KafkaPartition {
     * bit-compatible with the Java Kafka client's default partitioner, the
     * point of the reference's custom hash (kafka.go:218-223).
     */
-  def murmur2Partition(df: DataFrame, key: Column, n: Int): Column =
-    murmur2(df, key).bitwiseAND(lit(0x7fffffff)) % lit(n)
+  def murmur2Partition(key: Column, n: Int): Column =
+    murmur2(key).bitwiseAND(lit(0x7fffffff)) % lit(n)
 
   /** round_robin, deterministic form: ordinal-in-`orderBy`-order % n.
     * sarama's round robin is a per-producer arrival counter; in a
@@ -108,8 +100,8 @@ object KafkaPartition {
   /** Strategy dispatcher mirroring strToPartitioner's names. */
   def assign(df: DataFrame, strategy: String, key: Column, n: Int,
              as: String = "part_id"): DataFrame = strategy match {
-    case "fnv1a_hash"   => df.withColumn(as, fnv1aPartition(df, key, n))
-    case "murmur2_hash" => df.withColumn(as, murmur2Partition(df, key, n))
+    case "fnv1a_hash"   => df.withColumn(as, fnv1aPartition(key, n))
+    case "murmur2_hash" => df.withColumn(as, murmur2Partition(key, n))
     case "random"       => df.withColumn(as, randomPartition(key, n))
     case "round_robin"  => roundRobinTask(df, n, as)
     case "manual" =>

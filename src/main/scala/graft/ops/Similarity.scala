@@ -2,12 +2,17 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (ARRAY<FLOAT>). Brute-force cosine is the exactness baseline; the scale
   * path buckets vectors with random-hyperplane LSH (or IVF via coarse
   * k-means-free hashing) so each query probes a handful of buckets instead
-  * of the full corpus.
+  * of the full corpus. The hot paths score and bucket through the native
+  * codegen'd expressions of `NativeFunctions` (`cosine`, `cosineI8`,
+  * `lshBucket`: same fold order, bit-identical results, ~15× faster than
+  * the interpreted HOF, BENCH.md §2); the HOF `cosine` and `lshBucket`
+  * here are their spec-readable reference forms.
   */
 object Similarity {
 
@@ -52,15 +57,6 @@ object Similarity {
       .reduce(_ + _)
   }
 
-  /** The native codegen'd cosine (graft.functions.CosineSim) — same fold
-    * order, bit-identical result, ~15× faster than the interpreted HOF
-    * (BENCH.md §2). Used on the hot pair-scoring paths.
-    */
-  private def cosineNative(df: DataFrame, a: Column, b: Column): Column = {
-    graft.functions.GraftExtensions.ensure(df.sparkSession)
-    call_function("graft_cosine", a, b)
-  }
-
   /** The native codegen'd form of `lshBucket` (graft.functions.LshBucket):
     * hyperplane weights precomputed once, one fused dot-product pass per
     * row — bit-identical buckets (SimilaritySpec parity), at scan speed
@@ -68,10 +64,8 @@ object Similarity {
     * every hot path uses; the HOF `lshBucket` remains as the
     * spec-readable reference implementation.
     */
-  def lshBucketNative(df: DataFrame, emb: Column, bits: Int, seed: Int = 42): Column = {
-    graft.functions.GraftExtensions.ensure(df.sparkSession)
-    call_function("graft_lsh_bucket", emb, lit(bits), lit(seed))
-  }
+  def lshBucketNative(emb: Column, bits: Int, seed: Int = 42): Column =
+    NativeFunctions.lshBucket(emb, bits, seed)
 
   /** The integer weight `xxhash64-chain % 1000` behind hyperplane (j, b) —
     * exposed so the DuckDB oracle can embed the SAME weights as literals
@@ -119,9 +113,9 @@ object Similarity {
     */
   def annScores(df: DataFrame, emb: Column, query: Seq[Float], bits: Int): DataFrame = {
     val q = array(query.map(v => lit(v)): _*)
-    df.withColumn("bucket", lshBucketNative(df, emb, bits))
+    df.withColumn("bucket", lshBucketNative(emb, bits))
       .filter(col("bucket") === lshBucketLocal(query, bits))
-      .withColumn("sim", cosineNative(df, emb, q))
+      .withColumn("sim", NativeFunctions.cosine(emb, q))
   }
 
   /** All rows whose score ties or beats the k-th largest — the
@@ -154,7 +148,7 @@ object Similarity {
   def writeBucketedIndex(df: DataFrame, idCol: Column, emb: Column,
       bits: Int, path: String): Unit =
     df.select(idCol.as("id"), emb.as("emb"))
-      .withColumn("bucket", lshBucketNative(df, col("emb"), bits))
+      .withColumn("bucket", lshBucketNative(col("emb"), bits))
       .write.partitionBy("bucket").parquet(path)
 
   /** ANN top-k against a bucket-partitioned index: the query's bucket is
@@ -167,7 +161,7 @@ object Similarity {
     val probed = spark.read.parquet(indexPath)
       .filter(col("bucket") === lshBucketLocal(query, bits))
     probed
-      .withColumn("sim", cosineNative(probed, col("emb"), q))
+      .withColumn("sim", NativeFunctions.cosine(col("emb"), q))
       .orderBy(col("sim").desc)
       .limit(k)
       .select("id", "sim")
@@ -218,8 +212,6 @@ object Similarity {
       query: Seq[Float],
       nCells: Int = 16,
       nProbe: Int = 4): DataFrame = {
-    val spark = df.sparkSession
-    graft.functions.GraftExtensions.ensure(spark)
     val named = df.select(idCol.as("id"), emb.as("emb"))
     // deterministic coarse centroids: the nCells vectors with the smallest
     // seeded id-hash — a uniform pseudo-random sample picked by ONE
@@ -241,8 +233,8 @@ object Similarity {
     */
   private def cellOf(v: Column, cembs: Seq[(Int, Seq[Float])]): Column = {
     val scored = cembs.map { case (cell, ce) =>
-      struct(call_function("graft_cosine", v,
-        array(ce.map(x => lit(x)): _*)).as("sim"), lit(cell).as("cell"))
+      struct(NativeFunctions.cosine(v, array(ce.map(x => lit(x)): _*)).as("sim"),
+        lit(cell).as("cell"))
     }
     array_max(array(scored: _*)).getField("cell")
   }
@@ -265,7 +257,7 @@ object Similarity {
       .map { case (cell, ce) => (cell, cosineLocal(ce, query)) }
       .sortBy(-_._2).take(nProbe).map(_._1)
     assigned.filter(col("cell").isin(probeCells.map(Integer.valueOf): _*))
-      .withColumn("sim", call_function("graft_cosine", col("emb"), qArr))
+      .withColumn("sim", NativeFunctions.cosine(col("emb"), qArr))
   }
 
   /** Distributed spherical k-means (Lloyd's) over the embedding column —
@@ -293,8 +285,6 @@ object Similarity {
   def kmeansCentroids(df: DataFrame, idCol: Column, emb: Column, k: Int,
       iters: Int): Seq[(Int, Seq[Float])] = {
     require(k > 0 && iters >= 0)
-    val spark = df.sparkSession
-    graft.functions.GraftExtensions.ensure(spark)
     val named = df.select(idCol.as("id"), emb.as("emb"))
     def unit(v: Seq[Double]): Seq[Float] = {
       val n = math.sqrt(v.map(x => x * x).sum)
@@ -344,7 +334,6 @@ object Similarity {
       query: Seq[Float], k: Int, nCells: Int = 16, nProbe: Int = 4,
       iters: Int = 3,
       centroids: Option[Seq[(Int, Seq[Float])]] = None): DataFrame = {
-    graft.functions.GraftExtensions.ensure(df.sparkSession) // model-reuse path skips kmeansCentroids' ensure
     val named = df.select(idCol.as("id"), emb.as("emb"))
     val cembs = centroids.getOrElse(kmeansCentroids(df, idCol, emb, nCells, iters))
     ivfProbe(named, cembs, query, nProbe)
@@ -407,9 +396,8 @@ object Similarity {
     * interpreted HOF `cosine` (pinned in SimilaritySpec) and the oracle.
     */
   def int8Scores(quantized: DataFrame, query: Seq[Float]): DataFrame = {
-    graft.functions.GraftExtensions.ensure(quantized.sparkSession)
     val qq = quantizeQueryInt8(query)
-    quantized.withColumn("sim", call_function("graft_cosine_i8",
+    quantized.withColumn("sim", NativeFunctions.cosineI8(
       col("q"), array(qq.map(v => lit(v.toByte)): _*)))
   }
 
@@ -431,7 +419,7 @@ object Similarity {
       threshold: Double,
       bits: Int = 6): DataFrame = {
     val named = df.select(idCol.as("id"), emb.as("emb"))
-    val thin = named.select(col("id"), lshBucketNative(df, col("emb"), bits).as("bucket"))
+    val thin = named.select(col("id"), lshBucketNative(col("emb"), bits).as("bucket"))
     val candidates = thin.select(col("bucket"), col("id").as("id_a"))
       .join(thin.select(col("bucket"), col("id").as("id_b")), Seq("bucket"))
       .filter(col("id_a") < col("id_b"))
@@ -440,7 +428,7 @@ object Similarity {
     candidates
       .join(named.select(col("id").as("id_a"), col("emb").as("emb_a")), Seq("id_a"))
       .join(named.select(col("id").as("id_b"), col("emb").as("emb_b")), Seq("id_b"))
-      .withColumn("sim", cosineNative(df, col("emb_a"), col("emb_b")))
+      .withColumn("sim", NativeFunctions.cosine(col("emb_a"), col("emb_b")))
       .filter(col("sim") >= threshold)
       .select("id_a", "id_b", "sim")
   }

@@ -1,9 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.classic.GraftColumns.{column, expression}
 import org.apache.spark.sql.functions._
-import graft.functions.TextGate
+import graft.functions.NativeFunctions.textGate
 
 /** Text-analysis operators for training-data pipelines: language ID,
   * quality scoring, token counting, document fingerprinting, redaction.
@@ -49,26 +48,13 @@ object TextOps {
     "es" -> Seq("el", "la", "los", "y", "es", "una", "para", "con", "que", "por"),
     "it" -> Seq("il", "la", "di", "e", "che", "per", "con", "una", "sono", "del"))
 
-  /** The counts both gates need, from one tokenizing pass over `text`:
-    * the words of `words(text)` and their distinct lexicon hits (overall
-    * and per language), plus the length, letters and punctuation of
-    * `text` (fields: `TextGate.Counts`, then `hits_<lang>`). Calls on the
-    * same `text` are equal expressions, and subexpression elimination
-    * evaluates such an expression once per row when it is read by two
-    * different fields outside any conditional branch — `qualityScore`
-    * reads `chars` and `words` there — so a projection using both gates
-    * tokenizes each row once (PlanShapeSpec pins this).
-    */
-  private def gate(text: Column): Column =
-    column(TextGate(expression(text), expression(lower(text)), lexicon))
-
   /** Language ID by stopword-hit voting over `lexicon` — the classic
     * n-gram/stopword heuristic. Returns the language code with the most
     * distinct stopwords present, 'und' if none. Deterministic tie-break
     * by list order.
     */
   def langId(text: Column): Column = {
-    val g = gate(text)
+    val g = textGate(text, lexicon)
     val hits = lexicon.map { case (lang, _) => lang -> g.getField(s"hits_$lang") }
     val best = greatest(hits.map(_._2): _*)
     // ties → earlier language in lexicon order wins; no hit (or no text) → und
@@ -81,7 +67,7 @@ object TextOps {
     * standard cheap quality gates of web-scale corpus cleaning.
     */
   def qualityScore(text: Column): Column = {
-    val g = gate(text)
+    val g = textGate(text, lexicon)
     val len = g.getField("chars").cast("double")
     val nWords = g.getField("words").cast("double")
     val alpha = g.getField("alpha").cast("double")

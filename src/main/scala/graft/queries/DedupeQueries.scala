@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions.{ngramJaccard, simhash64}
 import graft.ops.{Dedupe, TextOps}
 import graft.sources.Tables
 
@@ -32,13 +33,12 @@ object DedupeQueries {
       // build + intersect/union pays an interpreted lambda per character
       // (11 s → 0.3 s for 5k docs at sf0.1); parity with the HOF form is
       // pinned in NativeFunctionsSpec
-      graft.functions.GraftExtensions.ensure(s)
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), lower(col("text")).as("lt"))
       val b = docs.select((col("doc_id") - 1).as("doc_id"), col("lt").as("lt_b"))
       docs.join(b, Seq("doc_id"))
         .select(col("doc_id"),
-          round(call_function("graft_ngram_jaccard", col("lt"), col("lt_b"), lit(3)), 6)
+          round(ngramJaccard(col("lt"), col("lt_b"), 3), 6)
             .as("jac"))
     }),
 
@@ -69,12 +69,11 @@ object DedupeQueries {
     // the corpus, so convergence genuinely iterates. Oracle: DuckDB
     // recursive-CTE reachability closure + min.
     "q_dup_clusters" -> ((s, dir) => {
-      graft.functions.GraftExtensions.ensure(s)
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), lower(col("text")).as("lt"))
       val b = docs.select((col("doc_id") - 1).as("doc_id"), col("lt").as("lt_b"))
       val edges = docs.join(b, Seq("doc_id"))
-        .filter(round(call_function("graft_ngram_jaccard", col("lt"), col("lt_b"), lit(3)), 6)
+        .filter(round(ngramJaccard(col("lt"), col("lt_b"), 3), 6)
           >= 0.55)
         .select(col("doc_id").as("doc_a"), (col("doc_id") + 1).as("doc_b"))
       Dedupe.clustersOverEdges(
@@ -86,9 +85,8 @@ object DedupeQueries {
     // the interpreted 64-bit×token fold is ~3800× slower (BENCH.md §2);
     // NativeFunctionsSpec pins their equality.
     "q_simhash" -> ((s, dir) => {
-      graft.functions.GraftExtensions.ensure(s)
       val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), expr("graft_simhash64(text)").as("sig"))
+        .select(col("doc_id"), simhash64(col("text")).as("sig"))
       val nxt = docs.select((col("doc_id") - 1).as("doc_id"), col("sig").as("sig_b"))
       docs.join(nxt, Seq("doc_id"))
         .select(col("doc_id"), col("sig"),

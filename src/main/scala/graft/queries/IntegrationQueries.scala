@@ -180,8 +180,8 @@ object IntegrationQueries {
       import graft.ops.KafkaPartition
       val keys = Tables.transcripts(s, dir).select(col("conv_id")).distinct()
       keys.select(col("conv_id"),
-        KafkaPartition.fnv1a32(keys, col("conv_id")).as("h32"),
-        KafkaPartition.fnv1aPartition(keys, col("conv_id"), 12).cast("int").as("part_id"))
+        KafkaPartition.fnv1a32(col("conv_id")).as("h32"),
+        KafkaPartition.fnv1aPartition(col("conv_id"), 12).cast("int").as("part_id"))
     }),
 
     // kafka output murmur2_hash partitioner (kafka.go:218-223,456-547):
@@ -194,8 +194,8 @@ object IntegrationQueries {
       import graft.ops.KafkaPartition
       val keys = Tables.transcripts(s, dir).select(col("conv_id")).distinct()
       keys.select(col("conv_id"),
-        KafkaPartition.murmur2(keys, col("conv_id")).as("h32"),
-        KafkaPartition.murmur2Partition(keys, col("conv_id"), 12).cast("int").as("part_id"))
+        KafkaPartition.murmur2(col("conv_id")).as("h32"),
+        KafkaPartition.murmur2Partition(col("conv_id"), 12).cast("int").as("part_id"))
     }),
 
     // kafka round_robin (deterministic form) + manual partitioners

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions
 import graft.ops.Similarity
 import graft.sources.Tables
 
@@ -50,24 +51,22 @@ object SimilarityQueries {
     // (graft.functions.CosineSim) — same element-order double
     // accumulation, so it matches the identical DuckDB oracle bit-exactly.
     "q_cosine_score_native" -> ((s, dir) => {
-      graft.functions.GraftExtensions.ensure(s)
       val q = queryVec(s, dir)
       Tables.embeddings(s, dir)
         .filter(col("vec_id") =!= 0)
         .select(col("vec_id"),
-          round(call_function("graft_cosine", col("embedding"),
+          round(NativeFunctions.cosine(col("embedding"),
             array(q.map(v => lit(v)): _*)), 4).as("sim"))
         .filter(col("sim") >= 0.2)
     }),
 
     // brute-force top-k, kth-with-ties on the rounded score (full oracle).
     "q_cosine_topk" -> ((s, dir) => {
-      graft.functions.GraftExtensions.ensure(s)
       val q = queryVec(s, dir)
       val scored = Tables.embeddings(s, dir)
         .filter(col("vec_id") =!= 0)
         .select(col("vec_id"),
-          round(call_function("graft_cosine", col("embedding"),
+          round(NativeFunctions.cosine(col("embedding"),
             array(q.map(v => lit(v)): _*)), 4).as("sim"))
       Similarity.topKWithTies(scored, "sim", K)
     }),

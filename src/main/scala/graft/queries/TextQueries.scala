@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions.tokenCount
 import graft.ops.TextOps
 import graft.sources.Tables
 
@@ -36,10 +37,9 @@ object TextQueries {
     // (graft.functions.TokenCount) — one fused pass, no array
     // materialization; validated against the identical DuckDB oracle.
     "q_token_count_native" -> ((s, dir) => {
-      graft.functions.GraftExtensions.ensure(s)
       Tables.documents(s, dir).select(
         col("doc_id"),
-        expr("graft_token_count(text)").as("tok_ws"))
+        tokenCount(col("text")).as("tok_ws"))
     }),
 
     // PII scrubbing: deterministic PII is planted into every document

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.NativeFunctions.tokenCount
 import graft.ops.TrainPrep
 import graft.sources.Tables
 
@@ -58,9 +59,8 @@ object TrainQueries {
     // global sort at any corpus size. Token counts via the native
     // codegen'd expression (same semantics as q_token_count_native).
     "q_pack_sequences" -> ((s, dir) => {
-      graft.functions.GraftExtensions.ensure(s)
       val docs = Tables.documents(s, dir)
-        .withColumn("tok0", expr("graft_token_count(text)").cast("long"))
+        .withColumn("tok0", tokenCount(col("text")).cast("long"))
       TrainPrep.packSequences(docs, col("doc_id"), col("tok0"),
           budget = Budget, nShards = Shards, strata = col("lang"))
         .select(col("doc_id"), col("lang"), col("shard"), col("tok"),

@@ -117,26 +117,21 @@ object SessionJoin {
     * by the skew-heavy bench's pair-count sanity gate, round 4). The eager
     * flush is guarded by a min-buffered-ts check so conversations with
     * nothing closable pay nothing.
-    *
-    * `writeVersion` is the `StateEnvelope` layout written back to state;
-    * every known layout is read. Only the migration spec writes an older
-    * one, to build a legacy checkpoint.
     */
   def pairStreaming(
       turns: Dataset[Turn],
       gapSeconds: Long = DefaultGapSeconds,
-      lateness: String = "10 minutes",
-      writeVersion: Int = StateEnvelope.CurrentVersion): Dataset[PairedTurn] = {
+      lateness: String = "10 minutes"): Dataset[PairedTurn] = {
     val spark = turns.sparkSession
     import spark.implicits._
     turns
       .withWatermark("ts", lateness)
       .groupByKey(_.conv_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        processConv(gapSeconds, writeVersion))
+        processConv(gapSeconds))
   }
 
-  private def processConv(gapSeconds: Long, writeVersion: Int)(
+  private def processConv(gapSeconds: Long)(
       convId: String,
       incoming: Iterator[Turn],
       state: GroupState[Array[Byte]]): Iterator[PairedTurn] = {
@@ -149,14 +144,13 @@ object SessionJoin {
         // session numbering, like the reference's expired cache entries.
         state.remove()
         Iterator.empty
-      } else flushAndRearm(convId, old, Nil, gapSeconds, wm, state, writeVersion)
+      } else flushAndRearm(convId, old, Nil, gapSeconds, wm, state)
     } else {
       // Drop late turns explicitly (flatMapGroupsWithState does not):
       // reference drop rule buffer_system_window.go:333-336.
       val fresh = incoming.filter(t => wm == 0 || t.ts.getTime >= wm).toList
       if (old.buffered.isEmpty && fresh.isEmpty) Iterator.empty
-      else flushAndRearm(convId, old, fresh.map(BufTurn.of), gapSeconds, wm,
-        state, writeVersion)
+      else flushAndRearm(convId, old, fresh.map(BufTurn.of), gapSeconds, wm, state)
     }
   }
 
@@ -179,16 +173,14 @@ object SessionJoin {
       freshTurns: List[BufTurn],
       gapSeconds: Long,
       wm: Long,
-      state: GroupState[Array[Byte]],
-      writeVersion: Int): Iterator[PairedTurn] = {
+      state: GroupState[Array[Byte]]): Iterator[PairedTurn] = {
     val buf = old.buffered ++ freshTurns
     val (closed, open, firstOpenEnd) = splitClosed(buf, gapSeconds, wm)
     val pairs =
       if (closed.isEmpty) Nil
       else pairTurns(closed.flatten.map(BufTurn.toTurn(convId, _)), gapSeconds)
         .map(p => p.copy(session_id = p.session_id + old.flushedSessions))
-    state.update(StateEnvelope.encode(convId,
-      ConvState(open, old.flushedSessions + closed.size), writeVersion))
+    state.update(StateEnvelope.encode(ConvState(open, old.flushedSessions + closed.size)))
     if (open.isEmpty)
       // everything closed: keep a tombstone one more gap (numbering
       // continuity for stragglers), then the timeout branch evicts it

@@ -7,26 +7,19 @@ import graft.model.BufTurn
 
 /** Versioned state envelope: the codec for the session join's persisted
   * per-conversation state (`SessionJoin.pairStreaming`). The state value
-  * is a BINARY blob carrying a 1-byte version tag, decoded through
-  * per-version shims on read and written at the version the operator is
-  * given (the current one unless a test builds a legacy checkpoint).
-  * Spark validates a CATALYST state schema on restore, so any case-class
-  * change (e.g. the conv_id slim) would force a full state rebuild; a
-  * binary column's schema never changes, and the tag moves the
-  * compatibility decision into this codec, where an old layout is a
-  * read-path migration instead of a rebuild. SessionJoinSpec stops a
-  * query writing VERSION 1 and resumes it writing later versions,
-  * exactly-once output intact.
+  * is a BINARY blob carrying a 1-byte version tag. Spark validates a
+  * CATALYST state schema on restore, so any case-class change (e.g. the
+  * conv_id slim) would force a full state rebuild; a binary column's
+  * schema never changes, and the tag moves the compatibility decision
+  * into this codec: a value written at another layout is rejected by
+  * its tag on read instead of being misread.
   *
-  * Versions:
-  *   1 — legacy layout (reference for migration): per buffered turn
-  *       {conv_id, turn_idx, role, text, tool, tsMs}; the conv_id is
-  *       redundant (it is the state key) and is DROPPED on read.
-  *   2 — slim layout: {turn_idx, role, text, tool, tsMs}. Millisecond
-  *       ts, so it truncated sub-millisecond input timestamps (emitted
-  *       pairs then disagreed with the batch form on microsecond data).
-  *   3 — current layout: v2 with ts as epoch MICROseconds (Spark's
-  *       timestamp resolution). v1/v2 state reads with its ms precision.
+  * Layout (version 3): {flushedSessions, n, then per buffered turn
+  * {turn_idx, role, text, tool, ts as epoch MICROseconds}} — conv_id is
+  * the state key, so it never rides inside the value, and microsecond ts
+  * is Spark's timestamp resolution. Versions 1 (conv_id per turn) and 2
+  * (millisecond ts, which truncated sub-millisecond input timestamps)
+  * are retired, and their tags are rejected like any unknown one.
   */
 object StateEnvelope {
 
@@ -46,39 +39,32 @@ object StateEnvelope {
 
   private def utf8(s: String): Array[Byte] = if (s == null) null else s.getBytes(UTF_8)
 
-  /** Encode at an explicit version (tests write older versions to
-    * exercise the migration shims; production writes CurrentVersion).
-    * Big-endian; a string is its UTF-8 byte length (-1 for null), then
-    * the bytes.
+  /** Encode at `CurrentVersion`. Big-endian; a string is its UTF-8 byte
+    * length (-1 for null), then the bytes.
     */
-  def encode(convId: String, st: SessionJoin.ConvState, version: Int = CurrentVersion): Array[Byte] = {
-    if (version < 1 || version > CurrentVersion)
-      throw new IllegalArgumentException(s"unknown state version $version")
-    val key = if (version == 1) utf8(convId) else null // legacy layout carried the key
+  def encode(st: SessionJoin.ConvState): Array[Byte] = {
     val strs = st.buffered.iterator
       .flatMap(t => Iterator(utf8(t.role), utf8(t.text), utf8(t.tool))).toArray
     def sized(b: Array[Byte]) = 4 + (if (b == null) 0 else b.length)
-    val perTurn = 4 + 8 + (if (version == 1) sized(key) else 0)
-    val bb = ByteBuffer.allocate(1 + 8 + 4 + st.buffered.size * perTurn + strs.map(sized).sum)
+    val bb = ByteBuffer.allocate(1 + 8 + 4 + st.buffered.size * (4 + 8) + strs.map(sized).sum)
     def putStr(b: Array[Byte]): Unit =
       if (b == null) bb.putInt(-1) else { bb.putInt(b.length); bb.put(b) }
-    bb.put(version.toByte).putLong(st.flushedSessions).putInt(st.buffered.size)
+    bb.put(CurrentVersion.toByte).putLong(st.flushedSessions).putInt(st.buffered.size)
     var i = 0
     st.buffered.foreach { t =>
-      if (version == 1) putStr(key)
       bb.putInt(t.turn_idx)
       putStr(strs(i)); putStr(strs(i + 1)); putStr(strs(i + 2))
       i += 3
-      bb.putLong(if (version < 3) t.ts.getTime else toMicros(t.ts))
+      bb.putLong(toMicros(t.ts))
     }
     bb.array()
   }
 
-  /** Decode any known version — the migration shims live here. */
+  /** Decode a `CurrentVersion` value; any other tag is rejected. */
   def decode(bytes: Array[Byte]): SessionJoin.ConvState = {
     val bb = ByteBuffer.wrap(bytes)
     val ver = bb.get()
-    if (ver < 1 || ver > CurrentVersion)
+    if (ver != CurrentVersion)
       throw new IllegalStateException(s"unknown state version $ver in checkpoint")
     def getStr(): String = {
       val n = bb.getInt()
@@ -93,13 +79,11 @@ object StateEnvelope {
     val n = bb.getInt()
     val buf = List.newBuilder[BufTurn]
     (0 until n).foreach { _ =>
-      if (ver == 1) getStr(): Unit // legacy conv_id: redundant, dropped
       val idx = bb.getInt()
       val role = getStr()
       val text = getStr()
       val tool = getStr()
-      val ts = if (ver < 3) new Timestamp(bb.getLong()) else fromMicros(bb.getLong())
-      buf += BufTurn(idx, role, text, tool, ts)
+      buf += BufTurn(idx, role, text, tool, fromMicros(bb.getLong()))
     }
     SessionJoin.ConvState(buf.result(), flushed)
   }

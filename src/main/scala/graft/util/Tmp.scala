@@ -1,5 +1,6 @@
 package graft.util
 
+import java.nio.charset.StandardCharsets.US_ASCII
 import java.nio.file.{Files, Path, Paths}
 
 /** Ephemeral working dirs for staged streams, checkpoints and state.
@@ -24,16 +25,34 @@ object Tmp {
       }
   }
 
-  def dir(prefix: String): String =
-    Files.createTempDirectory(base, prefix).toString
+  /** The file in each `dir` naming the pid of the JVM that made it. The
+    * leading `.` makes Spark's file listing skip it.
+    */
+  private val OwnerFile = ".graft-owner"
+
+  def dir(prefix: String): String = {
+    val d = Files.createTempDirectory(base, prefix)
+    Files.write(d.resolve(OwnerFile), ProcessHandle.current().pid().toString.getBytes(US_ASCII))
+    d.toString
+  }
+
+  /** Whether `d`'s owner marker names a live process; false when it has
+    * no readable marker.
+    */
+  private def ownerAlive(d: java.io.File): Boolean =
+    try {
+      val pid = new String(Files.readAllBytes(d.toPath.resolve(OwnerFile)), US_ASCII).trim.toLong
+      ProcessHandle.of(pid).filter(_.isAlive).isPresent
+    } catch { case _: java.io.IOException | _: NumberFormatException => false }
 
   /** Delete stale graft temp dirs (matching `prefixes`, last modified
-    * more than `olderThanMs` ago) from the temp base. An OOM-killed
-    * benchmark run skips its own cleanup, and its staged corpora keep
-    * occupying tmpfs RAM — round 4's killed driver run left ~11 GB in
-    * /dev/shm, a standing memory-pressure tax on whatever ran next. The
-    * bench parent sweeps at startup; the age guard keeps a sweep from
-    * touching a concurrent run's live staging.
+    * more than `olderThanMs` ago, and not owned by a live process) from
+    * the temp base. An OOM-killed benchmark run skips its own cleanup,
+    * and its staged corpora keep occupying tmpfs RAM — round 4's killed
+    * driver run left ~11 GB in /dev/shm, a standing memory-pressure tax
+    * on whatever ran next. The bench parent sweeps at startup; the owner
+    * check keeps a sweep from touching a concurrent run's live staging,
+    * however old, and the age guard covers dirs with no owner marker.
     */
   def sweepStale(prefixes: Seq[String], olderThanMs: Long = 30 * 60 * 1000L,
       baseDir: Option[String] = None): Long = {
@@ -41,7 +60,8 @@ object Tmp {
     val kids = baseDir.map(new java.io.File(_)).getOrElse(base.toFile).listFiles()
     if (kids == null) 0L
     else kids.count { f =>
-      val stale = prefixes.exists(f.getName.startsWith) && f.lastModified() < cutoff
+      val stale = prefixes.exists(f.getName.startsWith) && f.lastModified() < cutoff &&
+        !ownerAlive(f)
       if (stale) delete(f.getPath)
       stale
     }.toLong

@@ -37,8 +37,8 @@ class KafkaPartitionSpec extends SparkTestBase {
   test("native expressions agree with the JVM functions through the plan") {
     val keys = Seq("conv-000001", "conv-000042", "x", "").toDF("k")
     val got = keys.select(col("k"),
-      KafkaPartition.fnv1a32(keys, col("k")).as("f"),
-      KafkaPartition.murmur2(keys, col("k")).as("m"))
+      KafkaPartition.fnv1a32(col("k")).as("f"),
+      KafkaPartition.murmur2(col("k")).as("m"))
       .as[(String, Int, Int)].collect()
     got.foreach { case (k, f, m) =>
       assert(f == Native.fnv1a32(k.getBytes("UTF-8")), s"fnv1a($k)")
@@ -52,8 +52,8 @@ class KafkaPartitionSpec extends SparkTestBase {
     val df = ks.toDF("k")
     val n = 12
     val rows = df.select(col("k"),
-      KafkaPartition.fnv1aPartition(df, col("k"), n).as("pf"),
-      KafkaPartition.murmur2Partition(df, col("k"), n).as("pm"))
+      KafkaPartition.fnv1aPartition(col("k"), n).as("pf"),
+      KafkaPartition.murmur2Partition(col("k"), n).as("pm"))
       .as[(String, Int, Int)].collect()
     rows.foreach { case (k, pf, pm) =>
       val hf = Native.fnv1a32(k.getBytes("UTF-8"))

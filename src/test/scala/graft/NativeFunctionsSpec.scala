@@ -2,17 +2,16 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftExtensions
+import graft.functions.NativeFunctions
 import graft.ops.{Dedupe, Similarity, TextOps}
 
-/** Native codegen expressions must agree exactly with their higher-order-
-  * function twins, resolve by name through the extensions registry, and
-  * stay inside WholeStageCodegen.
+/** Native codegen expressions, built through the typed
+  * `NativeFunctions`, must agree exactly with their higher-order-function
+  * twins and stay inside WholeStageCodegen. (Case names keep the
+  * expressions' earlier SQL names.)
   */
 class NativeFunctionsSpec extends SparkTestBase {
   import spark.implicits._
-
-  GraftExtensions.ensure(spark)
 
   private val texts = Seq(
     "the quick brown fox",
@@ -90,7 +89,7 @@ class NativeFunctionsSpec extends SparkTestBase {
 
   test("graft_token_count equals the HOF token count on every input") {
     bothPaths().foreach { case (path, df) =>
-      assertPairsEqual(df, expr("graft_token_count(text)"), TextOps.tokenCountWs(col("text")),
+      assertPairsEqual(df, NativeFunctions.tokenCount(col("text")), TextOps.tokenCountWs(col("text")),
         s"token count ($path)")
     }
   }
@@ -105,7 +104,7 @@ class NativeFunctionsSpec extends SparkTestBase {
 
   test("graft_simhash64 equals the HOF simhash on ASCII inputs") {
     val df = texts.filter(t => t != null && t.nonEmpty && t.forall(_ < 128)).toDF("text")
-    val got = df.select(expr("graft_simhash64(text)"),
+    val got = df.select(NativeFunctions.simhash64(col("text")),
       Dedupe.simhash(col("text"))).as[(Long, Long)].collect()
     got.foreach { case (native, hof) => assert(native == hof) }
   }
@@ -115,7 +114,7 @@ class NativeFunctionsSpec extends SparkTestBase {
     // form's [^a-zA-Z0-9 ] class); no default-locale lowercasing anywhere
     val tricky = Seq("Überraschung İstanbul TITLE case",
       "naïve café déjà-vu MIXED", "日本語 tokens AND ascii 42")
-    val got = tricky.toDF("text").select(expr("graft_simhash64(text)"),
+    val got = tricky.toDF("text").select(NativeFunctions.simhash64(col("text")),
       Dedupe.simhash(col("text"))).as[(Long, Long)].collect()
     got.foreach { case (native, hof) => assert(native == hof) }
   }
@@ -128,7 +127,7 @@ class NativeFunctionsSpec extends SparkTestBase {
       ("ααβγ unicode über", "ααβδ unicode über"))
     val df = pairs.toDF("a", "b")
     val got = df.select(
-      expr("graft_ngram_jaccard(a, b, 3)"),
+      NativeFunctions.ngramJaccard(col("a"), col("b"), 3),
       Dedupe.jaccard(Dedupe.charNgrams(col("a"), 3), Dedupe.charNgrams(col("b"), 3)))
       .as[(Double, Double)].collect()
     got.foreach { case (native, hof) => assert(native == hof) }
@@ -139,7 +138,7 @@ class NativeFunctionsSpec extends SparkTestBase {
     val rows = (1 to 50).map(_ => (Seq.fill(16)(rnd.nextFloat() - 0.5f),
       Seq.fill(16)(rnd.nextFloat() - 0.5f)))
     val df = rows.toDF("a", "b")
-    val got = df.select(expr("graft_cosine(a, b)"),
+    val got = df.select(NativeFunctions.cosine(col("a"), col("b")),
       Similarity.cosine(col("a"), col("b"))).as[(Double, Double)].collect()
     got.foreach { case (native, hof) => assert(native == hof) } // bit equality
   }
@@ -150,19 +149,19 @@ class NativeFunctionsSpec extends SparkTestBase {
       Seq.fill(16)((rnd.nextInt(255) - 127).toByte),
       Seq.fill(16)((rnd.nextInt(255) - 127).toByte)))
     val df = rows.toDF("a", "b")
-    val got = df.select(expr("graft_cosine_i8(a, b)"),
+    val got = df.select(NativeFunctions.cosineI8(col("a"), col("b")),
       Similarity.cosine(col("a"), col("b"))).as[(Double, Double)].collect()
     got.foreach { case (native, hof) => assert(native == hof) } // bit equality
     // zero-vector guard matches the HOF's when(d === 0, 0.0)
     val z = Seq((Seq.fill(4)(0.toByte), Seq.fill(4)(5.toByte))).toDF("a", "b")
-    assert(z.select(expr("graft_cosine_i8(a, b)")).as[Double].head() == 0.0)
+    assert(z.select(NativeFunctions.cosineI8(col("a"), col("b"))).as[Double].head() == 0.0)
   }
 
   test("expressions participate in WholeStageCodegen") {
     // a file-backed frame so ConvertToLocalRelation can't pre-evaluate
     val dir = java.nio.file.Files.createTempDirectory("native").toString + "/d"
     texts.toDF("text").write.parquet(dir)
-    val df = spark.read.parquet(dir).filter(expr("graft_token_count(text) > 1"))
+    val df = spark.read.parquet(dir).filter(NativeFunctions.tokenCount(col("text")) > 1)
     val plan = df.queryExecution.executedPlan.toString
     // `*(1)` = WholeStageCodegen stage 1 wrapping the tokencount filter
     assert(plan.contains("*(1) Filter (tokencount"), plan)

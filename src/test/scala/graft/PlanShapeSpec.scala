@@ -139,7 +139,6 @@ class PlanShapeSpec extends SparkTestBase {
     // its embeddings never repartition
     val named = spark.read.parquet(s"$dir/embeddings.parquet")
       .selectExpr("vec_id AS id", "embedding AS emb")
-    graft.functions.GraftExtensions.ensure(spark)
     val cembs = (1 to 4).map(c => (c, Seq.fill(8)((c * 0.1).toFloat))).toSeq
     val p = graft.ops.Similarity.kmeansIterationSums(named, cembs, 8)
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)

@@ -11,9 +11,8 @@ import graft.streaming.SessionJoin
 /** The flagship operator: three forms (pure Scala spec, window-function
   * batch, flatMapGroupsWithState streaming over enveloped state) must
   * agree on the same input — and the streaming one must survive a
-  * checkpoint stop/resume, including one across a state-layout change,
-  * without duplicating or losing pairs (exactly-once, BASELINE.json
-  * north_rule).
+  * checkpoint stop/resume without duplicating or losing pairs
+  * (exactly-once, BASELINE.json north_rule).
   */
 class SessionJoinSpec extends SparkTestBase {
   import spark.implicits._
@@ -89,37 +88,31 @@ class SessionJoinSpec extends SparkTestBase {
     assert(sortPairs(got) == expected)
   }
 
-  test("state envelope codec round-trips both versions; v1 migrates to slim") {
-    import graft.streaming.{SessionJoin, StateEnvelope}
-    import graft.model.BufTurn
-    val st = SessionJoin.ConvState(List(
-      BufTurn(0, "user", "hello", null, ts(1000)),
-      BufTurn(1, "tool", "search()", "search", ts(1010))), 3L)
-    assert(StateEnvelope.decode(StateEnvelope.encode("c9", st, 2)) == st)
-    // v1 (legacy layout, conv_id inside every row) decodes to the SAME
-    // slim state — the read-path migration
-    val v1 = StateEnvelope.encode("c9", st, 1)
-    assert(v1.length > StateEnvelope.encode("c9", st, 2).length)
-    assert(StateEnvelope.decode(v1) == st)
-    intercept[IllegalStateException] {
-      StateEnvelope.decode(Array[Byte](9, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0))
+  test("state envelope rejects version tags 1, 2 and 4") {
+    import graft.streaming.StateEnvelope
+    // a tag followed by an empty state (flushedSessions 0, no turns)
+    def tagged(v: Int) = Array[Byte](v.toByte, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
+    assert(StateEnvelope.decode(tagged(StateEnvelope.CurrentVersion)) ==
+      SessionJoin.ConvState(Nil, 0L))
+    Seq(1, 2, 4).foreach { v =>
+      val e = intercept[IllegalStateException](StateEnvelope.decode(tagged(v)))
+      assert(e.getMessage.contains(s"unknown state version $v"))
     }
   }
 
-  test("state envelope keeps microsecond timestamps; v2 state reads at ms precision") {
+  test("state envelope round-trips microsecond timestamps") {
     import graft.streaming.StateEnvelope
     import graft.model.BufTurn
     def at(ms: Long, nanos: Int) = { val t = new Timestamp(ms); t.setNanos(nanos); t }
     val fine = at(1704229670758L, 758444000) // .758444
     val preEpoch = at(-1L, 999001000) // 1969-12-31 23:59:59.999001
     val st = SessionJoin.ConvState(List(
-      BufTurn(0, "user", "q", null, fine), BufTurn(1, "assistant", "a", null, preEpoch)), 0L)
-    assert(StateEnvelope.decode(StateEnvelope.encode("c", st)) == st)
-    assert(StateEnvelope.decode(StateEnvelope.encode("c", st, 2)).buffered.map(_.ts) ==
-      Seq(at(1704229670758L, 758000000), at(-1L, 999000000)))
+      BufTurn(0, "user", "q", null, fine), BufTurn(1, "assistant", "a", null, preEpoch),
+      BufTurn(2, "tool", "search()", "search", at(1000L, 0))), 3L)
+    assert(StateEnvelope.decode(StateEnvelope.encode(st)) == st)
   }
 
-  test("enveloped streaming resumes across a state-schema change (v1 checkpoint -> v2 engine)") {
+  test("enveloped streaming resumes from its checkpoint, exactly once") {
     val input = (0L until 6L).flatMap(TranscriptGen.turnsFor(13L, _))
     val expected = sortPairs(SessionJoin.pairBatch(input.toDF(), gap)
       .as[PairedTurn].collect().toSeq)
@@ -128,25 +121,21 @@ class SessionJoinSpec extends SparkTestBase {
     val ckDir = Files.createTempDirectory("sje-ck").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Turn]
-    def run(writeVersion: Int, data: Seq[Turn]): Unit = {
+    def run(data: Seq[Turn]): Unit = {
       if (data.nonEmpty) mem.addData(data)
-      val paired = SessionJoin.pairStreaming(mem.toDS(), gap, "10 minutes", writeVersion)
+      val paired = SessionJoin.pairStreaming(mem.toDS(), gap, "10 minutes")
       val q = graft.streaming.Sink.exactlyOnce(paired, outDir, ckDir,
         Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
     val (h1, h2) = input.sortBy(_.ts.getTime).splitAt(input.size / 2)
-    // phase 1 persists LEGACY-layout (v1) state into the checkpoint
-    run(writeVersion = 1, h1)
-    // phase 2: the upgraded engine reads the v1 checkpoint through the
-    // migration shim and writes v2 — the schema change a Catalyst-encoded
-    // state value would reject at restore
-    run(writeVersion = 2, h2)
-    // then on to the current layout, reading the v2 state it left
-    val current = graft.streaming.StateEnvelope.CurrentVersion
-    run(writeVersion = current, Seq(Turn("zzz-flush", 0, "user", "flush", null,
+    // each run is a fresh query resuming the enveloped state the previous
+    // one left in the checkpoint
+    run(h1)
+    run(h2)
+    run(Seq(Turn("zzz-flush", 0, "user", "flush", null,
       new Timestamp(input.map(_.ts.getTime).max + 10 * 3600 * 1000))))
-    run(writeVersion = current, Nil) // let the armed timeout fire
+    run(Nil) // let the armed timeout fire
 
     val got = graft.streaming.Sink.readCommitted(spark, outDir)
       .drop("_batch_id", "_partition_id").as[PairedTurn].collect().toSeq
