@@ -76,7 +76,7 @@ object Bench {
     * of 8 files, one slab per trigger.
     */
   val SkewHeavy = StageBlock.Spec(convs = 50000L, files = 32, hotConvs = 1, hotMult = 50000,
-    keyedByConv = true, slices = 4)
+    slices = 4)
 
   final case class Params(sfDir: String, cpus: Int, heapMB: Int, detailPath: String) {
     val convs: Long = ConvsPerCore * cpus
@@ -214,11 +214,9 @@ object Bench {
 
     // An OOM-killed prior run skips its own cleanup; its staged corpora
     // keep occupying tmpfs RAM, and a killed sweep child leaves its awk
-    // worker dirs. Sweep stale graft dirs from both temp bases before
-    // measuring.
-    val prefixes = Seq("flagship", "spark-local", "qstream", "readuntil", "graft-", "awkpool")
-    val swept = graft.util.Tmp.sweepStale(prefixes) +
-      graft.util.Tmp.sweepStale(prefixes, baseDir = Some("/tmp"))
+    // worker dirs. Sweep stale dirs of dead runs from both temp bases
+    // before measuring.
+    val swept = graft.util.Tmp.sweepStale() + graft.util.Tmp.sweepStale(baseDir = Some("/tmp"))
     if (swept > 0) System.err.println(s"[bench] swept $swept stale temp dirs")
 
     val rec = new BenchRecord(p.detailPath, p.blocks)(assemble(_, p))

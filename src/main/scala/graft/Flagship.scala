@@ -43,34 +43,32 @@ object Flagship {
     * within a file). Returns the input dir. Staged once, replayed at
     * multiple parallelism levels by Bench for the scaling measurement.
     *
-    * `keyedByConv` stages conv-keyed — the partitioning a conv_id-keyed
+    * `slices` > 1 stages conv-keyed — the partitioning a conv_id-keyed
     * ingest (e.g. a Kafka topic keyed by conv_id, the reference's kafka
     * input shape) hands the engine. Under hot-key skew that concentrates
     * a hot conversation's per-turn map work in ONE scan task, which is
     * exactly the regime the salted repartition exists for (Bench's
-    * skew_heavy block).
-    *
-    * `slices` (keyed staging only) keeps the replay TIME-COHERENT: rows
-    * are cut into `slices` equal-frequency event-time slabs, each slab
-    * conv-keyed into nFiles/slices files and written in slab order, so a
+    * skew_heavy block). The replay stays TIME-COHERENT: rows are cut
+    * into `slices` equal-frequency event-time slabs, each slab conv-keyed
+    * into nFiles/slices files and written in slab order, so a
     * maxFilesPerTrigger = nFiles/slices replay advances every
     * conversation's event time together — exactly how a real conv-keyed
     * Kafka topic is consumed (all partitions drain in rough arrival
-    * order). Without it (slices = 1) every file spans the corpus's whole
-    * event-time range, so the watermark set by the FIRST trigger (10-min
-    * lateness vs hot conversations spanning years of event time) makes
-    * the engines' explicit late-drop rule discard most later triggers'
-    * turns — a replay-harness artifact, not a pipeline property (the
-    * round-3 skew-heavy records measured exactly that; see
-    * BENCH.md §"Salting measured where it pays").
+    * order). A conv-keyed layout without slabs would let every file span
+    * the corpus's whole event-time range, so the watermark set by the
+    * FIRST trigger (10-min lateness vs hot conversations spanning years
+    * of event time) would make the engines' explicit late-drop rule
+    * discard most later triggers' turns — a replay-harness artifact, not
+    * a pipeline property (the round-3 skew-heavy records measured exactly
+    * that; see BENCH.md §"Salting measured where it pays"); it is not
+    * offered.
     */
   def stage(spark: SparkSession, nConvs: Long, nFiles: Int = 16,
-      hotConvs: Int = 0, hotMult: Int = 20,
-      keyedByConv: Boolean = false, slices: Int = 1): String = {
+      hotConvs: Int = 0, hotMult: Int = 20, slices: Int = 1): String = {
     val work = graft.util.Tmp.dir("flagship")
     val inDir = s"$work/in"
     val ds = TranscriptGen.transcripts(spark, nConvs, 42L, hotConvs, hotMult)
-    if (keyedByConv && slices > 1) {
+    if (slices > 1) {
       val filesPerSlice = math.max(1, nFiles / slices)
       val df = ds.toDF().withColumn("__sec", unix_timestamp(col("ts"))).persist()
       // equal-frequency slice boundaries (approx quantiles of event time):
@@ -89,10 +87,7 @@ object Flagship {
       }
       df.unpersist()
     } else {
-      val laid =
-        if (keyedByConv) ds.repartition(nFiles, col("conv_id"))
-        else ds.orderBy(col("ts")).coalesce(nFiles)
-      laid.write.parquet(inDir)
+      ds.orderBy(col("ts")).coalesce(nFiles).write.parquet(inDir)
       // One parallel write job gives every part file the SAME mtime, and
       // FileStreamSource replays by mtime — so the "time-ordered" layout
       // actually replayed in arbitrary order (part-NNNNN numbering does
@@ -101,16 +96,14 @@ object Flagship {
       // at the state stage and (watermark already maxed) suppressing the
       // final no-data batch that flushes the tail. Stamp strictly
       // increasing mtimes in ACTUAL per-file event-time order.
-      if (!keyedByConv) {
-        val order = spark.read.parquet(inDir)
-          .groupBy(input_file_name().as("f")).agg(min(col("ts")).as("mn"))
-          .orderBy(col("mn")).collect().map(_.getString(0))
-        val base = System.currentTimeMillis() - order.length * 1000L
-        order.zipWithIndex.foreach { case (uri, i) =>
-          val p = java.nio.file.Paths.get(java.net.URI.create(uri))
-          Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L))
-        }
+      val order = spark.read.parquet(inDir)
+        .groupBy(input_file_name().as("f")).agg(min(col("ts")).as("mn"))
+        .orderBy(col("mn")).collect().map(_.getString(0))
+      val base = System.currentTimeMillis() - order.length * 1000L
+      order.zipWithIndex.foreach { case (uri, i) =>
+        val p = java.nio.file.Paths.get(java.net.URI.create(uri))
+        Files.setLastModifiedTime(p,
+          java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L))
       }
     }
     inDir
@@ -126,7 +119,7 @@ object Flagship {
     * (hot-key-concentrated) scan task — the exact skew the salt exists
     * to defeat. A projection stays put; column pruning only pushes the
     * raw-column Project below the exchange. When the input is conv-keyed
-    * (stage(keyedByConv=true)) this stage is where hot-conversation skew
+    * (stage(slices > 1)) this stage is where hot-conversation skew
     * lands — and what the salted repartition spreads.
     */
   def textOpsGate(df: DataFrame): DataFrame = {

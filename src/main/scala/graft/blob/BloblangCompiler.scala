@@ -154,8 +154,8 @@ object BloblangCompiler {
         case Assign(path, e, _) if path.nonEmpty =>
           assigns += path -> cExpr(e, schema, vars, rootCtx).col
         // `meta key = <expr>`: an update of the MAP<STRING,STRING> meta
-        // column (the Spark mapping of the reference's flat Part metadata,
-        // MetaTurn.meta). Values stringify via goString — exact for
+        // column (the Spark mapping of the reference's flat Part
+        // metadata map). Values stringify via goString — exact for
         // strings/longs/bools; doubles format differently → bail.
         // Whole-metadata assignment (`meta = …`) stays interpreted.
         case MetaStmt(Some(key), e, _) =>

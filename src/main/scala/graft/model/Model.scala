@@ -46,22 +46,6 @@ object BufTurn {
     Turn(convId, b.turn_idx, b.role, b.text, b.tool, b.ts)
 }
 
-/** A turn carrying engine metadata — the Spark mapping of Benthos's
-  * Part.metadata map + error flag (internal/message/part.go:129-138,209-245).
-  * `error == null` means the row is healthy; processors route on it
-  * (try/catch/switch, SURVEY.md §2.9).
-  */
-final case class MetaTurn(
-    conv_id: String,
-    turn_idx: Int,
-    role: String,
-    text: String,
-    tool: String,
-    ts: Timestamp,
-    meta: Map[String, String],
-    error: String
-)
-
 /** Output of the flagship session join: a user turn paired with the
   * assistant/tool turns that answer it inside the same session window
   * (the reference pattern: config/examples/joining_streams.yaml:23-56,
@@ -78,16 +62,4 @@ final case class PairedTurn(
     reply_tool: String,
     user_ts: Timestamp,
     reply_ts: Timestamp
-)
-
-/** Per-(conv, window) aggregate row — the windowed reduce shape from the
-  * reference's system_window buffer example
-  * (internal/impl/pure/buffer_system_window.go:96-127).
-  */
-final case class WindowAgg(
-    conv_id: String,
-    window_start: Long, // epoch seconds (engine-neutral for oracles)
-    n_turns: Long,
-    n_tools: Long,
-    sum_chars: Long
 )

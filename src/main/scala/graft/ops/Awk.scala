@@ -7,8 +7,7 @@ import scala.collection.mutable.LinkedHashMap
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{MapType, StringType}
 
 /** awk processor (SURVEY.md §2.4; reference:
@@ -33,11 +32,12 @@ import org.apache.spark.sql.types.{MapType, StringType}
   * reference, which re-executes its embedded interpreter per part). The
   * runs are dispatched through one long-lived `sh` worker per partition
   * (see [[Worker]]), a [[Subprocess.Child]]: each message is one command
-  * line and one `__D<exit>` reply line. A reply that misses the 60 s
-  * deadline, output on sh's own stderr or any other unexpected reply fails
-  * that row only: the worker and its awk are killed and a fresh worker
-  * serves the rest of the partition. For per-line streaming filters use
-  * [[Subprocess.pipe]] (one long-lived child per partition).
+  * line and one `__D<exit>` reply line, in [[Errors.rowLoop]]. A reply
+  * that misses the 60 s deadline, output on sh's own stderr or any other
+  * unexpected reply fails that row only: the worker and its awk are killed
+  * and a fresh worker serves the rest of the partition. For per-line
+  * streaming filters use [[Subprocess.pipe]] (one long-lived child per
+  * partition).
   *
   * The reference's goawk-registered custom functions (json_get, the
   * json_set / json_append families, json_delete/json_length/json_type,
@@ -56,16 +56,15 @@ object Awk {
   /** Seconds one message's awk run may take (`Subprocess.pipe`'s default). */
   private val ReplyTimeoutSec = 60
 
+  private val mapper = new ObjectMapper()
+
   def proc(df: DataFrame, program: String, codec: String = "text",
       textCol: String = "text", metaCol: Option[String] = None): DataFrame = {
     require(Set("text", "json", "none").contains(codec), s"unrecognised codec: $codec")
-    val base = Errors.withErrorCol(df)
-    val schema = base.schema
-    val textIdx = schema.fieldIndex(textCol)
-    val errIdx = schema.fieldIndex(Errors.ErrCol)
-    val metaIdx = metaCol.map(schema.fieldIndex)
+    val textIdx = df.schema.fieldIndex(textCol)
+    val metaIdx = metaCol.map(df.schema.fieldIndex)
     metaIdx.foreach { i =>
-      schema(i).dataType match {
+      df.schema(i).dataType match {
         case MapType(StringType, StringType, _) => ()
         case other => throw new IllegalArgumentException(
           s"${metaCol.get} must be MAP<STRING,STRING>, got $other")
@@ -73,89 +72,78 @@ object Awk {
     }
     val useFns = AwkFuncs.uses(program)
     val useJsonFns = AwkFuncs.usesJson(program)
-    val enc = Encoders.row(schema)
-    base.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
+    Errors.rowLoop(df)(new Worker(program, useFns)) { (worker, row) =>
+      val payload = row.getString(textIdx)
+      if (payload == null) Errors.Keep
       else {
-        val mapper = new ObjectMapper()
-        val worker = new Worker(program, useFns)
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => worker.close()))
-        rows.map { row =>
-          val payload = row.getString(textIdx)
-          if (payload == null) row
-          else {
-            val vals = row.toSeq.toArray
-            val vars = LinkedHashMap[String, String]()
-            var parseErr: String = null
-            // ONE parse of the payload, shared by the json-codec variable
-            // flattening and the goawk json_* read seeds. A parse failure is
-            // an immediate error only under codec=json; for the custom
-            // functions it is NOT an error until a json function actually
-            // runs (__JSON_OK=0 → __fail at call time, matching the
-            // reference's lazy part.JSON()).
-            var jsonRoot: JsonNode = null
-            if (codec == "json" || (useFns && useJsonFns)) {
-              try {
-                val n = mapper.readTree(payload)
-                if (n != null && !n.isMissingNode) jsonRoot = n
-                if (codec == "json") {
-                  if (jsonRoot == null)
-                    parseErr = "failed to parse part into json: empty document"
-                  else flatten("", jsonRoot, vars)
-                }
-              } catch {
-                case e: Exception =>
-                  jsonRoot = null
-                  if (codec == "json")
-                    parseErr = s"failed to parse part into json: ${e.getMessage}"
-              }
+        val vars = LinkedHashMap[String, String]()
+        var parseErr: String = null
+        // ONE parse of the payload, shared by the json-codec variable
+        // flattening and the goawk json_* read seeds. A parse failure is
+        // an immediate error only under codec=json; for the custom
+        // functions it is NOT an error until a json function actually
+        // runs (__JSON_OK=0 → __fail at call time, matching the
+        // reference's lazy part.JSON()).
+        var jsonRoot: JsonNode = null
+        if (codec == "json" || (useFns && useJsonFns)) {
+          try {
+            val n = mapper.readTree(payload)
+            if (n != null && !n.isMissingNode) jsonRoot = n
+            if (codec == "json") {
+              if (jsonRoot == null)
+                parseErr = "failed to parse part into json: empty document"
+              else flatten("", jsonRoot, vars)
             }
-            val metaMap: Map[String, String] = metaIdx
-              .filterNot(row.isNullAt)
-              .map(i => row.getMap[String, String](i).toMap).getOrElse(Map.empty)
-            if (codec != "none") metaMap.foreach { case (k, v) => vars(sanitize(k)) = v }
-
-            val seed = if (!useFns) None else Some(
-              AwkFuncs.seedBlock(Option(jsonRoot), metaMap, System.currentTimeMillis() / 1000L))
-
-            if (parseErr != null) vals(errIdx) = parseErr
-            else worker.run(seed, vars, if (codec == "text") payload else " ") match {
-              case Left(workerErr) => vals(errIdx) = workerErr
-              case Right((exit, out, errRaw)) =>
-                // control ops ride stderr (see goawk_prelude.awk); anything
-                // else on stderr is a real interpreter/program error
-                val (plainErr, ops) =
-                  if (useFns) AwkFuncs.split(errRaw) else (errRaw, Nil)
-                if (plainErr.trim.nonEmpty) vals(errIdx) = plainErr.trim
-                else if (exit != 0)
-                  vals(errIdx) = s"awk interpreter returned non-zero exit code: $exit"
-                else ops.find(_.op == "err") match {
-                  case Some(e) =>
-                    // a failed custom function aborts the program; the row
-                    // passes through unchanged with the error flag set and
-                    // all buffered mutations discarded (awk.go Process
-                    // returns nil+err → the copy's mutations are dropped)
-                    vals(errIdx) = e.fields.headOption.getOrElse("awk function error")
-                  case None =>
-                    ops.foreach { o =>
-                      if (o.op == "log")
-                        System.err.println(s"awk print_log [${o.fields(0)}] ${o.fields(1)}")
-                    }
-                    if (out.nonEmpty) vals(textIdx) = stripTrailingNl(out)
-                    else if (jsonRoot != null && AwkFuncs.applyJsonOps(jsonRoot, ops, mapper))
-                      vals(textIdx) = AwkFuncs.compactSorted(jsonRoot)
-                    val ms = ops.filter(_.op == "ms")
-                    if (ms.nonEmpty) metaIdx.foreach { i =>
-                      vals(i) = metaMap ++ ms.map(o => o.fields(0) -> o.fields(1))
-                    }
-                    vals(errIdx) = null
-                }
-            }
-            Row.fromSeq(vals.toIndexedSeq)
+          } catch {
+            case e: Exception =>
+              jsonRoot = null
+              if (codec == "json")
+                parseErr = s"failed to parse part into json: ${e.getMessage}"
           }
-        } ++ { worker.close(); Iterator.empty }
+        }
+        val metaMap: Map[String, String] = metaIdx
+          .filterNot(row.isNullAt)
+          .map(i => row.getMap[String, String](i).toMap).getOrElse(Map.empty)
+        if (codec != "none") metaMap.foreach { case (k, v) => vars(sanitize(k)) = v }
+
+        val seed = if (!useFns) None else Some(
+          AwkFuncs.seedBlock(Option(jsonRoot), metaMap, System.currentTimeMillis() / 1000L))
+
+        if (parseErr != null) Errors.Fail(parseErr)
+        else {
+          val (exit, out, errRaw) = worker.run(seed, vars, if (codec == "text") payload else " ")
+          // control ops ride stderr (see goawk_prelude.awk); anything
+          // else on stderr is a real interpreter/program error
+          val (plainErr, ops) =
+            if (useFns) AwkFuncs.split(errRaw) else (errRaw, Nil)
+          if (plainErr.trim.nonEmpty) Errors.Fail(plainErr.trim)
+          else if (exit != 0)
+            Errors.Fail(s"awk interpreter returned non-zero exit code: $exit")
+          else ops.find(_.op == "err") match {
+            case Some(e) =>
+              // a failed custom function aborts the program; the row
+              // passes through unchanged with the error flag set and
+              // all buffered mutations discarded (awk.go Process
+              // returns nil+err → the copy's mutations are dropped)
+              Errors.Fail(e.fields.headOption.getOrElse("awk function error"))
+            case None =>
+              ops.foreach { o =>
+                if (o.op == "log")
+                  System.err.println(s"awk print_log [${o.fields(0)}] ${o.fields(1)}")
+              }
+              val text =
+                if (out.nonEmpty) Some(stripTrailingNl(out))
+                else if (jsonRoot != null && AwkFuncs.applyJsonOps(jsonRoot, ops, mapper))
+                  Some(AwkFuncs.compactSorted(jsonRoot))
+                else None
+              val ms = ops.filter(_.op == "ms")
+              val meta = metaCol.filter(_ => ms.nonEmpty)
+                .map(_ -> (metaMap ++ ms.map(o => o.fields(0) -> o.fields(1))))
+              Errors.Put(text.map(textCol -> _).toSeq ++ meta: _*)
+          }
+        }
       }
-    }(enc)
+    }
   }
 
   private def sanitize(k: String): String = k.replaceAll("[^a-zA-Z0-9_]", "_")
@@ -198,7 +186,7 @@ object Awk {
     * `2> err` comes first so that sh's own errors on the redirections land
     * in the row's stderr too, not on the worker's.
     */
-  private final class Worker(program: String, useFns: Boolean) {
+  private final class Worker(program: String, useFns: Boolean) extends Errors.Resource {
     private val dir = Paths.get(graft.util.Tmp.dir("awkpool"))
     private val progFile = dir.resolve("prog.awk")
     private val seedFile = dir.resolve("seed.awk")
@@ -207,15 +195,17 @@ object Awk {
     private val errFile = dir.resolve("err")
     Files.write(progFile,
       ((if (useFns) AwkFuncs.prelude + "\n" else "") + program).getBytes(UTF_8))
-    private def spawn() = new Subprocess.Child(Seq("sh"), "lines", 1 << 20, ReplyTimeoutSec)
-    private var sh = spawn()
+    private val sh = new Subprocess.Child(Seq("sh"), "lines", 1 << 20, ReplyTimeoutSec)
     private def q(s: String): String = "'" + s.replace("'", "'\\''") + "'"
 
-    /** Right((exit, stdout, stderr)) of one awk run, or Left(why the
-      * worker failed), after which a fresh worker has replaced it.
+    /** (exit, stdout, stderr) of one awk run. Throws when the worker is
+      * broken — no reply in time, output on sh's own stderr, or any
+      * other reply than the exit line: a late or stray frame would answer
+      * the NEXT message, so [[Errors.rowLoop]] replaces the worker (and
+      * kills the awk it may still be running).
       */
     def run(seed: Option[String], vars: LinkedHashMap[String, String],
-        stdin: String): Either[String, (Int, String, String)] = {
+        stdin: String): (Int, String, String) = {
       Files.write(inFile, stdin.getBytes(UTF_8))
       seed.foreach(s => Files.write(seedFile, s.getBytes(UTF_8)))
       val cmd = new StringBuilder("awk")
@@ -230,28 +220,29 @@ object Awk {
         .append("; echo __D$?")
       val reply =
         try sh.roundTrip("lines", cmd.toString)
-        catch { case e: java.io.IOException => Left(String.valueOf(e.getMessage)) }
+        catch {
+          case _: Subprocess.NoReply =>
+            throw new IllegalStateException(s"awk: no result within ${ReplyTimeoutSec}s")
+          case e: java.io.IOException =>
+            throw new IllegalStateException(s"awk worker failed: ${String.valueOf(e.getMessage).trim}")
+        }
       reply match {
         case Right(r) if r.matches("__D[0-9]+") =>
-          Right((r.substring(3).toInt,
+          (r.substring(3).toInt,
             new String(Files.readAllBytes(outFile), UTF_8),
-            new String(Files.readAllBytes(errFile), UTF_8)))
-        case other =>
-          // a late or stray frame would answer the NEXT message: replace
-          // the worker (and kill the awk it may still be running)
-          val why = other match {
-            case _ if sh.wedged => s"awk: no result within ${ReplyTimeoutSec}s"
-            case Left(e) => s"awk worker failed: ${e.trim}"
-            case Right(r) => s"awk worker sent an unexpected reply: $r"
-          }
-          sh.kill()
-          sh = spawn()
-          Left(why)
+            new String(Files.readAllBytes(errFile), UTF_8))
+        case Left(e) => throw new IllegalStateException(s"awk worker failed: ${e.trim}")
+        case Right(r) => throw new IllegalStateException(s"awk worker sent an unexpected reply: $r")
       }
     }
 
     def close(): Unit = {
       sh.close()
+      graft.util.Tmp.delete(dir.toString)
+    }
+
+    override def kill(): Unit = {
+      sh.kill()
       graft.util.Tmp.delete(dir.toString)
     }
   }

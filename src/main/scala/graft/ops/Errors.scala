@@ -1,12 +1,28 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.util.control.NonFatal
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Error-handling operators (SURVEY.md §2.9). The reference marks failed
   * parts with an error flag and routes on it rather than aborting
   * (reference: internal/message/part.go:129-138); our rows carry a nullable
   * `error` column with the same contract.
+  *
+  * The processors that call out of the engine — a subprocess, awk, HTTP,
+  * a schema registry, SQL — run through one row loop, [[rowLoop]]. Each
+  * row's step has one of three outcomes: [[Keep]] (the row passes as it
+  * is), [[Fail]] (the error column takes a message, the content stays)
+  * or [[Put]] (named output columns are set and the error is cleared). A
+  * failure the step can name (a stderr reply, a non-2xx status, a SQL
+  * error) is a `Fail` and the partition's resource serves on. An
+  * exception that escapes the step means the resource is broken: that
+  * row fails with the exception's message, the resource is killed
+  * without waiting on it, and a fresh one serves the rest of the
+  * partition: a broken resource fails one row, not the task.
   */
 object Errors {
 
@@ -16,6 +32,82 @@ object Errors {
   def withErrorCol(df: DataFrame): DataFrame =
     if (df.columns.contains(ErrCol)) df
     else df.withColumn(ErrCol, lit(null).cast("string"))
+
+  /** One row's outcome in [[rowLoop]]. */
+  sealed trait Outcome
+  /** Pass the row on as it is. */
+  case object Keep extends Outcome
+  /** Set the row's error to `msg`; every other column stays. */
+  final case class Fail(msg: String) extends Outcome
+  /** Set the named columns and clear the row's error. */
+  final case class Put(cols: (String, Any)*) extends Outcome
+
+  /** A per-partition resource of [[rowLoop]]: a child process, a
+    * connection, a client.
+    */
+  trait Resource {
+    /** Release once the partition is drained; may wait on the resource. */
+    def close(): Unit
+    /** Release a broken resource without waiting on it. */
+    def kill(): Unit = close()
+  }
+
+  /** A resource with nothing to release (a shared HTTP client). */
+  final case class Held[A](get: A) extends Resource {
+    def close(): Unit = ()
+  }
+
+  /** The external-call processor loop. Adds the error column and
+    * `outCols` (null-filled, replacing a column of the same name), then
+    * runs `step` on each row with the partition's resource: `open` runs
+    * at the first row (an empty partition opens none) and again at the
+    * row after a broken one; the resource is closed when the partition
+    * is drained and, should a downstream limit drop the iterator first,
+    * when the task completes. See the object doc for the outcomes and
+    * the broken-resource rule.
+    */
+  def rowLoop[R <: Resource](df: DataFrame, outCols: (String, DataType)*)(open: => R)(
+      step: (R, Row) => Outcome): DataFrame = {
+    val base = outCols.foldLeft(withErrorCol(df)) { case (d, (c, t)) =>
+      d.withColumn(c, lit(null).cast(t))
+    }
+    val schema = base.schema
+    val errIdx = schema.fieldIndex(ErrCol)
+    base.mapPartitions { rows =>
+      new Iterator[Row] {
+        private var res: Option[R] = None
+        private def release(): Unit = { res.foreach(_.close()); res = None }
+        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => release()))
+
+        override def hasNext: Boolean = rows.hasNext || { release(); false }
+
+        override def next(): Row = {
+          val row = rows.next()
+          val r = res.getOrElse { val o = open; res = Some(o); o }
+          val outcome =
+            try step(r, row)
+            catch {
+              case NonFatal(e) =>
+                res = None
+                r.kill()
+                Fail(Option(e.getMessage).getOrElse(e.toString))
+            }
+          outcome match {
+            case Keep => row
+            case Fail(msg) =>
+              val vals = row.toSeq.toArray
+              vals(errIdx) = msg
+              Row.fromSeq(vals.toIndexedSeq)
+            case Put(cols @ _*) =>
+              val vals = row.toSeq.toArray
+              cols.foreach { case (c, v) => vals(schema.fieldIndex(c)) = v }
+              vals(errIdx) = null
+              Row.fromSeq(vals.toIndexedSeq)
+          }
+        }
+      }
+    }(Encoders.row(schema))
+  }
 
   /** Mark rows failing `check` with `msg` — the processor-failure path
     * (internal/old/processor/util.go:149).

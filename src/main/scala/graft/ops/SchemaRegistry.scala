@@ -9,7 +9,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{BinaryType, StringType}
 
 import graft.blob.{Avro, Proto}
 
@@ -31,7 +32,7 @@ import graft.blob.{Avro, Proto}
   * and the input column is left unchanged (the reference's per-message
   * SetError, encode.go:181-205).
   *
-  * Spark mapping: `mapPartitions` with one HTTP client per partition and
+  * Spark mapping: [[Errors.rowLoop]] with one HTTP client per partition and
   * a JVM-global schema cache (the reference caches per process with a
   * single-flight request mutex, decode.go:224-244 — an executor JVM is
   * the process analogue, so each executor fetches a schema once, not once
@@ -200,39 +201,24 @@ object SchemaRegistry {
     */
   def decodeProc(df: DataFrame, registryUrl: String,
       bytesCol: String = "wire", outCol: String = "decoded"): DataFrame = {
-    val base = Errors.withErrorCol(df)
-      .withColumn(outCol, org.apache.spark.sql.functions.lit(null).cast("string"))
-    val schema = base.schema
-    val bIdx = schema.fieldIndex(bytesCol)
-    val oIdx = schema.fieldIndex(outCol)
-    val eIdx = schema.fieldIndex(Errors.ErrCol)
-    val enc = Encoders.row(schema)
-    base.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val client = newClient()
-        rows.map { row =>
-          val wire = row.getAs[Array[Byte]](bIdx)
-          val vals = row.toSeq.toArray
-          try {
-            val id = extractId(wire)
-            vals(oIdx) = schemaById(client, registryUrl, id) match {
-              case Left(avro) =>
-                Avro.textual(Avro.decodeBinary(avro,
-                  java.util.Arrays.copyOfRange(wire, 5, wire.length)))
-              case Right(pfs) =>
-                val (fq, payloadOff) = protoMessageAt(pfs, wire, 5)
-                Proto.decodeMessage(pfs, fq,
-                  java.util.Arrays.copyOfRange(wire, payloadOff, wire.length)).toString
-            }
-            vals(eIdx) = null
-          } catch {
-            case e: Exception => vals(eIdx) = e.getMessage
-          }
-          Row.fromSeq(vals.toIndexedSeq)
-        }
+    val bIdx = df.schema.fieldIndex(bytesCol)
+    Errors.rowLoop(df, outCol -> StringType)(Errors.Held(newClient())) { (client, row) =>
+      val wire = row.getAs[Array[Byte]](bIdx)
+      try {
+        val id = extractId(wire)
+        Errors.Put(outCol -> (schemaById(client.get, registryUrl, id) match {
+          case Left(avro) =>
+            Avro.textual(Avro.decodeBinary(avro,
+              java.util.Arrays.copyOfRange(wire, 5, wire.length)))
+          case Right(pfs) =>
+            val (fq, payloadOff) = protoMessageAt(pfs, wire, 5)
+            Proto.decodeMessage(pfs, fq,
+              java.util.Arrays.copyOfRange(wire, payloadOff, wire.length)).toString
+        }))
+      } catch {
+        case e: Exception => Errors.Fail(e.getMessage)
       }
-    }(enc)
+    }
   }
 
   /** schema_registry_encode: `jsonCol` (STRING, standard JSON) → `outCol`
@@ -241,40 +227,23 @@ object SchemaRegistry {
   def encodeProc(df: DataFrame, registryUrl: String, subject: String,
       jsonCol: String = "text", outCol: String = "wire",
       refreshMs: Long = 10 * 60 * 1000L): DataFrame = {
-    val base = Errors.withErrorCol(df)
-      .withColumn(outCol,
-        org.apache.spark.sql.functions.lit(null).cast("binary"))
-    val schema = base.schema
-    val jIdx = schema.fieldIndex(jsonCol)
-    val oIdx = schema.fieldIndex(outCol)
-    val eIdx = schema.fieldIndex(Errors.ErrCol)
-    val enc = Encoders.row(schema)
-    base.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val client = newClient()
-        rows.map { row =>
-          val doc = row.getString(jIdx)
-          val vals = row.toSeq.toArray
-          if (doc != null) {
-            try {
-              val (id, sch) = latestBySubject(client, registryUrl, subject, refreshMs)
-              vals(oIdx) = sch match {
-                case Left(avro) => frame(id, Avro.encodeStandardJson(avro, mapper.readTree(doc)))
-                case Right(pfs) =>
-                  val fq = pfs.topLevel.headOption.getOrElse(
-                    throw new IllegalArgumentException("protobuf schema declares no message"))
-                  frameProto(id, Proto.encodeMessage(pfs, fq, mapper.readTree(doc)))
-              }
-              vals(eIdx) = null
-            } catch {
-              case e: Exception => vals(eIdx) = e.getMessage
-            }
-          }
-          Row.fromSeq(vals.toIndexedSeq)
-        }
+    val jIdx = df.schema.fieldIndex(jsonCol)
+    Errors.rowLoop(df, outCol -> BinaryType)(Errors.Held(newClient())) { (client, row) =>
+      val doc = row.getString(jIdx)
+      if (doc == null) Errors.Keep
+      else try {
+        val (id, sch) = latestBySubject(client.get, registryUrl, subject, refreshMs)
+        Errors.Put(outCol -> (sch match {
+          case Left(avro) => frame(id, Avro.encodeStandardJson(avro, mapper.readTree(doc)))
+          case Right(pfs) =>
+            val fq = pfs.topLevel.headOption.getOrElse(
+              throw new IllegalArgumentException("protobuf schema declares no message"))
+            frameProto(id, Proto.encodeMessage(pfs, fq, mapper.readTree(doc)))
+        }))
+      } catch {
+        case e: Exception => Errors.Fail(e.getMessage)
       }
-    }(enc)
+    }
   }
 
   // -------------------------------------------------------- local registry

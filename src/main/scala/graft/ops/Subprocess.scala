@@ -6,9 +6,7 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StringType
 
 /** subprocess processor (SURVEY.md §2.4; reference:
@@ -27,7 +25,7 @@ import org.apache.spark.sql.types.StringType
   *   - `length_prefixed_uint32_be`: 4-byte big-endian length prefix.
   *   - `netstring`: `<len>:<payload>,`.
   *
-  * Spark mapping: `mapPartitions` with ONE subprocess per partition — the
+  * Spark mapping: [[Errors.rowLoop]] with ONE subprocess per partition — the
   * exact analogue of the reference's process-per-pipeline-thread
   * (pipeline.threads × subprocess, constructor.go:45-48): partition count
   * is the parallelism knob, rows stream through without materialising the
@@ -40,10 +38,11 @@ import org.apache.spark.sql.types.StringType
   */
 object Subprocess {
 
-  /** Run `cmd` over `textCol`, replacing it with the subprocess reply.
-    * Adds/overwrites the [[Errors.ErrCol]] error column (null = healthy).
-    * A reply that misses `replyTimeoutSec` fails its row only: the child
-    * is killed and a fresh one serves the rest of the partition.
+  /** Run `cmd` over `textCol`, replacing it with the subprocess reply,
+    * through [[Errors.rowLoop]] (null = healthy error column). A stderr
+    * reply fails its row only. A reply that misses `replyTimeoutSec`, or
+    * a child that has stopped reading, fails its row and the child: it is
+    * killed and a fresh one serves the rest of the partition.
     */
   def pipe(
       df: DataFrame,
@@ -55,52 +54,28 @@ object Subprocess {
       replyTimeoutSec: Int = 60): DataFrame = {
     require(Codecs.contains(codecSend), s"unrecognized codec_send value: $codecSend")
     require(Codecs.contains(codecRecv), s"invalid codec_recv option: $codecRecv")
-    val base = Errors.withErrorCol(df)
-    val schema = base.schema
-    val textIdx = schema.fieldIndex(textCol)
-    val errIdx = schema.fieldIndex(Errors.ErrCol)
-    require(schema(textIdx).dataType == StringType, s"$textCol must be STRING")
-    val enc = Encoders.row(schema)
-    base.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        var proc = new Child(cmd, codecRecv, maxBuffer, replyTimeoutSec)
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => proc.close()))
-        rows.map { row =>
-          val payload = row.getString(textIdx)
-          if (payload == null) row
-          else {
-            val vals = row.toSeq.toArray
-            proc.roundTrip(codecSend, payload) match {
-              case Right(reply) =>
-                vals(textIdx) = reply
-                vals(errIdx) = null
-              case Left(err) =>
-                vals(errIdx) = err
-            }
-            // A child that missed its reply deadline is out of frame sync:
-            // its late reply would answer the NEXT row. Kill it and go on
-            // with a fresh one (the reference marks the part failed and
-            // keeps the pipeline running, subprocess.go:475-483).
-            if (proc.wedged) {
-              proc.kill()
-              proc = new Child(cmd, codecRecv, maxBuffer, replyTimeoutSec)
-            }
-            Row.fromSeq(vals.toIndexedSeq)
-          }
-        } ++ { proc.close(); Iterator.empty }
-      }
-    }(enc)
+    val textIdx = df.schema.fieldIndex(textCol)
+    require(df.schema(textIdx).dataType == StringType, s"$textCol must be STRING")
+    Errors.rowLoop(df)(new Child(cmd, codecRecv, maxBuffer, replyTimeoutSec)) { (child, row) =>
+      val payload = row.getString(textIdx)
+      if (payload == null) Errors.Keep
+      else child.roundTrip(codecSend, payload).fold(Errors.Fail(_), r => Errors.Put(textCol -> r))
+    }
   }
 
   val Codecs: Set[String] = Set("lines", "length_prefixed_uint32_be", "netstring")
+
+  /** A reply missed its deadline: the child is out of frame sync (its late
+    * reply would answer the NEXT message) and must be replaced.
+    */
+  private[ops] final class NoReply(msg: String) extends java.io.IOException(msg)
 
   /** One live subprocess: framed writer + two pump threads multiplexing
     * stdout/stderr frames onto a tagged queue (the reference's
     * stdoutChan/stderrChan select, subprocess.go:441-457).
     */
   private[ops] final class Child(cmd: Seq[String], codecRecv: String, maxBuf: Int,
-      timeoutSec: Int) {
+      timeoutSec: Int) extends Errors.Resource {
     private val pb = new ProcessBuilder(cmd: _*)
     private val process = pb.start()
     private val stdin: OutputStream = process.getOutputStream
@@ -121,7 +96,10 @@ object Subprocess {
       t
     }
 
-    /** Send one message and await one reply; Left(stderr text) marks failed. */
+    /** Send one message and await one reply; Left(stderr text) marks it
+      * failed. Throws when the child is broken: [[NoReply]] past the
+      * deadline, an IOException when it no longer reads its stdin.
+      */
     def roundTrip(codecSend: String, payload: String): Either[String, String] =
       codecSend match {
         case "lines" =>
@@ -162,10 +140,9 @@ object Subprocess {
       }
       stdin.flush()
       val reply = replies.poll(timeoutSec.toLong, TimeUnit.SECONDS)
-      if (reply == null) {
-        wedged = true
-        Left(s"subprocess ${cmd.head}: no reply within ${timeoutSec}s (child must flush per line)")
-      } else if (!reply._1) Right(reply._2)
+      if (reply == null)
+        throw new NoReply(s"subprocess ${cmd.head}: no reply within ${timeoutSec}s (child must flush per line)")
+      else if (!reply._1) Right(reply._2)
       else {
         // Flush any immediately-following stderr frames into one error
         // (the reference's 1s flushErrLoop, subprocess.go:445-456).
@@ -180,18 +157,18 @@ object Subprocess {
       }
     }
 
-    /** Set when a reply missed its deadline; the child must be replaced. */
-    var wedged = false
-
     /** Kill the child and whatever it started (a `system()` call, a shell). */
-    def kill(): Unit = {
+    override def kill(): Unit = {
       graft.util.Proc.killTree(process.toHandle)
       try stdin.close() catch { case _: Throwable => () }
     }
 
+    /** Close stdin and give the child 5 s to exit, then kill it and what
+      * it started.
+      */
     def close(): Unit = {
       try stdin.close() catch { case _: Throwable => () }
-      if (!process.waitFor(5, TimeUnit.SECONDS)) process.destroyForcibly()
+      if (!process.waitFor(5, TimeUnit.SECONDS)) graft.util.Proc.killTree(process.toHandle)
       outPump.join(1000)
       errPump.join(1000)
     }

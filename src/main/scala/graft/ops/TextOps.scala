@@ -112,21 +112,29 @@ object TextOps {
   def redactPii(text: Column): Column =
     PiiPatterns.foldLeft(text) { case (c, (p, t)) => regexp_replace(c, p, t) }
 
+  /** Word n-grams over `ws`, a word array (`words(text)`): one
+    * space-joined gram per window of `n` consecutive words, empty when
+    * there are fewer than `n` words. Bind `ws` in a projection of its
+    * own and pass the column: an inline `words(text)` inside the gram
+    * lambda would re-run the split per gram — the interpreted-HOF trap,
+    * BENCH.md §2 (Catalyst does not collapse a non-cheap alias that is
+    * referenced more than once).
+    */
+  def wordNgrams(ws: Column, n: Int): Column = {
+    require(n > 0)
+    when(size(ws) >= n,
+      transform(sequence(lit(1), size(ws) - (n - 1)), i => concat_ws(" ", slice(ws, i, lit(n)))))
+      .otherwise(array().cast("array<string>"))
+  }
+
   /** Gopher-style repetition gate: the fraction of duplicated word
     * n-grams (1 − distinct/total) — the standard cheap filter for
-    * boilerplate/looping text in web-scale corpus cleaning. DataFrame-
-    * level so the word array binds through a projection alias (an inline
-    * `words(text)` inside the n-gram lambda would re-evaluate the split
-    * per element — the interpreted-HOF trap, BENCH.md §2).
+    * boilerplate/looping text in web-scale corpus cleaning.
     */
   def repetition(df: org.apache.spark.sql.DataFrame, text: Column, n: Int = 3,
       out: String = "repetition"): org.apache.spark.sql.DataFrame =
     df.withColumn("__ws", words(text))
-      .withColumn("__ngrams",
-        when(size(col("__ws")) >= n,
-          transform(sequence(lit(1), size(col("__ws")) - (n - 1)),
-            i => concat_ws(" ", slice(col("__ws"), i, lit(n)))))
-          .otherwise(array().cast("array<string>")))
+      .withColumn("__ngrams", wordNgrams(col("__ws"), n))
       .withColumn(out,
         when(size(col("__ngrams")) > 0,
           round(lit(1.0) -

@@ -128,21 +128,6 @@ object TrainPrep {
       .drop("__h")
   }
 
-  /** Word n-grams of `text` under the engine's proven cross-engine
-    * tokenizer (lowercase, split on non-letter/digit/apostrophe runs,
-    * drop empties — the q_token_count contract): one space-joined gram
-    * per window of `n` consecutive words, empty array when the document
-    * has fewer than `n` words. Pure projection — evaluated at scan speed,
-    * no shuffle.
-    */
-  def wordNgrams(text: Column, n: Int): Column = {
-    require(n > 0)
-    val ws = TextOps.words(text)
-    when(size(ws) >= n,
-      transform(sequence(lit(0), size(ws) - n), i => array_join(slice(ws, i + 1, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** Benchmark decontamination (the training-data hygiene step: drop or
     * flag any document sharing an `n`-gram with an evaluation/benchmark
     * set, so test questions never leak into training data).
@@ -159,8 +144,12 @@ object TrainPrep {
     */
   def decontaminate(docs: DataFrame, evalSet: DataFrame, id: Column,
       text: Column, n: Int): DataFrame = {
-    val evalGrams = evalSet.select(explode(wordNgrams(text, n)).as("gram")).distinct()
-    val hit = docs.select(id.as("__did"), explode(wordNgrams(text, n)).as("gram"))
+    // the word array binds once per row in its own projection
+    def grams(ws: Column) = explode(TextOps.wordNgrams(ws, n)).as("gram")
+    val evalGrams = evalSet.select(TextOps.words(text).as("__ws"))
+      .select(grams(col("__ws"))).distinct()
+    val hit = docs.select(id.as("__did"), TextOps.words(text).as("__ws"))
+      .select(col("__did"), grams(col("__ws")))
       .join(broadcast(evalGrams), "gram")
       .select(col("__did")).distinct()
       .withColumn("contaminated", lit(true))

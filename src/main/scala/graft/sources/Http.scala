@@ -12,6 +12,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Errors
+
 /** HTTP family (SURVEY.md §2.2/§2.3/§2.4; reference:
   * internal/old/input/http_server.go, internal/old/output/sync_response.go +
   * internal/transaction/result_store.go:98-110, internal/old/input/
@@ -32,7 +34,7 @@ import org.apache.spark.sql.functions._
   *    funnel, works across a cluster, and degrades exactly like the
   *    reference when no sync response arrives (plain ack).
   *  - `http_client` input: bounded polling GETs (lines codec per response).
-  *  - `http` processor: per-row request from `mapPartitions` with one
+  *  - `http` processor: per-row request from `Errors.rowLoop` with one
   *    shared client per partition (the reference's `parallel` batch mode =
   *    partition parallelism); a 2xx body REPLACES the message, anything
   *    else marks the error column and keeps the content
@@ -180,41 +182,26 @@ object Http {
     lines.toDF("content")
   }
 
-  /** http processor (http.go:103-113): per-row request; 2xx body replaces
-    * `textCol`, failures set the error column and keep the content.
+  /** http processor (http.go:103-113): per-row request through
+    * [[graft.ops.Errors.rowLoop]]; 2xx body replaces `textCol`, failures
+    * set the error column and keep the content.
     */
   def enrich(df: DataFrame, url: String, textCol: String = "text",
       method: String = "POST"): DataFrame = {
-    val base = graft.ops.Errors.withErrorCol(df)
-    val schema = base.schema
-    val tIdx = schema.fieldIndex(textCol)
-    val eIdx = schema.fieldIndex(graft.ops.Errors.ErrCol)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    base.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val client = newClient()
-        rows.map { row =>
-          val payload = row.getString(tIdx)
-          if (payload == null) row
-          else {
-            val vals = row.toSeq.toArray
-            try {
-              val req = HttpRequest.newBuilder(URI.create(url))
-                .method(method, HttpRequest.BodyPublishers.ofString(payload)).build()
-              val res = client.send(req, HttpResponse.BodyHandlers.ofString())
-              if (res.statusCode() / 100 == 2) {
-                vals(tIdx) = res.body()
-                vals(eIdx) = null
-              } else vals(eIdx) = s"HTTP ${res.statusCode()}"
-            } catch {
-              case e: Exception => vals(eIdx) = s"http request failed: ${e.getMessage}"
-            }
-            Row.fromSeq(vals.toIndexedSeq)
-          }
-        }
+    val tIdx = df.schema.fieldIndex(textCol)
+    Errors.rowLoop(df)(Errors.Held(newClient())) { (client, row) =>
+      val payload = row.getString(tIdx)
+      if (payload == null) Errors.Keep
+      else try {
+        val req = HttpRequest.newBuilder(URI.create(url))
+          .method(method, HttpRequest.BodyPublishers.ofString(payload)).build()
+        val res = client.get.send(req, HttpResponse.BodyHandlers.ofString())
+        if (res.statusCode() / 100 == 2) Errors.Put(textCol -> res.body())
+        else Errors.Fail(s"HTTP ${res.statusCode()}")
+      } catch {
+        case e: Exception => Errors.Fail(s"http request failed: ${e.getMessage}")
       }
-    }(enc)
+    }
   }
 
   /** http_client output: POST each row's `textCol`, one client per

@@ -55,12 +55,14 @@ object Socket {
         acceptLoop(ch, stop, spoolDir)
         new ServerHandle(s"${bound.getHostString}:${bound.getPort}", stop, ch)
       case "unix" =>
-        val path = if (address == null)
-          Files.createTempDirectory("graft-sock").resolve("s.sock").toString else address
+        // with no address, the socket lives in a temp dir of its own that
+        // goes when the server stops
+        val own = if (address == null) Some(graft.util.Tmp.dir("graft-sock")) else None
+        val path = own.fold(address)(d => s"$d/s.sock")
         val ch = ServerSocketChannel.open(StandardProtocolFamily.UNIX)
         ch.bind(UnixDomainSocketAddress.of(path))
         acceptLoop(ch, stop, spoolDir)
-        new ServerHandle(path, stop, ch)
+        new ServerHandle(path, stop, () => { ch.close(); own.foreach(graft.util.Tmp.delete) })
       case "udp" =>
         val sock = new java.net.DatagramSocket(
           if (address == null) new InetSocketAddress("127.0.0.1", 0)

@@ -2,8 +2,11 @@ package graft.sources
 
 import java.sql.{Connection, DriverManager, PreparedStatement, ResultSet, Types}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+
+import graft.ops.Errors
 
 /** SQL connector family (SURVEY.md §2.2/§2.3; reference:
   * internal/impl/sql/input_sql_select.go, output_sql_insert.go,
@@ -20,7 +23,7 @@ import org.apache.spark.sql.functions._
   *    inserts via `df.write.jdbc` (each executor writes its own partition,
   *    exactly the reference's max_in_flight parallelism, but data-local).
   *  - `sql_raw` / `sql_select` processors → one connection per partition
-  *    via mapPartitions; per row the query runs with `?` args bound from
+  *    via `Errors.rowLoop`; per row the query runs with `?` args bound from
   *    columns; result rows come back as a JSON array string (the
   *    reference's result_codec json_array) or, with `execOnly`, the row
   *    passes through unchanged. Failures set the engine error column and
@@ -120,67 +123,49 @@ object Sql {
     */
   def raw(df: DataFrame, dsn: String, query: String, argCols: Seq[String],
       execOnly: Boolean = false, resultCol: String = "sql_result"): DataFrame = {
-    val base0 = graft.ops.Errors.withErrorCol(df)
-    val base = if (execOnly) base0 else base0.withColumn(resultCol, lit(null).cast("string"))
-    val schema = base.schema
-    val argIdx = argCols.map(schema.fieldIndex)
-    val errIdx = schema.fieldIndex(graft.ops.Errors.ErrCol)
-    val resIdx = if (execOnly) -1 else schema.fieldIndex(resultCol)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    base.mapPartitions { rows =>
-      if (!rows.hasNext) Iterator.empty
-      else new Iterator[Row] {
-        // opened on first use so a bad DSN or unpreparable query surfaces
-        // per row via the error column (the processor error contract), not
-        // as a task crash
-        private var conn: Connection = null
-        private var st: PreparedStatement = null
-        private def stmt(): PreparedStatement = {
-          // reuse an already-open connection when only prepare failed:
-          // re-connecting per row would leak the previous connection and
-          // can exhaust the database's connection limit over a partition
-          if (st == null) {
-            if (conn == null) conn = DriverManager.getConnection(dsn)
-            st = conn.prepareStatement(query)
-          }
-          st
+    val argIdx = argCols.map(df.schema.fieldIndex)
+    val outCols = if (execOnly) Nil else Seq(resultCol -> StringType)
+    Errors.rowLoop(df, outCols: _*)(new Prepared(dsn, query)) { (p, row) =>
+      try {
+        val st = p.stmt()
+        argIdx.zipWithIndex.foreach { case (ci, pi) =>
+          st.setObject(pi + 1, row.get(ci))
         }
-        private def closeQuietly(): Unit = {
-          try { if (st != null) st.close() } catch { case _: Exception => () }
-          try { if (conn != null) conn.close() } catch { case _: Exception => () }
-          st = null; conn = null
-        }
-        // a downstream limit can drop the iterator before it drains — the
-        // task-completion hook closes the connection either way
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeQuietly()))
-        override def hasNext: Boolean = {
-          val h = rows.hasNext
-          if (!h) closeQuietly()
-          h
-        }
-        override def next(): Row = {
-          val row = rows.next()
-          val vals = row.toSeq.toArray
-          try {
-            val st = stmt()
-            argIdx.zipWithIndex.foreach { case (ci, pi) =>
-              st.setObject(pi + 1, row.get(ci))
-            }
-            val hasResult = st.execute()
-            if (!execOnly && hasResult) {
-              val rs = st.getResultSet
-              vals(resIdx) = resultSetToJson(rs)
-              rs.close()
-            } // else: exec_only or a non-result statement → passthrough
-            vals(errIdx) = null
-          } catch {
-            case e: Exception => vals(errIdx) = s"sql query failed: ${e.getMessage}"
-          }
-          Row.fromSeq(vals.toIndexedSeq)
-        }
+        if (st.execute() && !execOnly) {
+          val rs = st.getResultSet
+          try Errors.Put(resultCol -> resultSetToJson(rs)) finally rs.close()
+        } else Errors.Put() // exec_only or a non-result statement → passthrough
+      } catch {
+        case e: Exception => Errors.Fail(s"sql query failed: ${e.getMessage}")
       }
-    }(enc)
+    }
+  }
+
+  /** One partition's connection and prepared `query`, both opened on
+    * first use so that a bad DSN or an unpreparable query fails each row
+    * through the error column (the processor error contract), not the
+    * task.
+    */
+  private final class Prepared(dsn: String, query: String) extends Errors.Resource {
+    private var conn: Connection = null
+    private var st: PreparedStatement = null
+
+    def stmt(): PreparedStatement = {
+      // reuse an already-open connection when only prepare failed:
+      // re-connecting per row would leak the previous connection and
+      // can exhaust the database's connection limit over a partition
+      if (st == null) {
+        if (conn == null) conn = DriverManager.getConnection(dsn)
+        st = conn.prepareStatement(query)
+      }
+      st
+    }
+
+    def close(): Unit = {
+      try { if (st != null) st.close() } catch { case _: Exception => () }
+      try { if (conn != null) conn.close() } catch { case _: Exception => () }
+      st = null; conn = null
+    }
   }
 
   /** json_array result codec: every row an object keyed by lower-cased

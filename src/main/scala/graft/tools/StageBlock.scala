@@ -15,12 +15,12 @@ package graft.tools
   */
 object StageBlock {
 
-  /** `keyedByConv`/`slices` give the conv-keyed, time-sliced layout of
-    * the skew-heavy block (`Flagship.stage`); `cores` is the staging
+  /** `slices` > 1 gives the conv-keyed, time-sliced layout of the
+    * skew-heavy block (`Flagship.stage`); `cores` is the staging
     * session's width.
     */
   final case class Spec(convs: Long, files: Int, hotConvs: Int = 0,
-      hotMult: Int = 20, keyedByConv: Boolean = false, slices: Int = 1, cores: Int = 1)
+      hotMult: Int = 20, slices: Int = 1, cores: Int = 1)
 
   final case class Staged(dir: String, turns: Long, batchPairs: Long)
 
@@ -28,8 +28,7 @@ object StageBlock {
     val s = BenchRecord.mapper.readValue(args(0), classOf[Spec])
     val spark = BenchSession.build(s.cores, appName = "graft-stage")
     val dir = graft.Flagship.stage(spark, s.convs, nFiles = s.files,
-      hotConvs = s.hotConvs, hotMult = s.hotMult, keyedByConv = s.keyedByConv,
-      slices = s.slices)
+      hotConvs = s.hotConvs, hotMult = s.hotMult, slices = s.slices)
     val staged = spark.read.parquet(dir)
     BenchRecord.emit(Staged(dir, staged.count(),
       graft.streaming.SessionJoin.pairBatch(staged).count()))

@@ -36,32 +36,31 @@ object Tmp {
     d.toString
   }
 
-  /** Whether `d`'s owner marker names a live process; false when it has
-    * no readable marker.
+  /** Whether `d`'s owner marker names a process that has exited; false
+    * when it has no readable marker (the dir is not a `dir` of ours).
     */
-  private def ownerAlive(d: java.io.File): Boolean =
+  private def ownerGone(d: java.io.File): Boolean =
     try {
       val pid = new String(Files.readAllBytes(d.toPath.resolve(OwnerFile)), US_ASCII).trim.toLong
-      ProcessHandle.of(pid).filter(_.isAlive).isPresent
+      !ProcessHandle.of(pid).filter(_.isAlive).isPresent
     } catch { case _: java.io.IOException | _: NumberFormatException => false }
 
-  /** Delete stale graft temp dirs (matching `prefixes`, last modified
-    * more than `olderThanMs` ago, and not owned by a live process) from
-    * the temp base. An OOM-killed benchmark run skips its own cleanup,
-    * and its staged corpora keep occupying tmpfs RAM — round 4's killed
-    * driver run left ~11 GB in /dev/shm, a standing memory-pressure tax
-    * on whatever ran next. The bench parent sweeps at startup; the owner
-    * check keeps a sweep from touching a concurrent run's live staging,
-    * however old, and the age guard covers dirs with no owner marker.
+  /** Delete stale temp dirs from the temp base: every dir whose owner
+    * marker names a process that has exited and that was last modified
+    * more than `olderThanMs` ago, whatever its name. An OOM-killed
+    * benchmark run skips its own cleanup, and its staged corpora keep
+    * occupying tmpfs RAM — round 4's killed driver run left ~11 GB in
+    * /dev/shm, a standing memory-pressure tax on whatever ran next. The
+    * bench parent sweeps at startup; the owner check keeps a sweep from
+    * touching a concurrent run's live staging, however old, and a dir
+    * without a marker is not ours to delete.
     */
-  def sweepStale(prefixes: Seq[String], olderThanMs: Long = 30 * 60 * 1000L,
-      baseDir: Option[String] = None): Long = {
+  def sweepStale(olderThanMs: Long = 30 * 60 * 1000L, baseDir: Option[String] = None): Long = {
     val cutoff = System.currentTimeMillis() - olderThanMs
     val kids = baseDir.map(new java.io.File(_)).getOrElse(base.toFile).listFiles()
     if (kids == null) 0L
     else kids.count { f =>
-      val stale = prefixes.exists(f.getName.startsWith) && f.lastModified() < cutoff &&
-        !ownerAlive(f)
+      val stale = f.lastModified() < cutoff && ownerGone(f)
       if (stale) delete(f.getPath)
       stale
     }.toLong

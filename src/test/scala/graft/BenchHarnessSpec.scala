@@ -6,7 +6,6 @@ import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.{BenchRecord, Fork, SweepBlock, TrialBlock}
 import graft.tools.BenchRecord.{mapper, nul}
@@ -18,13 +17,11 @@ import graft.tools.BenchRecord.{mapper, nul}
   * must still print one parseable line: every block completed before the
   * kill present, every other one named in `lost_blocks`.
   */
-class BenchHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BenchHarnessSpec extends AnyFunSuite with TempDirs {
 
   private def parse(s: String): JsonNode = mapper.readTree(s)
 
-  private val tmp = Files.createTempDirectory("bench-harness")
-
-  override def afterAll(): Unit = graft.util.Tmp.delete(tmp.toString)
+  private val tmp = tempDir("bench-harness")
 
   private def tmpDetail(): String =
     Files.createTempDirectory(tmp, "run").resolve("detail.json").toString

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -94,8 +93,8 @@ class CacheSpec extends SparkTestBase {
       CacheOp("k2", "get", null, ts(1)))      // never set → errored
     val mem = MemoryStream[CacheOp]
     mem.addData(ops)
-    val outDir = Files.createTempDirectory("cache-out").toString
-    val ckDir = Files.createTempDirectory("cache-ck").toString
+    val outDir = tempDir("cache-out").toString
+    val ckDir = tempDir("cache-ck").toString
     val q = CacheOps.streamApply(mem.toDS(), ttl, "10 seconds")
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckDir)
@@ -118,8 +117,8 @@ class CacheSpec extends SparkTestBase {
     val addOps = turns.map(t => CacheOp(t.conv_id, "add", t.text, t.ts, t.turn_idx))
     val mem = MemoryStream[CacheOp]
     mem.addData(addOps)
-    val outDir = Files.createTempDirectory("cadd-out").toString
-    val ckDir = Files.createTempDirectory("cadd-ck").toString
+    val outDir = tempDir("cadd-out").toString
+    val ckDir = tempDir("cadd-ck").toString
     val q = CacheOps.streamApply(mem.toDS(), ttlSeconds = 0L, lateness = "1 hour")
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckDir)

@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import graft.gen.TranscriptGen
@@ -47,8 +46,8 @@ class CepSpec extends SparkTestBase {
     val expected = Cep.episodes(input.toDF(), "ut+a")
       .as[(String, Int, String, Int)].collect().toSeq.sorted
 
-    val outDir = Files.createTempDirectory("cep-out").toString
-    val ckDir = Files.createTempDirectory("cep-ck").toString
+    val outDir = tempDir("cep-out").toString
+    val ckDir = tempDir("cep-ck").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Turn]
     val eps = Cep.episodesStreaming(mem.toDF(), "ut+a", gapSeconds = 1800L, lateness = "10 minutes")

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DynamicSpec extends AnyFunSuite with SparkTestBase {
 
-  private def freshDir(tag: String) = Files.createTempDirectory(tag).toString
+  private def freshDir(tag: String) = tempDir(tag).toString
 
   test("dynamic input: members land tagged; add/remove at runtime; hooks fire") {
     import spark.implicits._

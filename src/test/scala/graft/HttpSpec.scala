@@ -3,7 +3,6 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient => JHttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.functions._
@@ -28,7 +27,7 @@ class HttpSpec extends SparkTestBase {
       HttpResponse.BodyHandlers.ofString()).body()
 
   test("http_server stages one message per POST body, with request ids (http_server.go:58)") {
-    val spool = Files.createTempDirectory("http-spool").toString
+    val spool = tempDir("http-spool").toString
     val h = Http.serverSource(spool)
     try {
       post(h.url(), "hello world")
@@ -39,8 +38,8 @@ class HttpSpec extends SparkTestBase {
       assert(rows.map(_._2).distinct.length == 2)
       assert(rows.forall(_._2.matches("[0-9a-f-]{36}")))
       // streaming parity
-      val out = Files.createTempDirectory("http-out").toString
-      val ck = Files.createTempDirectory("http-ck").toString
+      val out = tempDir("http-out").toString
+      val ck = tempDir("http-ck").toString
       Http.stream(spark, spool).writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", ck)
         .trigger(Trigger.AvailableNow()).start().awaitTermination(30000)
@@ -50,10 +49,10 @@ class HttpSpec extends SparkTestBase {
   }
 
   test("sync_response returns the processed payload to the originating request (sync_response.go doc example)") {
-    val spool = Files.createTempDirectory("http-sync-spool").toString
+    val spool = tempDir("http-sync-spool").toString
     val h = Http.serverSource(spool, syncTimeoutMs = 30000)
     // pipeline: uppercase the staged stream, deliver via sync_response
-    val ck = Files.createTempDirectory("http-sync-ck").toString
+    val ck = tempDir("http-sync-ck").toString
     val q = Http.stream(spark, spool)
       .withColumn("content", upper(col("content")))
       .writeStream

@@ -35,14 +35,14 @@ class KafkaSemanticsSpec extends SparkTestBase {
     * offset order, strictly increasing mtimes in partition order.
     */
   private def stagePartitioned(parts: Int, rowsPer: Int): String = {
-    val dir = Files.createTempDirectory("kafka-like").toString
+    val dir = tempDir("kafka-like").toString
     (0 until parts).foreach { p =>
       val df = (0 until rowsPer).map(o => (s"part-$p", o.toLong)).toDF("pkey", "offset")
       df.coalesce(1).write.parquet(s"$dir/f$p")
       Thread.sleep(5) // distinct mtimes so replay order is deterministic
     }
     // one flat dir of files, like a staged topic
-    val flat = Files.createTempDirectory("kafka-like-flat").toString
+    val flat = tempDir("kafka-like-flat").toString
     var i = 0
     (0 until parts).foreach { p =>
       val src = new java.io.File(s"$dir/f$p").listFiles()
@@ -73,7 +73,7 @@ class KafkaSemanticsSpec extends SparkTestBase {
       }
     }
     val q = tapped.writeStream.format("noop")
-      .option("checkpointLocation", Files.createTempDirectory("kl-ck").toString)
+      .option("checkpointLocation", tempDir("kl-ck").toString)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
 
@@ -95,8 +95,8 @@ class KafkaSemanticsSpec extends SparkTestBase {
 
   test("bounded in-flight window commits contiguously and resumes exactly-once") {
     val inDir = stagePartitioned(parts = 6, rowsPer = 100)
-    val outDir = Files.createTempDirectory("kl-out").toString
-    val ckDir = Files.createTempDirectory("kl-ck2").toString
+    val outDir = tempDir("kl-out").toString
+    val ckDir = tempDir("kl-ck2").toString
     val fpt = 2 // checkpoint_limit analogue: ≤2 files in flight per commit
     def run(): Unit = {
       val stream = spark.readStream

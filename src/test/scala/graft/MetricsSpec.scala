@@ -41,13 +41,13 @@ class MetricsSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("streaming tap: metrics accumulate per micro-batch partition, counts exact") {
-    val srcDir = Files.createTempDirectory("tapstream").toString
+    val srcDir = tempDir("tapstream").toString
     Files.write(java.nio.file.Paths.get(srcDir, "a.txt"), "1\n2\n3".getBytes)
     val acc = Metrics.partitionAccumulator(spark, "tap-stream")
     val stream = spark.readStream.text(srcDir)
     val tapped = Metrics.tap(stream.repartition(2), "stage1", acc)
     val q = tapped.writeStream.format("noop")
-      .option("checkpointLocation", Files.createTempDirectory("tapckpt").toString)
+      .option("checkpointLocation", tempDir("tapckpt").toString)
       .start()
     try {
       q.processAllAvailable()

@@ -77,7 +77,7 @@ class NativeFunctionsSpec extends SparkTestBase {
     */
   private def bothPaths(): Seq[(String, DataFrame)] = {
     val local = texts.toDF("text")
-    val dir = java.nio.file.Files.createTempDirectory("native").toString + "/d"
+    val dir = tempDir("native").toString + "/d"
     local.write.parquet(dir)
     Seq("interpreted" -> local, "codegen" -> spark.read.parquet(dir))
   }
@@ -159,7 +159,7 @@ class NativeFunctionsSpec extends SparkTestBase {
 
   test("expressions participate in WholeStageCodegen") {
     // a file-backed frame so ConvertToLocalRelation can't pre-evaluate
-    val dir = java.nio.file.Files.createTempDirectory("native").toString + "/d"
+    val dir = tempDir("native").toString + "/d"
     texts.toDF("text").write.parquet(dir)
     val df = spark.read.parquet(dir).filter(NativeFunctions.tokenCount(col("text")) > 1)
     val plan = df.queryExecution.executedPlan.toString

@@ -49,8 +49,8 @@ class RateLimitSpec extends SparkTestBase {
     def turn(i: Int, s: Long) = Turn(s"c$i", i, "user", "t", null, ts(s))
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[Turn]
-    val outDir = java.nio.file.Files.createTempDirectory("rl-out").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("rl-ck").toString
+    val outDir = tempDir("rl-out").toString
+    val ckDir = tempDir("rl-ck").toString
     def runOnce(): Unit = {
       val q = RateLimit.streamAnnotate(mem.toDS(), count = 2, intervalSeconds = 60L, "10 seconds")
         .writeStream.format("parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.ReadUntil
@@ -14,14 +13,14 @@ class ReadUntilSpec extends SparkTestBase {
 
   test("stops at the triggering row: it is included, everything after is dropped") {
     // 30 rows staged as 3 parquet files of 10 (file order = batch order)
-    val dir = Files.createTempDirectory("ru-in").toString
+    val dir = tempDir("ru-in").toString
     (0 until 3).foreach { f =>
       (f * 10 until (f + 1) * 10).toDF("v").coalesce(1)
         .write.mode("append").parquet(dir)
       Thread.sleep(60) // distinct mtimes: file order == batch order
     }
-    val outDir = Files.createTempDirectory("ru-out").toString
-    val ck = Files.createTempDirectory("ru-ck").toString
+    val outDir = tempDir("ru-out").toString
+    val ck = tempDir("ru-ck").toString
     val stream = spark.readStream.schema("v INT")
       .option("maxFilesPerTrigger", 1).parquet(dir)
     val q = ReadUntil.run(stream, col("v") === 14, Seq(col("v")),

@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import graft.gen.TranscriptGen
@@ -57,8 +56,8 @@ class SessionJoinSpec extends SparkTestBase {
     val expected = sortPairs(SessionJoin.pairBatch(input.toDF(), gap)
       .as[PairedTurn].collect().toSeq)
 
-    val outDir = Files.createTempDirectory("sj-out").toString
-    val ckDir = Files.createTempDirectory("sj-ck").toString
+    val outDir = tempDir("sj-out").toString
+    val ckDir = tempDir("sj-ck").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Turn]
     val paired = SessionJoin.pairStreaming(mem.toDS(), gap, "10 minutes")
@@ -117,8 +116,8 @@ class SessionJoinSpec extends SparkTestBase {
     val expected = sortPairs(SessionJoin.pairBatch(input.toDF(), gap)
       .as[PairedTurn].collect().toSeq)
 
-    val outDir = Files.createTempDirectory("sje-out").toString
-    val ckDir = Files.createTempDirectory("sje-ck").toString
+    val outDir = tempDir("sje-out").toString
+    val ckDir = tempDir("sje-ck").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Turn]
     def run(data: Seq[Turn]): Unit = {
@@ -151,8 +150,8 @@ class SessionJoinSpec extends SparkTestBase {
     val flush1 = Turn("zz1", 0, "user", "f", null, new Timestamp(20000L * 1000))
     val flush2 = Turn("zz2", 0, "user", "f", null, new Timestamp(99999L * 1000))
 
-    val outDir = Files.createTempDirectory("sjn-out").toString
-    val ckDir = Files.createTempDirectory("sjn-ck").toString
+    val outDir = tempDir("sjn-out").toString
+    val ckDir = tempDir("sjn-ck").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Turn]
     val paired = SessionJoin.pairStreaming(mem.toDS(), gap, "1 minute")

@@ -191,7 +191,7 @@ class SimilaritySpec extends SparkTestBase {
     val target = Seq.fill(16)(rnd.nextFloat() - 0.5f)
     val rows = ((1 to 300).map(i => (i.toLong, Seq.fill(16)(rnd.nextFloat() - 0.5f)))
       :+ (999L, target))
-    val dir = java.nio.file.Files.createTempDirectory("ann-index").toString + "/idx"
+    val dir = tempDir("ann-index").toString + "/idx"
     Similarity.writeBucketedIndex(rows.toDF("id", "emb"), col("id"), col("emb"),
       bits = 4, path = dir)
     val probe = Similarity.annTopKIndexed(spark, dir, target, k = 1, bits = 4)

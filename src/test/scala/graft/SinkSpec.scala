@@ -11,7 +11,7 @@ import graft.streaming.Sink
 class SinkSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def freshDir() = Files.createTempDirectory("sink-spec").toString
+  private def freshDir() = tempDir("sink-spec").toString
 
   test("replayed batchId commits nothing twice") {
     val out = freshDir()

@@ -41,7 +41,7 @@ class SocketSpec extends SparkTestBase {
   }
 
   test("tcp socket_server stages each connection and the stream reads it (socket_server.go)") {
-    val spool = Files.createTempDirectory("sock-spool").toString
+    val spool = tempDir("sock-spool").toString
     val h = Socket.serverSource("tcp", null, spool)
     try {
       sendLines("tcp", h.address, Seq("a1", "a2"))
@@ -49,8 +49,8 @@ class SocketSpec extends SparkTestBase {
       awaitSpool(spool, 2)
       assert(Socket.batch(spark, spool).as[String].collect().sorted.toSeq == Seq("a1", "a2", "b1"))
       // streaming form over the same spool
-      val out = Files.createTempDirectory("sock-out").toString
-      val ck = Files.createTempDirectory("sock-ck").toString
+      val out = tempDir("sock-out").toString
+      val ck = tempDir("sock-ck").toString
       Socket.stream(spark, spool).writeStream
         .format("parquet").option("path", out)
         .option("checkpointLocation", ck)
@@ -60,7 +60,7 @@ class SocketSpec extends SparkTestBase {
   }
 
   test("unix socket_server round-trips (Java 17 AF_UNIX)") {
-    val spool = Files.createTempDirectory("sock-spool-u").toString
+    val spool = tempDir("sock-spool-u").toString
     val h = Socket.serverSource("unix", null, spool)
     try {
       sendLines("unix", h.address, Seq("u1", "u2", "u3"))
@@ -70,7 +70,7 @@ class SocketSpec extends SparkTestBase {
   }
 
   test("udp socket_server: one datagram = one message") {
-    val spool = Files.createTempDirectory("sock-spool-d").toString
+    val spool = tempDir("sock-spool-d").toString
     val h = Socket.serverSource("udp", null, spool)
     try {
       val Array(host, port) = h.address.split(":")

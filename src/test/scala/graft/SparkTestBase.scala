@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-trait SparkTestBase extends AnyFunSuite {
+trait SparkTestBase extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkTestBase.session
 }
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -27,8 +26,8 @@ class StreamingParitySpec extends SparkTestBase {
   private def runStream(pipeline: DataFrame => DataFrame, nChunks: Int): DataFrame = {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Turn]
-    val outDir = Files.createTempDirectory("parity-out").toString
-    val ckDir = Files.createTempDirectory("parity-ck").toString
+    val outDir = tempDir("parity-out").toString
+    val ckDir = tempDir("parity-ck").toString
     val sorted = input.sortBy(_.ts.getTime)
     val flushTs = new java.sql.Timestamp(input.map(_.ts.getTime).max + 48L * 3600 * 1000)
     val chunks = sorted.grouped(math.max(1, sorted.size / nChunks)).toSeq :+
@@ -65,8 +64,8 @@ class StreamingParitySpec extends SparkTestBase {
     // duplicate every turn (same conv/turn/ts) to force drops
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Turn]
-    val outDir = Files.createTempDirectory("dd-out").toString
-    val ckDir = Files.createTempDirectory("dd-ck").toString
+    val outDir = tempDir("dd-out").toString
+    val ckDir = tempDir("dd-ck").toString
     val doubled = (input ++ input).sortBy(_.ts.getTime)
     mem.addData(doubled)
     val dd = Dedupe.streamingDedupe(mem.toDS().toDF(), "ts", "1 hour",

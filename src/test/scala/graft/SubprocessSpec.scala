@@ -50,6 +50,23 @@ class SubprocessSpec extends SparkTestBase {
     assert(out.drop(2).toSeq == Seq(("B", null), ("C", null)))
   }
 
+  test("a child that stops reading fails the next row; a fresh child serves the row after it") {
+    // each child answers one line, then closes its stdin and lingers, so
+    // the write of the next row fails; its `sleep` starts before the reply
+    val cmd = Seq("sh", "-c", """read l; exec 0<&-; sleep 37 & echo "$l"; wait""")
+    val out = Subprocess.pipe(df("a", "b", "c", "d").coalesce(1), cmd)
+      .orderBy("id").select("text", Errors.ErrCol).as[(String, String)].collect()
+    assert(out(0) == (("a", null)))
+    assert(out(1)._1 == "b" && out(1)._2 != null)
+    assert(out(2) == (("c", null)))
+    assert(out(3)._1 == "d" && out(3)._2 != null)
+    def lingering() = ProcessHandle.allProcesses().filter(
+      _.info().commandLine().orElse("").contains("sleep 37")).count()
+    val deadline = System.nanoTime() + 5000000000L
+    while (lingering() > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(lingering() == 0, "a replaced child's sleep is still running")
+  }
+
   test("netstring codec round-trips through cat (netstringSplitFunc)") {
     val out = Subprocess.pipe(df("hello world", "x,y:z", ""),
       Seq("cat"), codecSend = "netstring", codecRecv = "netstring")

@@ -13,7 +13,7 @@ class TopologySpec extends SparkTestBase {
   import spark.implicits._
 
   test("builder chains processors in config order over the input") {
-    val dir = Files.createTempDirectory("topo").toString + "/d"
+    val dir = tempDir("topo").toString + "/d"
     Seq(1, 2, 3, 4).toDF("v").write.parquet(dir)
     val out = Topology.fromParquet(dir)
       .proc(_.filter(col("v") > 1))
@@ -24,8 +24,8 @@ class TopologySpec extends SparkTestBase {
   }
 
   test("fanIn merges inputs like the fan_in broker, aligning schemas") {
-    val d1 = Files.createTempDirectory("t1").toString + "/d"
-    val d2 = Files.createTempDirectory("t2").toString + "/d"
+    val d1 = tempDir("t1").toString + "/d"
+    val d2 = tempDir("t2").toString + "/d"
     Seq((1, "a")).toDF("v", "s").write.parquet(d1)
     Seq(2, 3).toDF("v").write.parquet(d2)
     val merged = Topology.fanIn(Seq(
@@ -35,8 +35,8 @@ class TopologySpec extends SparkTestBase {
   }
 
   test("switchSink routes rows to the first matching case's sink") {
-    val outA = Files.createTempDirectory("sa").toString
-    val outB = Files.createTempDirectory("sb").toString
+    val outA = tempDir("sa").toString
+    val outB = tempDir("sb").toString
     val batch = Seq(1, 5, 20, 25).toDF("v")
     Topology.switchSink(Seq(
       (col("v") < 10) -> Sink.writeBatchIdempotent(outA),
@@ -52,7 +52,7 @@ class TopologySpec extends SparkTestBase {
     // Topologies with different pipelines over the same staged input,
     // both StreamingQueries live at once, each with its own checkpoint
     // and exactly-once sink.
-    val work = Files.createTempDirectory("streamsmode").toString
+    val work = tempDir("streamsmode").toString
     Seq(1, 2, 3, 4, 5, 6).toDF("v").repartition(2).write.parquet(s"$work/in")
     def topo(name: String, p: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) =
       Topology.fromParquetStream(s"$work/in", "v INT").proc(p)
@@ -67,7 +67,7 @@ class TopologySpec extends SparkTestBase {
   }
 
   test("csv file source reads batch and streaming, gzip transparently (codec chain)") {
-    val work = Files.createTempDirectory("csvsrc").toString
+    val work = tempDir("csvsrc").toString
     val in = s"$work/in"; Files.createDirectories(java.nio.file.Paths.get(in))
     // one plain csv + one gzipped csv in the same directory — the
     // reference's file input with `gzip`/`csv` codecs reads both
@@ -92,7 +92,7 @@ class TopologySpec extends SparkTestBase {
   }
 
   test("lines file source: one row per line with the reference's path metadata") {
-    val work = Files.createTempDirectory("linesrc").toString
+    val work = tempDir("linesrc").toString
     val in = s"$work/in"; Files.createDirectories(java.nio.file.Paths.get(in))
     Files.write(java.nio.file.Paths.get(s"$in/log1.txt"),
       "first line\nsecond line\n".getBytes("UTF-8"))

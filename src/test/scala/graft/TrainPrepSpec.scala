@@ -142,10 +142,10 @@ class TrainPrepSpec extends SparkTestBase {
   test("wordNgrams matches the token-count word contract") {
     import org.apache.spark.sql.functions._
     val got = Seq("One two, THREE four five").toDF("t")
-      .select(graft.ops.TrainPrep.wordNgrams(col("t"), 3)).as[Seq[String]].head()
+      .select(graft.ops.TextOps.wordNgrams(graft.ops.TextOps.words(col("t")), 3)).as[Seq[String]].head()
     assert(got == Seq("one two three", "two three four", "three four five"))
     val short = Seq("one two").toDF("t")
-      .select(graft.ops.TrainPrep.wordNgrams(col("t"), 3)).as[Seq[String]].head()
+      .select(graft.ops.TextOps.wordNgrams(graft.ops.TextOps.words(col("t")), 3)).as[Seq[String]].head()
     assert(short.isEmpty)
   }
 

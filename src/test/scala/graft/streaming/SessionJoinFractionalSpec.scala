@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import graft.model.{BufTurn, PairedTurn, Turn}
@@ -56,8 +55,8 @@ class SessionJoinFractionalSpec extends graft.SparkTestBase {
     assert(expected.map(p => (p.session_id, p.user_turn_idx, p.reply_turn_idx)) ==
       Seq((0L, 0, 1), (0L, 0, 2)))
 
-    val outDir = Files.createTempDirectory("sjf-out").toString
-    val ckDir = Files.createTempDirectory("sjf-ck").toString
+    val outDir = tempDir("sjf-out").toString
+    val ckDir = tempDir("sjf-ck").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Turn]
     val paired = SessionJoin.pairStreaming(mem.toDS(), gap, "10 minutes")
