@@ -28,13 +28,14 @@ import graft.tools.TrialBlock.Config
   *  - sweep: every SparkEntry query over SPARK_GRAFT_SF_DIR;
   *  - flagship: the streaming session-join pipeline at node width, a
   *    throughput config and a small-trigger latency config;
-  *  - scaling: the north_rule N→4N proxy — one block per (cores, input)
-  *    level, each pair's input sized to its high level, identical
-  *    partitioning at both levels, efficiency = (tps_hi/tps_lo)/(hi/lo);
-  *  - skew: hot conversations through the unsalted and salted join, plus
-  *    the small-trigger probe;
-  *  - skew_heavy: conv-keyed, time-sliced ingest with the heavy per-turn
-  *    map, where salting pays;
+  *  - scaling: the north_rule N→4N proxy — one block per (lo, hi) pair,
+  *    its two core levels two configs run interleaved over one input
+  *    sized to the high level, identical partitioning at both levels,
+  *    efficiency = (tps_hi/tps_lo)/(hi/lo);
+  *  - skew: a hot conversation through conv-keyed, time-sliced ingest,
+  *    unsalted and salted, under the light and the heavy per-turn map
+  *    (salting costs under the first and pays under the second); the
+  *    compact line's `skew` reads the light pair, `skew_heavy` the heavy;
   *  - sustained: one long trial over a disk-staged corpus sized from the
   *    child heap, block cache sized to match.
   *
@@ -67,25 +68,19 @@ object Bench {
     */
   val ScaleConvsPerCore = 160000L
   val DefaultCacheMB = 512
-  /** Hot conversations at ~20000× the median turn count: ~44 % of all
-    * turns land in 4 keys, so one hot key is ~3× one partition's load.
-    */
-  val Skew = StageBlock.Spec(convs = 100000L, files = StagedFiles, hotConvs = 4, hotMult = 20000)
-  val SkewSalt = 8
   /** One hot conversation at 50000×, conv-keyed into 4 event-time slabs
-    * of 8 files, one slab per trigger.
+    * of 8 files, one slab per trigger; salted configs spread it over
+    * SkewSalt tasks.
     */
-  val SkewHeavy = StageBlock.Spec(convs = 50000L, files = 32, hotConvs = 1, hotMult = 50000,
+  val Skew = StageBlock.Spec(convs = 50000L, files = 32, hotConvs = 1, hotMult = 50000,
     slices = 4)
+  val SkewSalt = 8
 
   final case class Params(sfDir: String, cpus: Int, heapMB: Int, detailPath: String) {
     val convs: Long = ConvsPerCore * cpus
     /** (lo, hi) core levels; each pair replays scaleConvs(hi) convs. */
     val pairs: Seq[(Int, Int)] = (if (cpus >= 8) Seq((2, 8)) else Nil) :+ ((1, 4))
     def scaleConvs(hi: Int): Long = ScaleConvsPerCore * hi
-    val scaleCombos: Seq[(Int, Long)] = pairs.flatMap { case (lo, hi) =>
-      Seq((lo, scaleConvs(hi)), (hi, scaleConvs(hi)))
-    }.distinct.sortBy(identity)
     /** Fixed across levels: a cluster resize changes executors, not
       * partitioning.
       */
@@ -95,9 +90,9 @@ object Bench {
       */
     val sustainedConvs: Long = 100L * heapMB
     val sustainedCacheMB: Int = heapMB / 8
-    def scalingBlock(cores: Int, convs: Long): String = s"scaling_c${cores}_n$convs"
+    def pairBlock(lo: Int, hi: Int): String = s"scaling_c${lo}_c$hi"
     val blocks: Seq[String] = Seq("sweep", "flagship") ++
-      scaleCombos.map((scalingBlock _).tupled) ++ Seq("skew", "skew_heavy", "sustained")
+      pairs.map((pairBlock _).tupled) ++ Seq("skew", "sustained")
   }
 
   /** A quarter of MemTotal, clamped to 2–8 GB (RocksDB state is native
@@ -118,7 +113,7 @@ object Bench {
   def stageDeadlineSec(s: StageBlock.Spec): Long = 180 + s.convs / 500
   def trialDeadlineSec(s: TrialBlock.Spec): Long =
     300 + s.configs.map { c =>
-      val perSec = (if (c.heavyMap) 1000L else 3000L) * s.cores
+      val perSec = (if (c.heavyMap) 1000L else 3000L) * c.cores
       60 + s.trials * (60 + s.turns / perSec)
     }.sum
   /** Two passes (warm-up + timed) over every query, each budgeted 5 s
@@ -144,6 +139,9 @@ object Bench {
   private def best(config: String, field: String = "turns_per_sec"): Seq[String] =
     Seq("configs", config, "best", field)
 
+  /** A scaling pair's config at `cores`. */
+  private def level(cores: Int): String = s"c$cores"
+
   /** Assemble the (detail record, compact line) pair from whatever blocks
     * the record holds. Total function of the record: lost blocks become
     * nulls plus a `lost_blocks` entry, never exceptions.
@@ -151,16 +149,14 @@ object Bench {
   def assemble(rec: BenchRecord, p: Params): (ObjectNode, ObjectNode) = {
     val scaling = mapper.createArrayNode()
     p.pairs.foreach { case (lo, hi) =>
-      val (bLo, bHi) = (p.scalingBlock(lo, p.scaleConvs(hi)), p.scalingBlock(hi, p.scaleConvs(hi)))
-      val (tLo, tHi) = (rec.field(bLo, best("throughput"): _*), rec.field(bHi, best("throughput"): _*))
-      val ok = Seq(bLo, bHi).map(rec.field(_, "sanity_ok"))
+      val b = p.pairBlock(lo, hi)
+      val (tLo, tHi) = (rec.field(b, best(level(lo)): _*), rec.field(b, best(level(hi)): _*))
       val pair = scaling.addObject().put("lo", lo).put("hi", hi).put("convs", p.scaleConvs(hi))
       pair.set[ObjectNode]("tps_lo", tLo).set[ObjectNode]("tps_hi", tHi)
       if (tLo.isNumber && tHi.isNumber && tLo.asDouble > 0)
         pair.put("efficiency", round3((tHi.asDouble / tLo.asDouble) / (hi.toDouble / lo)))
       else pair.set[ObjectNode]("efficiency", nul)
-      if (ok.forall(_.isBoolean)) pair.put("sanity_ok", ok.forall(_.asBoolean))
-      else pair.set[ObjectNode]("sanity_ok", nul)
+      pair.set[ObjectNode]("sanity_ok", rec.field(b, "sanity_ok"))
     }
     val lost = mapper.valueToTree[JsonNode](rec.lost)
     def block(name: String): JsonNode = rec.get(name).getOrElse(nul)
@@ -169,11 +165,8 @@ object Bench {
       .put("convs", p.convs).put("trials", Trials).put("files", StagedFiles).put("fpt", Fpt)
       .put("lat_fpt", LatFpt).put("sustained_convs", p.sustainedConvs)
       .put("sustained_block_cache_mb", p.sustainedCacheMB)
-    Seq("sweep", "flagship", "skew", "skew_heavy", "sustained")
-      .foreach(n => detail.set[ObjectNode](n, block(n)))
-    val combos = obj()
-    p.scaleCombos.foreach { case (c, n) => combos.set[ObjectNode](s"c${c}_n$n", block(p.scalingBlock(c, n))) }
-    detail.set[ObjectNode]("scaling", obj().set[ObjectNode]("combos", combos).set("pairs", scaling))
+    p.blocks.foreach(n => detail.set[ObjectNode](n, block(n)))
+    detail.set[ObjectNode]("scaling", scaling)
     detail.set[ObjectNode]("wall_sec", rec.wallSec.foldLeft(obj()) { case (o, (n, s)) => o.put(n, round3(s)) })
     detail.set[ObjectNode]("lost_blocks", lost)
 
@@ -192,11 +185,10 @@ object Bench {
       .set[ObjectNode]("scaling", scaling)
       .set[ObjectNode]("skew", pick(rec, "skew",
         Seq("sanity_ok" -> Seq("sanity_ok")) ++
-          Seq("fmgws", "fmgws_salted", s"fmgws_fpt$LatFpt").map(n => n -> best(n)): _*))
-      .set[ObjectNode]("skew_heavy", pick(rec, "skew_heavy",
+          Seq("light_unsalted", "light_salted").map(n => n -> best(n)): _*))
+      .set[ObjectNode]("skew_heavy", pick(rec, "skew",
         Seq("sanity_ok" -> Seq("sanity_ok"), "pair_share" -> Seq("pair_share")) ++
-          Seq("light_unsalted", "light_salted", "heavy_unsalted", "heavy_salted")
-            .map(n => n -> best(n)): _*))
+          Seq("heavy_unsalted", "heavy_salted").map(n => n -> best(n)): _*))
       .set[ObjectNode]("sustained", pick(rec, "sustained",
         "turns_per_sec" -> best("throughput"), "max_state_rows" -> best("throughput", "max_state_rows"),
         "pairs" -> best("throughput", "pairs"), "batch_pairs" -> Seq("spec", "batch_pairs"),
@@ -238,45 +230,38 @@ object Bench {
     }
 
     staged(StageBlock.Spec(2000L, Fpt)) { warm =>
-      def trial(name: String, in: Option[StageBlock.Staged], cores: Int, parts: Int,
-          trials: Int, cacheMB: Int, configs: Config*): Unit =
+      def trial(name: String, in: Option[StageBlock.Staged], parts: Int, trials: Int,
+          cacheMB: Int, configs: Config*): Unit =
         rec.record(name, for {
           s <- in
           w <- warm
-          spec = TrialBlock.Spec(s.dir, w.dir, cores, parts, trials, cacheMB, s.turns,
-            s.batchPairs, configs)
+          spec = TrialBlock.Spec(s.dir, w.dir, parts, trials, cacheMB, s.turns, s.batchPairs,
+            configs)
           r <- Fork.json("graft.tools.TrialBlock", Seq(mapper.writeValueAsString(spec)),
             p.heapMB, trialDeadlineSec(spec))._1
         } yield r)
-      val throughput = Config("throughput", Fpt)
+      val throughput = Config("throughput", p.cpus, Fpt)
+      val onDisk = Map("GRAFT_TMP_BASE" -> "/tmp") // large corpora: disk, not tmpfs RAM
 
       staged(StageBlock.Spec(p.convs, StagedFiles)) { in =>
-        trial("flagship", in, p.cpus, 2 * p.cpus, Trials, DefaultCacheMB,
-          throughput, Config("latency", LatFpt))
+        trial("flagship", in, 2 * p.cpus, Trials, DefaultCacheMB,
+          throughput, Config("latency", p.cpus, LatFpt))
       }
-      // the scaling corpora go to disk, not tmpfs RAM
-      p.scaleCombos.groupBy(_._2).toSeq.sortBy(_._1).foreach { case (n, combos) =>
-        staged(StageBlock.Spec(n, StagedFiles), Map("GRAFT_TMP_BASE" -> "/tmp")) { in =>
-          combos.foreach { case (c, _) =>
-            trial(p.scalingBlock(c, n), in, c, p.scaleParts, Trials, DefaultCacheMB, throughput)
-          }
+      p.pairs.foreach { case (lo, hi) =>
+        staged(StageBlock.Spec(p.scaleConvs(hi), StagedFiles), onDisk) { in =>
+          trial(p.pairBlock(lo, hi), in, p.scaleParts, Trials, DefaultCacheMB,
+            Seq(lo, hi).map(c => Config(level(c), c, Fpt)): _*)
         }
       }
       staged(Skew) { in =>
-        trial("skew", in, p.cpus, 2 * p.cpus, Trials, DefaultCacheMB,
-          Config("fmgws", Fpt), Config("fmgws_salted", Fpt, SkewSalt),
-          Config(s"fmgws_fpt$LatFpt", LatFpt))
+        val fpt = Skew.files / Skew.slices // one event-time slab per trigger
+        trial("skew", in, 2 * p.cpus, Trials, DefaultCacheMB,
+          Config("light_unsalted", p.cpus, fpt), Config("light_salted", p.cpus, fpt, SkewSalt),
+          Config("heavy_unsalted", p.cpus, fpt, heavyMap = true),
+          Config("heavy_salted", p.cpus, fpt, SkewSalt, heavyMap = true))
       }
-      staged(SkewHeavy) { in =>
-        val fpt = SkewHeavy.files / SkewHeavy.slices // one event-time slab per trigger
-        trial("skew_heavy", in, p.cpus, 2 * p.cpus, Trials, DefaultCacheMB,
-          Config("light_unsalted", fpt), Config("light_salted", fpt, SkewSalt),
-          Config("heavy_unsalted", fpt, heavyMap = true),
-          Config("heavy_salted", fpt, SkewSalt, heavyMap = true))
-      }
-      // the sustained corpus goes to disk, not tmpfs RAM
-      staged(StageBlock.Spec(p.sustainedConvs, StagedFiles), Map("GRAFT_TMP_BASE" -> "/tmp")) { in =>
-        trial("sustained", in, p.cpus, 2 * p.cpus, 1, p.sustainedCacheMB, throughput)
+      staged(StageBlock.Spec(p.sustainedConvs, StagedFiles), onDisk) { in =>
+        trial("sustained", in, 2 * p.cpus, 1, p.sustainedCacheMB, throughput)
       }
     }
 

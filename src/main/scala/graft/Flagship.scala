@@ -48,7 +48,7 @@ object Flagship {
     * input shape) hands the engine. Under hot-key skew that concentrates
     * a hot conversation's per-turn map work in ONE scan task, which is
     * exactly the regime the salted repartition exists for (Bench's
-    * skew_heavy block). The replay stays TIME-COHERENT: rows are cut
+    * skew block). The replay stays TIME-COHERENT: rows are cut
     * into `slices` equal-frequency event-time slabs, each slab conv-keyed
     * into nFiles/slices files and written in slab order, so a
     * maxFilesPerTrigger = nFiles/slices replay advances every

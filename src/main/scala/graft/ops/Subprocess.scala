@@ -76,8 +76,8 @@ object Subprocess {
     */
   private[ops] final class Child(cmd: Seq[String], codecRecv: String, maxBuf: Int,
       timeoutSec: Int) extends Errors.Resource {
-    private val pb = new ProcessBuilder(cmd: _*)
-    private val process = pb.start()
+    // its own process group, so a kill takes whatever it forked too
+    private val process = graft.util.Proc.groupLeader(cmd).start()
     private val stdin: OutputStream = process.getOutputStream
     // (isErr, frame)
     private val replies = new LinkedBlockingQueue[(Boolean, Array[Byte])]()

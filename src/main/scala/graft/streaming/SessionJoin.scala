@@ -29,7 +29,8 @@ object SessionJoin {
   val DefaultGapSeconds = 1800L
 
   /** Reference semantics on a single conversation, pure and total:
-    * sort by (ts, turn_idx); a new session starts when the gap to the
+    * sort by (ts, turn_idx) — ts at full precision, like the batch form's
+    * window order (`before`); a new session starts when the gap to the
     * previous turn exceeds `gapSeconds`; each assistant/tool turn pairs
     * with the latest user turn seen earlier in its session.
     *
@@ -38,7 +39,7 @@ object SessionJoin {
     * implementations agree on sub-second timestamps.
     */
   def pairTurns(turns: Seq[Turn], gapSeconds: Long = DefaultGapSeconds): Seq[PairedTurn] = {
-    val sorted = turns.sortBy(t => (t.ts.getTime, t.turn_idx))
+    val sorted = turns.sortWith((a, b) => before(a.ts, a.turn_idx, b.ts, b.turn_idx))
     var sessionId = -1L
     var prevTs = Long.MinValue
     var lastUser: Turn = null
@@ -56,6 +57,19 @@ object SessionJoin {
           t.turn_idx, t.role, t.text, t.tool, lastUser.ts, t.ts)
     }
     out.result()
+  }
+
+  /** (ts, turn_idx) order with ts at full precision: `Timestamp.compareTo`
+    * compares the epoch millisecond, then the nanos, so it keeps the
+    * microseconds a Spark timestamp (and the state envelope) carries and
+    * `getTime` alone drops — two turns in one millisecond would otherwise
+    * fall back to turn_idx order where the batch form orders them by ts.
+    * A comparison, not a tuple key: it sorts without allocating.
+    */
+  private def before(aTs: java.sql.Timestamp, aIdx: Int, bTs: java.sql.Timestamp,
+      bIdx: Int): Boolean = {
+    val c = aTs.compareTo(bTs)
+    c < 0 || (c == 0 && aIdx < bIdx)
   }
 
   /** Batch/window-function form — one shuffle on conv_id shared by both
@@ -220,8 +234,8 @@ object SessionJoin {
     if (buf.isEmpty) return (Nil, Nil, 0L)
     val minTs = buf.iterator.map(_.ts.getTime).min
     if (wm <= 0 || wm < closePointMs(minTs, gapSeconds)) return (Nil, buf, minTs)
-    val sorted = buf.sortBy(t => (t.ts.getTime, t.turn_idx))
-    // session-split (same rule as sessionCount), collecting segments
+    val sorted = buf.sortWith((a, b) => before(a.ts, a.turn_idx, b.ts, b.turn_idx))
+    // session-split (same rule as pairTurns), collecting segments
     val segs = scala.collection.mutable.ListBuffer.empty[List[BufTurn]]
     var cur = scala.collection.mutable.ListBuffer.empty[BufTurn]
     var prev = Long.MinValue

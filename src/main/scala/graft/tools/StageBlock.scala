@@ -16,7 +16,7 @@ package graft.tools
 object StageBlock {
 
   /** `slices` > 1 gives the conv-keyed, time-sliced layout of the
-    * skew-heavy block (`Flagship.stage`); `cores` is the staging
+    * skew block (`Flagship.stage`); `cores` is the staging
     * session's width.
     */
   final case class Spec(convs: Long, files: Int, hotConvs: Int = 0,

@@ -3,9 +3,9 @@ package graft.tools
 import scala.collection.immutable.ListMap
 import graft.Flagship
 
-/** Every streaming measurement block — flagship, each scaling level,
-  * skew, skew-heavy, sustained — is one run of this child over a staged
-  * input with its own list of configs. It prints one JSON
+/** Every streaming measurement block — flagship, each scaling pair,
+  * skew, sustained — is one run of this child over a staged input with
+  * its own list of configs. It prints one JSON
   * [[TrialBlock.Report]]: its spec, each config's best run (a
   * `Flagship.Result`), every trial's turns/s, and the pair-count sanity
   * gate.
@@ -16,22 +16,24 @@ import graft.Flagship
   * — ambient drift over the block's minutes would otherwise hit later
   * configs harder, and the per-run session keeps one config's
   * state-store residue out of the next measurement. Each config reports
-  * its BEST trial (noise on a shared host is strictly subtractive).
+  * its BEST trial (noise on a shared host is strictly subtractive). A
+  * scaling pair's two core levels are two configs of one block, so the
+  * drift between them is interleaved away like any other configs'.
   *
   * args: one JSON [[TrialBlock.Spec]]
   */
 object TrialBlock {
 
-  /** `salt` > 0 adds the hot-key salted repartition, `heavyMap` the
-    * training-prep map chain (`Flagship.runStaged`).
+  /** `cores` is the run's session width, `salt` > 0 adds the hot-key
+    * salted repartition, `heavyMap` the training-prep map chain
+    * (`Flagship.runStaged`).
     */
-  final case class Config(name: String, filesPerTrigger: Int, salt: Int = 0,
+  final case class Config(name: String, cores: Int, filesPerTrigger: Int, salt: Int = 0,
       heavyMap: Boolean = false)
 
   /** `turns`/`batchPairs` are the staged input's own counts (StageBlock). */
-  final case class Spec(dir: String, warmDir: String, cores: Int, partitions: Int,
-      trials: Int, blockCacheMB: Int, turns: Long, batchPairs: Long,
-      configs: Seq[Config])
+  final case class Spec(dir: String, warmDir: String, partitions: Int, trials: Int,
+      blockCacheMB: Int, turns: Long, batchPairs: Long, configs: Seq[Config])
 
   /** A config's best run and every run's turns/s. */
   final case class Trials(best: Flagship.Result, trialsTps: Seq[Double])
@@ -42,10 +44,11 @@ object TrialBlock {
   /** The emission sanity gate, as the list of its failures (empty =
     * pass). A bounded replay emits the batch-oracle pairs whose session
     * the final watermark closed, so every run must see every staged
-    * turn, every config must emit the SAME pairs (salt, map and trigger
-    * size never change join output), and that count must be at least
-    * 0.9 of the batch-oracle count — below it the replay is late-dropping
-    * (the round-3 staging artifact), and the turns/s is not a measurement.
+    * turn, every config must emit the SAME pairs (salt, map, trigger
+    * size and core count never change join output), and that count must
+    * be at least 0.9 of the batch-oracle count — below it the replay is
+    * late-dropping (the round-3 staging artifact), and the turns/s is not
+    * a measurement.
     */
   def sanity(turns: Long, batchPairs: Long, runs: Seq[(String, Flagship.Result)]): Seq[String] = {
     val badTurns = runs.collect { case (n, r) if r.turns != turns =>
@@ -62,7 +65,7 @@ object TrialBlock {
   def main(args: Array[String]): Unit = {
     val spec = BenchRecord.mapper.readValue(args(0), classOf[Spec])
     def run(dir: String, c: Config): Flagship.Result = {
-      val s = BenchSession.build(spec.cores, spec.partitions, spec.blockCacheMB,
+      val s = BenchSession.build(c.cores, spec.partitions, spec.blockCacheMB,
         appName = "graft-trial")
       try Flagship.runStaged(s, dir, c.filesPerTrigger, salt = c.salt, heavyMap = c.heavyMap)
       finally s.stop()
@@ -71,7 +74,7 @@ object TrialBlock {
     val runs = (1 to spec.trials).flatMap { t =>
       spec.configs.map { c =>
         val r = run(spec.dir, c)
-        System.err.println(f"[bench] ${c.name} cores=${spec.cores} trial=$t " +
+        System.err.println(f"[bench] ${c.name} cores=${c.cores} trial=$t " +
           f"turns_per_sec=${r.turnsPerSec}%.0f p99=${r.p99LatencyMs}ms " +
           f"elapsed=${r.elapsedSec}%.1fs turns=${r.turns} pairs=${r.pairs}")
         c.name -> r

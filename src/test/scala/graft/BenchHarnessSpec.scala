@@ -29,15 +29,15 @@ class BenchHarnessSpec extends AnyFunSuite with TempDirs {
   private def result(turns: Long, pairs: Long, tps: Double = 1.0) =
     Flagship.Result(turns, pairs, 1.0, tps, 42L, 10L, 100L, 0L, Map("addBatch" -> 5L))
 
-  /** A trial child's report at `cores` with one config per (name, best
+  /** A trial child's report with one config per (name, cores, best
     * turns/s).
     */
-  private def report(cores: Int, configs: (String, Double)*): Option[JsonNode] = {
-    val spec = TrialBlock.Spec("/in", "/warm", cores, partitions = 16, trials = 3,
+  private def report(configs: (String, Int, Double)*): Option[JsonNode] = {
+    val spec = TrialBlock.Spec("/in", "/warm", partitions = 16, trials = 3,
       blockCacheMB = 512, turns = 1000L, batchPairs = 100L,
-      configs = configs.map(c => TrialBlock.Config(c._1, 16)))
+      configs = configs.map { case (n, cores, _) => TrialBlock.Config(n, cores, 16) })
     Some(mapper.valueToTree[JsonNode](TrialBlock.Report(spec, sanityOk = true, Nil,
-      pairShare = 0.99, ListMap(configs.map { case (n, tps) =>
+      pairShare = 0.99, ListMap(configs.map { case (n, _, tps) =>
         n -> TrialBlock.Trials(result(1000L, 99L, tps), Seq(tps))
       }: _*))))
   }
@@ -119,17 +119,15 @@ class BenchHarnessSpec extends AnyFunSuite with TempDirs {
     val p = Bench.Params("/data/sf0.1", cpus = 32, heapMB = 8192, detailPath = tmpDetail())
     val rec = new BenchRecord(p.detailPath, p.blocks)(Bench.assemble(_, p))
     // the sweep landed, then the flagship child was OOM-killed, then the
-    // run continued: all scaling levels, skew, skew-heavy and sustained
+    // run continued: both scaling pairs, skew and sustained
     rec.record("sweep", Some(mapper.valueToTree[JsonNode](SweepBlock.Sweep("/data/sf0.1",
       32, 101, 0, 250.5, ListMap("q1_agg" -> 1.5)))))
     rec.record("flagship", Fork.json("graft.ChaosChild", Seq("halt"), heapMB = 256, deadlineSec = 60)._1)
-    for ((c, n) <- p.scaleCombos)
-      rec.record(p.scalingBlock(c, n), report(c, "throughput" -> 100000.0 * c)) // linear scaling
-    rec.record("skew", report(32, "fmgws" -> 500000.0, "fmgws_salted" -> 490000.0,
-      "fmgws_fpt2" -> 200000.0))
-    rec.record("skew_heavy", report(32, "light_unsalted" -> 1.0, "light_salted" -> 1.0,
-      "heavy_unsalted" -> 1.0, "heavy_salted" -> 1.8))
-    rec.record("sustained", report(32, "throughput" -> 2.4e6))
+    for ((lo, hi) <- p.pairs) // each level at 100 k turns/s per core: linear scaling
+      rec.record(p.pairBlock(lo, hi), report(Seq(lo, hi).map(c => (s"c$c", c, 100000.0 * c)): _*))
+    rec.record("skew", report(("light_unsalted", 32, 1.2), ("light_salted", 32, 1.1),
+      ("heavy_unsalted", 32, 1.0), ("heavy_salted", 32, 1.8)))
+    rec.record("sustained", report(("throughput", 32, 2.4e6)))
 
     val (detail, compact) = Bench.assemble(rec, p)
     // the on-disk artifacts are the assembled ones, and both parse
@@ -147,20 +145,32 @@ class BenchHarnessSpec extends AnyFunSuite with TempDirs {
     assert(c.get("sustained").get("turns_per_sec").asDouble() == 2400000.0)
     assert(c.get("sustained").get("batch_pairs").asLong() == 100L)
     assert(c.get("sustained").get("sanity_ok").asBoolean())
-    assert(c.get("skew").get("fmgws").asDouble() == 500000.0)
+    // one skew block feeds both keys: the light pair and the heavy pair
+    assert(c.get("skew").get("sanity_ok").asBoolean())
+    assert(c.get("skew").get("light_unsalted").asDouble() == 1.2)
+    assert(c.get("skew").get("light_salted").asDouble() == 1.1)
+    assert(!c.get("skew").has("heavy_salted"))
     assert(c.get("skew_heavy").get("sanity_ok").asBoolean())
+    assert(c.get("skew_heavy").get("heavy_unsalted").asDouble() == 1.0)
     assert(c.get("skew_heavy").get("heavy_salted").asDouble() == 1.8)
-    // scaling efficiency computed from the per-level blocks
+    assert(!c.get("skew_heavy").has("light_salted"))
+    // scaling efficiency computed from each pair's two level configs, in
+    // plan order: a pair whose lo/hi levels were swapped reads 1/16
     val pairsNode = c.get("scaling")
     assert(pairsNode.size() == 2)
-    assert(pairsNode.get(0).get("efficiency").asDouble() == 1.0)
-    assert(pairsNode.get(1).get("efficiency").asDouble() == 1.0)
-    assert(pairsNode.get(1).get("sanity_ok").asBoolean())
-    // each detail combo key holds its own level's block
-    val combos = d.get("scaling").get("combos")
-    assert(combos.size() == 4)
-    for ((c, hi) <- Seq((2, 8), (8, 8), (1, 4), (4, 4)))
-      assert(combos.get(s"c${c}_n${p.scaleConvs(hi)}").get("spec").get("cores").asInt() == c)
+    for (((lo, hi), i) <- Seq((2, 8), (1, 4)).zipWithIndex) {
+      val pair = pairsNode.get(i)
+      assert(pair.get("lo").asInt() == lo && pair.get("hi").asInt() == hi)
+      assert(pair.get("tps_lo").asDouble() == 100000.0 * lo)
+      assert(pair.get("tps_hi").asDouble() == 100000.0 * hi)
+      assert(pair.get("efficiency").asDouble() == 1.0)
+      assert(pair.get("sanity_ok").asBoolean())
+      // the detail holds the pair's block: one config per level, at its cores
+      val levels = d.get(p.pairBlock(lo, hi)).get("spec").get("configs")
+      assert(levels.elements().asScala.map(l => (l.get("name").asText, l.get("cores").asInt)).toSeq ==
+        Seq((s"c$lo", lo), (s"c$hi", hi)))
+    }
+    assert(d.get("scaling") == pairsNode)
     assert(d.get("wall_sec").size() == p.blocks.size)
   }
 
@@ -172,7 +182,8 @@ class BenchHarnessSpec extends AnyFunSuite with TempDirs {
     val c = parse(compact.toString)
     assert(c.get("value").isNull)
     assert(c.get("scaling").get(0).get("efficiency").isNull)
-    assert(c.get("skew").isNull)
+    assert(c.get("scaling").get(0).get("sanity_ok").isNull)
+    assert(c.get("skew").isNull && c.get("skew_heavy").isNull)
     assert(c.get("lost_blocks").size() == p.blocks.size)
   }
 
@@ -193,7 +204,9 @@ class BenchHarnessSpec extends AnyFunSuite with TempDirs {
     val c = parse(out.last)
     assert(c.get("value").asDouble() == 3.5)
     val p = Bench.Params("/x", 4, 2048, detail)
-    assert(c.get("lost_blocks").elements().asScala.map(_.asText).toSeq == p.blocks.tail)
+    assert(c.get("lost_blocks").elements().asScala.map(_.asText).toSeq ==
+      Seq("flagship", "scaling_c1_c4", "skew", "sustained"))
+    assert(p.blocks.tail == Seq("flagship", "scaling_c1_c4", "skew", "sustained"))
     assert(c == parse(new String(Files.readAllBytes(linePath))))
   }
 
@@ -201,10 +214,14 @@ class BenchHarnessSpec extends AnyFunSuite with TempDirs {
     val four = Bench.Params("/x", 4, 2048, "d.json")
     assert(four.pairs == Seq((1, 4)))
     assert(four.convs == 4 * Bench.ConvsPerCore)
-    assert(four.scaleCombos == Seq((1, 4 * Bench.ScaleConvsPerCore), (4, 4 * Bench.ScaleConvsPerCore)))
-    assert(four.blocks.head == "sweep" && four.blocks(1) == "flagship")
-    assert(four.blocks.last == "sustained")
-    assert(Bench.Params("/x", 8, 2048, "d.json").pairs == Seq((2, 8), (1, 4)))
+    assert(four.scaleConvs(4) == 4 * Bench.ScaleConvsPerCore)
+    assert(four.scaleParts == 8)
+    assert(four.blocks == Seq("sweep", "flagship", "scaling_c1_c4", "skew", "sustained"))
+    val eight = Bench.Params("/x", 8, 2048, "d.json")
+    assert(eight.pairs == Seq((2, 8), (1, 4)))
+    assert(eight.scaleParts == 16)
+    assert(eight.blocks ==
+      Seq("sweep", "flagship", "scaling_c2_c8", "scaling_c1_c4", "skew", "sustained"))
     assert(Bench.Params("/x", 4, 4096, "d.json").sustainedConvs == 2 * four.sustainedConvs)
     val heap = Bench.childHeapMB()
     assert(heap >= 2048 && heap <= 8192)
@@ -216,6 +233,9 @@ class BenchHarnessSpec extends AnyFunSuite with TempDirs {
     assert(TrialBlock.sanity(1000L, 100L, Seq("a" -> result(1000, 95), "b" -> result(1000, 94)))
       .exists(_.contains("disagree")))
     assert(TrialBlock.sanity(1000L, 100L, Seq("a" -> result(1000, 89))).head.contains("89 of 100"))
+    // a scaling pair's two core levels are two configs: they must agree too
+    assert(TrialBlock.sanity(1000L, 100L, Seq("c1" -> result(1000, 95), "c4" -> result(1000, 96)))
+      .exists(_.contains("disagree")))
     assert(TrialBlock.sanity(1000L, 100L, Nil).nonEmpty)
   }
 }

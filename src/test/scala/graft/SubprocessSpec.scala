@@ -67,6 +67,31 @@ class SubprocessSpec extends SparkTestBase {
     assert(lingering() == 0, "a replaced child's sleep is still running")
   }
 
+  test("a replaced child takes the process it forked at the last moment with it") {
+    // each child closes its stdin, replies, and only then forks a `sleep`,
+    // so every replacement's kill races that fork; 100 rows in one
+    // partition replace the child 50 times
+    val cmd = Seq("sh", "-c", """read l; exec 0<&-; echo "$l"; sleep 43.21 & wait""")
+    val rows = (0 until 100).map(_.toString)
+    val out = Subprocess.pipe(df(rows: _*).coalesce(1), cmd)
+      .orderBy("id").select("text", Errors.ErrCol).as[(String, String)].collect()
+    assert(out.zipWithIndex.forall { case ((t, err), i) =>
+      t == rows(i) && (if (i % 2 == 0) err == null else err != null) })
+    def lingering() = ProcessHandle.allProcesses().filter(
+      _.info().commandLine().orElse("").contains("sleep 43.21")).count()
+    val deadline = System.nanoTime() + 5000000000L
+    while (lingering() > 0 && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(lingering() == 0, "a replaced child's sleep is still running")
+  }
+
+  test("a command that cannot start fails its rows, without waiting out the reply timeout") {
+    val t0 = System.nanoTime()
+    val out = Subprocess.pipe(df("a", "b").coalesce(1), Seq("graft-no-such-command"))
+      .orderBy("id").select("text", Errors.ErrCol).as[(String, String)].collect()
+    assert((System.nanoTime() - t0) / 1e9 < 30, "a row waited out the 60 s reply timeout")
+    assert(out.map(_._1).toSeq == Seq("a", "b") && out.forall(_._2 != null))
+  }
+
   test("netstring codec round-trips through cat (netstringSplitFunc)") {
     val out = Subprocess.pipe(df("hello world", "x,y:z", ""),
       Seq("cat"), codecSend = "netstring", codecRecv = "netstring")

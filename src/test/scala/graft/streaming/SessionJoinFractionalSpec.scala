@@ -14,7 +14,9 @@ import graft.model.{BufTurn, PairedTurn, Turn}
   * close a session up to 999 ms before that: a non-late fractional turn
   * arriving in the window would merge in the batch oracle but open a new
   * session in streaming. Unreachable with TranscriptGen's whole-second
-  * timestamps — these cases pin the general-input behavior.
+  * timestamps — these cases pin the general-input behavior, as does the
+  * ordering case: turns within one millisecond sort by their
+  * microseconds, as the batch form's window does, not by turn_idx.
   */
 class SessionJoinFractionalSpec extends graft.SparkTestBase {
   import spark.implicits._
@@ -74,5 +76,37 @@ class SessionJoinFractionalSpec extends graft.SparkTestBase {
       .drop("_batch_id", "_partition_id").as[PairedTurn].collect().toSeq
       .sortBy(p => (p.conv_id, p.session_id, p.reply_turn_idx))
     assert(got == expected)
+  }
+
+  test("turns within one millisecond order by their microseconds in all three forms") {
+    def at(ms: Long, micros: Int) = { val t = tsMs(ms); t.setNanos(t.getNanos + micros * 1000); t }
+    // the user turn is 7 µs before the reply, in the same millisecond,
+    // but carries the higher turn_idx: by (ts, turn_idx) it comes first
+    val reply = Turn("c1", 0, "assistant", "answer", null, at(1000005L, 9))
+    val user = Turn("c1", 1, "user", "question", null, at(1000005L, 2))
+    val flush = Turn("zz", 0, "user", "flush", null, tsMs(100000000L))
+
+    val spec = SessionJoin.pairTurns(Seq(reply, user), gap)
+    assert(spec.map(p => (p.user_turn_idx, p.reply_turn_idx, p.user_ts, p.reply_ts)) ==
+      Seq((1, 0, user.ts, reply.ts)))
+    val batch = SessionJoin.pairBatch(Seq(reply, user, flush).toDF(), gap)
+      .as[PairedTurn].collect().toSeq
+    assert(batch == spec)
+
+    val outDir = tempDir("sjf-us-out").toString
+    val ckDir = tempDir("sjf-us-ck").toString
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Turn]
+    val paired = SessionJoin.pairStreaming(mem.toDS(), gap, "10 minutes")
+    def cycle(data: Seq[Turn]): Unit = {
+      if (data.nonEmpty) mem.addData(data)
+      Sink.exactlyOnce(paired, outDir, ckDir, Trigger.AvailableNow()).start().awaitTermination()
+    }
+    cycle(Seq(reply, user))
+    cycle(Seq(flush)) // watermark past the session's close point
+    cycle(Nil) // let the armed timeout fire
+    val got = Sink.readCommitted(spark, outDir)
+      .drop("_batch_id", "_partition_id").as[PairedTurn].collect().toSeq
+    assert(got == spec)
   }
 }
