@@ -36,8 +36,11 @@ import graft.tools.TrialBlock.Config
   *    unsalted and salted, under the light and the heavy per-turn map
   *    (salting costs under the first and pays under the second); the
   *    compact line's `skew` reads the light pair, `skew_heavy` the heavy;
-  *  - sustained: one long trial over a disk-staged corpus sized from the
+  *  - sustained: a long run over a disk-staged corpus sized from the
   *    child heap, block cache sized to match.
+  *
+  * Every streaming block runs each config `Trials` times and reports the
+  * best run.
   *
   * Every streaming block carries its sanity gate (`sanity_ok`): every run
   * saw every staged turn, every config emitted the same pairs, and at
@@ -104,6 +107,13 @@ object Bench {
       .get).getOrElse(8L << 20)
     math.max(2048, math.min(8192, memKB / 4 / 1024)).toInt
   }
+
+  /** A streaming block's child spec: `configs` over the staged input
+    * `in`, after a warm-up on `warm`, each config run `Trials` times.
+    */
+  def trialSpec(in: StageBlock.Staged, warm: StageBlock.Staged, parts: Int, cacheMB: Int,
+      configs: Config*): TrialBlock.Spec =
+    TrialBlock.Spec(in.dir, warm.dir, parts, Trials, cacheMB, in.turns, in.batchPairs, configs)
 
   /** Deadlines: bounds only a wedged child reaches. Staging is budgeted
     * at 500 convs/s; every trial run at 60 s of fixed cost plus its turns
@@ -230,13 +240,12 @@ object Bench {
     }
 
     staged(StageBlock.Spec(2000L, Fpt)) { warm =>
-      def trial(name: String, in: Option[StageBlock.Staged], parts: Int, trials: Int,
-          cacheMB: Int, configs: Config*): Unit =
+      def trial(name: String, in: Option[StageBlock.Staged], parts: Int, cacheMB: Int,
+          configs: Config*): Unit =
         rec.record(name, for {
           s <- in
           w <- warm
-          spec = TrialBlock.Spec(s.dir, w.dir, parts, trials, cacheMB, s.turns, s.batchPairs,
-            configs)
+          spec = trialSpec(s, w, parts, cacheMB, configs: _*)
           r <- Fork.json("graft.tools.TrialBlock", Seq(mapper.writeValueAsString(spec)),
             p.heapMB, trialDeadlineSec(spec))._1
         } yield r)
@@ -244,24 +253,24 @@ object Bench {
       val onDisk = Map("GRAFT_TMP_BASE" -> "/tmp") // large corpora: disk, not tmpfs RAM
 
       staged(StageBlock.Spec(p.convs, StagedFiles)) { in =>
-        trial("flagship", in, 2 * p.cpus, Trials, DefaultCacheMB,
+        trial("flagship", in, 2 * p.cpus, DefaultCacheMB,
           throughput, Config("latency", p.cpus, LatFpt))
       }
       p.pairs.foreach { case (lo, hi) =>
         staged(StageBlock.Spec(p.scaleConvs(hi), StagedFiles), onDisk) { in =>
-          trial(p.pairBlock(lo, hi), in, p.scaleParts, Trials, DefaultCacheMB,
+          trial(p.pairBlock(lo, hi), in, p.scaleParts, DefaultCacheMB,
             Seq(lo, hi).map(c => Config(level(c), c, Fpt)): _*)
         }
       }
       staged(Skew) { in =>
         val fpt = Skew.files / Skew.slices // one event-time slab per trigger
-        trial("skew", in, 2 * p.cpus, Trials, DefaultCacheMB,
+        trial("skew", in, 2 * p.cpus, DefaultCacheMB,
           Config("light_unsalted", p.cpus, fpt), Config("light_salted", p.cpus, fpt, SkewSalt),
           Config("heavy_unsalted", p.cpus, fpt, heavyMap = true),
           Config("heavy_salted", p.cpus, fpt, SkewSalt, heavyMap = true))
       }
       staged(StageBlock.Spec(p.sustainedConvs, StagedFiles), onDisk) { in =>
-        trial("sustained", in, 2 * p.cpus, 1, p.sustainedCacheMB, throughput)
+        trial("sustained", in, 2 * p.cpus, p.sustainedCacheMB, throughput)
       }
     }
 

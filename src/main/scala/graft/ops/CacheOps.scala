@@ -176,7 +176,7 @@ object CacheOps {
         applyOps(ttlSeconds))
   }
 
-  private def applyOps(ttlSeconds: Long)(
+  private[graft] def applyOps(ttlSeconds: Long)(
       key: String,
       incoming: Iterator[CacheOp],
       state: GroupState[Entry]): Iterator[CacheOut] = {
@@ -191,12 +191,16 @@ object CacheOps {
         entry != null && (ttlSeconds <= 0 || tMs - entry.writtenAtMs < ttlSeconds * 1000)
       val out = Seq.newBuilder[CacheOut]
       // file-stream arrival order ≠ ts order: apply in event-time order so
-      // replay equals the batch window form (CacheSpec parity)
-      // full-precision event-time order: getTime truncates to ms while the
-      // data carries microseconds (getNanos recovers them); `ord` (the
-      // caller's stable ordinal, e.g. turn_idx) breaks exact-ts ties the
-      // same way the oracle's ORDER BY ts, turn_idx does
-      incoming.toSeq.sortBy(o => (o.ts.getTime / 1000, o.ts.getNanos, o.ord)).foreach { o =>
+      // replay equals the batch window form (CacheSpec parity).
+      // `Timestamp.compareTo` orders by epoch ms, then nanos: full
+      // precision, before 1970 too, without a key allocated per
+      // comparison; `ord` (the caller's stable ordinal, e.g. turn_idx)
+      // breaks exact-ts ties the same way the oracle's ORDER BY ts,
+      // turn_idx does
+      incoming.toSeq.sortWith { (a, b) =>
+        val c = a.ts.compareTo(b.ts)
+        c < 0 || (c == 0 && a.ord < b.ord)
+      }.foreach { o =>
         val t = o.ts.getTime
         o.op match {
           case "set" =>

@@ -123,12 +123,18 @@ object RateLimit {
     val spark = turns.sparkSession
     import spark.implicits._
     turns.withWatermark("ts", lateness)
-      .groupByKey(t => t.ts.getTime / (intervalSeconds * 1000))
+      .groupByKey(t => bucketOf(t.ts, intervalSeconds))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         admit(count, intervalSeconds))
   }
 
-  private def admit(count: Int, intervalSeconds: Long)(
+  /** `ts`'s event-time bucket: floored, like `annotateOverflow`'s, so a
+    * pre-1970 second lands in a negative bucket, not in bucket 0.
+    */
+  private[graft] def bucketOf(ts: java.sql.Timestamp, intervalSeconds: Long): Long =
+    Math.floorDiv(ts.getTime, intervalSeconds * 1000)
+
+  private[graft] def admit(count: Int, intervalSeconds: Long)(
       bucket: Long,
       incoming: Iterator[graft.model.Turn],
       state: org.apache.spark.sql.streaming.GroupState[BucketCount]): Iterator[RlOut] = {
@@ -138,13 +144,20 @@ object RateLimit {
     } else {
       // the counter ranks EVERY row (throttled included), matching the
       // row_number() form; within a batch, event-time order at FULL
-      // microsecond precision — getTime truncates to ms while the data
-      // carries microseconds (getNanos recovers them), so two rows in the
-      // same bucket differing only sub-millisecond must not be re-ranked
-      // vs the oracle's ORDER BY ts
+      // microsecond precision (`Timestamp.compareTo`: epoch ms, then
+      // nanos, before 1970 too, without a key allocated per comparison),
+      // so two rows in the same bucket differing only sub-millisecond
+      // are not re-ranked vs the oracle's ORDER BY ts
       var n = state.getOption.map(_.admitted).getOrElse(0L)
       val out = incoming.toSeq
-        .sortBy(t => (t.ts.getTime / 1000, t.ts.getNanos, t.conv_id, t.turn_idx))
+        .sortWith { (a, b) =>
+          val c = a.ts.compareTo(b.ts)
+          if (c != 0) c < 0
+          else {
+            val k = a.conv_id.compareTo(b.conv_id)
+            k < 0 || (k == 0 && a.turn_idx < b.turn_idx)
+          }
+        }
         .map { t =>
           n += 1
           RlOut(t.conv_id, t.turn_idx, n > count, t.ts)

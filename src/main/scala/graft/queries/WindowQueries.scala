@@ -151,8 +151,7 @@ object WindowQueries {
     // stops (reference: internal/impl/pure/input_read_until.go).
     "q_read_until" -> ((s, dir) => readUntilQuery(s, dir)))
 
-  private def readUntilQuery(s: SparkSession, dir: String): DataFrame = {
-    val work = graft.util.Tmp.dir("readuntil")
+  private def readUntilQuery(s: SparkSession, dir: String): DataFrame = inRunDir("readuntil") { work =>
     val inDir = s"$work/in"
     // total order across files so batch boundaries respect the cut order
     Tables.transcripts(s, dir)
@@ -166,22 +165,24 @@ object WindowQueries {
       stream, col("role") === "tool" && col("turn_idx") >= 10, ord,
       (b, _) => b.write.mode("append").parquet(s"$work/out"), s"$work/ck")
     q.awaitTermination()
-    detach(s.read.parquet(s"$work/out")
-      .select("conv_id", "turn_idx", "role", "read_until_final"), work)
+    s.read.parquet(s"$work/out").select("conv_id", "turn_idx", "role", "read_until_final")
   }
 
-  /** `result`, read from the run dir `work`, held in Spark's block manager
-    * (an eager local checkpoint) so that `work` can be deleted: a rig's
-    * staged input, checkpoint and sink are single-use, and left behind
-    * they would occupy tmpfs until the host reboots. The stopped run's
+  /** The result of `run` in a fresh run dir (`<prefix>*` under the temp
+    * base), held in Spark's block manager (an eager local checkpoint) so
+    * that the dir can be deleted: a rig's staged input, checkpoint and
+    * sink are single-use, and left behind they would occupy tmpfs until
+    * the host reboots. On success and on failure alike, the run's
     * state-store providers are unloaded first, as `Flagship.runStaged`
     * does, so none is left pointing into the deleted checkpoint.
     */
-  private def detach(result: DataFrame, work: String): DataFrame = {
-    val held = result.localCheckpoint()
-    org.apache.spark.sql.execution.streaming.state.GraftStateStoreAccess.unloadAll()
-    graft.util.Tmp.delete(work)
-    held
+  private def inRunDir(prefix: String)(run: String => DataFrame): DataFrame = {
+    val work = graft.util.Tmp.dir(prefix)
+    try run(work).localCheckpoint()
+    finally {
+      org.apache.spark.sql.execution.streaming.state.GraftStateStoreAccess.unloadAll()
+      graft.util.Tmp.delete(work)
+    }
   }
 
   /** Stage the derived transcripts as a file stream, run `pipeline` to an
@@ -195,10 +196,9 @@ object WindowQueries {
       dir: String,
       sentinelConv: String,
       pipeline: DataFrame => DataFrame,
-      sentinelFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+      sentinelFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = inRunDir("qstream") { work =>
     import s.implicits._
     val batch = Tables.transcripts(s, dir)
-    val work = graft.util.Tmp.dir("qstream")
     val inDir = s"$work/in"
     // total order incl. tie-breaks: the rate-limit/cache rigs' outputs
     // depend on cross-micro-batch arrival order, so batch boundaries must
@@ -220,9 +220,9 @@ object WindowQueries {
       .coalesce(1).write.mode("append").parquet(inDir)
     runOnce()
     runOnce()
-    detach(Sink.readCommitted(s, s"$work/out")
+    Sink.readCommitted(s, s"$work/out")
       .filter(sentinelFilter.getOrElse(col("conv_id") =!= sentinelConv))
-      .drop("_batch_id", "_partition_id"), work)
+      .drop("_batch_id", "_partition_id")
   }
 
   private def streamTumblingAgg(s: SparkSession, dir: String): DataFrame =

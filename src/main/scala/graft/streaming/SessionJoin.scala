@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.model.{BufTurn, PairedTurn, Turn}
+import graft.model.{PairedTurn, Turn}
 import graft.ops.Windows
 
 /** The flagship stateful operator (BASELINE.json north_star): join each
@@ -28,29 +28,39 @@ object SessionJoin {
 
   val DefaultGapSeconds = 1800L
 
-  /** Reference semantics on a single conversation, pure and total:
-    * sort by (ts, turn_idx) — ts at full precision, like the batch form's
-    * window order (`before`); a new session starts when the gap to the
-    * previous turn exceeds `gapSeconds`; each assistant/tool turn pairs
+  /** Reference semantics on a single conversation, pure and total: cut
+    * the turns into sessions (`sessions`); each assistant/tool turn pairs
     * with the latest user turn seen earlier in its session.
-    *
-    * Gap comparisons happen at SECOND resolution (epoch-second floor, the
-    * `unix_timestamp` semantics of the batch form) so all three
-    * implementations agree on sub-second timestamps.
     */
-  def pairTurns(turns: Seq[Turn], gapSeconds: Long = DefaultGapSeconds): Seq[PairedTurn] = {
-    val sorted = turns.sortWith((a, b) => before(a.ts, a.turn_idx, b.ts, b.turn_idx))
-    var sessionId = -1L
-    var prevTs = Long.MinValue
+  def pairTurns(turns: Seq[Turn], gapSeconds: Long = DefaultGapSeconds): Seq[PairedTurn] =
+    sessions(turns, gapSeconds).zipWithIndex.flatMap { case (s, i) => pairSession(i, s) }
+
+  /** The one session cut, shared by `pairTurns` and `splitClosed`: sort
+    * by (ts, turn_idx) — ts at full precision, like the batch form's
+    * window order (`before`) — and start a new session where the gap to
+    * the previous turn exceeds `gapSeconds`. Gaps compare at SECOND
+    * resolution (epoch-second floor, the `unix_timestamp` semantics of
+    * the batch form) so all three forms agree on sub-second timestamps.
+    */
+  private def sessions(turns: Seq[Turn], gapSeconds: Long): List[List[Turn]] = {
+    val out = List.newBuilder[List[Turn]]
+    var cur = List.newBuilder[Turn]
+    var prev = Long.MinValue
+    turns.sortWith(before).foreach { t =>
+      val sec = Math.floorDiv(t.ts.getTime, 1000L)
+      if (prev != Long.MinValue && sec - prev > gapSeconds) { out += cur.result(); cur = List.newBuilder }
+      cur += t
+      prev = sec
+    }
+    if (prev != Long.MinValue) out += cur.result()
+    out.result()
+  }
+
+  /** The pairs of one session, in order, numbered `sessionId`. */
+  private def pairSession(sessionId: Long, session: List[Turn]): List[PairedTurn] = {
     var lastUser: Turn = null
-    val out = Seq.newBuilder[PairedTurn]
-    sorted.foreach { t =>
-      val tMs = Math.floorDiv(t.ts.getTime, 1000L)
-      if (prevTs == Long.MinValue || tMs - prevTs > gapSeconds) {
-        sessionId += 1
-        lastUser = null
-      }
-      prevTs = tMs
+    val out = List.newBuilder[PairedTurn]
+    session.foreach { t =>
       if (t.role == "user") lastUser = t
       else if (lastUser != null)
         out += PairedTurn(t.conv_id, sessionId, lastUser.turn_idx, lastUser.text,
@@ -66,10 +76,9 @@ object SessionJoin {
     * fall back to turn_idx order where the batch form orders them by ts.
     * A comparison, not a tuple key: it sorts without allocating.
     */
-  private def before(aTs: java.sql.Timestamp, aIdx: Int, bTs: java.sql.Timestamp,
-      bIdx: Int): Boolean = {
-    val c = aTs.compareTo(bTs)
-    c < 0 || (c == 0 && aIdx < bIdx)
+  private def before(a: Turn, b: Turn): Boolean = {
+    val c = a.ts.compareTo(b.ts)
+    c < 0 || (c == 0 && a.turn_idx < b.turn_idx)
   }
 
   /** Batch/window-function form — one shuffle on conv_id shared by both
@@ -102,13 +111,11 @@ object SessionJoin {
     * conversation's last open session. Kept deliberately small
     * (SURVEY.md §7.3): at 10^12-turn scale state size per key is bounded
     * by one session's turns, and the event-time timeout guarantees
-    * eviction. Rows buffer as `BufTurn` — conv_id is the state key, so it
-    * never rides inside the value (~15% of state bytes at the bench
-    * shape, re-serialized on every touched-key batch). Persisted as a
-    * version-tagged binary value (`StateEnvelope`), never as a Catalyst
-    * struct, so a layout change is a decoder case, not a state rebuild.
+    * eviction. Persisted as a version-tagged binary value
+    * (`StateEnvelope`), never as a Catalyst struct, so a layout change is
+    * a decoder case, not a state rebuild.
     */
-  case class ConvState(buffered: List[BufTurn], flushedSessions: Long)
+  case class ConvState(buffered: List[Turn], flushedSessions: Long)
 
   /** Streaming form. Emits a session's pairs exactly once, when the
     * watermark passes (last turn ts + gap) — the point the reference's
@@ -149,7 +156,7 @@ object SessionJoin {
       convId: String,
       incoming: Iterator[Turn],
       state: GroupState[Array[Byte]]): Iterator[PairedTurn] = {
-    val old = state.getOption.map(StateEnvelope.decode).getOrElse(ConvState(Nil, 0L))
+    val old = state.getOption.map(StateEnvelope.decode(convId, _)).getOrElse(ConvState(Nil, 0L))
     val wm = state.getCurrentWatermarkMs()
     if (state.hasTimedOut) {
       if (old.buffered.isEmpty) {
@@ -158,13 +165,13 @@ object SessionJoin {
         // session numbering, like the reference's expired cache entries.
         state.remove()
         Iterator.empty
-      } else flushAndRearm(convId, old, Nil, gapSeconds, wm, state)
+      } else flushAndRearm(old, Nil, gapSeconds, wm, state)
     } else {
       // Drop late turns explicitly (flatMapGroupsWithState does not):
       // reference drop rule buffer_system_window.go:333-336.
       val fresh = incoming.filter(t => wm == 0 || t.ts.getTime >= wm).toList
       if (old.buffered.isEmpty && fresh.isEmpty) Iterator.empty
-      else flushAndRearm(convId, old, fresh.map(BufTurn.of), gapSeconds, wm, state)
+      else flushAndRearm(old, fresh, gapSeconds, wm, state)
     }
   }
 
@@ -182,18 +189,15 @@ object SessionJoin {
     * close point.
     */
   private def flushAndRearm(
-      convId: String,
       old: ConvState,
-      freshTurns: List[BufTurn],
+      freshTurns: List[Turn],
       gapSeconds: Long,
       wm: Long,
       state: GroupState[Array[Byte]]): Iterator[PairedTurn] = {
     val buf = old.buffered ++ freshTurns
     val (closed, open, firstOpenEnd) = splitClosed(buf, gapSeconds, wm)
-    val pairs =
-      if (closed.isEmpty) Nil
-      else pairTurns(closed.flatten.map(BufTurn.toTurn(convId, _)), gapSeconds)
-        .map(p => p.copy(session_id = p.session_id + old.flushedSessions))
+    val pairs = closed.iterator.zipWithIndex
+      .flatMap { case (s, i) => pairSession(old.flushedSessions + i, s) }
     state.update(StateEnvelope.encode(ConvState(open, old.flushedSessions + closed.size)))
     if (open.isEmpty)
       // everything closed: keep a tombstone one more gap (numbering
@@ -201,7 +205,7 @@ object SessionJoin {
       state.setTimeoutTimestamp(wm + gapSeconds * 1000)
     else
       state.setTimeoutTimestamp(math.max(closePointMs(firstOpenEnd, gapSeconds), wm + 1))
-    pairs.iterator
+    pairs
   }
 
   /** The watermark value at which a session ending at `tsMs` is safely
@@ -220,35 +224,21 @@ object SessionJoin {
     (Math.floorDiv(tsMs, 1000L) + gapSeconds + 1) * 1000L
 
   /** Split a conversation's buffer into watermark-closed leading sessions
-    * and the still-open tail. Session boundaries use the same
-    * second-floor gap rule as `pairTurns`; a session is closed when the
-    * watermark reached its `closePointMs` — the same predicate as the
+    * and the still-open tail, cut by `sessions`; a session is closed when
+    * the watermark reached its `closePointMs` — the same predicate as the
     * timeout slot. The third value is a lower bound on the first open
-    * session's end ts (exact when segmentation ran; the buffer min ts on
-    * the guarded fast path) — what the caller's timer should target.
+    * session's end ts (exact when the buffer was cut; the buffer min ts
+    * on the guarded fast path) — what the caller's timer should target.
     * The O(n) min-ts guard keeps the common quiet-conversation case free
-    * of any sorting or session splitting.
+    * of any sorting or session cutting.
     */
   private[streaming] def splitClosed(
-      buf: List[BufTurn], gapSeconds: Long, wm: Long): (List[List[BufTurn]], List[BufTurn], Long) = {
+      buf: List[Turn], gapSeconds: Long, wm: Long): (List[List[Turn]], List[Turn], Long) = {
     if (buf.isEmpty) return (Nil, Nil, 0L)
     val minTs = buf.iterator.map(_.ts.getTime).min
     if (wm <= 0 || wm < closePointMs(minTs, gapSeconds)) return (Nil, buf, minTs)
-    val sorted = buf.sortWith((a, b) => before(a.ts, a.turn_idx, b.ts, b.turn_idx))
-    // session-split (same rule as pairTurns), collecting segments
-    val segs = scala.collection.mutable.ListBuffer.empty[List[BufTurn]]
-    var cur = scala.collection.mutable.ListBuffer.empty[BufTurn]
-    var prev = Long.MinValue
-    sorted.foreach { t =>
-      val sec = Math.floorDiv(t.ts.getTime, 1000L)
-      if (prev != Long.MinValue && sec - prev > gapSeconds) {
-        segs += cur.toList; cur = scala.collection.mutable.ListBuffer.empty[BufTurn]
-      }
-      cur += t
-      prev = sec
-    }
-    segs += cur.toList
-    val (closed, open) = segs.toList.span(s => wm >= closePointMs(s.last.ts.getTime, gapSeconds))
+    val (closed, open) = sessions(buf, gapSeconds)
+      .span(s => wm >= closePointMs(s.last.ts.getTime, gapSeconds))
     (closed, open.flatten, open.headOption.map(_.last.ts.getTime).getOrElse(0L))
   }
 

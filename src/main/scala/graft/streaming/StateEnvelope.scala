@@ -3,23 +3,24 @@ package graft.streaming
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
-import graft.model.BufTurn
+import graft.model.Turn
 
 /** Versioned state envelope: the codec for the session join's persisted
   * per-conversation state (`SessionJoin.pairStreaming`). The state value
   * is a BINARY blob carrying a 1-byte version tag. Spark validates a
-  * CATALYST state schema on restore, so any case-class change (e.g. the
-  * conv_id slim) would force a full state rebuild; a binary column's
-  * schema never changes, and the tag moves the compatibility decision
-  * into this codec: a value written at another layout is rejected by
-  * its tag on read instead of being misread.
+  * CATALYST state schema on restore, so any case-class change would
+  * force a full state rebuild; a binary column's schema never changes,
+  * and the tag moves the compatibility decision into this codec: a value
+  * written at another layout is rejected by its tag on read instead of
+  * being misread.
   *
   * Layout (version 3): {flushedSessions, n, then per buffered turn
   * {turn_idx, role, text, tool, ts as epoch MICROseconds}} — conv_id is
-  * the state key, so it never rides inside the value, and microsecond ts
-  * is Spark's timestamp resolution. Versions 1 (conv_id per turn) and 2
-  * (millisecond ts, which truncated sub-millisecond input timestamps)
-  * are retired, and their tags are rejected like any unknown one.
+  * the state key, so the value leaves it out and `decode` takes it back
+  * from the caller; microsecond ts is Spark's timestamp resolution.
+  * Versions 1 (conv_id per turn) and 2 (millisecond ts, which truncated
+  * sub-millisecond input timestamps) are retired, and their tags are
+  * rejected like any unknown one.
   */
 object StateEnvelope {
 
@@ -60,8 +61,10 @@ object StateEnvelope {
     bb.array()
   }
 
-  /** Decode a `CurrentVersion` value; any other tag is rejected. */
-  def decode(bytes: Array[Byte]): SessionJoin.ConvState = {
+  /** Decode a `CurrentVersion` value of state key `convId`, which every
+    * decoded turn shares; any other tag is rejected.
+    */
+  def decode(convId: String, bytes: Array[Byte]): SessionJoin.ConvState = {
     val bb = ByteBuffer.wrap(bytes)
     val ver = bb.get()
     if (ver != CurrentVersion)
@@ -77,13 +80,13 @@ object StateEnvelope {
     }
     val flushed = bb.getLong()
     val n = bb.getInt()
-    val buf = List.newBuilder[BufTurn]
+    val buf = List.newBuilder[Turn]
     (0 until n).foreach { _ =>
       val idx = bb.getInt()
       val role = getStr()
       val text = getStr()
       val tool = getStr()
-      buf += BufTurn(idx, role, text, tool, fromMicros(bb.getLong()))
+      buf += Turn(convId, idx, role, text, tool, fromMicros(bb.getLong()))
     }
     SessionJoin.ConvState(buf.result(), flushed)
   }

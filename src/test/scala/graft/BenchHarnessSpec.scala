@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.scalatest.funsuite.AnyFunSuite
-import graft.tools.{BenchRecord, Fork, SweepBlock, TrialBlock}
+import graft.tools.{BenchRecord, Fork, StageBlock, SweepBlock, TrialBlock}
 import graft.tools.BenchRecord.{mapper, nul}
 
 /** Chaos tests for the crash-isolated bench harness (no SparkSession —
@@ -223,6 +223,11 @@ class BenchHarnessSpec extends AnyFunSuite with TempDirs {
     assert(eight.blocks ==
       Seq("sweep", "flagship", "scaling_c2_c8", "scaling_c1_c4", "skew", "sustained"))
     assert(Bench.Params("/x", 4, 4096, "d.json").sustainedConvs == 2 * four.sustainedConvs)
+    // the sustained block, like every streaming block, runs Trials trials
+    val in = StageBlock.Staged("/in", 1000L, 100L)
+    val sustained = Bench.trialSpec(in, in, 2 * four.cpus, four.sustainedCacheMB,
+      TrialBlock.Config("throughput", four.cpus, Bench.Fpt))
+    assert(sustained.trials == 3 && Bench.Trials == 3)
     val heap = Bench.childHeapMB()
     assert(heap >= 2048 && heap <= 8192)
   }

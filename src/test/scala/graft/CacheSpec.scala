@@ -112,6 +112,21 @@ class CacheSpec extends SparkTestBase {
     assert(at("k2", 1) == ((null, true)))    // get on absent key
   }
 
+  test("streaming cache applies ops before 1970 in event-time order") {
+    import org.apache.spark.api.java.Optional
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+    // Spark's event-time stateful operator drops pre-1970 rows as late
+    // (its watermark starts at 0), so the per-key update runs directly:
+    // a set at -1.5 s, then a get at -1.0 s, arriving in reverse in one
+    // batch — the get must see the set
+    val state = TestGroupState.create[CacheOps.Entry](Optional.empty(),
+      GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(0L), false)
+    val out = CacheOps.applyOps(60L)("k", Iterator(
+      CacheOp("k", "get", null, new Timestamp(-1000L)),
+      CacheOp("k", "set", "v", new Timestamp(-1500L))), state).toSeq
+    assert(out.map(o => (o.op, o.value, o.errored)) == Seq(("set", "v", false), ("get", "v", false)))
+  }
+
   test("streaming add contention matches batch addAnnotate over a replayed log") {
     implicit val sqlCtx = spark.sqlContext
     val addOps = turns.map(t => CacheOp(t.conv_id, "add", t.text, t.ts, t.turn_idx))

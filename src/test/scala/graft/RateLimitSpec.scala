@@ -70,6 +70,28 @@ class RateLimitSpec extends SparkTestBase {
     assert(got == Map(1 -> false, 2 -> false, 3 -> true, 4 -> false))
   }
 
+  test("streamAnnotate buckets and ranks rows either side of the epoch like annotateOverflow") {
+    import org.apache.spark.api.java.Optional
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+    import graft.model.Turn
+    // 60 s buckets, count 2: -30 s, -1.5 s and -1.0 s share bucket -1,
+    // +10 s is alone in bucket 0; one batch, in reverse event-time order
+    val rows = Seq(10000L, -1000L, -1500L, -30000L).zipWithIndex.map { case (ms, i) =>
+      Turn("c", 3 - i, "user", "t", null, new Timestamp(ms))
+    }
+    val batch = RateLimit.annotateOverflow(rows.toDF(), col("ts"), col("ts"), 2, 60L)
+      .select("turn_idx", "throttled").as[(Int, Boolean)].collect().toMap
+    assert(batch == Map(0 -> false, 1 -> false, 2 -> true, 3 -> false))
+    // Spark's event-time stateful operator drops pre-1970 rows as late
+    // (its watermark starts at 0), so the streaming form's key and
+    // per-bucket update run directly
+    val streamed = rows.groupBy(t => RateLimit.bucketOf(t.ts, 60L)).toSeq.flatMap { case (b, in) =>
+      RateLimit.admit(2, 60L)(b, in.iterator, TestGroupState.create[RateLimit.BucketCount](
+        Optional.empty(), GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(0L), false))
+    }.map(o => o.turn_idx -> o.throttled).toMap
+    assert(streamed == batch)
+  }
+
   test("switch fallthrough chains the next case's transform") {
     val df = Seq(("r1", 1), ("r2", 10), ("r3", 100)).toDF("id", "v")
     // case0 matches v<5 and falls through into case1's transform

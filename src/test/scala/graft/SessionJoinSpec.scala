@@ -91,24 +91,47 @@ class SessionJoinSpec extends SparkTestBase {
     import graft.streaming.StateEnvelope
     // a tag followed by an empty state (flushedSessions 0, no turns)
     def tagged(v: Int) = Array[Byte](v.toByte, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    assert(StateEnvelope.decode(tagged(StateEnvelope.CurrentVersion)) ==
+    assert(StateEnvelope.decode("c", tagged(StateEnvelope.CurrentVersion)) ==
       SessionJoin.ConvState(Nil, 0L))
     Seq(1, 2, 4).foreach { v =>
-      val e = intercept[IllegalStateException](StateEnvelope.decode(tagged(v)))
+      val e = intercept[IllegalStateException](StateEnvelope.decode("c", tagged(v)))
       assert(e.getMessage.contains(s"unknown state version $v"))
     }
   }
 
+  private def at(ms: Long, nanos: Int) = { val t = new Timestamp(ms); t.setNanos(nanos); t }
+
   test("state envelope round-trips microsecond timestamps") {
     import graft.streaming.StateEnvelope
-    import graft.model.BufTurn
-    def at(ms: Long, nanos: Int) = { val t = new Timestamp(ms); t.setNanos(nanos); t }
     val fine = at(1704229670758L, 758444000) // .758444
     val preEpoch = at(-1L, 999001000) // 1969-12-31 23:59:59.999001
     val st = SessionJoin.ConvState(List(
-      BufTurn(0, "user", "q", null, fine), BufTurn(1, "assistant", "a", null, preEpoch),
-      BufTurn(2, "tool", "search()", "search", at(1000L, 0))), 3L)
-    assert(StateEnvelope.decode(StateEnvelope.encode(st)) == st)
+      Turn("c1", 0, "user", "q", null, fine), Turn("c1", 1, "assistant", "a", null, preEpoch),
+      Turn("c1", 2, "tool", "search()", "search", at(1000L, 0))), 3L)
+    assert(StateEnvelope.decode("c1", StateEnvelope.encode(st)) == st)
+  }
+
+  test("state envelope v3 bytes are pinned: a stored value decodes and re-encodes unchanged") {
+    import graft.streaming.StateEnvelope
+    // a v3 value as checkpoints hold it: flushedSessions 3, then three
+    // turns (UTF-8 text, null tool, microsecond and pre-1970 ts); conv_id
+    // is the state key, not part of the value
+    val stored = ("03" + "0000000000000003" + "00000003" +
+      "00000000" + "00000004" + "75736572" + "00000008" + "6e61c3af76652071" + "ffffffff" +
+      "00060dfce424282c" +
+      "00000001" + "00000009" + "617373697374616e74" + "00000001" + "61" + "ffffffff" +
+      "fffffffffffffc19" +
+      "00000002" + "00000004" + "746f6f6c" + "00000008" + "7365617263682829" + "00000006" +
+      "736561726368" + "ffffffffffe91ca0")
+      .grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    val expected = SessionJoin.ConvState(List(
+      Turn("c1", 0, "user", "naïve q", null, at(1704229670758L, 758444000)),
+      Turn("c1", 1, "assistant", "a", null, at(-1L, 999001000)),
+      Turn("c1", 2, "tool", "search()", "search", at(-1500L, 500000000))), 3L)
+    val got = StateEnvelope.decode("c1", stored)
+    assert(got == expected)
+    assert(got.buffered.forall(_.conv_id eq got.buffered.head.conv_id))
+    assert(StateEnvelope.encode(got).toSeq == stored.toSeq)
   }
 
   test("enveloped streaming resumes from its checkpoint, exactly once") {
@@ -171,6 +194,49 @@ class SessionJoinSpec extends SparkTestBase {
       .as[(Long, Int, Int)].collect().toSeq.sorted
     // second burst is session 1 — numbering survived the first flush
     assert(got == Seq((0L, 0, 1), (1L, 2, 3)))
+  }
+
+  test("one flush after an earlier one closes two sessions and keeps the open tail") {
+    val gap = 600L
+    def t(i: Int, role: String, sec: Long) =
+      Turn("c1", i, role, s"t$i", null, new Timestamp(sec * 1000))
+    val session0 = Seq(t(0, "user", 1000), t(1, "assistant", 1010))
+    val flush0 = Turn("zz0", 0, "user", "f", null, new Timestamp(5000L * 1000))
+    // sessions 1 and 2 end long before the open session 3 starts; the
+    // batch that brings them moves the watermark past both close points
+    // (1 minute lateness: 40010 s - 60 s) but not past session 3's
+    val later = Seq(t(2, "user", 10000), t(3, "assistant", 10010),
+      t(4, "user", 20000), t(5, "tool", 20005),
+      t(6, "user", 40000), t(7, "assistant", 40010))
+    val tail = Seq(t(8, "assistant", 40020))
+    val flush1 = Turn("zz1", 0, "user", "f", null, new Timestamp(99999L * 1000))
+    val all = session0 ++ Seq(flush0) ++ later ++ tail ++ Seq(flush1)
+    val expected = sortPairs(SessionJoin.pairBatch(all.toDF(), gap).as[PairedTurn].collect().toSeq)
+    assert(expected.map(p => (p.session_id, p.user_turn_idx, p.reply_turn_idx)) ==
+      Seq((0L, 0, 1), (1L, 2, 3), (2L, 4, 5), (3L, 6, 7), (3L, 6, 8)))
+
+    val outDir = tempDir("sjm-out").toString
+    val ckDir = tempDir("sjm-ck").toString
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Turn]
+    val paired = SessionJoin.pairStreaming(mem.toDS(), gap, "1 minute")
+    def runOnce(): Unit = graft.streaming.Sink.exactlyOnce(paired, outDir, ckDir,
+      Trigger.AvailableNow()).start().awaitTermination()
+    mem.addData(session0); runOnce()
+    mem.addData(Seq(flush0)); runOnce(); runOnce() // session 0 flushes alone
+    mem.addData(later); runOnce(); runOnce() // sessions 1 and 2 close, 3 stays open
+    mem.addData(tail); runOnce()
+    mem.addData(Seq(flush1)); runOnce(); runOnce() // session 3 flushes
+
+    val committed = graft.streaming.Sink.readCommitted(spark, outDir)
+    val got = committed.drop("_batch_id", "_partition_id").as[PairedTurn].collect().toSeq
+    assert(sortPairs(got) == expected)
+    // each session's pairs commit in one batch: 0 first, then 1 and 2
+    // together, then 3
+    val batchOf = committed.select("session_id", "_batch_id").distinct()
+      .as[(Long, Long)].collect().toMap
+    assert(batchOf.size == 4)
+    assert(batchOf(0L) < batchOf(1L) && batchOf(1L) == batchOf(2L) && batchOf(2L) < batchOf(3L))
   }
 
   test("generator is deterministic across parallelism") {

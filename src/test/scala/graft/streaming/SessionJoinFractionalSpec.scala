@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
-import graft.model.{BufTurn, PairedTurn, Turn}
+import graft.model.{PairedTurn, Turn}
 
 /** Fractional (sub-second) timestamp agreement between the streaming
   * close predicate and the batch merge rule (round-4 ADVICE finding).
@@ -24,7 +24,7 @@ class SessionJoinFractionalSpec extends graft.SparkTestBase {
   private val gap = 1800L
   private def tsMs(ms: Long) = new Timestamp(ms)
   private def buf(idx: Int, ms: Long, role: String = "user") =
-    BufTurn(idx, role, s"t$idx", null, tsMs(ms))
+    Turn("c1", idx, role, s"t$idx", null, tsMs(ms))
 
   test("splitClosed keeps a session open until the floor-second close point") {
     // session ends at 1000.500 s; latest mergeable turn is at
