@@ -10,17 +10,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: run only the named queries (debug aid)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // off-heap state for the streaming queries (BENCH.md finding 1)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
@@ -41,5 +31,19 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       new ObjectMapper().writeValueAsString(SparkEntry.oracleSql.asJava))
     spark.stop()
+  }
+
+  /** The session the correctness dump runs on, at `cpus` cores. */
+  def session(cpus: String): SparkSession = {
+    val s = graft.util.LocalFs.getOrCreate(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // off-heap state for the streaming queries (BENCH.md finding 1)
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+    s.sparkContext.setLogLevel("WARN")
+    s
   }
 }

@@ -12,12 +12,6 @@ import org.apache.spark.sql.expressions.Window
   */
 object GroupOps {
 
-  /** group_by_value (internal/old/processor/group_by_value.go:74,104):
-    * split the stream by a computed key, then reduce each group.
-    */
-  def groupByValue(df: DataFrame, key: Column, aggs: Seq[Column]): DataFrame =
-    df.groupBy(key).agg(aggs.head, aggs.tail: _*)
-
   /** group_by (internal/old/processor/group_by.go:90-92,148-199): route
     * rows into the FIRST matching predicate group; unmatched rows are
     * dropped (the reference drops them into no group).

@@ -190,9 +190,6 @@ object SchemaRegistry {
     (v._1, v._2)
   }
 
-  /** Test/bench hook: drop every cached schema (the reference's Close). */
-  def clearCaches(): Unit = { decodeCache.clear(); encodeCache.clear() }
-
   // ------------------------------------------------------------ processors
 
   /** schema_registry_decode: `bytesCol` (BINARY, confluent-framed) →

@@ -130,14 +130,6 @@ object Socket {
   def batch(spark: SparkSession, spoolDir: String): DataFrame =
     spark.read.text(spoolDir).select(col("value").as("content"))
 
-  /** socket input, client mode, streaming (socket.go:28-35): Spark's
-    * built-in socket source — connect to host:port, lines → rows.
-    */
-  def clientStream(spark: SparkSession, host: String, port: Int): DataFrame =
-    spark.readStream.format("socket")
-      .option("host", host).option("port", port).load()
-      .select(col("value").as("content"))
-
   /** socket input, client mode, bounded (codec consumes until the remote
     * closes): connect, read all lines, return a local DataFrame.
     */

@@ -122,12 +122,15 @@ object SessionJoin {
     * window buffer would flush (buffer_system_window.go:421-428), but
     * data-driven instead of wall-clock.
     *
-    * Late-data contract: flatMapGroupsWithState does NOT drop rows behind
-    * the watermark (unlike windowed aggs), so `processConv` drops them
-    * explicitly — the reference's own rule (messages older than the last
-    * flushed window are purged, buffer_system_window.go:333-336). Turns
-    * arriving after their conversation's flush but within the watermark
-    * open a NEW session.
+    * Late-data contract: Spark 4.1's flatMapGroupsWithState already drops
+    * input rows at or behind the late-events watermark
+    * (`applyRemovingRowsOlderThanWatermark`, so pre-1970 rows never reach
+    * the group function at watermark 0). `processConv` also drops turns
+    * older than the current watermark — the reference's own rule
+    * (messages older than the last flushed window are purged,
+    * buffer_system_window.go:333-336); which of the two rules decides at
+    * their boundary is not pinned by a spec. Turns arriving after their
+    * conversation's flush but within the watermark open a NEW session.
     *
     * Flush happens on BOTH paths, not just timeout: a continuously-active
     * conversation receives data every micro-batch, so its timeout slot is
@@ -167,8 +170,9 @@ object SessionJoin {
         Iterator.empty
       } else flushAndRearm(old, Nil, gapSeconds, wm, state)
     } else {
-      // Drop late turns explicitly (flatMapGroupsWithState does not):
-      // reference drop rule buffer_system_window.go:333-336.
+      // Drop turns behind the current watermark (Spark drops those behind
+      // the late-events one before this runs): reference drop rule
+      // buffer_system_window.go:333-336.
       val fresh = incoming.filter(t => wm == 0 || t.ts.getTime >= wm).toList
       if (old.buffered.isEmpty && fresh.isEmpty) Iterator.empty
       else flushAndRearm(old, fresh, gapSeconds, wm, state)

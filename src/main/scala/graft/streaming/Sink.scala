@@ -21,8 +21,11 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * two-phase shape as an Iceberg append (write data files invisible to
   * readers, then atomically publish a manifest):
   *
-  *   1. if `_commits/<batchId>` exists → batch already published, skip
-  *      (the replay path after a crash between write and checkpoint).
+  *   1. if `_commits/<batchId>` exists → batch already published: run it
+  *      to the `noop` sink only, so its stateful operators still commit
+  *      their state version (Spark fails a batch whose state stores did
+  *      not all commit), and publish nothing (the replay path after a
+  *      crash between write and checkpoint).
   *   2. write `data/b<id>-<attempt>/` parquet — a UNIQUE directory per
   *      attempt — with lineage columns `_batch_id` and `_partition_id`
   *      (spark_partition_id of the task that produced each row).
@@ -43,7 +46,10 @@ object Sink {
     val commitDir = Paths.get(outDir, "_commits")
     Files.createDirectories(commitDir)
     val marker = commitDir.resolve(batchId.toString)
-    if (Files.exists(marker)) return // replayed batch: already published
+    if (Files.exists(marker)) { // replayed batch: already published
+      batch.write.format("noop").mode("overwrite").save()
+      return
+    }
     // unique per-attempt dir: re-attempts never overwrite data a reader
     // could be resolving, and orphans of crashed attempts are invisible
     val attemptDir = s"b$batchId-${java.util.UUID.randomUUID().toString.take(8)}"

@@ -1,6 +1,9 @@
 package graft.tools
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.GraftLocalDirs
+import graft.util.{LocalFs, Tmp}
 
 /** The one SparkSession builder every forked benchmark block uses, so a
   * measurement at 2 cores and one at 32 differ ONLY in core count and
@@ -10,11 +13,13 @@ import org.apache.spark.sql.SparkSession
   * deltas, not full snapshots), block cache sized to the hot state
   * working set, maintenance deferred past bounded runs (a real cluster
   * runs it on idle executor threads; mid-trial it steals measured cores).
+  * Each session's `spark.local.dir` is deleted when the session stops.
   */
 object BenchSession {
 
   def build(cores: Int, shufflePartitions: Int = -1,
       blockCacheMB: Int = 512, appName: String = "graft-bench"): SparkSession = {
+    val localDir = Tmp.dir("spark-local")
     val b = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"$appName-$cores")
@@ -22,7 +27,7 @@ object BenchSession {
         if (shufflePartitions > 0) shufflePartitions else cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.util.Tmp.dir("spark-local"))
+      .config("spark.local.dir", localDir)
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
@@ -34,8 +39,21 @@ object BenchSession {
       .config("spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB", "256")
       .config("spark.sql.streaming.stateStore.rocksdb.maxWriteBufferNumber", "3")
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-    val s = b.getOrCreate()
+      // Every streaming query runs on a clone of the session, and with
+      // artifact isolation on (the default) each clone's tasks get a new
+      // executor class loader. Spark's generated-class cache is keyed by
+      // class loader, so each query recompiled all its task-side classes
+      // with Janino and ran them cold: 137 of one hotkey_heavymap run's
+      // 224 compiles were repeats. No session here adds artifacts.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+    val s = LocalFs.getOrCreate(b)
     s.sparkContext.setLogLevel("WARN")
+    s.sparkContext.addSparkListener(new SparkListener {
+      override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+        GraftLocalDirs.clear()
+        Tmp.delete(localDir)
+      }
+    })
     s
   }
 }

@@ -8,14 +8,15 @@ trait SparkTestBase extends AnyFunSuite with TempDirs {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+  lazy val session: SparkSession = build()
+
+  def build(): SparkSession = {
+    val s = graft.util.LocalFs.getOrCreate(SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false"))
     s.sparkContext.setLogLevel("WARN")
     s
   }
