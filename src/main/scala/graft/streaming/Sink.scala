@@ -4,10 +4,11 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-/** Exactly-once sink (BASELINE.json north_rule): idempotent `foreachBatch`
-  * commit with per-partition lineage columns, resumable from checkpoint.
+/** Exactly-once sink (BASELINE.json north_rule): every batch is written
+  * once through one DataSource V2 table, `ManifestSink`, with
+  * per-partition lineage columns, and is resumable from checkpoint.
   *
   * The reference is at-least-once — acks propagate to the source and
   * failed batches redeliver (reference: internal/message/
@@ -21,77 +22,50 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * two-phase shape as an Iceberg append (write data files invisible to
   * readers, then atomically publish a manifest):
   *
-  *   1. if `_commits/<batchId>` exists → batch already published: run it
-  *      to the `noop` sink only, so its stateful operators still commit
-  *      their state version (Spark fails a batch whose state stores did
-  *      not all commit), and publish nothing (the replay path after a
-  *      crash between write and checkpoint).
-  *   2. write `data/b<id>-<attempt>/` parquet — a UNIQUE directory per
-  *      attempt — with lineage columns `_batch_id` and `_partition_id`
-  *      (spark_partition_id of the task that produced each row).
-  *   3. atomically create `_commits/<batchId>` (CREATE_NEW) whose CONTENT
+  *   1. each write of batch `id` — a streaming query's micro-batch, or one
+  *      `writeBatchIdempotent` call — writes its own attempt directory
+  *      `data/b<id>-<nonce>/`, one `part-<partition>.parquet` per task,
+  *      with lineage columns `_batch_id` and `_partition_id` (the task's
+  *      partition). A task writes under a hidden name and renames on
+  *      commit, so a failed task leaves nothing a reader lists.
+  *   2. after every task committed, the driver atomically creates
+  *      `_commits/<id>` (a hard link of a written temp file) whose CONTENT
   *      names the attempt directory (the manifest-names-the-files Iceberg
-  *      shape). The loser of a concurrent-attempt race deletes its own
-  *      directory; it never touches the winner's files.
+  *      shape). If the manifest already exists — a replay after a crash
+  *      between this step and the checkpoint's commit log, or the loser of
+  *      a concurrent-attempt race — the attempt deletes its own directory;
+  *      it never touches the published one. A replayed micro-batch runs in
+  *      full, so its stateful operators still commit their state version.
+  *   3. a failed write job deletes its attempt directory.
   *
   * Readers resolve `_commits` manifests to the named directories (see
-  * `readCommitted`), so a crash between 2 and 3 leaves invisible orphans,
+  * `readCommitted`), so a crash between 1 and 2 leaves invisible orphans,
   * never duplicates — and because no attempt ever writes into a directory
   * a manifest can already name, a reader racing an in-flight re-attempt
   * can never observe partial files (SinkSpec pins this).
   */
 object Sink {
 
-  def writeBatchIdempotent(outDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val commitDir = Paths.get(outDir, "_commits")
-    Files.createDirectories(commitDir)
-    val marker = commitDir.resolve(batchId.toString)
-    if (Files.exists(marker)) { // replayed batch: already published
-      batch.write.format("noop").mode("overwrite").save()
-      return
-    }
-    // unique per-attempt dir: re-attempts never overwrite data a reader
-    // could be resolving, and orphans of crashed attempts are invisible
-    val attemptDir = s"b$batchId-${java.util.UUID.randomUUID().toString.take(8)}"
-    batch
-      .withColumn("_batch_id", lit(batchId))
-      .withColumn("_partition_id", spark_partition_id())
-      .write
-      .parquet(s"$outDir/data/$attemptDir") // no leading '_': Spark hides such dirs
-    // the marker must appear ATOMICALLY with its content: CREATE_NEW + write
-    // leaves a window where a reader lists an empty manifest.
-    // Write a hidden temp file, then hard-link it to the marker name — link
-    // is atomic and fails if the marker exists (the concurrent-attempt race).
-    val tmp = Files.createTempFile(commitDir, s".tmp$batchId-", "")
-    try {
-      Files.write(tmp, attemptDir.getBytes("UTF-8"))
-      Files.createLink(marker, tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        // lost a concurrent-attempt race: the other attempt's manifest is
-        // the committed truth — remove this attempt's files
-        deleteRecursively(Paths.get(outDir, "data", attemptDir))
-    } finally Files.deleteIfExists(tmp)
-  }
+  /** Write `batch` as batch `batchId` of `outDir` (the `foreachBatch`
+    * brokers' child sink).
+    */
+  def writeBatchIdempotent(outDir: String)(batch: DataFrame, batchId: Long): Unit =
+    batch.write.format(classOf[ManifestSink].getName).mode("append")
+      .option("path", outDir).option(ManifestSink.BatchIdOption, batchId).save()
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
-
-  /** Streaming writer wired to the idempotent committer. */
+  /** Streaming writer into the exactly-once sink: each micro-batch is one
+    * write of `outDir`.
+    */
   def exactlyOnce[T](
       ds: Dataset[T],
       outDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[T] =
     ds.writeStream
+      .format(classOf[ManifestSink].getName)
+      .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch((b: Dataset[T], id: Long) => writeBatchIdempotent(outDir)(b.toDF(), id))
 
   /** Read back only committed batches: each `_commits/<id>` manifest names
     * the attempt directory that was published for that batch.
@@ -157,7 +131,7 @@ object Sink {
   /** retry output wrapper (reference: internal/impl/pure/output_retry.go):
     * re-attempt the child sink with exponential backoff until it succeeds
     * or attempts are exhausted. Safe to combine with the idempotent
-    * committer — a retried batch that already committed is a no-op.
+    * committer — a retried batch that already committed publishes nothing.
     */
   def retry(
       sink: (DataFrame, Long) => Unit,

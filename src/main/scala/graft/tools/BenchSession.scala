@@ -46,6 +46,13 @@ object BenchSession {
       // with Janino and ran them cold: 137 of one hotkey_heavymap run's
       // 224 compiles were repeats. No session here adds artifacts.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Every micro-batch broadcasts its stages' task binaries and two
+      // Hadoop configurations (the state store's and the parquet scan's),
+      // each serialized into a chunk of this size. Spark's 4 MB chunk is a
+      // humongous object in a G1 heap of 2-8 GB; they piled up between
+      // young collections until the heap was nearly full, which counts in
+      // peak RSS. A 256 KB chunk is an ordinary young object.
+      .config("spark.broadcast.blockSize", "256k")
     val s = LocalFs.getOrCreate(b)
     s.sparkContext.setLogLevel("WARN")
     s.sparkContext.addSparkListener(new SparkListener {
